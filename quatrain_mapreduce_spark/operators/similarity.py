@@ -282,8 +282,9 @@ def ivf_build(
     dependence), refined by ``lloyd_iters`` spherical-kmeans iterations:
     assign every vector to its max-cosine centroid (a scan-local argmax
     fold over the literal centroid array — zero shuffle, no N×C row
-    expansion), then recompute each list's elementwise mean with ``dim``
-    avg aggregates (no explode — one shuffle of C×dim partial aggs).
+    expansion), then recompute each list's elementwise mean in a canonical
+    summation order (``_ordered_mean`` — bit-identical across plan shapes
+    and partition counts).
 
     Returns (centroids, assigned): centroids(list_id, c_vec) — index
     metadata, C×dim doubles, materialized driver-side like any ANN coarse
@@ -372,7 +373,7 @@ def ivf_build(
         assigned = assign(centroids)
         means = (
             assigned.groupBy("list_id")
-            .agg(F.array(*[F.avg(F.col("vec")[i]) for i in range(dim)]).alias("m"))
+            .agg(_ordered_mean(F.col("vec")).alias("m"))
             .collect()
         )
         new_c = list(centroids)  # empty lists keep their previous centroid
@@ -614,6 +615,21 @@ def activity_profile_knn(events: DataFrame, user_col: str, ts_col: str,
     )
 
 
+def _ordered_mean(vec: Column) -> Column:
+    """Elementwise mean of a group's vectors (an aggregate expression),
+    summed in sorted order. ``F.avg``'s partial sums follow the plan shape
+    and partition count that delivered the rows, so the mean could differ
+    in the last ulp between two plans; a canonical order makes it
+    bit-identical."""
+    vs = F.array_sort(F.collect_list(vec))
+    return F.aggregate(
+        vs,
+        F.transform(vs[0], lambda _: F.lit(0.0)),
+        lambda acc, v: F.zip_with(acc, v, lambda a, b: a + b),
+        lambda acc: F.transform(acc, lambda x: x / F.size(vs)),
+    )
+
+
 def _nearest_code(book: dict[tuple[int, int], list[float]]) -> Column:
     """Scan-local nearest-codeword id for a (sub_id, sv) row: the literal
     per-subspace codeword arrays are indexed by ``sub_id`` (``element_at``)
@@ -683,9 +699,11 @@ def pq_train(
     Deterministic like ivf_build: per-subspace seeds are the k corpus
     subvectors with smallest xxhash64(seed, sub, id); Lloyd refinement
     assigns by min L2 (a scan-local ``_nearest_code`` fold — zero shuffle
-    per iteration) and recomputes means with sub-dim avg
-    aggregates. Codebook is (sub_id, code_id, c_vec) — m*k rows of index
-    metadata, driver-materialized exactly like any ANN header (FAISS).
+    per iteration) and recomputes means in a canonical summation order
+    (``_ordered_mean``), so the codebook is bit-identical whichever
+    assignment plan or partition count produced it. Codebook is (sub_id,
+    code_id, c_vec) — m*k rows of index metadata, driver-materialized
+    exactly like any ANN header (FAISS).
     """
     from quatrain_mapreduce_spark.operators.util import spread
 
@@ -757,7 +775,7 @@ def pq_train(
             )
         means = (
             assigned.groupBy("sub_id", "code_id")
-            .agg(F.array(*[F.avg(F.col("sv")[i]) for i in range(sub)]).alias("mv"))
+            .agg(_ordered_mean(F.col("sv")).alias("mv"))
             .collect()
         )
         for r in means:  # empty codes keep their seed centroid

@@ -22,8 +22,8 @@ from quatrain_mapreduce_spark.operators.curation import (
 from quatrain_mapreduce_spark.registry import register
 from quatrain_mapreduce_spark.staging import stage_event_slices
 from quatrain_mapreduce_spark.streaming.hop import (
-    OnlineAggregator, drain_to_parquet, read_events_stream, run_available_now,
-    sessionize, tumbling_window_agg,
+    OnlineAggregator, _start, drain_to_parquet, read_events_stream,
+    run_available_now, sessionize, tumbling_window_agg,
 )
 from quatrain_mapreduce_spark.streaming.stateful import (
     moving_avg_batch, moving_avg_stream,
@@ -491,6 +491,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "jdbc", "no-sql-plan"),
 )
 def stream_jdbc_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import shutil
     import tempfile
 
     from quatrain_mapreduce_spark.sources.readers import read_jdbc
@@ -515,12 +516,13 @@ def stream_jdbc_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
          .option("driver", driver).save())
 
     ckpt = tempfile.mkdtemp(prefix="qms_jdbc_serving_ckpt_")
-    q = (
+    _start(
         agg.writeStream.foreachBatch(write_snapshot)
         .outputMode("complete").option("checkpointLocation", ckpt)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
+        .trigger(availableNow=True),
+        spark,
+    ).awaitTermination()
+    shutil.rmtree(ckpt, ignore_errors=True)
     return read_jdbc(spark, url, "stream_counts", driver=driver)
 
 

@@ -21,14 +21,49 @@ The reference's distinctive layer (SURVEY.md §2.8):
 
 All builders take/return DataFrames so batch and streaming share the same
 transformation code (the point of Structured Streaming).
+
+Stateful partition sizing: every stateful query the engine starts goes
+through ``_start``, which caps ``spark.sql.shuffle.partitions`` at the
+cluster's cores (``defaultParallelism``) for that query only. Each shuffle
+partition of a stateful operator is one state-store partition that
+commits a delta file every micro-batch, and streaming disables AQE's
+coalescing, so the batch default (32) meant 32 commits per batch on a
+4-core host. The count is frozen into the checkpoint's offset log when
+the query first starts, and a restart reuses the logged count whatever
+the session says, so a checkpoint written under another count stays
+valid. Checkpoints the engine creates itself for a one-shot availableNow
+drain are deleted once the drain returns; output and snapshot
+directories stay, because they back the returned DataFrames.
 """
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+
+# serializes _start's swap of the session-wide conf: two overlapping starts
+# would otherwise restore each other's capped value and leave it behind
+_START_LOCK = threading.Lock()
+
+
+def _start(writer: DataStreamWriter, spark: SparkSession) -> StreamingQuery:
+    """Start a stateful streaming query with at most one shuffle (and so
+    state-store) partition per core. The query clones the session when it
+    starts, so the session's own value is put back right after; a restart
+    from an existing checkpoint reuses the count in its offset log."""
+    key = "spark.sql.shuffle.partitions"
+    with _START_LOCK:
+        before = spark.conf.get(key)
+        spark.conf.set(key, str(min(int(before), spark.sparkContext.defaultParallelism)))
+        try:
+            return writer.start()
+        finally:
+            spark.conf.set(key, before)
 
 
 def _stage_stream_dir(sf_dir: str, table: str = "events") -> str:
@@ -159,33 +194,35 @@ def drain_to_parquet(
     snapshot dir, so the last micro-batch's full result is the answer: the
     same snapshot-file pattern as OnlineAggregator (HOP's
     snapshot-<progress> analogue), with no driver-side accumulation.
+
+    The query starts through ``_start`` (one state partition per core),
+    and its one-shot checkpoint is deleted once the drain returns.
     """
     import os
+    import shutil
     import tempfile
 
     out = tempfile.mkdtemp(prefix=f"qms_drain_{query_name}_")
     ckpt = tempfile.mkdtemp(prefix=f"qms_drain_ckpt_{query_name}_")
     spark = stream_df.sparkSession
     if output_mode == "append":
-        q = (
-            stream_df.writeStream.format("parquet")
-            .option("path", out).option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-        return spark.read.schema(stream_df.schema).parquet(out)
-    snap = os.path.join(out, "snapshot")
+        result = out
+        writer = stream_df.writeStream.format("parquet").option("path", out)
+    else:
+        result = os.path.join(out, "snapshot")
 
-    def write_snapshot(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(snap)
+        def write_snapshot(batch_df: DataFrame, _batch_id: int) -> None:
+            batch_df.write.mode("overwrite").parquet(result)
 
-    q = (
-        stream_df.writeStream.foreachBatch(write_snapshot)
-        .option("checkpointLocation", ckpt)
-        .outputMode(output_mode).trigger(availableNow=True).start()
+        writer = stream_df.writeStream.foreachBatch(write_snapshot)
+    writer = (
+        writer.option("checkpointLocation", ckpt)
+        .outputMode(output_mode).trigger(availableNow=True)
     )
-    q.awaitTermination()
-    return spark.read.schema(stream_df.schema).parquet(snap)
+    _start(writer, spark).awaitTermination()
+    # a fresh checkpoint drained availableNow is never resumed
+    shutil.rmtree(ckpt, ignore_errors=True)
+    return spark.read.schema(stream_df.schema).parquet(result)
 
 
 def run_available_now(stream_df: DataFrame, query_name: str) -> DataFrame:
@@ -295,6 +332,15 @@ class OnlineAggregator:
     ``self.snapshots`` holds only (progress, path) metadata. Checkpoint
     location is a fresh mkdtemp per run — a reused checkpoint would mark
     all files processed and silently produce zero batches.
+
+    ``run_incremental`` starts its query through ``_start``, so the state
+    store has one partition per core rather than the batch default of 32
+    shuffle partitions; the count is written into the checkpoint's offset
+    log and a restart keeps it. Without a ``work_dir`` the checkpoint is
+    deleted once the run returns (the snapshots stay); a checkpoint under a
+    caller's ``work_dir`` is kept. ``self.progress`` then holds one entry
+    per snapshot — batch id, progress fraction, input rows, state rows and
+    state commit ms — HOP's per-snapshot progress report.
     """
 
     def __init__(
@@ -315,6 +361,7 @@ class OnlineAggregator:
         self.max_files_per_trigger = max_files_per_trigger
         self.work_dir = work_dir
         self.snapshots: list[tuple[float, str]] = []
+        self.progress: list[dict] = []
 
     def snapshot_df(self, i: int = -1) -> DataFrame:
         """Read back a written snapshot (default: the latest)."""
@@ -413,16 +460,16 @@ class OnlineAggregator:
         # delivery is async and may lag the last batch at termination.
         from pyspark.sql.streaming import StreamingQueryListener
 
-        class _RowsPerBatch(StreamingQueryListener):
+        class _BatchProgress(StreamingQueryListener):
             def __init__(self) -> None:
-                self.rows: dict[tuple[str, int], int] = {}
+                self.seen: dict[tuple[str, int], object] = {}
 
             def onQueryStarted(self, event) -> None:
                 pass
 
             def onQueryProgress(self, event) -> None:
                 p = event.progress
-                self.rows[(str(p.id), p.batchId)] = p.numInputRows
+                self.seen[(str(p.id), p.batchId)] = p
 
             def onQueryIdle(self, event) -> None:
                 pass
@@ -430,34 +477,45 @@ class OnlineAggregator:
             def onQueryTerminated(self, event) -> None:
                 pass
 
-        listener = _RowsPerBatch()
+        listener = _BatchProgress()
         self.spark.streams.addListener(listener)
         try:
-            q = (
+            q = _start(
                 agg.writeStream.foreachBatch(per_batch)
                 .outputMode("complete")
                 .option("checkpointLocation", checkpoint)
-                .trigger(availableNow=True).start()
+                .trigger(availableNow=True),
+                spark,
             )
             q.awaitTermination()
             # stamp real progress fractions from the query's input
             # bookkeeping, keyed by batchId so a zero-input batch can't shift
             # the pairing or drop the final snapshot
-            rows_by_batch = {
-                b: n for (qid, b), n in listener.rows.items() if qid == str(q.id)
+            by_batch = {
+                b: p for (qid, b), p in listener.seen.items() if qid == str(q.id)
             }
-            rows_by_batch.update(
-                {p["batchId"]: p["numInputRows"] for p in q.recentProgress}
-            )
+            by_batch.update({p.batchId: p for p in q.recentProgress})
         finally:
             self.spark.streams.removeListener(listener)
+        if not self.work_dir:
+            shutil.rmtree(checkpoint, ignore_errors=True)
         cum = 0
-        fixed: list[tuple[float, str]] = []
+        self.snapshots.clear()
+        self.progress.clear()
         for batch_id, path in raw:
-            cum += rows_by_batch.get(batch_id, 0)
+            p = by_batch.get(batch_id)
+            rows = p.numInputRows if p else 0
+            state = p.stateOperators if p else []
+            cum += rows
             progress = min(cum / total, 1.0) if total else 1.0
-            fixed.append((progress, path))
-        self.snapshots[:] = fixed
+            self.snapshots.append((progress, path))
+            self.progress.append({
+                "batch_id": batch_id,
+                "progress": progress,
+                "input_rows": rows,
+                "state_rows": sum(s.numRowsTotal for s in state),
+                "state_commit_ms": sum(s.commitTimeMs for s in state),
+            })
         if on_snapshot is not None:
             for progress, path in self.snapshots:
                 on_snapshot(progress, spark.read.parquet(path))

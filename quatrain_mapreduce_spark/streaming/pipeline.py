@@ -54,6 +54,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from quatrain_mapreduce_spark.streaming.hop import _start
+
 
 def _hadoop_fs(spark: SparkSession, path: str):
     """(FileSystem, Path) for ``path``, scheme-dispatched by Hadoop — the
@@ -268,7 +270,7 @@ def start_training_stream(deduped: DataFrame, out_root: str,
         writer = writer.trigger(availableNow=True)
     elif processing_time:
         writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return _start(writer, deduped.sparkSession)
 
 
 def read_training_stream_result(

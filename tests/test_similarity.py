@@ -164,11 +164,11 @@ def test_ivf_build_deterministic_and_covering(spark, clustered):
 def test_fold_gate_fallback_matches_literal_fold(spark, clustered, monkeypatch):
     """Above FOLD_MAX_LITERALS the IVF/PQ assignments fall back to the
     broadcast-join + max_by/min_by shape (ADVICE r13: the literal fold is
-    O(n_lists*dim) plan nodes per Lloyd pass) — assignments and codes must
-    be identical either way."""
+    O(n_lists*dim) plan nodes per Lloyd pass) — assignments, codes and
+    the Lloyd-refined centroids/codebooks must be identical either way."""
     from quatrain_mapreduce_spark.operators import similarity as sim
 
-    _, a_fold = sim.ivf_build(clustered, "vec_id", "embedding", dim=DIM, n_lists=8)
+    c_fold, a_fold = sim.ivf_build(clustered, "vec_id", "embedding", dim=DIM, n_lists=8)
     fold = {r["vec_id"]: r["list_id"] for r in a_fold.collect()}
     unit = _normalize(clustered)
     book_fold = sim.pq_train(unit, "vec_id", "embedding", dim=DIM, m=4, k=16)
@@ -177,9 +177,10 @@ def test_fold_gate_fallback_matches_literal_fold(spark, clustered, monkeypatch):
                                          DIM, 4).collect()}
 
     monkeypatch.setattr(sim, "FOLD_MAX_LITERALS", 0)
-    _, a_bc = sim.ivf_build(clustered, "vec_id", "embedding", dim=DIM, n_lists=8)
+    c_bc, a_bc = sim.ivf_build(clustered, "vec_id", "embedding", dim=DIM, n_lists=8)
     bc = {r["vec_id"]: r["list_id"] for r in a_bc.collect()}
     assert bc == fold
+    assert sorted(map(tuple, c_bc.collect())) == sorted(map(tuple, c_fold.collect()))
     book_bc = sim.pq_train(unit, "vec_id", "embedding", dim=DIM, m=4, k=16)
     assert sorted(map(tuple, book_bc.collect())) == sorted(map(tuple, book_fold.collect()))
     codes_bc = {(r["vec_id"], r["sub_id"]): r["code_id"]

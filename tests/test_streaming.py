@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import tempfile
+from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
@@ -1060,3 +1061,171 @@ def test_stream_pipeline_funnel_metrics_match_batch_counts(spark, sf_dir):
     assert sums["tdp_ingest"] == batch.count()
     assert sums["tdp_gate"] == gopher_rules(batch, "text").where("passes = 1").count()
     assert sums["tdp_gate"] <= sums["tdp_ingest"]
+
+
+@contextmanager
+def _shuffle_partitions(spark, n: int):
+    """The suite's session runs local[8] with 8 partitions, where stateful
+    sizing is a no-op; these tests raise the session to the batch default
+    for their own duration."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, before)
+
+
+def _logged_partitions(ckpt: str, batch_id: int) -> str:
+    """The shuffle-partition count a checkpoint's offset log froze."""
+    import json
+    import os
+
+    with open(os.path.join(ckpt, "offsets", str(batch_id))) as fh:
+        meta = json.loads(fh.read().splitlines()[1])
+    return meta["conf"]["spark.sql.shuffle.partitions"]
+
+
+def test_online_aggregator_state_sized_to_cores_and_reports_progress(spark, sf_dir):
+    """run_incremental starts its stateful query with one state partition
+    per core, freezes that count into the checkpoint, leaves the session's
+    own value alone, and still converges to the batch answer. Its per-batch
+    progress list mirrors the snapshots."""
+    import os
+
+    ev = load_table(spark, sf_dir, "events")
+    src = tempfile.mkdtemp(prefix="qms_test_online_cores_src_")
+    ev.repartitionByRange(4, "event_id").write.mode("overwrite").parquet(src)
+    work = tempfile.mkdtemp(prefix="qms_test_online_cores_work_")
+
+    def agg_fn(df):
+        return df.groupBy("event_type").agg(F.count("*").alias("cnt"))
+
+    total = ev.count()
+    with _shuffle_partitions(spark, 32):
+        inc = OnlineAggregator(spark, src, spark.read.parquet(src).schema, agg_fn,
+                               total_rows=total, work_dir=work)
+        final = inc.run_incremental()
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+    cores = spark.sparkContext.defaultParallelism
+    assert cores == 8
+    assert _logged_partitions(os.path.join(work, "checkpoint"), 0) == str(cores)
+    exact = {r["event_type"]: r["cnt"] for r in agg_fn(ev).collect()}
+    assert {r["event_type"]: r["cnt"] for r in final.collect()} == exact
+
+    assert [p["progress"] for p in inc.progress] == [p for p, _ in inc.snapshots]
+    assert [p["batch_id"] for p in inc.progress] == list(range(len(inc.snapshots)))
+    assert sum(p["input_rows"] for p in inc.progress) == total
+    assert inc.progress[-1]["state_rows"] == len(exact)
+    assert all(p["state_commit_ms"] >= 0 for p in inc.progress)
+
+
+def test_stateful_restart_keeps_logged_partition_count(spark):
+    """A checkpoint written under 2 shuffle partitions and restarted through
+    _start from a 32-partition session keeps its 2 state partitions (the
+    offset log wins over the session), and the resumed aggregate is exact."""
+    import os
+
+    from quatrain_mapreduce_spark.streaming.hop import _start
+
+    work = tempfile.mkdtemp(prefix="qms_test_restart_parts_")
+    src, out, ckpt = (os.path.join(work, d) for d in ("src", "out", "ckpt"))
+    os.makedirs(src)
+
+    def add_file(name, lo, hi):
+        spark.range(lo, hi).coalesce(1).write.mode("overwrite") \
+            .parquet(os.path.join(src, name))
+
+    def write_snapshot(batch_df, _batch_id):
+        batch_df.write.mode("overwrite").parquet(out)
+
+    def drain():
+        agg = (
+            spark.readStream.schema("id long")
+            .option("maxFilesPerTrigger", 1).parquet(os.path.join(src, "*"))
+            .groupBy((F.col("id") % 5).alias("k")).agg(F.count("*").alias("n"))
+        )
+        _start(
+            agg.writeStream.foreachBatch(write_snapshot).outputMode("complete")
+            .option("checkpointLocation", ckpt).trigger(availableNow=True),
+            spark,
+        ).awaitTermination()
+
+    add_file("a", 0, 50)
+    add_file("b", 50, 100)
+    with _shuffle_partitions(spark, 2):
+        drain()
+    assert _logged_partitions(ckpt, 1) == "2"
+    add_file("c", 100, 150)
+    with _shuffle_partitions(spark, 32):
+        drain()
+    assert _logged_partitions(ckpt, 2) == "2"
+    got = {r["k"]: r["n"] for r in spark.read.parquet(out).collect()}
+    assert got == {k: 30 for k in range(5)}
+
+
+def test_drain_reclaims_its_checkpoint(spark, sf_dir):
+    """drain_to_parquet and run_incremental delete the one-shot checkpoints
+    they create; the output and snapshot directories behind the returned
+    frames stay readable."""
+    import glob
+    import os
+
+    from quatrain_mapreduce_spark.streaming.hop import drain_to_parquet
+
+    ckpts = os.path.join(tempfile.gettempdir(), "qms_drain_ckpt_qms_test_reclaim_*")
+    before = set(glob.glob(ckpts))
+    stream = read_events_stream(spark, sf_dir)
+    total = load_table(spark, sf_dir, "events").count()
+    counts = stream.groupBy("event_type").agg(F.count("*").alias("cnt"))
+    with _shuffle_partitions(spark, 32):
+        snap = drain_to_parquet(counts, "qms_test_reclaim_c", output_mode="complete")
+        rows = drain_to_parquet(stream, "qms_test_reclaim_a")
+    assert set(glob.glob(ckpts)) == before
+    assert snap.agg(F.sum("cnt")).first()[0] == total
+    assert rows.count() == total
+
+    src = tempfile.mkdtemp(prefix="qms_test_reclaim_inc_src_")
+    load_table(spark, sf_dir, "events").repartition(2).write.mode("overwrite").parquet(src)
+    inc = OnlineAggregator(spark, src, spark.read.parquet(src).schema,
+                           lambda df: df.agg(F.count("*").alias("n")), total_rows=total)
+    assert inc.run_incremental().first()["n"] == total
+    work = os.path.dirname(inc.snapshots[-1][1])
+    assert not os.path.exists(os.path.join(work, "checkpoint"))
+
+
+def test_concurrent_starts_restore_session_partitions(spark):
+    """_start swaps a session-wide conf around writer.start(); concurrent
+    starts on one session must each see the core-sized count and leave the
+    session at its own value, never at a neighbour's capped one."""
+    import sys
+    import threading
+    import time
+
+    from quatrain_mapreduce_spark.streaming.hop import _start
+
+    seen: list[str] = []
+
+    class _Writer:
+        def start(self):
+            seen.append(spark.conf.get("spark.sql.shuffle.partitions"))
+            time.sleep(0.001)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with _shuffle_partitions(spark, 32):
+            threads = [
+                threading.Thread(target=lambda: [_start(_Writer(), spark) for _ in range(20)])
+                for _ in range(16)
+            ]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=60)
+            assert not any(t.is_alive() for t in threads)
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+    finally:
+        sys.setswitchinterval(interval)
+    assert seen == ["8"] * 16 * 20
