@@ -1,9 +1,10 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Entry contract (PySpark target) for callers that bring their own session.
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs each
-``queries()[name]`` at sf=0.01 and compares it against the matching
-``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke check; ``queries()`` maps every registered query
+name, in registration order, to its ``(spark, sf_dir) -> DataFrame``
+callable, and ``oracle_sql()`` maps each oracled name to the ANSI SQL that
+DuckDB runs over the same parquet tables (row-count + schema +
+order-insensitive value-hash comparison, as in ``tools/check_oracle.py``).
 
 All queries live in quatrain_mapreduce_spark.plans.* and register into
 quatrain_mapreduce_spark.registry; this module is a thin adapter.

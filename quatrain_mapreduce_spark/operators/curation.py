@@ -443,13 +443,13 @@ def dedup_spans(
     The (doc, pos) argmin is packed into ONE decimal(38,0) value
     ((doc + 2^63) * 1e9 + pos): min over a struct buffer is not
     hash-aggregatable and silently degraded the whole aggregate to
-    SortAggregate — two full sorts of the exploded span stream (plans/r13
-    before-plans); a fixed-width decimal min keeps lexicographic
-    (doc, pos) order exactly (0 <= pos < 1e9 — posexplode guarantees the
-    pos bound for any document under ~8e9 tokens; the 2^63 bias maps the
-    FULL signed-long id range onto non-negative decimals so negative ids
-    pack/decode exactly too — r14, ADVICE r13) while planning as
-    HashAggregate. Two shuffles total: span agg + per-doc reassembly.
+    SortAggregate — two full sorts of the exploded span stream (git show
+    67b5d9d:plans/r13/dedup_spans_before.txt); a fixed-width decimal min
+    keeps lexicographic (doc, pos) order exactly (0 <= pos < 1e9 —
+    posexplode guarantees the pos bound for any document under ~8e9
+    tokens; the 2^63 bias maps the FULL signed-long id range onto
+    non-negative decimals so negative ids pack/decode exactly too — r14,
+    ADVICE r13) while planning as HashAggregate. Two shuffles total: span agg + per-doc reassembly.
     Docs whose spans are all duplicates drop out entirely (their row
     count is the dedup rate).
 

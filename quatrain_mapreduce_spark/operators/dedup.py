@@ -209,13 +209,6 @@ def signature_from_hashes(bh: F.Column, num_perm: int = 32, seed: int = 42) -> F
     return F.array(*sig)
 
 
-def minhash_signature(shingles: F.Column, num_perm: int = 32, seed: int = 42) -> F.Column:
-    """MinHash signature array over a shingle array (one-shot convenience;
-    pipelines should materialize ``base_hashes`` first — see
-    ``signature_from_hashes``)."""
-    return signature_from_hashes(base_hashes(shingles), num_perm, seed)
-
-
 def lsh_band_rows(
     docs_sh: DataFrame,
     id_col: str,

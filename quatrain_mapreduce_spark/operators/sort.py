@@ -14,11 +14,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def total_order_sort(df: DataFrame, order_by: list[Column]) -> DataFrame:
-    """Globally sorted output (Sort.java:158 / TeraSort). One range-shuffle."""
-    return df.orderBy(*order_by)
-
-
 def cluster_by(df: DataFrame, cols: list[str], sort_cols: list[Column] | None = None) -> DataFrame:
     """Hive CLUSTER BY: hash-repartition on exprs + sort within partitions.
 

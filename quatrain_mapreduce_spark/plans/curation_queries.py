@@ -1641,7 +1641,8 @@ def training_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # source/n_spans_kept ride the manifest's shard shuffle as passthrough
     # columns — the former re-attach (manifest JOIN capped ON doc_id)
     # planned as a SortMergeJoin with two extra exchanges + sorts and a
-    # second read of the capped cache (plans/r13 before-plan nodes 83-90)
+    # second read of the capped cache (before-plan nodes 83-90:
+    # git show 67b5d9d:plans/r13/training_data_pipeline_before.txt)
     manifest = pack_manifest(
         d, "doc_id", "n_tok", seq_len=1024, n_shards=64,
         passthrough=("source", "n_spans_kept"),

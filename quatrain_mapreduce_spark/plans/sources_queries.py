@@ -1,5 +1,5 @@
 """Source/sink round-trip queries — SURVEY.md §2.1 components as checkable
-CORRECTNESS rows (previously implemented but never exercised by the gate).
+oracle rows (previously implemented but never exercised by the oracle).
 
 Round trips stage derivative files under /tmp (idempotent per sf_dir);
 oracles run against the original parquet tables, so a lossy or reordered

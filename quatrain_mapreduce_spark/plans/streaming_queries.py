@@ -132,8 +132,8 @@ def stream_tumbling_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(per-batch work O(batch+groups), the streaming analogue of HOP's "
         "reducer-held snapshot state) and every batch writes a "
         "snapshot-<progress> parquet. The returned (final) snapshot is "
-        "exact — checked against the batch oracle; convergence and "
-        "incremental-vs-reaggregation parity asserted in "
+        "exact — checked against the batch oracle; convergence (partial "
+        "early snapshots, per-key monotone counts) asserted in "
         "tests/test_streaming.py.",
     tags=("streaming", "online-agg"),
 )

@@ -12,10 +12,11 @@ The reference's distinctive layer (SURVEY.md §2.8):
 - online aggregation snapshots (``mapred.snapshot.frequency`` —
   ReduceTask.java:631-669: full reduce over data-so-far at each progress
   quantum, emitting snapshot-<progress> outputs) -> a bounded file stream
-  consumed incrementally; each micro-batch re-aggregates data-so-far and
-  writes a snapshot tagged with the ingest fraction. Divergence pinned in
-  SURVEY §7: reference progress is scheduler-based, ours is
-  ingest-fraction-based; both converge to the exact answer.
+  consumed by one stateful query; the state store carries the partial
+  aggregate across micro-batches, and each micro-batch writes the
+  aggregate-so-far as a snapshot tagged with the ingest fraction.
+  Divergence pinned in SURVEY §7: reference progress is scheduler-based,
+  ours is ingest-fraction-based; both converge to the exact answer.
 - inter-job pipelining (JobClient.submitJobs / PipelineMapTask.java:52) —
   in Spark a multi-stage query is ONE plan; nothing to build.
 
@@ -165,20 +166,6 @@ def tumbling_window_agg(
     return events.groupBy(F.window(ts_col, window_duration).alias("win"), *[F.col(k) for k in keys]).agg(*aggs)
 
 
-def sliding_window_agg(
-    events: DataFrame, ts_col: str, keys: list[str], aggs: list[Column],
-    window_duration: str = "10 minutes", slide: str = "5 minutes",
-    watermark: str | None = "20 minutes",
-) -> DataFrame:
-    """CQ-shape sliding aggregate (last-N-seconds per key, refreshed every
-    slide — CQ.java hostAvg)."""
-    if watermark:
-        events = events.withWatermark(ts_col, watermark)
-    return events.groupBy(
-        F.window(ts_col, window_duration, slide).alias("win"), *[F.col(k) for k in keys]
-    ).agg(*aggs)
-
-
 def drain_to_parquet(
     stream_df: DataFrame, query_name: str, output_mode: str = "append"
 ) -> DataFrame:
@@ -311,34 +298,26 @@ class OnlineAggregator:
     analogue, ReduceTask.java:631-669). Early results approximate,
     converging to exact at progress 1.0.
 
-    Two execution modes:
+    ``run_incremental()`` runs the aggregate as ONE stateful Structured
+    Streaming query in ``complete`` output mode: Spark's state store carries
+    the partial aggregate across batches, so per-batch work is
+    O(batch + groups), and ``foreachBatch`` receives the full updated
+    result to write as the snapshot — the streaming analogue of HOP's
+    reducer-held snapshot state. ``agg_fn`` must be expressible on a
+    streaming frame (groupBy/agg, optional global sort+limit — complete
+    mode allows both).
 
-    - ``run_incremental()`` (the scale path): the aggregate runs as ONE
-      stateful Structured Streaming query in ``complete`` output mode —
-      Spark's state store carries the partial aggregate across batches, so
-      per-batch work is O(batch + groups), and ``foreachBatch`` receives the
-      full updated result to write as the snapshot. This is the true
-      streaming analogue of HOP's reducer-held snapshot state. Requires
-      ``agg_fn`` to be expressible on a streaming frame (groupBy/agg,
-      optional global sort+limit — complete mode allows both).
-
-    - ``run()`` (the general path): each batch is appended to a parquet
-      staging dir and ``agg_fn`` re-aggregates data-so-far from files.
-      O(data-so-far) per batch — quadratic total work over the run — but
-      imposes zero constraints on ``agg_fn``. Use for transformations the
-      streaming engine rejects.
-
-    Scale design (both modes): nothing accumulates on the driver;
-    ``self.snapshots`` holds only (progress, path) metadata. Checkpoint
-    location is a fresh mkdtemp per run — a reused checkpoint would mark
-    all files processed and silently produce zero batches.
+    Scale design: nothing accumulates on the driver; ``self.snapshots``
+    holds only (progress, path) metadata. The checkpoint is cleared at the
+    start of every run — a reused checkpoint would mark all files processed
+    and silently produce zero batches.
 
     ``run_incremental`` starts its query through ``_start``, so the state
     store has one partition per core rather than the batch default of 32
     shuffle partitions; the count is written into the checkpoint's offset
-    log and a restart keeps it. Without a ``work_dir`` the checkpoint is
-    deleted once the run returns (the snapshots stay); a checkpoint under a
-    caller's ``work_dir`` is kept. ``self.progress`` then holds one entry
+    log. Without a ``work_dir`` the checkpoint is deleted once the run
+    returns (the snapshots stay); a checkpoint under a caller's
+    ``work_dir`` is kept. ``self.progress`` then holds one entry
     per snapshot — batch id, progress fraction, input rows, state rows and
     state commit ms — HOP's per-snapshot progress report.
     """
@@ -367,61 +346,9 @@ class OnlineAggregator:
         """Read back a written snapshot (default: the latest)."""
         return self.spark.read.parquet(self.snapshots[i][1])
 
-    def run(self, on_snapshot: Callable[[float, DataFrame], None] | None = None) -> DataFrame:
-        import os
-        import shutil
-        import tempfile
-
-        work = self.work_dir or tempfile.mkdtemp(prefix="qms_online_")
-        staging = os.path.join(work, "staging")
-        checkpoint = os.path.join(work, "checkpoint")
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(checkpoint, ignore_errors=True)
-        # a second run() on the same instance must not append after the
-        # first run's entries — stale snapshot metadata breaks the
-        # monotone-convergence contract snapshot_df consumers rely on
-        self.snapshots.clear()
-
-        stream = (
-            self.spark.readStream.schema(self.schema)
-            .option("maxFilesPerTrigger", self.max_files_per_trigger)
-            .parquet(self.source_path)
-        )
-        seen = {"rows": 0}
-        agg_fn, total, spark = self.agg_fn, self.total_rows, self.spark
-
-        def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("append").parquet(staging)
-            # O(batch) progress accounting — a full re-count of the
-            # staging dir per micro-batch added a second O(data-so-far)
-            # pass on top of the re-aggregation cost the docstring
-            # already owns
-            seen["rows"] += batch_df.count()
-            progress = min(seen["rows"] / total, 1.0) if total else 1.0
-            # keyed by batch id, not rounded progress: two batches with
-            # close cumulative progress collided on one snapshot path and
-            # the overwrite silently replaced the earlier snapshot while
-            # self.snapshots kept both entries pointing at it
-            snap_path = os.path.join(work, f"snapshot-b{batch_id:05d}")
-            snap = agg_fn(spark.read.parquet(staging))
-            snap.write.mode("overwrite").parquet(snap_path)
-            self.snapshots.append((progress, snap_path))
-            if on_snapshot is not None:
-                on_snapshot(progress, spark.read.parquet(snap_path))
-
-        q = (
-            stream.writeStream.foreachBatch(per_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-        if not self.snapshots:
-            return None
-        return agg_fn(self.spark.read.parquet(staging))
-
     def run_incremental(self, on_snapshot: Callable[[float, DataFrame], None] | None = None) -> DataFrame:
-        """Stateful single-query mode: state store carries the aggregate
-        across batches (per-batch cost O(batch + groups), not O(data-so-far)).
+        """Run the aggregate as one stateful query: the state store carries
+        it across batches (per-batch cost O(batch + groups)).
         Returns the final snapshot as a DataFrame (== the exact batch answer
         once progress reaches 1.0)."""
         import os

@@ -1,7 +1,7 @@
 """Registry smoke: every registered query executes at sf0.001 and returns a
-stable schema — the engine-side half of the driver's correctness gate.
-Oracle agreement is checked by tools/check_oracle.py (and the driver at
-sf0.01); here we pin that nothing in queries() crashes on a plain session.
+stable schema, and the ``__spark_entry__`` adapter exposes the registry.
+Oracle agreement is checked by tools/check_oracle.py at sf0.01; here we pin
+that nothing in queries() crashes on a plain session.
 """
 
 from __future__ import annotations
@@ -37,25 +37,24 @@ def test_every_oracle_query_aliases_all_columns():
             assert "SELECT" in q.oracle.upper(), name
 
 
-def test_no_duplicate_registrations():
-    assert len(QUERIES) == len(set(QUERIES))
+def test_adapter_exposes_registry_and_rejects_duplicates():
+    """``__spark_entry__`` hands out exactly the registered queries and the
+    oracled subset, and ``register`` refuses a name that is already taken."""
+    import importlib.util
+    import os
 
+    from quatrain_mapreduce_spark.registry import REGISTRY, register
 
-def test_driver_window_covers_every_plan_module():
-    """The driver's correctness gate checks only the first 50 queries in
-    ``queries()`` order; assert that window samples all seven plan modules
-    (r03 finding: SQL/streaming/UDF/source queries fell outside it)."""
-    window = list(QUERIES.values())[:50]
-    modules = {q.fn.__module__.rsplit(".", 1)[-1] for q in window}
-    assert modules >= {
-        "relational", "mrlib", "data_pipeline", "streaming_queries",
-        "hive_sql", "udf_surface", "sources_queries",
-    }, modules
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                        "__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location("__spark_entry__", path)
+    entry = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(entry)
 
-
-def test_driver_window_mostly_oracled():
-    """Gate-window slots are precious — rows-only queries (no oracle) belong
-    in the tail unless the window has spare room."""
-    window = list(QUERIES.values())[:50]
-    rows_only = [q.name for q in window if q.oracle is None]
-    assert len(rows_only) <= 3, rows_only
+    assert entry.queries() == {n: q.fn for n, q in REGISTRY.items()}
+    assert entry.oracle_sql() == {n: q.oracle for n, q in REGISTRY.items() if q.oracle is not None}
+    taken = next(iter(REGISTRY))
+    before = REGISTRY[taken]
+    with pytest.raises(ValueError, match="duplicate query name"):
+        register(taken)(lambda spark, sf_dir: None)
+    assert REGISTRY[taken] is before

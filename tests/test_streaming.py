@@ -34,50 +34,24 @@ def test_stream_batch_parity(spark, sf_dir):
     assert streamed == batch
 
 
-def test_online_aggregator_converges(spark, sf_dir):
-    """Snapshots: monotonically increasing progress, final snapshot == exact
-    batch answer (EX/TopK.java:259-262 snapshot semantics)."""
-    ev = load_table(spark, sf_dir, "events")
-    src = tempfile.mkdtemp(prefix="qms_test_online_src_")
-    ev.repartitionByRange(4, "event_id").write.mode("overwrite").parquet(src)
-
-    def agg_fn(df):
-        return df.groupBy("event_type").agg(F.count("*").alias("cnt"))
-
-    total = ev.count()
-    runner = OnlineAggregator(spark, src, spark.read.parquet(src).schema, agg_fn, total_rows=total)
-    final = runner.run()
-
-    progresses = [p for p, _ in runner.snapshots]
-    assert len(progresses) >= 2, "multi-file source must produce multiple snapshots"
-    assert progresses == sorted(progresses)
-    assert abs(progresses[-1] - 1.0) < 1e-9
-
-    exact = {r["event_type"]: r["cnt"] for r in agg_fn(ev).collect()}
-    got_final = {r["event_type"]: r["cnt"] for r in final.collect()}
-    assert got_final == exact
-    # last written snapshot equals the returned final aggregate
-    last_snap = {r["event_type"]: r["cnt"] for r in runner.snapshot_df(-1).collect()}
-    assert last_snap == exact
-    # early snapshots are partial: counts never exceed the exact answer
-    first_snap = {r["event_type"]: r["cnt"] for r in runner.snapshot_df(0).collect()}
-    assert all(first_snap[k] <= exact[k] for k in first_snap)
-
-
 def test_online_aggregator_rerun_not_poisoned_by_checkpoint(spark, sf_dir):
-    """Fresh checkpoint per run: a second run must produce snapshots again
-    (the id()-reuse bug from round 1 silently produced none)."""
+    """Fresh checkpoint per run: a second run over the same work dir must
+    produce snapshots again (a reused checkpoint marks every source file as
+    processed and silently produces none)."""
     ev = load_table(spark, sf_dir, "events").limit(100)
     src = tempfile.mkdtemp(prefix="qms_test_online_src2_")
     ev.repartition(2).write.mode("overwrite").parquet(src)
+    work = tempfile.mkdtemp(prefix="qms_test_online_rerun_work_")
 
     def agg_fn(df):
         return df.agg(F.count("*").alias("n"))
 
     for _ in range(2):
-        runner = OnlineAggregator(spark, src, spark.read.parquet(src).schema, agg_fn, total_rows=100)
-        final = runner.run()
+        runner = OnlineAggregator(spark, src, spark.read.parquet(src).schema, agg_fn,
+                                  total_rows=100, work_dir=work)
+        final = runner.run_incremental()
         assert final is not None and runner.snapshots, "run produced no snapshots"
+        assert final.first()["n"] == 100
 
 
 def test_sessionize_stream_batch_parity(spark, sf_dir):
@@ -269,10 +243,11 @@ def test_watermark_finalizes_windows_exactly_once(spark):
     assert all(r["win"]["start"].timestamp() == old_win for r in rows)
 
 
-def test_online_aggregator_incremental_matches_reaggregation(spark, sf_dir):
-    """The stateful incremental mode must produce the same final answer and
-    a converging snapshot sequence, like the re-aggregation mode — but with
-    per-batch work O(batch+groups) instead of O(data-so-far)."""
+def test_online_aggregator_incremental_final_is_exact(spark, sf_dir):
+    """The stateful query (per-batch work O(batch+groups), state store
+    carrying the partial aggregate) emits one snapshot per source file with
+    non-decreasing progress ending at 1.0, per-key counts that only grow,
+    and a final answer equal to the exact batch aggregate."""
     ev = load_table(spark, sf_dir, "events")
     src = tempfile.mkdtemp(prefix="qms_test_online_inc_src_")
     ev.repartitionByRange(4, "event_id").write.mode("overwrite").parquet(src)
@@ -605,7 +580,9 @@ def test_online_agg_snapshots_converge_monotonically_to_exact(spark, sf_dir):
     quantum): over an 8-slice bounded replay, every snapshot is a PARTIAL
     of the exact batch answer (no key overshoots), per-key counts are
     non-decreasing in ingest fraction, total L1 error to the exact answer
-    is non-increasing, and the error reaches exactly 0 at fraction 1."""
+    is non-increasing, and the error reaches exactly 0 at fraction 1. The
+    first snapshot is a strict partial and the last one is the returned
+    final frame (EX/TopK.java:259-262 snapshot semantics)."""
     ev = load_table(spark, sf_dir, "events")
     src = tempfile.mkdtemp(prefix="qms_test_conv_src_")
     ev.repartitionByRange(8, "event_id").write.mode("overwrite").parquet(src)
@@ -617,10 +594,17 @@ def test_online_agg_snapshots_converge_monotonically_to_exact(spark, sf_dir):
     runner = OnlineAggregator(
         spark, src, spark.read.parquet(src).schema, agg_fn, total_rows=total
     )
-    runner.run()
+    final = runner.run_incremental()
     exact = {r["event_type"]: r["cnt"] for r in agg_fn(ev).collect()}
 
     assert len(runner.snapshots) >= 4
+    # the first snapshot is a partial answer: below the exact total
+    first = {r["event_type"]: r["cnt"] for r in runner.snapshot_df(0).collect()}
+    assert runner.snapshots[0][0] < 1.0
+    assert sum(first.values()) < total
+    # the last written snapshot equals the returned final aggregate
+    last = {r["event_type"]: r["cnt"] for r in runner.snapshot_df(-1).collect()}
+    assert last == {r["event_type"]: r["cnt"] for r in final.collect()}
     prev_counts: dict = {}
     prev_err = None
     for i, (progress, _) in enumerate(runner.snapshots):

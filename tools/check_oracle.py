@@ -1,4 +1,4 @@
-"""Local stand-in for the driver's correctness gate.
+"""The correctness gate: every registered query against its DuckDB oracle.
 
 Runs every registered query on Spark and its oracle on DuckDB over the same
 parquet tables, then compares row count, column names/order-insensitive
