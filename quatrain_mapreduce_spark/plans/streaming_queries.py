@@ -521,6 +521,7 @@ def stream_jdbc_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         .outputMode("complete").option("checkpointLocation", ckpt)
         .trigger(availableNow=True),
         spark,
+        bounded=agg,
     ).awaitTermination()
     shutil.rmtree(ckpt, ignore_errors=True)
     return read_jdbc(spark, url, "stream_counts", driver=driver)

@@ -24,17 +24,22 @@ All builders take/return DataFrames so batch and streaming share the same
 transformation code (the point of Structured Streaming).
 
 Stateful partition sizing: every stateful query the engine starts goes
-through ``_start``, which caps ``spark.sql.shuffle.partitions`` at the
-cluster's cores (``defaultParallelism``) for that query only. Each shuffle
-partition of a stateful operator is one state-store partition that
-commits a delta file every micro-batch, and streaming disables AQE's
+through ``_start``, which sets ``spark.sql.shuffle.partitions`` for that
+query only. Each shuffle partition of a stateful operator is one
+state-store partition, and every micro-batch pays each partition a task,
+a delta-file commit and a sink part file; streaming disables AQE's
 coalescing, so the batch default (32) meant 32 commits per batch on a
-4-core host. The count is frozen into the checkpoint's offset log when
-the query first starts, and a restart reuses the logged count whatever
-the session says, so a checkpoint written under another count stays
-valid. Checkpoints the engine creates itself for a one-shot availableNow
-drain are deleted once the drain returns; output and snapshot
-directories stay, because they back the returned DataFrames.
+4-core host. A bounded start (availableNow over file sources only) gets
+one partition per ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
+(Spark's 64 MB batch coalescing target) of input, capped at the cores
+(``defaultParallelism``); every other start — rate, Kafka,
+processingTime, or a source whose size cannot be read — gets the core
+cap. The count is frozen into the checkpoint's offset log when the query
+first starts, and a restart reuses the logged count whatever the session
+says, so a checkpoint written under another count stays valid.
+Checkpoints the engine creates itself for a one-shot availableNow drain
+are deleted once the drain returns; output and snapshot directories
+stay, because they back the returned DataFrames.
 """
 
 from __future__ import annotations
@@ -52,15 +57,67 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 _START_LOCK = threading.Lock()
 
 
-def _start(writer: DataStreamWriter, spark: SparkSession) -> StreamingQuery:
-    """Start a stateful streaming query with at most one shuffle (and so
-    state-store) partition per core. The query clones the session when it
-    starts, so the session's own value is put back right after; a restart
-    from an existing checkpoint reuses the count in its offset log."""
+def _input_bytes(df: DataFrame) -> int | None:
+    """Bytes under the paths of a streaming frame's sources, or None when a
+    streaming source is not a file source or its size cannot be read. Each
+    path (a glob, say) costs one Hadoop ``globStatus`` plus a
+    ``getContentSummary`` per match, on any filesystem Hadoop reads."""
+    from py4j.protocol import Py4JError
+
+    spark = df.sparkSession
+    total = 0
+    try:
+        file_format = spark._jvm.java.lang.Class.forName(
+            "org.apache.spark.sql.execution.datasources.FileFormat")
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        for i in range(leaves.length()):
+            leaf = leaves.apply(i)
+            if not leaf.isStreaming():
+                continue
+            if leaf.getClass().getSimpleName() != "StreamingRelation":
+                return None
+            source = leaf.dataSource()
+            path = source.options().get("path")
+            if not file_format.isAssignableFrom(source.providingClass()) or path.isEmpty():
+                return None
+            jpath = spark._jvm.org.apache.hadoop.fs.Path(path.get())
+            fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+            matches = fs.globStatus(jpath)
+            if matches is None:
+                return None
+            total += sum(fs.getContentSummary(m.getPath()).getLength() for m in matches)
+    except Py4JError:
+        return None
+    return total
+
+
+def _state_partitions(spark: SparkSession, bounded: DataFrame | None) -> int:
+    """One state partition per advisory partition size of a bounded start's
+    input, capped at the cores; the core cap alone for any other start."""
+    cores = spark.sparkContext.defaultParallelism
+    size = None if bounded is None else _input_bytes(bounded)
+    if size is None:
+        return cores
+    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    return min(cores, max(1, -(-size // advisory)))
+
+
+def _start(
+    writer: DataStreamWriter, spark: SparkSession, bounded: DataFrame | None = None
+) -> StreamingQuery:
+    """Start a stateful streaming query with its shuffle (and so state-store)
+    partitions sized by ``_state_partitions``, never above the session's
+    own value. ``bounded`` is the streamed frame of an availableNow start
+    over file sources; leave it out for any other start. The query clones
+    the session when it starts, so the session's own value is put back
+    right after; a restart from an existing checkpoint reuses the count in
+    its offset log."""
     key = "spark.sql.shuffle.partitions"
+    n = _state_partitions(spark, bounded)
     with _START_LOCK:
         before = spark.conf.get(key)
-        spark.conf.set(key, str(min(int(before), spark.sparkContext.defaultParallelism)))
+        spark.conf.set(key, str(min(int(before), n)))
         try:
             return writer.start()
         finally:
@@ -182,8 +239,9 @@ def drain_to_parquet(
     same snapshot-file pattern as OnlineAggregator (HOP's
     snapshot-<progress> analogue), with no driver-side accumulation.
 
-    The query starts through ``_start`` (one state partition per core),
-    and its one-shot checkpoint is deleted once the drain returns.
+    The query starts through ``_start`` as a bounded start (state
+    partitions sized to the input, capped at the cores), and its one-shot
+    checkpoint is deleted once the drain returns.
     """
     import os
     import shutil
@@ -206,7 +264,7 @@ def drain_to_parquet(
         writer.option("checkpointLocation", ckpt)
         .outputMode(output_mode).trigger(availableNow=True)
     )
-    _start(writer, spark).awaitTermination()
+    _start(writer, spark, bounded=stream_df).awaitTermination()
     # a fresh checkpoint drained availableNow is never resumed
     shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.schema(stream_df.schema).parquet(result)
@@ -312,14 +370,16 @@ class OnlineAggregator:
     start of every run — a reused checkpoint would mark all files processed
     and silently produce zero batches.
 
-    ``run_incremental`` starts its query through ``_start``, so the state
-    store has one partition per core rather than the batch default of 32
-    shuffle partitions; the count is written into the checkpoint's offset
-    log. Without a ``work_dir`` the checkpoint is deleted once the run
-    returns (the snapshots stay); a checkpoint under a caller's
-    ``work_dir`` is kept. ``self.progress`` then holds one entry
-    per snapshot — batch id, progress fraction, input rows, state rows and
-    state commit ms — HOP's per-snapshot progress report.
+    ``run_incremental`` starts its query through ``_start`` as a bounded
+    start, so the state store has one partition per advisory partition
+    size of ``source_path`` (one for a few MB), capped at the cores,
+    rather than the batch default of 32 shuffle partitions; the count is
+    written into the checkpoint's offset log. Without a ``work_dir`` the
+    checkpoint is deleted once the run returns (the snapshots stay); a
+    checkpoint under a caller's ``work_dir`` is kept. ``self.progress``
+    then holds one entry per snapshot — batch id, progress fraction, input
+    rows, state partitions, state rows and state commit ms — HOP's
+    per-snapshot progress report.
     """
 
     def __init__(
@@ -413,6 +473,7 @@ class OnlineAggregator:
                 .option("checkpointLocation", checkpoint)
                 .trigger(availableNow=True),
                 spark,
+                bounded=agg,
             )
             q.awaitTermination()
             # stamp real progress fractions from the query's input
@@ -440,6 +501,7 @@ class OnlineAggregator:
                 "batch_id": batch_id,
                 "progress": progress,
                 "input_rows": rows,
+                "state_partitions": max((s.numShufflePartitions for s in state), default=0),
                 "state_rows": sum(s.numRowsTotal for s in state),
                 "state_commit_ms": sum(s.commitTimeMs for s in state),
             })

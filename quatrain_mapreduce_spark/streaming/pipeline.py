@@ -209,7 +209,9 @@ def start_training_stream(deduped: DataFrame, out_root: str,
                           processing_time: str | None = None):
     """Attach the foreachBatch fold to an already-staged deduped stream and
     start it. Split from run_training_stream so the soak can feed a rate
-    source with a processingTime trigger through the identical fold."""
+    source with a processingTime trigger through the identical fold.
+    An availableNow start sizes its dedup state to the input
+    (``hop._start``); a processingTime start keeps the core cap."""
     kept_root = os.path.join(out_root, "kept")
     cells_root = os.path.join(out_root, "cells")
     ckpt = os.path.join(out_root, "ckpt")
@@ -270,7 +272,8 @@ def start_training_stream(deduped: DataFrame, out_root: str,
         writer = writer.trigger(availableNow=True)
     elif processing_time:
         writer = writer.trigger(processingTime=processing_time)
-    return _start(writer, deduped.sparkSession)
+    return _start(writer, deduped.sparkSession,
+                  bounded=deduped if available_now else None)
 
 
 def read_training_stream_result(

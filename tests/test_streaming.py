@@ -1048,17 +1048,38 @@ def test_stream_pipeline_funnel_metrics_match_batch_counts(spark, sf_dir):
 
 
 @contextmanager
-def _shuffle_partitions(spark, n: int):
-    """The suite's session runs local[8] with 8 partitions, where stateful
-    sizing is a no-op; these tests raise the session to the batch default
-    for their own duration."""
-    key = "spark.sql.shuffle.partitions"
+def _session_conf(spark, key: str, value: str):
+    """Set one session conf for the block's duration."""
     before = spark.conf.get(key)
-    spark.conf.set(key, str(n))
+    spark.conf.set(key, value)
     try:
         yield
     finally:
         spark.conf.set(key, before)
+
+
+def _shuffle_partitions(spark, n: int):
+    """The suite's session runs local[8] with 8 partitions. There the core
+    cap changes nothing, though the input-size rule does (a bounded start
+    over a few MB gets 1 partition); these tests raise the session to the
+    batch default for their own duration, so both rules show."""
+    return _session_conf(spark, "spark.sql.shuffle.partitions", str(n))
+
+
+def _advisory_size(spark, n_bytes: int):
+    """Lower the advisory partition size a bounded start is sized by."""
+    return _session_conf(
+        spark, "spark.sql.adaptive.advisoryPartitionSizeInBytes", str(n_bytes))
+
+
+def _data_bytes(root: str) -> int:
+    """Bytes of the files under ``root`` that Hadoop's local filesystem
+    reports (its ``.crc`` checksum files are hidden)."""
+    import os
+
+    return sum(os.path.getsize(os.path.join(d, f))
+               for d, _, files in os.walk(root) for f in files
+               if not f.endswith(".crc"))
 
 
 def _logged_partitions(ckpt: str, batch_id: int) -> str:
@@ -1071,11 +1092,13 @@ def _logged_partitions(ckpt: str, batch_id: int) -> str:
     return meta["conf"]["spark.sql.shuffle.partitions"]
 
 
-def test_online_aggregator_state_sized_to_cores_and_reports_progress(spark, sf_dir):
-    """run_incremental starts its stateful query with one state partition
-    per core, freezes that count into the checkpoint, leaves the session's
-    own value alone, and still converges to the batch answer. Its per-batch
-    progress list mirrors the snapshots."""
+def test_online_aggregator_state_sized_to_input_and_reports_progress(spark, sf_dir):
+    """run_incremental starts its stateful query as a bounded start: a
+    source far below the 64 MB advisory partition size gets one state
+    partition, frozen into the checkpoint, while the session's own value
+    is left alone, and the run still converges to the batch answer. Its
+    per-batch progress list mirrors the snapshots and reports the frozen
+    partition count."""
     import os
 
     ev = load_table(spark, sf_dir, "events")
@@ -1094,15 +1117,144 @@ def test_online_aggregator_state_sized_to_cores_and_reports_progress(spark, sf_d
         assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
     cores = spark.sparkContext.defaultParallelism
     assert cores == 8
-    assert _logged_partitions(os.path.join(work, "checkpoint"), 0) == str(cores)
+    assert _logged_partitions(os.path.join(work, "checkpoint"), 0) == "1"
     exact = {r["event_type"]: r["cnt"] for r in agg_fn(ev).collect()}
     assert {r["event_type"]: r["cnt"] for r in final.collect()} == exact
 
     assert [p["progress"] for p in inc.progress] == [p for p, _ in inc.snapshots]
     assert [p["batch_id"] for p in inc.progress] == list(range(len(inc.snapshots)))
     assert sum(p["input_rows"] for p in inc.progress) == total
+    assert [p["state_partitions"] for p in inc.progress] == [1] * len(inc.snapshots)
     assert inc.progress[-1]["state_rows"] == len(exact)
     assert all(p["state_commit_ms"] >= 0 for p in inc.progress)
+
+
+def test_bounded_start_takes_one_partition_per_advisory_size(spark, sf_dir, tmp_path):
+    """With the advisory partition size lowered so the same input needs k
+    partitions, a bounded start logs min(k, cores) and stays exact: k = 3
+    fits under the 8 cores, k = 21 is capped at them."""
+    import os
+
+    ev = load_table(spark, sf_dir, "events")
+    src = str(tmp_path / "src")
+    ev.repartitionByRange(4, "event_id").write.parquet(src)
+    size = _data_bytes(src)
+
+    def agg_fn(df):
+        return df.groupBy("event_type").agg(F.count("*").alias("cnt"),
+                                            F.sum("event_id").alias("ids"))
+
+    exact = {tuple(r) for r in agg_fn(ev).collect()}
+    cores = spark.sparkContext.defaultParallelism
+    for k in (3, 21):
+        work = str(tmp_path / f"work{k}")
+        with _shuffle_partitions(spark, 32), _advisory_size(spark, -(-size // k)):
+            inc = OnlineAggregator(spark, src, spark.read.parquet(src).schema, agg_fn,
+                                   total_rows=ev.count(), work_dir=work)
+            final = inc.run_incremental()
+        assert _logged_partitions(os.path.join(work, "checkpoint"), 0) == str(min(k, cores))
+        assert inc.progress[-1]["state_partitions"] == min(k, cores)
+        assert {tuple(r) for r in final.collect()} == exact
+
+
+def test_rate_source_start_keeps_core_cap(spark, tmp_path):
+    """A rate source is unbounded: even handed to _start as ``bounded`` its
+    size cannot be read, so the query logs one state partition per core."""
+    import os
+    import time
+
+    from quatrain_mapreduce_spark.streaming.hop import _input_bytes, _start
+
+    ckpt = str(tmp_path / "ckpt")
+    agg = (
+        spark.readStream.format("rate").option("rowsPerSecond", 50).load()
+        .groupBy((F.col("value") % 3).alias("k")).agg(F.count("*").alias("n"))
+    )
+    assert _input_bytes(agg) is None
+    with _shuffle_partitions(spark, 32):
+        q = _start(
+            agg.writeStream.format("noop").outputMode("complete")
+            .option("checkpointLocation", ckpt).trigger(processingTime="1 second"),
+            spark, bounded=agg,
+        )
+    try:
+        deadline = time.monotonic() + 120
+        while q.isActive and q.lastProgress is None and time.monotonic() < deadline:
+            time.sleep(0.2)
+        assert q.exception() is None
+        assert q.lastProgress is not None
+    finally:
+        q.stop()
+    assert _logged_partitions(ckpt, 0) == str(spark.sparkContext.defaultParallelism)
+
+
+def test_glob_source_path_is_sized(spark, tmp_path):
+    """A glob source path (``src/*``) is sized over every match and the
+    bounded start drains it exactly at the one partition its size asks for."""
+    import os
+
+    from quatrain_mapreduce_spark.streaming.hop import _input_bytes, _start
+
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    for name, lo, hi in (("a", 0, 50), ("b", 50, 100), ("c", 100, 150)):
+        spark.range(lo, hi).coalesce(1).write.parquet(os.path.join(src, name))
+    agg = (
+        spark.readStream.schema("id long")
+        .option("maxFilesPerTrigger", 1).parquet(os.path.join(src, "*"))
+        .groupBy((F.col("id") % 5).alias("k")).agg(F.count("*").alias("n"))
+    )
+    assert _input_bytes(agg) == _data_bytes(src) > 0
+
+    def write_snapshot(batch_df, _batch_id):
+        batch_df.write.mode("overwrite").parquet(out)
+
+    with _shuffle_partitions(spark, 32):
+        _start(
+            agg.writeStream.foreachBatch(write_snapshot).outputMode("complete")
+            .option("checkpointLocation", ckpt).trigger(availableNow=True),
+            spark, bounded=agg,
+        ).awaitTermination()
+    assert _logged_partitions(ckpt, 0) == "1"
+    got = {r["k"]: r["n"] for r in spark.read.parquet(out).collect()}
+    assert got == {k: 30 for k in range(5)}
+
+
+def test_results_do_not_depend_on_state_partitions(spark, sf_dir):
+    """run_incremental and a watermarked drain_to_parquet return identical
+    rows whether their bounded start takes 1 state partition (the input's
+    own size) or one per core (a 1-byte advisory size)."""
+    from quatrain_mapreduce_spark.staging import stage_event_slices
+    from quatrain_mapreduce_spark.streaming.hop import _state_partitions, drain_to_parquet
+
+    src = stage_event_slices(spark, sf_dir, 4, ordered_mtime=True)
+    schema = spark.read.parquet(src).schema
+    total = spark.read.parquet(src).count()
+    cores = spark.sparkContext.defaultParallelism
+
+    def aggs():
+        return [F.count("*").alias("cnt"), F.sum("event_id").alias("ids"),
+                F.max("value").alias("top")]
+
+    def run(parts):
+        inc = OnlineAggregator(spark, src, schema,
+                               lambda df: df.groupBy("event_type").agg(*aggs()), total)
+        final = sorted(tuple(r) for r in inc.run_incremental().collect())
+        assert {p["state_partitions"] for p in inc.progress} == {parts}
+        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+        windows = tumbling_window_agg(stream, "ts", ["event_type"], aggs())
+        assert _state_partitions(spark, windows) == parts
+        drained = sorted(
+            (r["win"]["start"], r["event_type"], r["cnt"], r["ids"], r["top"])
+            for r in drain_to_parquet(windows, "qms_test_parts_parity").collect())
+        return final, drained
+
+    with _shuffle_partitions(spark, 32):
+        one = run(1)
+        with _advisory_size(spark, 1):
+            many = run(cores)
+    assert one == many
+    assert sum(r[1] for r in one[0]) == total
+    assert one[1]
 
 
 def test_stateful_restart_keeps_logged_partition_count(spark):

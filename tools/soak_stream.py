@@ -153,19 +153,21 @@ def _run_child(args) -> int:
     """One streaming run: resume from checkpoint, append to the parquet
     sink, log per-batch state metrics + watermark to --log (JSONL), stop
     gracefully when --stop-file appears or --run-seconds elapse."""
+    from quatrain_mapreduce_spark.streaming.hop import _start
+
     spark = _session("qms-soak-child")
     spark.sparkContext.setLogLevel("ERROR")
     sessions = _sessionize(
         _deterministic_source(spark, args.rate, args.keys),
         args.gap_seconds, args.watermark_seconds,
     )
-    q = (
+    q = _start(
         sessions.writeStream.outputMode("append")
         .format("parquet")
         .option("path", args.sink)
         .option("checkpointLocation", args.checkpoint)
-        .trigger(processingTime="5 seconds")
-        .start()
+        .trigger(processingTime="5 seconds"),
+        spark,
     )
     deadline = time.monotonic() + args.run_seconds
     seen: set[int] = set()
@@ -372,6 +374,8 @@ def _assert_exactly_once(args, sink: str, ckpt: str, log: str) -> int:
 def _flat(args) -> int:
     from pyspark.sql import functions as F
 
+    from quatrain_mapreduce_spark.streaming.hop import _start
+
     spark = _session("qms-soak")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -406,15 +410,15 @@ def _flat(args) -> int:
     )
     sink = tempfile.mkdtemp(prefix="qms_soak_sink_")
     ckpt = tempfile.mkdtemp(prefix="qms_soak_ckpt_")
-    q = (
+    q = _start(
         sessions.select("user_id", F.col("sw.start").alias("session_start"),
                         "n_events")
         .writeStream.outputMode("append")
         .format("parquet")
         .option("path", sink)
         .option("checkpointLocation", ckpt)
-        .trigger(processingTime="5 seconds")
-        .start()
+        .trigger(processingTime="5 seconds"),
+        spark,
     )
 
     deadline = time.monotonic() + args.minutes * 60
@@ -768,6 +772,7 @@ def _pipeline_flat(args) -> int:
     the same verdict shape as the sessionization flat soak."""
     from pyspark.sql import functions as F
 
+    from quatrain_mapreduce_spark.streaming.hop import _start
     from quatrain_mapreduce_spark.streaming.pipeline import curate_dedup_stages
 
     spark = _session("qms-soak-pipe-flat")
@@ -795,10 +800,11 @@ def _pipeline_flat(args) -> int:
     )
     sink = tempfile.mkdtemp(prefix="qms_soak_pipeflat_sink_")
     ckpt = tempfile.mkdtemp(prefix="qms_soak_pipeflat_ckpt_")
-    q = (
+    q = _start(
         deduped.writeStream.outputMode("append").format("parquet")
         .option("path", sink).option("checkpointLocation", ckpt)
-        .trigger(processingTime="5 seconds").start()
+        .trigger(processingTime="5 seconds"),
+        spark,
     )
     deadline = time.monotonic() + args.minutes * 60
     t_start = time.monotonic()
