@@ -10,8 +10,6 @@ timestamp formatting dependence.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -20,23 +18,14 @@ from quatrain_mapreduce_spark.operators.curation import (
     EMAIL_RE as _EMAIL_RE, PHONE_RE as _PHONE_RE,
 )
 from quatrain_mapreduce_spark.registry import register
-from quatrain_mapreduce_spark.staging import stage_event_slices
+from quatrain_mapreduce_spark.staging import stage_doc_slices, stage_event_slices
 from quatrain_mapreduce_spark.streaming.hop import (
-    OnlineAggregator, _start, drain_to_parquet, read_events_stream,
-    run_available_now, sessionize, tumbling_window_agg,
+    OnlineAggregator, _drain, accumulate_counts_stream, drain_to_parquet,
+    fold_versions, read_events_stream, replay, sessionize, tumbling_window_agg,
 )
 from quatrain_mapreduce_spark.streaming.stateful import (
     moving_avg_batch, moving_avg_stream,
 )
-
-_stream_counter = itertools.count()
-
-
-def stage_multifile_events(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
-    """Events as an n-file parquet dir so a maxFilesPerTrigger=1 stream
-    replays it in n micro-batches (the bounded stand-in for HOP's progress
-    quanta). One shared staging implementation: staging.stage_event_slices."""
-    return stage_event_slices(spark, sf_dir, n_files)
 
 
 @register(
@@ -111,8 +100,7 @@ def stream_tumbling_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream, "ts", ["event_type"], [F.count("*").alias("cnt")],
         window_duration="1 hour", watermark=None,
     )
-    name = f"qms_stream_tumbling_{next(_stream_counter)}"
-    result = run_available_now(agg, name)
+    result = drain_to_parquet(agg, "qms_stream_tumbling", output_mode="complete")
     return result.select(
         F.unix_timestamp(F.col("win.start")).alias("win_start"), "event_type", "cnt"
     )
@@ -138,7 +126,7 @@ def stream_tumbling_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "online-agg"),
 )
 def online_agg_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = stage_multifile_events(spark, sf_dir, n_files=4)
+    src = stage_event_slices(spark, sf_dir, 4)
     schema = spark.read.parquet(src).schema
 
     def agg_fn(df: DataFrame) -> DataFrame:
@@ -167,7 +155,7 @@ def online_agg_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "online-agg", "example"),
 )
 def online_agg_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = stage_multifile_events(spark, sf_dir, n_files=4)
+    src = stage_event_slices(spark, sf_dir, 4)
     schema = spark.read.parquet(src).schema
 
     def agg_fn(df: DataFrame) -> DataFrame:
@@ -177,15 +165,6 @@ def online_agg_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = spark.read.parquet(src).count()
     runner = OnlineAggregator(spark, src, schema, agg_fn, total_rows=total)
     return runner.run_incremental()
-
-
-def stage_ordered_event_slices(spark: SparkSession, sf_dir: str, n_files: int = 3) -> str:
-    """Events as mtime-ordered single-file slices — deterministic arrival
-    order for the stateful moving-average oracle (see
-    staging.stage_event_slices for the mechanism)."""
-    return stage_event_slices(
-        spark, sf_dir, n_files, columns=["event_id", "user_id", "value"], ordered_mtime=True
-    )
 
 
 _MOVING_AVG_ORACLE = """
@@ -224,15 +203,12 @@ def cq_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "stateful", "no-sql-plan"),
 )
 def cq_moving_avg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = stage_ordered_event_slices(spark, sf_dir, n_files=3)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
+    # mtime-ordered slices: deterministic arrival order for the oracle
+    src = stage_event_slices(
+        spark, sf_dir, 3, columns=["event_id", "user_id", "value"], ordered_mtime=True
     )
-    ma = moving_avg_stream(stream, "user_id", "event_id", "value", k=5)
-    name = f"qms_moving_avg_{next(_stream_counter)}"
-    return drain_to_parquet(ma, name, output_mode="append")
+    ma = moving_avg_stream(replay(spark, src), "user_id", "event_id", "value", k=5)
+    return drain_to_parquet(ma, "qms_moving_avg", output_mode="append")
 
 
 @register(
@@ -255,19 +231,14 @@ def cq_moving_avg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quatrain_mapreduce_spark.operators.dedup import normalized_text
-    from quatrain_mapreduce_spark.staging import stage_doc_slices
 
-    d = stage_doc_slices(spark, sf_dir)
-    schema = spark.read.parquet(d).schema
     stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(d)
+        replay(spark, stage_doc_slices(spark, sf_dir))
         .select("source", F.md5(normalized_text("text")).alias("fp"))
         .dropDuplicates(["source", "fp"])
     )
-    name = f"qms_stream_dedup_{next(_stream_counter)}"
     # append mode: dropDuplicates emits each first-seen row exactly once
-    kept = drain_to_parquet(stream, name, output_mode="append")
+    kept = drain_to_parquet(stream, "qms_stream_dedup", output_mode="append")
     return kept.groupBy("source").agg(F.count("*").alias("uniq_docs"))
 
 
@@ -293,13 +264,11 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "join", "superset", "no-sql-plan"),
 )
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = stage_multifile_events(spark, sf_dir, n_files=4)
-    schema = spark.read.parquet(src).schema
+    src = stage_event_slices(spark, sf_dir, 4)
 
     def read(kind: str, alias: str) -> DataFrame:
         return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2).parquet(src)
+            replay(spark, src, max_files_per_trigger=2)
             .where(F.col("event_type") == kind)
             .select(
                 F.col("user_id").alias(f"{alias}_user"),
@@ -315,8 +284,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") >= F.col("c_ts"))
         & (F.col("p_ts") <= F.col("c_ts") + F.expr("interval 5 minutes")),
     )
-    name = f"qms_ss_join_{next(_stream_counter)}"
-    return drain_to_parquet(joined, name, output_mode="append").select(
+    return drain_to_parquet(joined, "qms_ss_join", output_mode="append").select(
         F.col("c_user").alias("user_id"),
         F.col("c_id").alias("click_id"),
         F.col("p_id").alias("purchase_id"),
@@ -402,11 +370,7 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quatrain_mapreduce_spark.catalog import normalize_event_ts
     from quatrain_mapreduce_spark.staging import stage_late_slices
 
-    src = stage_late_slices(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    stream = normalize_event_ts(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
+    stream = normalize_event_ts(replay(spark, stage_late_slices(spark, sf_dir)))
     agg = (
         stream.withWatermark("ts", "30 minutes")
         .groupBy(F.window("ts", "10 minutes").alias("w"))
@@ -415,8 +379,7 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")).alias("cents"),
         )
     )
-    name = f"qms_late_{next(_stream_counter)}"
-    return drain_to_parquet(agg, name, output_mode="append").select(
+    return drain_to_parquet(agg, "qms_late", output_mode="append").select(
         F.unix_micros("w.start").alias("win_start_us"), "n_events", "cents"
     )
 
@@ -461,8 +424,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = sessionize_stream(
         stream.withWatermark("ts", "10 minutes"), "user_id", "ts", gap_minutes=30
     )
-    name = f"qms_stream_sess_{next(_stream_counter)}"
-    result = run_available_now(agg, name)
+    result = drain_to_parquet(agg, "qms_stream_sess", output_mode="complete")
     return result.select(
         "user_id",
         F.unix_micros(F.col("sw.start")).alias("session_start_us"),
@@ -491,17 +453,10 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "jdbc", "no-sql-plan"),
 )
 def stream_jdbc_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from quatrain_mapreduce_spark.sources.readers import read_jdbc
     from quatrain_mapreduce_spark.staging import stage_dir
 
-    src = stage_multifile_events(spark, sf_dir, n_files=4)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
+    stream = replay(spark, stage_event_slices(spark, sf_dir, 4))
     agg = stream.groupBy(F.col("event_type").alias("url")).agg(
         F.count("*").alias("pageview"),
         F.round(F.sum("value"), 2).alias("total_value"),
@@ -515,15 +470,7 @@ def stream_jdbc_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
          .option("url", url).option("dbtable", "stream_counts")
          .option("driver", driver).save())
 
-    ckpt = tempfile.mkdtemp(prefix="qms_jdbc_serving_ckpt_")
-    _start(
-        agg.writeStream.foreachBatch(write_snapshot)
-        .outputMode("complete").option("checkpointLocation", ckpt)
-        .trigger(availableNow=True),
-        spark,
-        bounded=agg,
-    ).awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
+    _drain(agg.writeStream.foreachBatch(write_snapshot).outputMode("complete"), agg)
     return read_jdbc(spark, url, "stream_counts", driver=driver)
 
 
@@ -578,16 +525,10 @@ def stream_jdbc_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "curation", "no-sql-plan"),
 )
 def stream_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quatrain_mapreduce_spark.operators.curation import (
-        EMAIL_RE, PHONE_RE, gopher_rules, scrub_pii,
-    )
-    from quatrain_mapreduce_spark.staging import stage_doc_slices
+    from quatrain_mapreduce_spark.operators.curation import gopher_rules, scrub_pii
 
-    d = stage_doc_slices(spark, sf_dir)
-    schema = spark.read.parquet(d).schema
     injected = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(d)
+        replay(spark, stage_doc_slices(spark, sf_dir))
         .withColumn(
             "text",
             F.concat(
@@ -603,8 +544,7 @@ def stream_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", "n_emails", "n_phones",
         F.md5("scrubbed").alias("fp"),
     )
-    name = f"qms_stream_curation_{next(_stream_counter)}"
-    return drain_to_parquet(scrubbed, name, output_mode="append")
+    return drain_to_parquet(scrubbed, "qms_stream_curation", output_mode="append")
 
 
 @register(
@@ -696,56 +636,27 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                      (t0 + i * 10, t0 + i * 10))
         open(os.path.join(log_d, "_STAGED"), "w").close()
 
-    work = stage_dir(sf_dir, "cdctarget")
-    done = os.path.join(work, "_DONE")
-    if not os.path.exists(done):
-        if os.path.exists(work):
-            shutil.rmtree(work)
-        os.makedirs(work)
-        ckpt = os.path.join(work, "ckpt")
-        schema = spark.read.parquet(os.path.join(log_d, "seq0.parquet")).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1).parquet(log_d)
+    def compact(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
+        log = batch if prev is None else prev.unionByName(batch)
+        return (
+            log.groupBy("o_orderkey")
+            .agg(
+                F.max("seq").alias("seq"),
+                F.max_by(
+                    F.struct("op", "o_custkey", "price", "status"),
+                    F.col("seq"),
+                ).alias("_w"),
+            )
+            .select(
+                "o_orderkey", "seq",
+                F.col("_w.op").alias("op"),
+                F.col("_w.o_custkey").alias("o_custkey"),
+                F.col("_w.price").alias("price"),
+                F.col("_w.status").alias("status"),
+            )
         )
 
-        def apply_batch(batch, bid: int) -> None:
-            vers = sorted(glob.glob(os.path.join(work, "v*")))
-            log = batch
-            if vers:
-                prev = batch.sparkSession.read.parquet(vers[-1])
-                log = prev.unionByName(batch)
-            compacted = (
-                log.groupBy("o_orderkey")
-                .agg(
-                    F.max("seq").alias("seq"),
-                    F.max_by(
-                        F.struct("op", "o_custkey", "price", "status"),
-                        F.col("seq"),
-                    ).alias("_w"),
-                )
-                .select(
-                    "o_orderkey", "seq",
-                    F.col("_w.op").alias("op"),
-                    F.col("_w.o_custkey").alias("o_custkey"),
-                    F.col("_w.price").alias("price"),
-                    F.col("_w.status").alias("status"),
-                )
-            )
-            compacted.write.mode("overwrite").parquet(
-                os.path.join(work, f"v{bid:04d}")
-            )
-
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-        open(done, "w").close()
-
-    vers = sorted(glob.glob(os.path.join(work, "v*")))
-    snap = spark.read.parquet(vers[-1])
+    snap = fold_versions(spark, sf_dir, log_d, "cdctarget", compact)
     return snap.where(F.col("op") != "D").select(
         "o_orderkey", "o_custkey", "price", "status",
         F.col("seq").cast("int").alias("last_seq"),
@@ -850,10 +761,8 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quatrain_mapreduce_spark.plans.data_pipeline import (
         drift_report_from_counts, token_slice_counts,
     )
-    from quatrain_mapreduce_spark.streaming.hop import accumulate_counts_stream
-
     counts = accumulate_counts_stream(
-        spark, sf_dir, "documents", "docslices4", "driftcounts",
+        spark, sf_dir, stage_doc_slices(spark, sf_dir), "driftcounts",
         token_slice_counts, key_cols=("token",), sum_cols=("cnt_a", "cnt_b"),
     )
     return drift_report_from_counts(counts)
@@ -888,10 +797,9 @@ def stream_auc_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quatrain_mapreduce_spark.plans.analytics_queries import (
         auc_from_counts, auc_value_counts,
     )
-    from quatrain_mapreduce_spark.streaming.hop import accumulate_counts_stream
-
+    # additive counts: the sums do not depend on how the events are sliced
     counts = accumulate_counts_stream(
-        spark, sf_dir, "events", "evslices4", "auccounts",
+        spark, sf_dir, stage_event_slices(spark, sf_dir, 4), "auccounts",
         auc_value_counts, key_cols=("cents",), sum_cols=("p_here", "n_here"),
     )
     return auc_from_counts(counts)
@@ -1033,23 +941,18 @@ from quatrain_mapreduce_spark.plans.analytics_queries import (  # noqa: E402
 )
 def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quatrain_mapreduce_spark.operators.curation import cms_probes
-    from quatrain_mapreduce_spark.staging import stage_doc_slices
 
-    d = stage_doc_slices(spark, sf_dir)
-    schema = spark.read.parquet(d).schema
     tok_expr = F.explode(
         F.expr("filter(split(lower(text), ' '), x -> x <> '')")
     ).alias("tok")
     cells_stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(d)
+        replay(spark, stage_doc_slices(spark, sf_dir))
         .select(tok_expr)
         .select(F.explode(cms_probes("tok")).alias("rb"))
         .groupBy(F.col("rb.i").alias("i"), F.col("rb.b").alias("b"))
         .agg(F.count("*").cast("bigint").alias("c"))
     )
-    name = f"qms_stream_cms_{next(_stream_counter)}"
-    cells = run_available_now(cells_stream, name)
+    cells = drain_to_parquet(cells_stream, "qms_stream_cms", output_mode="complete")
     toks = load_table(spark, sf_dir, "documents").select(tok_expr)
     return cms_serve_top20(toks, cells)
 
@@ -1142,7 +1045,6 @@ def _stream_tdp_oracle() -> str:
 def stream_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from quatrain_mapreduce_spark.staging import stage_doc_slices
     from quatrain_mapreduce_spark.streaming.pipeline import (
         norm_tokens, read_training_stream_result, run_training_stream,
     )
@@ -1226,12 +1128,7 @@ def stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quatrain_mapreduce_spark.streaming.pipeline import curate_dedup_stages
 
     src = stage_watermark_dedup_slices(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    deduped = curate_dedup_stages(stream, "text", ts_col="ts",
+    deduped = curate_dedup_stages(replay(spark, src), "text", ts_col="ts",
                                   watermark="30 minutes")
     kept = drain_to_parquet(deduped, "wm_dedup", output_mode="append")
     return kept.select(

@@ -37,19 +37,35 @@ processingTime, or a source whose size cannot be read — gets the core
 cap. The count is frozen into the checkpoint's offset log when the query
 first starts, and a restart reuses the logged count whatever the session
 says, so a checkpoint written under another count stays valid.
-Checkpoints the engine creates itself for a one-shot availableNow drain
-are deleted once the drain returns; output and snapshot directories
-stay, because they back the returned DataFrames.
+
+Bounded replay has one path, in this module. ``replay`` reads a staged
+parquet dir as a file stream with the staged files' schema, one file per
+micro-batch by default (the bounded stand-in for HOP's progress quanta).
+``_drain`` starts a writer availableNow through ``_start`` as a bounded
+start and waits for it; a checkpoint it creates itself
+(``qms_drain_ckpt_*``) is deleted when the drain returns or fails, while
+output and snapshot directories stay, because they back the returned
+DataFrames. ``fold_versions`` is the one batch-id-versioned
+``foreachBatch`` fold: version ``v{id}`` = ``step(previous version or None,
+batch)``, with the predecessor taken strictly below the batch id in
+numeric order and a missing one failing loudly; the additive count
+monitors and the CDC materialization are its ``step`` functions.
 """
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+import tempfile
 import threading
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+from quatrain_mapreduce_spark.staging import stage_dir
 
 
 # serializes _start's swap of the session-wide conf: two overlapping starts
@@ -135,11 +151,6 @@ def _stage_stream_dir(sf_dir: str, table: str = "events") -> str:
     symlinked individually, which also replays as one micro-batch per part
     under maxFilesPerTrigger=1 — the production landing-directory shape.
     Idempotent per (sf_dir, table)."""
-    import glob
-    import os
-
-    from quatrain_mapreduce_spark.staging import stage_dir
-
     # stage_dir keys on a CONTENT fingerprint of sf_dir, not just the path:
     # a regenerated source (tools/make_sf1.py overwrite) gets a fresh
     # staging dir instead of a dir of dangling symlinks from the previous
@@ -183,19 +194,25 @@ def _stage_stream_dir(sf_dir: str, table: str = "events") -> str:
     return d
 
 
+def replay(spark: SparkSession, path: str, max_files_per_trigger: int = 1) -> DataFrame:
+    """A staged parquet dir read as a file stream with the staged files'
+    schema, ``max_files_per_trigger`` files per micro-batch — the one
+    bounded-replay reader every engine stream over staged data uses."""
+    return (
+        spark.readStream.schema(spark.read.parquet(path).schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(path)
+    )
+
+
 def read_events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1) -> DataFrame:
     """Replay the events table as a file stream (the batch stand-in for an
     unbounded source; swap for kafka/rate in production)."""
-    # runtime-set so the nanos read works on externally-built sessions too
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(_stage_stream_dir(sf_dir, "events"))
-    )
     from quatrain_mapreduce_spark.catalog import normalize_event_ts
 
+    # runtime-set so the nanos read works on externally-built sessions too
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    stream = replay(spark, _stage_stream_dir(sf_dir, "events"), max_files_per_trigger)
     return normalize_event_ts(stream)
 
 
@@ -223,6 +240,31 @@ def tumbling_window_agg(
     return events.groupBy(F.window(ts_col, window_duration).alias("win"), *[F.col(k) for k in keys]).agg(*aggs)
 
 
+def _drain(
+    writer: DataStreamWriter, df: DataFrame, checkpoint: str | None = None
+) -> StreamingQuery:
+    """Run ``writer`` (a sink attached to the streamed frame ``df``) as a
+    bounded availableNow start through ``_start`` and wait for it to
+    finish. Without a ``checkpoint`` the drain makes a one-shot one
+    (``qms_drain_ckpt_*``) and deletes it in a ``finally``: a fresh
+    checkpoint drained availableNow is never resumed. A caller's
+    checkpoint is kept."""
+    own = checkpoint is None
+    if own:
+        checkpoint = tempfile.mkdtemp(prefix="qms_drain_ckpt_")
+    try:
+        q = _start(
+            writer.option("checkpointLocation", checkpoint).trigger(availableNow=True),
+            df.sparkSession,
+            bounded=df,
+        )
+        q.awaitTermination()
+        return q
+    finally:
+        if own:
+            shutil.rmtree(checkpoint, ignore_errors=True)
+
+
 def drain_to_parquet(
     stream_df: DataFrame, query_name: str, output_mode: str = "append"
 ) -> DataFrame:
@@ -239,17 +281,11 @@ def drain_to_parquet(
     same snapshot-file pattern as OnlineAggregator (HOP's
     snapshot-<progress> analogue), with no driver-side accumulation.
 
-    The query starts through ``_start`` as a bounded start (state
-    partitions sized to the input, capped at the cores), and its one-shot
-    checkpoint is deleted once the drain returns.
+    The query runs through ``_drain`` (state partitions sized to the
+    input, one-shot checkpoint deleted); the output dir
+    ``qms_drain_<query_name>_*`` stays.
     """
-    import os
-    import shutil
-    import tempfile
-
     out = tempfile.mkdtemp(prefix=f"qms_drain_{query_name}_")
-    ckpt = tempfile.mkdtemp(prefix=f"qms_drain_ckpt_{query_name}_")
-    spark = stream_df.sparkSession
     if output_mode == "append":
         result = out
         writer = stream_df.writeStream.format("parquet").option("path", out)
@@ -260,21 +296,8 @@ def drain_to_parquet(
             batch_df.write.mode("overwrite").parquet(result)
 
         writer = stream_df.writeStream.foreachBatch(write_snapshot)
-    writer = (
-        writer.option("checkpointLocation", ckpt)
-        .outputMode(output_mode).trigger(availableNow=True)
-    )
-    _start(writer, spark, bounded=stream_df).awaitTermination()
-    # a fresh checkpoint drained availableNow is never resumed
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.schema(stream_df.schema).parquet(result)
-
-
-def run_available_now(stream_df: DataFrame, query_name: str) -> DataFrame:
-    """Drain a bounded complete-mode stream with availableNow; return the
-    final result. Deterministic harness for tests/oracle checks — file-sink
-    backed (drain_to_parquet), never a driver-buffering memory sink."""
-    return drain_to_parquet(stream_df, query_name, output_mode="complete")
+    _drain(writer.outputMode(output_mode), stream_df)
+    return stream_df.sparkSession.read.schema(stream_df.schema).parquet(result)
 
 
 def monitor_job(spark: SparkSession, rows_per_second: int = 10, window: str = "2 seconds"):
@@ -366,17 +389,17 @@ class OnlineAggregator:
     mode allows both).
 
     Scale design: nothing accumulates on the driver; ``self.snapshots``
-    holds only (progress, path) metadata. The checkpoint is cleared at the
-    start of every run — a reused checkpoint would mark all files processed
-    and silently produce zero batches.
+    holds only (progress, path) metadata. A ``work_dir`` checkpoint is
+    cleared at the start of every run — a reused checkpoint would mark all
+    files processed and silently produce zero batches.
 
-    ``run_incremental`` starts its query through ``_start`` as a bounded
-    start, so the state store has one partition per advisory partition
-    size of ``source_path`` (one for a few MB), capped at the cores,
-    rather than the batch default of 32 shuffle partitions; the count is
-    written into the checkpoint's offset log. Without a ``work_dir`` the
-    checkpoint is deleted once the run returns (the snapshots stay); a
-    checkpoint under a caller's ``work_dir`` is kept. ``self.progress``
+    ``run_incremental`` runs its query through ``_drain``, so the state
+    store has one partition per advisory partition size of
+    ``source_path`` (one for a few MB), capped at the cores, rather than
+    the batch default of 32 shuffle partitions; the count is written into
+    the checkpoint's offset log. Without a ``work_dir`` the drain's
+    one-shot checkpoint is deleted once the run returns (the snapshots
+    stay); a checkpoint under a caller's ``work_dir`` is kept. ``self.progress``
     then holds one entry per snapshot — batch id, progress fraction, input
     rows, state partitions, state rows and state commit ms — HOP's
     per-snapshot progress report.
@@ -411,13 +434,11 @@ class OnlineAggregator:
         it across batches (per-batch cost O(batch + groups)).
         Returns the final snapshot as a DataFrame (== the exact batch answer
         once progress reaches 1.0)."""
-        import os
-        import shutil
-        import tempfile
-
         work = self.work_dir or tempfile.mkdtemp(prefix="qms_online_inc_")
-        checkpoint = os.path.join(work, "checkpoint")
-        shutil.rmtree(checkpoint, ignore_errors=True)
+        checkpoint = None
+        if self.work_dir:
+            checkpoint = os.path.join(work, "checkpoint")
+            shutil.rmtree(checkpoint, ignore_errors=True)
 
         stream = (
             self.spark.readStream.schema(self.schema)
@@ -467,15 +488,8 @@ class OnlineAggregator:
         listener = _BatchProgress()
         self.spark.streams.addListener(listener)
         try:
-            q = _start(
-                agg.writeStream.foreachBatch(per_batch)
-                .outputMode("complete")
-                .option("checkpointLocation", checkpoint)
-                .trigger(availableNow=True),
-                spark,
-                bounded=agg,
-            )
-            q.awaitTermination()
+            q = _drain(agg.writeStream.foreachBatch(per_batch).outputMode("complete"),
+                       agg, checkpoint)
             # stamp real progress fractions from the query's input
             # bookkeeping, keyed by batchId so a zero-input batch can't shift
             # the pairing or drop the final snapshot
@@ -485,8 +499,6 @@ class OnlineAggregator:
             by_batch.update({p.batchId: p for p in q.recentProgress})
         finally:
             self.spark.streams.removeListener(listener)
-        if not self.work_dir:
-            shutil.rmtree(checkpoint, ignore_errors=True)
         cum = 0
         self.snapshots.clear()
         self.progress.clear()
@@ -513,101 +525,82 @@ class OnlineAggregator:
         return self.spark.read.parquet(self.snapshots[-1][1])
 
 
-def accumulate_counts_stream(
-    spark,
+def _versions(work: str) -> list[int]:
+    """Batch ids of the ``v{id}`` dirs under ``work``, in numeric order:
+    lexical order puts 'v10000' before 'v9999' once ids outgrow the pad."""
+    return sorted(int(os.path.basename(v)[1:]) for v in glob.glob(os.path.join(work, "v*")))
+
+
+def fold_versions(
+    spark: SparkSession,
     sf_dir: str,
-    table: str,
-    src_tag: str,
+    src: str,
     work_tag: str,
-    count_fn,
-    key_cols: tuple,
-    sum_cols: tuple,
-    n_files: int = 4,
-):
-    """Generic streaming count accumulator — the shared scaffold behind
-    stream_drift_monitor and stream_auc_monitor (previously ~55 duplicated
-    lines each, review finding): stage ``table`` as an ``n_files`` parquet
-    source, replay it file-by-file (maxFilesPerTrigger=1, availableNow),
-    and foreachBatch-merge each batch's ``count_fn(batch)`` into a
-    versioned running-counts table by ADDITION — valid exactly when the
-    state is additively mergeable (per-key counts). Returns the final
-    accumulated counts DataFrame (key_cols + sum_cols, sums as bigint).
+    step: Callable[[DataFrame | None, DataFrame], DataFrame],
+) -> DataFrame:
+    """Fold the staged dir ``src``, replayed one file per micro-batch, into
+    batch-id versions under ``stage_dir(sf_dir, work_tag)``: version
+    ``v{id}`` = ``step(previous version or None, batch)``. Returns the final
+    version. Built once per (sf_dir, work_tag, data version): a ``_DONE``
+    marker makes later calls read the final version, and a run that died
+    before it is redone from scratch.
 
     Retry idempotence: a retried batch id must not see its OWN previous
-    (possibly partial) version as merge input, or the batch double-counts
-    — the previous-version lookup therefore takes the latest version
-    STRICTLY BELOW the current batch id, not the latest overall.
+    (possibly partial) version as its predecessor, or the fold applies the
+    batch twice — so the predecessor is the latest version STRICTLY BELOW
+    the batch id. Every batch writes a version, so a missing predecessor
+    past batch 0 means the running state was deleted externally; starting
+    over from ``None`` would silently lose it, so the batch fails instead.
     """
-    import glob
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from quatrain_mapreduce_spark.catalog import load_table
-    from quatrain_mapreduce_spark.staging import stage_dir
-
-    src_d = stage_dir(sf_dir, src_tag)
-    if not os.path.exists(os.path.join(src_d, "_STAGED")):
-        load_table(spark, sf_dir, table).repartition(n_files) \
-            .write.mode("overwrite").parquet(src_d)
-        open(os.path.join(src_d, "_STAGED"), "w").close()
-
     work = stage_dir(sf_dir, work_tag)
     done = os.path.join(work, "_DONE")
     if not os.path.exists(done):
-        if os.path.exists(work):
-            shutil.rmtree(work)
+        shutil.rmtree(work, ignore_errors=True)
         os.makedirs(work)
-        ckpt = os.path.join(work, "ckpt")
-        schema = spark.read.parquet(src_d).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1).parquet(src_d)
-        )
 
-        def accumulate(batch, bid: int) -> None:
-            counts = count_fn(batch)
-            # numeric sort: lexical order puts 'v10000' before 'v9999'
-            # once ids outgrow the 4-digit pad, silently dropping batch
-            # 10000's counts from the running total (r13 review)
-            vers = sorted(
-                (v for v in glob.glob(os.path.join(work, "v*"))
-                 if int(os.path.basename(v)[1:]) < bid),
-                key=lambda v: int(os.path.basename(v)[1:]),
-            )
-            if not vers and bid > 0:
-                # every batch writes a version, so a missing predecessor
-                # past batch 0 means external deletion of running state —
-                # fresh-starting here would silently zero the accumulated
-                # counts (same loud-failure contract as the pipeline
-                # fold's predecessor check, which this scaffold mirrors)
+        def fold(batch: DataFrame, bid: int) -> None:
+            below = [v for v in _versions(work) if v < bid]
+            if not below and bid > 0:
                 raise RuntimeError(
                     f"no predecessor version below batch {bid} under "
-                    f"{work} — accumulated counts were deleted externally"
+                    f"{work} — the folded state was deleted externally"
                 )
-            if vers:
-                prev = batch.sparkSession.read.parquet(vers[-1])
-                counts = (
-                    prev.unionByName(counts)
-                    .groupBy(*key_cols)
-                    .agg(*[F.sum(c).alias(c) for c in sum_cols])
-                )
-            counts.write.mode("overwrite").parquet(
-                os.path.join(work, f"v{bid:04d}")
-            )
+            prev = (batch.sparkSession.read.parquet(os.path.join(work, f"v{below[-1]:04d}"))
+                    if below else None)
+            step(prev, batch).write.mode("overwrite").parquet(
+                os.path.join(work, f"v{bid:04d}"))
 
-        q = (
-            stream.writeStream.foreachBatch(accumulate)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
+        stream = replay(spark, src)
+        _drain(stream.writeStream.foreachBatch(fold), stream)
         open(done, "w").close()
+    return spark.read.parquet(os.path.join(work, f"v{_versions(work)[-1]:04d}"))
 
-    vers = sorted(glob.glob(os.path.join(work, "v*")),
-                  key=lambda v: int(os.path.basename(v)[1:]))
-    return spark.read.parquet(vers[-1]).select(
+
+def accumulate_counts_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    src: str,
+    work_tag: str,
+    count_fn: Callable[[DataFrame], DataFrame],
+    key_cols: tuple,
+    sum_cols: tuple,
+) -> DataFrame:
+    """Streaming count accumulator — the scaffold behind
+    stream_drift_monitor and stream_auc_monitor: ``fold_versions`` over the
+    staged dir ``src`` whose step merges each batch's ``count_fn(batch)``
+    into the running counts by ADDITION — valid exactly when the state is
+    additively mergeable (per-key counts), so the result does not depend
+    on how ``src`` is sliced. Returns the final accumulated counts
+    (key_cols + sum_cols, sums as bigint)."""
+
+    def add(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
+        counts = count_fn(batch)
+        if prev is None:
+            return counts
+        return (prev.unionByName(counts).groupBy(*key_cols)
+                .agg(*[F.sum(c).alias(c) for c in sum_cols]))
+
+    return fold_versions(spark, sf_dir, src, work_tag, add).select(
         *key_cols,
         *[F.col(c).cast("bigint").alias(c) for c in sum_cols],
     )

@@ -54,7 +54,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from quatrain_mapreduce_spark.streaming.hop import _start
+from quatrain_mapreduce_spark.streaming.hop import _start, replay
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -193,12 +193,7 @@ def run_training_stream(
     """Drain the composed pipeline availableNow over a document parquet
     dir. Resumable: out_root holds the checkpoint, so calling again after a
     crash resumes the same lineage (the soak harness relies on this)."""
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
+    stream = replay(spark, src_dir, max_files_per_trigger)
     q = start_training_stream(curate_dedup_stages(stream), out_root,
                               available_now=True)
     q.awaitTermination()
@@ -223,18 +218,6 @@ def start_training_stream(deduped: DataFrame, out_root: str,
             batch_df.write.mode("overwrite").parquet(
                 os.path.join(kept_root, f"b{batch_id}")
             )
-            # Crash-window hook for the mid-fold kill soak (tools/
-            # soak_stream.py --mode pipeline-midfold): widens the
-            # kept-written / cells-absent window so a targeted SIGKILL
-            # demonstrably lands INSIDE the fold — proving the re-run-batch
-            # path recovers the CMS fold idempotently (both writes are
-            # overwrite-mode, keyed on batch_id). A no-op unless the env
-            # var is set; never set in production.
-            pause = float(os.environ.get("QMS_FOLD_PAUSE_S", "0") or 0)
-            if pause:
-                import time
-
-                time.sleep(pause)
             delta = cms_cells_of(norm_tokens(batch_df))
             prev_path = os.path.join(cells_root, f"v{batch_id - 1}")
             if batch_id > 0:

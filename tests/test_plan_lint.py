@@ -162,3 +162,21 @@ def test_unmatched_location_scans_merge_by_identity(spark, tmp_path, monkeypatch
     counts2 = planaudit.live_scan_counts(mixed)
     scan_keys = [k for k in counts2 if k.startswith("scan~")]
     assert len(scan_keys) == 2 and all(counts2[k] == 1 for k in scan_keys), counts2
+
+
+def test_plans_neither_start_queries_nor_choose_checkpoints():
+    """Bounded replay has one path, streaming/hop.py (replay, _drain,
+    fold_versions): no plan module reads a stream, starts or triggers a
+    query, or picks a checkpoint by hand."""
+    import glob
+    import os
+
+    plans = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                         "quatrain_mapreduce_spark", "plans")
+    banned = ("readStream", ".start(", "trigger(", "checkpointLocation")
+    hits = []
+    for path in sorted(glob.glob(os.path.join(plans, "**", "*.py"), recursive=True)):
+        with open(path) as fh:
+            for n, line in enumerate(fh, 1):
+                hits += [f"{os.path.relpath(path, plans)}:{n}: {b}" for b in banned if b in line]
+    assert not hits, "\n".join(hits)

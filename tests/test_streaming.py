@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from quatrain_mapreduce_spark.catalog import load_table
 from quatrain_mapreduce_spark.streaming.hop import (
-    OnlineAggregator, read_events_stream, run_available_now, tumbling_window_agg,
+    OnlineAggregator, drain_to_parquet, read_events_stream, tumbling_window_agg,
 )
 
 
@@ -23,7 +23,7 @@ def test_stream_batch_parity(spark, sf_dir):
     )
     streamed = {
         (r["win"]["start"], r["event_type"]): r["cnt"]
-        for r in run_available_now(agg, "qms_test_parity").collect()
+        for r in drain_to_parquet(agg, "qms_test_parity", output_mode="complete").collect()
     }
     ev = load_table(spark, sf_dir, "events")
     batch = {
@@ -69,7 +69,7 @@ def test_sessionize_stream_batch_parity(spark, sf_dir):
     agg = sessionize_stream(stream.withWatermark("ts", "10 minutes"), "user_id", "ts", gap_minutes=30)
     streamed = {
         (r["user_id"], r["sw"]["start"], r["sw"]["end"]): r["n_events"]
-        for r in run_available_now(agg, "qms_test_sessions").collect()
+        for r in drain_to_parquet(agg, "qms_test_sessions", output_mode="complete").collect()
     }
     assert streamed == batch
 
@@ -1302,15 +1302,16 @@ def test_stateful_restart_keeps_logged_partition_count(spark):
 
 
 def test_drain_reclaims_its_checkpoint(spark, sf_dir):
-    """drain_to_parquet and run_incremental delete the one-shot checkpoints
-    they create; the output and snapshot directories behind the returned
-    frames stay readable."""
+    """Every one-shot drain — both drain_to_parquet modes, run_incremental
+    without a work_dir and stream_jdbc_serving — deletes the checkpoint it
+    created; the output and snapshot directories behind the returned frames
+    stay readable."""
     import glob
     import os
 
-    from quatrain_mapreduce_spark.streaming.hop import drain_to_parquet
+    from quatrain_mapreduce_spark.registry import all_queries
 
-    ckpts = os.path.join(tempfile.gettempdir(), "qms_drain_ckpt_qms_test_reclaim_*")
+    ckpts = os.path.join(tempfile.gettempdir(), "qms_drain_ckpt_*")
     before = set(glob.glob(ckpts))
     stream = read_events_stream(spark, sf_dir)
     total = load_table(spark, sf_dir, "events").count()
@@ -1329,6 +1330,102 @@ def test_drain_reclaims_its_checkpoint(spark, sf_dir):
     assert inc.run_incremental().first()["n"] == total
     work = os.path.dirname(inc.snapshots[-1][1])
     assert not os.path.exists(os.path.join(work, "checkpoint"))
+    assert set(glob.glob(ckpts)) == before
+
+    served = all_queries()["stream_jdbc_serving"].fn(spark, sf_dir)
+    assert served.agg(F.sum("pageview")).first()[0] == total
+    assert set(glob.glob(ckpts)) == before
+
+
+def _mtime_ordered_slices(spark, n_files: int, rows_per_file: int) -> str:
+    """``n_files`` single-file parquet slices of ``id`` ranges whose mtimes
+    increase with the range, so a one-file-per-trigger replay reads them in
+    id order."""
+    import glob
+    import os
+    import time
+
+    src = tempfile.mkdtemp(prefix="qms_test_fold_src_")
+    spark.range(n_files * rows_per_file).repartitionByRange(n_files, "id") \
+        .write.mode("overwrite").parquet(src)
+    base = time.time() - 3600
+    for i, f in enumerate(sorted(glob.glob(os.path.join(src, "part-*.parquet")))):
+        os.utime(f, (base + i * 10, base + i * 10))
+    return src
+
+
+def _running_totals(prev, batch):
+    got = batch.agg(F.count("*").alias("n"), F.sum("id").alias("s"),
+                    F.max("id").alias("hi"))
+    if prev is None:
+        return got
+    return prev.unionByName(got).agg(F.sum("n").alias("n"), F.sum("s").alias("s"),
+                                     F.max("hi").alias("hi"))
+
+
+def test_fold_versions_writes_one_exact_version_per_batch(spark, tmp_path):
+    """fold_versions over a 5-file mtime-ordered replay writes v0..v4, each
+    the step of its predecessor and its batch, and returns the final
+    version, which equals the whole input."""
+    import glob
+    import os
+    import shutil
+
+    from quatrain_mapreduce_spark.staging import stage_dir
+    from quatrain_mapreduce_spark.streaming.hop import fold_versions
+
+    src = _mtime_ordered_slices(spark, 5, 10)
+    work = stage_dir(str(tmp_path), "foldtest")
+    try:
+        final = fold_versions(spark, str(tmp_path), src, "foldtest", _running_totals)
+        assert tuple(final.first()) == (50, sum(range(50)), 49)
+        names = sorted(os.path.basename(v) for v in glob.glob(os.path.join(work, "v*")))
+        assert names == [f"v{i:04d}" for i in range(5)]
+        for i, name in enumerate(names):  # version i holds slices 0..i
+            row = spark.read.parquet(os.path.join(work, name)).first()
+            assert (row["n"], row["hi"]) == (10 * (i + 1), 10 * (i + 1) - 1)
+        # a second call reads the finished fold instead of replaying it
+        assert tuple(fold_versions(spark, str(tmp_path), src, "foldtest",
+                                   None).first()) == (50, sum(range(50)), 49)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(src, ignore_errors=True)
+
+
+def test_fold_versions_fails_loudly_without_a_predecessor(spark, tmp_path, monkeypatch):
+    """When the running versions vanish mid-run (here: all deleted right
+    before batch 2 looks for its predecessor), the fold raises "no
+    predecessor version" instead of restarting from None, and leaves no
+    _DONE marker behind."""
+    import glob
+    import os
+    import shutil
+
+    import pytest
+
+    from quatrain_mapreduce_spark.staging import stage_dir
+    from quatrain_mapreduce_spark.streaming import hop
+
+    src = _mtime_ordered_slices(spark, 5, 10)
+    work = stage_dir(str(tmp_path), "foldgone")
+    lookup = hop._versions
+
+    def delete_before_batch_2(path):
+        found = lookup(path)
+        if found == [0, 1]:
+            for v in glob.glob(os.path.join(path, "v*")):
+                shutil.rmtree(v)
+            found = lookup(path)
+        return found
+
+    monkeypatch.setattr(hop, "_versions", delete_before_batch_2)
+    try:
+        with pytest.raises(Exception, match="no predecessor version below batch 2"):
+            hop.fold_versions(spark, str(tmp_path), src, "foldgone", _running_totals)
+        assert not os.path.exists(os.path.join(work, "_DONE"))
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(src, ignore_errors=True)
 
 
 def test_concurrent_starts_restore_session_partitions(spark):

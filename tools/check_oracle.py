@@ -20,12 +20,14 @@ from __future__ import annotations
 
 import argparse
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, not whichever one happens to be installed
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from quatrain_mapreduce_spark import get_spark  # noqa: E402
 from quatrain_mapreduce_spark.catalog import TABLES  # noqa: E402

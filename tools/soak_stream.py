@@ -47,9 +47,10 @@ phantom / missing (source, fp), AND that the final CMS snapshot equals the
 twin's cells exactly while staying bounded at d*w cells.
 
 Mode ``pipeline-midfold`` (r12 stretch #8). The pipeline choreography with
-the SIGKILL targeted INSIDE the foreachBatch fold: a pause hook
-(QMS_FOLD_PAUSE_S, read by streaming/pipeline.py's fold) widens the window
-after kept/b{id} completes and before cells/v{id} starts, and the parent
+the SIGKILL targeted INSIDE the foreachBatch fold: a pause
+(QMS_FOLD_PAUSE_S, which the child wraps around the fold's
+pipeline.cms_cells_of call) widens the window after kept/b{id} completes
+and before cells/v{id} starts, and the parent
 polls for exactly that on-disk state (kept _SUCCESS present, cells version
 absent, batch uncommitted) and kills the process group the moment it sees
 it — proving by measurement, not argument, that the re-run-batch path
@@ -512,10 +513,26 @@ def _run_pipeline_child(args) -> int:
     """One composed-pipeline run: rate source -> synthetic docs -> Gopher
     gate -> stateful dedup -> foreachBatch fold (kept sink + CMS merge),
     resuming from args.out_root's checkpoint. Logs dedup state rows per
-    batch; stops on stop-file or --run-seconds."""
+    batch; stops on stop-file or --run-seconds.
+
+    ``QMS_FOLD_PAUSE_S`` (set only by --mode pipeline-midfold) wraps
+    ``pipeline.cms_cells_of`` with a sleep. The fold calls it right after
+    kept/b{id} is written and before cells/v{id}, so the pause widens
+    exactly the window the mid-fold kill must land in."""
+    from quatrain_mapreduce_spark.streaming import pipeline
     from quatrain_mapreduce_spark.streaming.pipeline import (
         curate_dedup_stages, start_training_stream,
     )
+
+    pause = float(os.environ.get("QMS_FOLD_PAUSE_S", "0") or 0)
+    if pause:
+        cells_of = pipeline.cms_cells_of
+
+        def paused_cells_of(toks):
+            time.sleep(pause)
+            return cells_of(toks)
+
+        pipeline.cms_cells_of = paused_cells_of
 
     spark = _session("qms-soak-pipe-child")
     spark.sparkContext.setLogLevel("ERROR")
