@@ -20,50 +20,63 @@ The reference's language-agnostic extension points, Spark-first:
 
 from __future__ import annotations
 
+import hashlib
 import os
 import stat
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from quatrain_mapreduce_spark.staging import staged
+
+
+def _content_tag(name: str, content: str) -> str:
+    """Staging tag for a file named ``name`` holding ``content``: a changed
+    body or source gets a new staged path."""
+    return "script" + hashlib.md5(f"{name}\0{content}".encode()).hexdigest()[:12]
+
 
 def stage_script(name: str, body: str) -> str:
-    """Write an executable helper script once (idempotent) and return its path.
+    """Write an executable helper script once and return its path.
 
     Hadoop Streaming ships script files to the cluster (-file); on Spark the
     equivalent is SparkContext.addFile + a path valid on every executor. For
-    local[*] a tempdir path suffices.
+    local[*] a tempdir path suffices. Staged through ``staging.staged``,
+    keyed on the name and body.
     """
-    path = os.path.join(tempfile.gettempdir(), name)
-    if not os.path.exists(path):
+    def build(d: str) -> None:
+        os.makedirs(d)
+        path = os.path.join(d, name)
         with open(path, "w") as fh:
             fh.write(body)
         os.chmod(path, os.stat(path).st_mode | stat.S_IEXEC | stat.S_IXGRP | stat.S_IXOTH)
-    return path
+
+    return os.path.join(staged(None, _content_tag(name, body), build), name)
 
 
 def stage_native_binary(name: str, c_source: str) -> str:
-    """Compile a C source once (idempotent) and return the binary path —
-    the Hadoop Pipes analogue (src/c++/pipes/api/hadoop/Pipes.hh): user
-    logic in compiled native code, the framework feeding it records. Here
-    the record protocol is the same line-oriented pipe `script_transform`
-    uses (PipeMapper.java:44-75) rather than Pipes' socket protocol; the
-    native process still does the actual map work. On a cluster, ship the
-    binary with SparkContext.addFile / --archives; for local[*] a tempdir
-    path is valid on every worker.
+    """Compile a C source once and return the binary path — the Hadoop
+    Pipes analogue (src/c++/pipes/api/hadoop/Pipes.hh): user logic in
+    compiled native code, the framework feeding it records. Here the
+    record protocol is the same line-oriented pipe `script_transform` uses
+    (PipeMapper.java:44-75) rather than Pipes' socket protocol; the native
+    process still does the actual map work. On a cluster, ship the binary
+    with SparkContext.addFile / --archives; for local[*] a tempdir path is
+    valid on every worker. Staged through ``staging.staged``, keyed on the
+    name and C source.
     """
     import subprocess
 
-    path = os.path.join(tempfile.gettempdir(), name)
-    src = path + ".c"
-    if not os.path.exists(path):
+    def build(d: str) -> None:
+        os.makedirs(d)
+        src = os.path.join(d, name + ".c")
         with open(src, "w") as fh:
             fh.write(c_source)
-        subprocess.run(["gcc", "-O2", "-o", path, src], check=True)
-    return path
+        subprocess.run(["gcc", "-O2", "-o", os.path.join(d, name), src], check=True)
+
+    return os.path.join(staged(None, _content_tag(name, c_source), build), name)
 
 
 def script_transform(

@@ -349,16 +349,12 @@ def tpch_q3_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("analytics", "storage", "zorder"),
 )
 def zorder_box_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from quatrain_mapreduce_spark.operators.zorder import zorder_by
-    from quatrain_mapreduce_spark.staging import stage_dir
+    from quatrain_mapreduce_spark.staging import staged
 
-    d = stage_dir(sf_dir, "zorder16")
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
-        li = load_table(spark, sf_dir, "lineitem")
-        zorder_by(li, "l_orderkey", "l_partkey", n_files=16).write.mode("overwrite").parquet(d)
-    li = spark.read.parquet(d)
+    li = spark.read.parquet(staged(sf_dir, "zorder16", lambda d: zorder_by(
+        load_table(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey", n_files=16,
+    ).write.parquet(d)))
     lo_o, hi_o, lo_p, hi_p = li.agg(
         F.min("l_orderkey"), F.max("l_orderkey"),
         F.min("l_partkey"), F.max("l_partkey"),
@@ -781,9 +777,7 @@ def anomaly_mad_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("analytics", "rollup", "incremental"),
 )
 def incremental_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from quatrain_mapreduce_spark.staging import stage_dir
+    from quatrain_mapreduce_spark.staging import staged
 
     cutoff_us = 19743 * 86_400_000_000  # 2024-01-21 00:00 UTC, day 20 of 30
     cents = F.floor(F.col("value") * 100 + 0.5).cast("bigint")
@@ -794,13 +788,9 @@ def incremental_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(cents).alias("sum_cents"),
         )
 
-    d = stage_dir(sf_dir, "rollup20")
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
-        ev = load_table(spark, sf_dir, "events")
-        agg_slice(ev.where(F.unix_micros("ts") < cutoff_us)).write.mode(
-            "overwrite"
-        ).parquet(d)
-    history = spark.read.parquet(d)
+    history = spark.read.parquet(staged(sf_dir, "rollup20", lambda d: agg_slice(
+        load_table(spark, sf_dir, "events").where(F.unix_micros("ts") < cutoff_us)
+    ).write.parquet(d)))
     delta = agg_slice(
         load_table(spark, sf_dir, "events").where(
             F.unix_micros("ts") >= cutoff_us
@@ -2265,9 +2255,7 @@ def gini_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("analytics", "incremental", "join"),
 )
 def incremental_join_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from quatrain_mapreduce_spark.staging import stage_dir
+    from quatrain_mapreduce_spark.staging import staged
 
     cutoff_us = 9862 * 86_400_000_000  # 1997-01-01 UTC
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)) \
@@ -2288,14 +2276,11 @@ def incremental_join_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_old = od_us < cutoff_us
     is_late_dim = F.col("c_custkey") % 20 == 0
 
-    d = stage_dir(sf_dir, "joinview97")
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
-        joined(od.where(is_old), cu.where(~is_late_dim)) \
-            .write.mode("overwrite").parquet(d)
-    staged = spark.read.parquet(d)
+    view = spark.read.parquet(staged(sf_dir, "joinview97", lambda d: joined(
+        od.where(is_old), cu.where(~is_late_dim)).write.parquet(d)))
     delta_fact = joined(od.where(~is_old), cu)
     late_dim = joined(od.where(is_old), F.broadcast(cu.where(is_late_dim)))
-    return staged.unionByName(delta_fact).unionByName(late_dim)
+    return view.unionByName(delta_fact).unionByName(late_dim)
 
 
 @register(
@@ -2930,25 +2915,13 @@ def theta_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("analytics", "sketch", "approx"),
 )
 def theta_cube_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from quatrain_mapreduce_spark.staging import stage_dir
+    from quatrain_mapreduce_spark.staging import staged
 
     ev = load_table(spark, sf_dir, "events")
     day = F.expr("unix_micros(ts) div 86400000000")
-    # tag bumped thetacube -> thetacubed when the day column changed from
-    # DATE to day-number: stage_dir keys on (path, tag, data fingerprint),
-    # so a schema change needs a new tag to invalidate staged state
-    cube_dir = stage_dir(sf_dir, "thetacubed")
-    marker = os.path.join(cube_dir, "_STAGED")
-    if not os.path.exists(marker):
-        (
-            ev.groupBy(day.alias("day"), "event_type")
-            .agg(F.expr("theta_sketch_agg(user_id)").alias("sk"))
-            .write.mode("overwrite").parquet(cube_dir)
-        )
-        open(marker, "w").close()
-    cube = spark.read.parquet(cube_dir)
+    cube = spark.read.parquet(staged(sf_dir, "thetacubed", lambda d: ev.groupBy(
+        day.alias("day"), "event_type",
+    ).agg(F.expr("theta_sketch_agg(user_id)").alias("sk")).write.parquet(d)))
     bounds = ev.agg(
         (F.min(day) + 2).alias("d1"),
         (F.min(day) + 8).alias("d2"),

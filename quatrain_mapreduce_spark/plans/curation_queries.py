@@ -1825,10 +1825,8 @@ def training_pipeline_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("curation", "incremental", "llm-pipeline"),
 )
 def decontaminate_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from quatrain_mapreduce_spark.operators.dedup import word_shingles
-    from quatrain_mapreduce_spark.staging import stage_dir
+    from quatrain_mapreduce_spark.staging import staged
 
     docs = load_table(spark, sf_dir, "documents")
     h = h16("doc_id")
@@ -1837,26 +1835,22 @@ def decontaminate_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # --- staged state from the BASE pass (built once, reused) ---
-    idx_dir = stage_dir(sf_dir, "evalgram4")
-    if not os.path.exists(os.path.join(idx_dir, "_SUCCESS")):
-        grams4(docs.where(h % 10 == 0), "text").select("ng").distinct()             .write.mode("overwrite").parquet(idx_dir)
-    surv_dir = stage_dir(sf_dir, "deconsurvivors4")
-    if not os.path.exists(os.path.join(surv_dir, "_SUCCESS")):
+    idx_dir = staged(sf_dir, "evalgram4", lambda d: grams4(
+        docs.where(h % 10 == 0), "text").select("ng").distinct().write.parquet(d))
+
+    def survivors(d: str) -> None:
         train = docs.where((h % 10 != 0) & (h % 10 != 5))
         dropped = (
             grams4(train, "text")
             .join(spark.read.parquet(idx_dir), "ng", "semi")
             .select("doc_id").distinct()
         )
-        train.join(dropped, "doc_id", "anti").select("doc_id")             .write.mode("overwrite").parquet(surv_dir)
-    post_dir = stage_dir(sf_dir, "survpost4")
-    if not os.path.exists(os.path.join(post_dir, "_SUCCESS")):
-        survivors = spark.read.parquet(surv_dir)
-        (
-            grams4(docs.join(survivors, "doc_id", "semi"), "text")
-            .distinct()
-            .write.mode("overwrite").parquet(post_dir)
-        )
+        train.join(dropped, "doc_id", "anti").select("doc_id").write.parquet(d)
+
+    surv_dir = staged(sf_dir, "deconsurvivors4", survivors)
+    post_dir = staged(sf_dir, "survpost4", lambda d: grams4(
+        docs.join(spark.read.parquet(surv_dir), "doc_id", "semi"), "text",
+    ).distinct().write.parquet(d))
 
     # --- the increment pass: probe stored state, never re-tokenize ---
     idx = spark.read.parquet(idx_dir)

@@ -358,13 +358,11 @@ def _root_h16() -> str:
     tags=("dedup", "lsh", "incremental"),
 )
 def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from quatrain_mapreduce_spark.operators.dedup import (
         incremental_lsh_candidates, lsh_band_rows, spread, tokenize,
         verify_pairs, word_shingles,
     )
-    from quatrain_mapreduce_spark.staging import stage_dir
+    from quatrain_mapreduce_spark.staging import staged
 
     docs = load_table(spark, sf_dir, "documents")
     arriving_pred = F.col("doc_id") % 5 == 0
@@ -377,12 +375,10 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return lsh_band_rows(sh, "doc_id", num_perm=32, bands=8, max_bucket=1000)
 
-    idx = stage_dir(sf_dir, "lshindex")
-    if not os.path.exists(os.path.join(idx, "_SUCCESS")):
-        # the index is built ONCE for the standing corpus and only read by
-        # every later increment (at 100 TB: bucketed by (band, bhash))
-        band_rows_of(docs.where(~arriving_pred)).write.mode("overwrite").parquet(idx)
-    existing_bands = spark.read.parquet(idx)
+    # the index is built ONCE for the standing corpus and only read by
+    # every later increment (at 100 TB: bucketed by (band, bhash))
+    existing_bands = spark.read.parquet(staged(sf_dir, "lshindex", lambda d: band_rows_of(
+        docs.where(~arriving_pred)).write.parquet(d)))
     arriving_bands = band_rows_of(docs.where(arriving_pred))
     cand = incremental_lsh_candidates(existing_bands, arriving_bands, "doc_id")
     return verify_pairs(docs, cand, "doc_id", "text", n=2, threshold=0.8, block_col="lang")
@@ -553,22 +549,21 @@ def similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from quatrain_mapreduce_spark.operators.similarity import ivf_build, ivf_search
-    from quatrain_mapreduce_spark.staging import stage_dir
+    from quatrain_mapreduce_spark.staging import staged
 
     emb = load_table(spark, sf_dir, "embeddings")
     dim = embedding_dim(f"{sf_dir}/embeddings.parquet")
 
     # production shape: the index is built ONCE and staged partitionBy
-    # list_id (idempotent per sf_dir); searches run against the staged
-    # index, and the broadcast probe join dynamically prunes to the probed
-    # lists' partitions at scan time. The corpus is written LAST so its
-    # _SUCCESS marker implies the whole index (an interrupted build
-    # re-stages instead of wedging on a missing centroids dir).
-    d = stage_dir(sf_dir, "ivf_idx16")
-    if not os.path.exists(os.path.join(d, "corpus", "_SUCCESS")):
+    # list_id; searches run against the staged index, and the broadcast
+    # probe join dynamically prunes to the probed lists' partitions at scan
+    # time.
+    def build(d: str) -> None:
         cent_df, assigned = ivf_build(emb, "vec_id", "embedding", dim, n_lists=16, lloyd_iters=1)
-        cent_df.write.mode("overwrite").parquet(os.path.join(d, "centroids"))
-        assigned.write.mode("overwrite").partitionBy("list_id").parquet(os.path.join(d, "corpus"))
+        cent_df.write.parquet(os.path.join(d, "centroids"))
+        assigned.write.partitionBy("list_id").parquet(os.path.join(d, "corpus"))
+
+    d = staged(sf_dir, "ivf_idx16", build)
     cent_df = spark.read.parquet(os.path.join(d, "centroids"))
     assigned = spark.read.parquet(os.path.join(d, "corpus"))
     queries = emb.where(F.col("vec_id") < 8)
@@ -2137,24 +2132,16 @@ def dedup_span_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "substring", "incremental"),
 )
 def dedup_substring_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from quatrain_mapreduce_spark.operators.dedup import window_fingerprints
     from quatrain_mapreduce_spark.operators.projection import tokenize
-    from quatrain_mapreduce_spark.staging import stage_dir
+    from quatrain_mapreduce_spark.staging import staged
 
     docs = load_table(spark, sf_dir, "documents")
     arriving = F.col("doc_id") % 5 == 0
 
-    # tag carries fingerprint type AND width: stage_dir keys on (sf_dir,
-    # tag, data fingerprint) only, and a stale index staged under different
-    # hashing or windowing would otherwise poison the probe join silently
-    idx = stage_dir(sf_dir, f"spanindex64w{_SPAN_W}")
-    if not os.path.exists(os.path.join(idx, "_SUCCESS")):
-        window_fingerprints(
-            docs.where(~arriving), "doc_id", "text", _SPAN_W
-        ).select("whash").distinct().write.mode("overwrite").parquet(idx)
-    existing = spark.read.parquet(idx)
+    existing = spark.read.parquet(staged(sf_dir, f"spanindex64w{_SPAN_W}", lambda d: (
+        window_fingerprints(docs.where(~arriving), "doc_id", "text", _SPAN_W)
+        .select("whash").distinct().write.parquet(d))))
 
     inc = docs.where(arriving)
     base = inc.select(

@@ -129,15 +129,10 @@ def sql_ddl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _stage_partitioned_orders(spark: SparkSession, sf_dir: str) -> str:
     """Write orders partitioned by o_orderstatus once per sf_dir (idempotent):
     the srcpart ds/hr fixture pattern (QTestUtil.java:211-313)."""
-    from quatrain_mapreduce_spark.staging import stage_dir
+    from quatrain_mapreduce_spark.staging import staged
 
-    d = stage_dir(sf_dir, "part_orders")
-    marker = os.path.join(d, "_STAGED")
-    if not os.path.exists(marker):
-        load_table(spark, sf_dir, "orders").write.mode("overwrite") \
-            .partitionBy("o_orderstatus").parquet(d)
-        open(marker, "w").close()
-    return d
+    return staged(sf_dir, "part_orders", lambda d: load_table(spark, sf_dir, "orders")
+                  .write.partitionBy("o_orderstatus").parquet(d))
 
 
 @register(

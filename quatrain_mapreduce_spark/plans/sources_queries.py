@@ -8,7 +8,6 @@ round trip fails the value hash.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -17,14 +16,11 @@ from pyspark.sql import functions as F
 from quatrain_mapreduce_spark.catalog import load_table
 from quatrain_mapreduce_spark.operators.joins import tagged_join
 from quatrain_mapreduce_spark.registry import register
-from quatrain_mapreduce_spark.staging import stage_dir
+from quatrain_mapreduce_spark.staging import stage_dir, stage_key, staged
 from quatrain_mapreduce_spark.sources.readers import (
     filtered_scan, multiple_inputs, read_kv_text, read_sequence_file,
 )
 from quatrain_mapreduce_spark.sources.sinks import write_kv_text
-
-
-_stage_dir = stage_dir  # one shared staging-path implementation
 
 
 @register(
@@ -36,10 +32,8 @@ _stage_dir = stage_dir  # one shared staging-path implementation
     tags=("sources",),
 )
 def kv_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _stage_dir(sf_dir, "kvtext")
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
-        n = load_table(spark, sf_dir, "nation")
-        write_kv_text(n, "n_nationkey", "n_name", d)
+    d = staged(sf_dir, "kvtext", lambda d: write_kv_text(
+        load_table(spark, sf_dir, "nation"), "n_nationkey", "n_name", d))
     return read_kv_text(spark, d)
 
 
@@ -51,11 +45,9 @@ def kv_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sources",),
 )
 def seqfile_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _stage_dir(sf_dir, "seqfile")
-    if not os.path.exists(d):
-        n = load_table(spark, sf_dir, "nation")
-        n.select("n_nationkey", "n_name").rdd.map(lambda r: (str(r[0]), r[1])) \
-            .saveAsSequenceFile(d)
+    d = staged(sf_dir, "seqfile", lambda d: load_table(spark, sf_dir, "nation")
+               .select("n_nationkey", "n_name").rdd.map(lambda r: (str(r[0]), r[1]))
+               .saveAsSequenceFile(d))
     return read_sequence_file(spark, d)
 
 
@@ -127,14 +119,11 @@ def tagged_join_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bucketed_table_names(sf_dir: str) -> tuple[str, str]:
-    """Catalog names for the staged bucketed (orders, customer) tables.
-    Data-version in the key: regenerated testdata must not silently reuse
-    bucketed tables built from the previous generation (same rule as
-    staging.stage_dir)."""
-    from quatrain_mapreduce_spark.staging import _source_fingerprint
-
-    raw = f"{os.path.realpath(sf_dir)}:{_source_fingerprint(sf_dir)}"
-    key = hashlib.md5(raw.encode()).hexdigest()[:8]
+    """Catalog names for the staged bucketed (orders, customer) tables,
+    keyed like every staged dir (``staging.stage_key``: data and engine
+    code), so neither regenerated data nor a code change reuses tables an
+    older build left behind."""
+    key = stage_key(sf_dir, "bucketed")
     return f"qms_orders_b_{key}", f"qms_customer_b_{key}"
 
 
@@ -191,7 +180,7 @@ def dbcount_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quatrain_mapreduce_spark.sources.readers import read_jdbc
     from quatrain_mapreduce_spark.sources.sinks import write_jdbc
 
-    db = _stage_dir(sf_dir, "derby")
+    db = stage_dir(sf_dir, "derby")
     url = f"jdbc:derby:{db};create=true"
     counts = (
         load_table(spark, sf_dir, "events")
@@ -221,18 +210,17 @@ def dbcount_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quatrain_mapreduce_spark.sources.readers import read_xml_records, xml_field
 
-    d = _stage_dir(sf_dir, "xmlrec")
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
-        n = load_table(spark, sf_dir, "nation")
-        xml = n.select(
+    def build(d: str) -> None:
+        load_table(spark, sf_dir, "nation").select(
             F.concat(
                 F.lit("<row>\n  <nationkey>"), F.col("n_nationkey").cast("string"),
                 F.lit("</nationkey>\n  <name>"), F.col("n_name"),
                 F.lit("</name>\n  <regionkey>"), F.col("n_regionkey").cast("string"),
                 F.lit("</regionkey>\n</row>"),
             ).alias("value")
-        )
-        xml.coalesce(1).write.mode("overwrite").text(d)
+        ).coalesce(1).write.text(d)
+
+    d = staged(sf_dir, "xmlrec", build)
     recs = read_xml_records(spark, d, "row")
     return recs.select(
         xml_field("record", "nationkey").alias("nationkey"),
@@ -296,11 +284,9 @@ def bucket_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sources", "records"),
 )
 def csv_typed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _stage_dir(sf_dir, "csvrec")
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
-        s = load_table(spark, sf_dir, "supplier")
-        s.select("s_suppkey", "s_name", "s_acctbal").write.mode("overwrite") \
-            .option("header", True).csv(d)
+    d = staged(sf_dir, "csvrec", lambda d: load_table(spark, sf_dir, "supplier")
+               .select("s_suppkey", "s_name", "s_acctbal").write
+               .option("header", True).csv(d))
     typed = spark.read.schema("s_suppkey bigint, s_name string, s_acctbal double") \
         .option("header", True).csv(d)
     return typed.select("s_suppkey", "s_name", F.round("s_acctbal", 2).alias("acctbal"))
@@ -322,15 +308,14 @@ def csv_typed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sources", "robustness"),
 )
 def skip_bad_records(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _stage_dir(sf_dir, "badrec")
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
-        s = load_table(spark, sf_dir, "supplier")
-        corrupted = s.select(
+    def build(d: str) -> None:
+        load_table(spark, sf_dir, "supplier").select(
             F.when(F.col("s_suppkey") % 7 == 0, F.lit("CORRUPT"))
              .otherwise(F.col("s_suppkey").cast("string")).alias("k"),
             F.col("s_name").alias("v"),
-        )
-        corrupted.write.mode("overwrite").option("header", True).csv(d)
+        ).write.option("header", True).csv(d)
+
+    d = staged(sf_dir, "badrec", build)
     typed = spark.read.schema("k bigint, v string") \
         .option("header", True).option("mode", "PERMISSIVE").csv(d)
     good = typed.where(F.col("k").isNotNull())
@@ -351,10 +336,8 @@ def skip_bad_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sources", "roundtrip"),
 )
 def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _stage_dir(sf_dir, "orc")
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
-        load_table(spark, sf_dir, "nation").write.mode("overwrite").orc(d)
-    return spark.read.orc(d)
+    return spark.read.orc(staged(
+        sf_dir, "orc", lambda d: load_table(spark, sf_dir, "nation").write.orc(d)))
 
 
 @register(
@@ -372,15 +355,9 @@ def orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sources", "roundtrip"),
 )
 def jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _stage_dir(sf_dir, "jsonl")
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
-        (load_table(spark, sf_dir, "documents")
-         .select(
-             "doc_id", "text",
-             F.struct("lang", "source").alias("meta"),
-             "n_chars",
-         )
-         .write.mode("overwrite").json(d))
+    d = staged(sf_dir, "jsonl", lambda d: load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", F.struct("lang", "source").alias("meta"), "n_chars",
+    ).write.json(d))
     schema = ("doc_id bigint, text string, "
               "meta struct<lang:string, source:string>, n_chars bigint")
     return spark.read.schema(schema).json(d).select(
@@ -409,17 +386,10 @@ def jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quatrain_mapreduce_spark.sources.sinks import compact_files
 
-    src = _stage_dir(sf_dir, "smallfiles")
-    dst = _stage_dir(sf_dir, "compacted")
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_linenumber", "l_extendedprice"
-        )
-        li.repartition(64).write.mode("overwrite").parquet(src)
-    if not os.path.exists(os.path.join(dst, "_SUCCESS")):
-        # ~1 MiB target at sf0.01 compacts 64 inputs into a handful of files
-        compact_files(spark, src, dst, target_bytes=1 << 20)
-    return spark.read.parquet(dst)
+    src = _smallfiles_src(spark, sf_dir)
+    # ~1 MiB target at sf0.01 compacts 64 inputs into a handful of files
+    return spark.read.parquet(staged(sf_dir, "compacted", lambda d: compact_files(
+        spark, src, d, target_bytes=1 << 20)))
 
 
 @register(
@@ -442,16 +412,16 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sources", "schema"),
 )
 def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _stage_dir(sf_dir, "schemaevo")
-    if not os.path.exists(os.path.join(d, "_STAGED")):
+    def build(d: str) -> None:
         orders = load_table(spark, sf_dir, "orders")
         orders.where(F.col("o_orderkey") % 2 == 0).select(
             "o_orderkey", "o_totalprice"
-        ).write.mode("overwrite").parquet(os.path.join(d, "batch=1"))
+        ).write.parquet(os.path.join(d, "batch=1"))
         orders.where(F.col("o_orderkey") % 2 == 1).select(
             "o_orderkey", "o_orderpriority"
-        ).write.mode("overwrite").parquet(os.path.join(d, "batch=2"))
-        open(os.path.join(d, "_STAGED"), "w").close()
+        ).write.parquet(os.path.join(d, "batch=2"))
+
+    d = staged(sf_dir, "schemaevo", build)
     return (
         spark.read.option("mergeSchema", "true")
         .parquet(os.path.join(d, "batch=1"), os.path.join(d, "batch=2"))
@@ -488,22 +458,21 @@ def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sources", "codec"),
 )
 def codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    csv_dirs = {"gzip": _stage_dir(sf_dir, "codecgz"),
-                "bzip2": _stage_dir(sf_dir, "codecbz2")}
-    # "lz4" alone would write the deprecated Hadoop-framed LZ4 that modern
-    # Arrow readers can't identify; lz4_raw is the standard LZ4_RAW format
-    parq_dirs = {"zstd": _stage_dir(sf_dir, "codeczstd"),
-                 "lz4_raw": _stage_dir(sf_dir, "codeclz4")}
     s = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_acctbal"
     )
-    for codec, d in csv_dirs.items():
-        if not os.path.exists(os.path.join(d, "_SUCCESS")):
-            s.write.mode("overwrite").option("header", True) \
-                .option("compression", codec).csv(d)
-    for codec, d in parq_dirs.items():
-        if not os.path.exists(os.path.join(d, "_SUCCESS")):
-            s.write.mode("overwrite").option("compression", codec).parquet(d)
+    csv_dirs = {
+        codec: staged(sf_dir, tag, lambda d, codec=codec: s.write.option("header", True)
+                      .option("compression", codec).csv(d))
+        for codec, tag in (("gzip", "codecgz"), ("bzip2", "codecbz2"))
+    }
+    # "lz4" alone would write the deprecated Hadoop-framed LZ4 that modern
+    # Arrow readers can't identify; lz4_raw is the standard LZ4_RAW format
+    parq_dirs = {
+        codec: staged(sf_dir, tag, lambda d, codec=codec: s.write
+                      .option("compression", codec).parquet(d))
+        for codec, tag in (("zstd", "codeczstd"), ("lz4_raw", "codeclz4"))
+    }
     parts = []
     for codec, d in csv_dirs.items():
         parts.append(
@@ -526,14 +495,11 @@ def codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _smallfiles_src(spark: SparkSession, sf_dir: str) -> str:
-    """The 64-file lineitem staging shared by the distcp / har round trips."""
-    src = _stage_dir(sf_dir, "smallfiles")
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_linenumber", "l_extendedprice"
-        )
-        li.repartition(64).write.mode("overwrite").parquet(src)
-    return src
+    """The 64-file lineitem staging shared by the compaction, distcp and
+    har round trips."""
+    return staged(sf_dir, "smallfiles", lambda d: load_table(spark, sf_dir, "lineitem")
+                  .select("l_orderkey", "l_linenumber", "l_extendedprice")
+                  .repartition(64).write.parquet(d))
 
 
 @register(
@@ -554,13 +520,8 @@ def har_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quatrain_mapreduce_spark.sources.sinks import har_create, har_extract
 
     src = _smallfiles_src(spark, sf_dir)
-    har = _stage_dir(sf_dir, "har_archive")
-    out = _stage_dir(sf_dir, "har_extract")
-    if not os.path.exists(os.path.join(out, "_HAR_DONE")):
-        har_create(spark, src, har, target_files=1)
-        har_extract(spark, har, out)
-        open(os.path.join(out, "_HAR_DONE"), "w").close()
-    return spark.read.parquet(out)
+    har = staged(sf_dir, "har_archive", lambda d: har_create(spark, src, d, target_files=1))
+    return spark.read.parquet(staged(sf_dir, "har_extract", lambda d: har_extract(spark, har, d)))
 
 
 @register(
@@ -583,14 +544,8 @@ def distcp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quatrain_mapreduce_spark.sources.sinks import distcp
 
     src = _smallfiles_src(spark, sf_dir)
-    dst = _stage_dir(sf_dir, "distcp")
-    if not os.path.exists(os.path.join(dst, "_DISTCP_DONE")):
-        files = sorted(glob.glob(os.path.join(src, "*.parquet"))) + [
-            os.path.join(src, "_SUCCESS")
-        ]
-        distcp(spark, files, dst)
-        open(os.path.join(dst, "_DISTCP_DONE"), "w").close()
-    return spark.read.parquet(dst)
+    files = sorted(glob.glob(os.path.join(src, "*.parquet"))) + [os.path.join(src, "_SUCCESS")]
+    return spark.read.parquet(staged(sf_dir, "distcp", lambda d: distcp(spark, files, d)))
 
 
 @register(
@@ -619,18 +574,12 @@ def distcp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sources", "records"),
 )
 def csv_quoted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    d = _stage_dir(sf_dir, "csvquoted")
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
-        docs = load_table(spark, sf_dir, "documents")
-        payload = F.concat(
-            F.lit('q,"uo\nted:'), F.substring("text", 1, 40),
-            F.lit(":"), F.col("lang"),
-        )
-        docs.select("doc_id", payload.alias("torture")).write.mode(
-            "overwrite"
-        ).option("header", True).csv(d)
+    payload = F.concat(
+        F.lit('q,"uo\nted:'), F.substring("text", 1, 40),
+        F.lit(":"), F.col("lang"),
+    )
+    d = staged(sf_dir, "csvquoted", lambda d: load_table(spark, sf_dir, "documents")
+               .select("doc_id", payload.alias("torture")).write.option("header", True).csv(d))
     back = (
         spark.read.option("header", True).option("multiLine", True)
         .schema("doc_id long, torture string").csv(d)
@@ -660,20 +609,14 @@ def csv_quoted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sources", "records", "json"),
 )
 def nested_struct_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    d = _stage_dir(sf_dir, "nestedstruct")
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
-        ev = load_table(spark, sf_dir, "events")
-        meta = F.struct(
-            F.get_json_object("props", "$.k").cast("int").alias("k"),
-            F.expr("CAST(unix_micros(ts) div 86400000000 AS INT) % 30")
-             .alias("day"),
-            F.col("event_type").alias("type"),
-        )
-        ev.select("event_id", meta.alias("meta")).write.mode(
-            "overwrite").parquet(d)
-    back = spark.read.parquet(d)
+    meta = F.struct(
+        F.get_json_object("props", "$.k").cast("int").alias("k"),
+        F.expr("CAST(unix_micros(ts) div 86400000000 AS INT) % 30")
+         .alias("day"),
+        F.col("event_type").alias("type"),
+    )
+    back = spark.read.parquet(staged(sf_dir, "nestedstruct", lambda d: load_table(
+        spark, sf_dir, "events").select("event_id", meta.alias("meta")).write.parquet(d)))
     return back.where(
         (F.col("meta.k") >= 90) & (F.col("meta.type") == "purchase")
     ).select("event_id", F.col("meta.k").alias("k"))

@@ -18,7 +18,9 @@ from quatrain_mapreduce_spark.operators.curation import (
     EMAIL_RE as _EMAIL_RE, PHONE_RE as _PHONE_RE,
 )
 from quatrain_mapreduce_spark.registry import register
-from quatrain_mapreduce_spark.staging import stage_doc_slices, stage_event_slices
+from quatrain_mapreduce_spark.staging import (
+    scratch, single_file_slices, stage_doc_slices, stage_event_slices, staged,
+)
 from quatrain_mapreduce_spark.streaming.hop import (
     OnlineAggregator, _drain, accumulate_counts_stream, drain_to_parquet,
     fold_versions, read_events_stream, replay, sessionize, tumbling_window_agg,
@@ -591,15 +593,7 @@ def stream_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "cdc", "merge", "no-sql-plan"),
 )
 def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-    import os
-    import shutil
-    import time as _time
-
-    from quatrain_mapreduce_spark.staging import stage_dir
-
-    log_d = stage_dir(sf_dir, "cdclog")
-    if not os.path.exists(os.path.join(log_d, "_STAGED")):
+    def stage_log(d: str) -> None:
         orders = load_table(spark, sf_dir, "orders")
         base = orders.select(
             "o_orderkey", F.lit(0).alias("seq"), F.lit("I").alias("op"),
@@ -623,18 +617,8 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_custkey", F.lit(2.0).alias("price"),
             F.lit("R").alias("status"),
         )
-        os.makedirs(log_d, exist_ok=True)
-        for i, sl in enumerate((base, updates, deletes, reinserts)):
-            tmp = os.path.join(log_d, f"_tmp{i}")
-            sl.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            shutil.move(part, os.path.join(log_d, f"seq{i}.parquet"))
-            shutil.rmtree(tmp)
-        t0 = _time.time() - 3600
-        for i in range(4):
-            os.utime(os.path.join(log_d, f"seq{i}.parquet"),
-                     (t0 + i * 10, t0 + i * 10))
-        open(os.path.join(log_d, "_STAGED"), "w").close()
+        single_file_slices(d, [(f"seq{i}.parquet", sl) for i, sl in
+                               enumerate((base, updates, deletes, reinserts))])
 
     def compact(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
         log = batch if prev is None else prev.unionByName(batch)
@@ -656,6 +640,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
+    log_d = staged(sf_dir, "cdclog", stage_log)
     snap = fold_versions(spark, sf_dir, log_d, "cdctarget", compact)
     return snap.where(F.col("op") != "D").select(
         "o_orderkey", "o_custkey", "price", "status",
@@ -704,21 +689,15 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "session", "incremental"),
 )
 def sessionize_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from quatrain_mapreduce_spark.staging import stage_dir
     from quatrain_mapreduce_spark.streaming.hop import sessionize
 
     cutoff_us = 19750 * 86_400_000_000  # day 27 of the 30-day range
     ev = load_table(spark, sf_dir, "events")
 
-    d = stage_dir(sf_dir, "sess27")
-    if not os.path.exists(os.path.join(d, "_SUCCESS")):
-        sessionize(
-            ev.where(F.unix_micros("ts") < cutoff_us), "user_id", "ts",
-            gap_minutes=30,
-        ).write.mode("overwrite").parquet(d)
-    stored = spark.read.parquet(d)
+    stored = spark.read.parquet(staged(sf_dir, "sess27", lambda d: sessionize(
+        ev.where(F.unix_micros("ts") < cutoff_us), "user_id", "ts",
+        gap_minutes=30,
+    ).write.parquet(d)))
 
     inc_users = (
         ev.where(F.unix_micros("ts") >= cutoff_us)
@@ -1043,14 +1022,12 @@ def _stream_tdp_oracle() -> str:
           "no-sql-plan"),
 )
 def stream_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from quatrain_mapreduce_spark.streaming.pipeline import (
         norm_tokens, read_training_stream_result, run_training_stream,
     )
 
     d = stage_doc_slices(spark, sf_dir)
-    out_root = tempfile.mkdtemp(prefix="qms_stream_tdp_")
+    out_root = scratch("qms_stream_tdp_")
     run_training_stream(spark, d, out_root)
     kept, cells, _ = read_training_stream_result(spark, out_root)
     return cms_serve_top20(norm_tokens(kept), cells)

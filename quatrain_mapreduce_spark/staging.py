@@ -1,20 +1,41 @@
-"""Idempotent /tmp staging for derivative fixtures and indexes.
+"""Build-once /tmp staging for derivative fixtures and indexes.
 
 Several queries exercise round trips (write a derivative of a testdata table,
 read it back) or search staged indexes. Every such artifact lives in ONE
 md5-keyed temp directory per (sf_dir, tag), built on first use and reused
 after — this module is the single copy of that pattern.
+
+``staged(sf_dir, tag, build)`` is the one reuse decision. Its key
+(``stage_key``, which names the ``stage_dir``) covers everything that fixes the artifact: the data dir's
+realpath and content fingerprint, the tag, and an md5 of the engine's own
+source (``_code_fingerprint``), so regenerated data or any change to the
+engine gets a fresh directory instead of an artifact an older build left
+behind. ``build`` writes into a fresh sibling path, which is published by
+one ``os.rename`` onto the final path, atomic within the temp dir. A staged
+directory therefore exists only when it is complete: a crashed or failed
+build leaves nothing at the final path, and no marker file is needed. When
+two builders race, the first rename wins and the loser's copy is deleted.
+
+Per-call outputs that a returned DataFrame reads lazily (stream drains,
+snapshots) are not reusable and cannot be deleted when the call returns;
+``scratch`` makes them under the temp dir and deletes them when the process
+exits.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import glob
 import hashlib
 import os
+import shutil
 import tempfile
 import time
+import uuid
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -22,8 +43,8 @@ def _source_fingerprint(sf_dir: str) -> str:
     """Cheap content-version stamp of a testdata dir: (name, size, mtime) of
     every parquet file. Staged artifacts derive from these tables, so keying
     on the fingerprint auto-invalidates every staged dir when the source data
-    is regenerated between rounds — a path-only key would silently reuse
-    artifacts built from the previous data generation."""
+    is regenerated — a path-only key would silently reuse artifacts built
+    from the previous data generation."""
     parts = []
     try:
         for name in sorted(os.listdir(sf_dir)):
@@ -35,12 +56,86 @@ def _source_fingerprint(sf_dir: str) -> str:
     return ";".join(parts)
 
 
-def stage_dir(sf_dir: str, tag: str) -> str:
-    """The canonical staging path for (sf_dir, tag, data-version) — not
-    created."""
-    raw = f"{os.path.realpath(sf_dir)}:{tag}:{_source_fingerprint(sf_dir)}"
-    key = hashlib.md5(raw.encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"qms_{tag}_{key}")
+@functools.cache
+def _code_fingerprint() -> str:
+    """md5 over the package's ``*.py`` sources, computed once per process:
+    the code half of the staging key."""
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    h = hashlib.md5()
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        h.update(os.path.relpath(path, pkg).encode())
+        with open(path, "rb") as fh:
+            h.update(fh.read())
+    return h.hexdigest()
+
+
+def stage_key(sf_dir: str | None, tag: str) -> str:
+    """The reuse key of (sf_dir, tag): data dir realpath and fingerprint,
+    tag and engine code. ``sf_dir=None`` keys an artifact that derives
+    from no data dir on the tag and the code alone."""
+    data = "" if sf_dir is None else f"{os.path.realpath(sf_dir)}:{_source_fingerprint(sf_dir)}"
+    raw = f"{data}:{tag}:{_code_fingerprint()}"
+    return hashlib.md5(raw.encode()).hexdigest()[:12]
+
+
+def stage_dir(sf_dir: str | None, tag: str) -> str:
+    """The canonical staging path for (sf_dir, tag) under the current temp
+    dir — not created."""
+    return os.path.join(tempfile.gettempdir(), f"qms_{tag}_{stage_key(sf_dir, tag)}")
+
+
+def staged(sf_dir: str | None, tag: str, build: Callable[[str], object]) -> str:
+    """``stage_dir(sf_dir, tag)``, built on first use: ``build(tmp)`` writes
+    the artifact at ``tmp``, a fresh path beside the final one, and one
+    rename publishes it. If ``build`` raises, ``tmp`` is deleted and the
+    error propagates; if another builder published first, its copy is
+    returned and this one is deleted."""
+    final = stage_dir(sf_dir, tag)
+    if os.path.isdir(final):
+        return final
+    tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
+    try:
+        build(tmp)
+        os.rename(tmp, final)
+    except OSError:
+        if not os.path.isdir(final):
+            raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return final
+
+
+_SCRATCH: list[str] = []
+
+
+@atexit.register
+def _remove_scratch() -> None:
+    for d in _SCRATCH:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def scratch(prefix: str) -> str:
+    """A fresh directory under the current temp dir for one call's output,
+    deleted when the process exits (a returned DataFrame may still read it
+    until then)."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    _SCRATCH.append(d)
+    return d
+
+
+def single_file_slices(d: str, slices: list[tuple[str, DataFrame]]) -> None:
+    """Write each ``(name, frame)`` as ONE parquet file ``d/name``, with
+    strictly increasing mtimes in list order: a maxFilesPerTrigger=1 file
+    stream replays them oldest-first, one slice per micro-batch."""
+    os.makedirs(d)
+    base = time.time() - 3600
+    for i, (name, df) in enumerate(slices):
+        tmp = os.path.join(d, f"_tmp{i}")
+        df.coalesce(1).write.parquet(tmp)
+        dst = os.path.join(d, name)
+        os.replace(glob.glob(os.path.join(tmp, "part-*.parquet"))[0], dst)
+        shutil.rmtree(tmp)
+        os.utime(dst, (base + i * 10, base + i * 10))
 
 
 # Fixed event-time origin for the watermarked-dedup fixture (2026-01-01
@@ -101,72 +196,58 @@ def stage_watermark_dedup_slices(spark: SparkSession, sf_dir: str) -> str:
     gate-passing docs; a corpus too small to fill them must fail loudly
     rather than stage a fixture whose oracle is silently wrong).
     """
-    import shutil
-
     from quatrain_mapreduce_spark.catalog import load_table
     from quatrain_mapreduce_spark.operators.curation import gopher_rules
     from quatrain_mapreduce_spark.operators.dedup import normalized_text
 
-    # tag bumped with the r13 gap-1 event-time change: stage_dir keys on
-    # (sf_dir, tag, source fingerprint) only, so an unbumped tag would
-    # silently reuse a pre-change fixture staged by an earlier round
-    d = stage_dir(sf_dir, "wmdedup2")
-    marker = os.path.join(d, "_STAGED")
-    if os.path.exists(marker):
-        return d
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    gated = gopher_rules(docs, "text").where("passes = 1")
-    reps = (
-        gated.withColumn("fp", F.md5(normalized_text("text")))
-        .groupBy("source", "fp")
-        .agg(F.min("doc_id").alias("doc_id"),
-             F.min_by("text", "doc_id").alias("text"))
-    )
-    base_slice = (F.col("doc_id") % 4).cast("int")
-    is_gap1 = F.expr("(doc_id div 4) % 2 = 0")
-    first = reps.select(
-        "doc_id", "source", "text",
-        base_slice.alias("slice"),
-        (base_slice.cast("bigint") * 3600).alias("off"),
-    )
-    # gap-1 duplicates ARRIVE one slice later but carry an event time only
-    # WM_DEDUP_DUP_OFFSET past the first sighting — inside the 30-min delay
-    # threshold, so the drop is the documented guarantee (docstring)
-    again = reps.select(
-        "doc_id", "source", "text",
-        (base_slice + F.when(is_gap1, 1).otherwise(4)).cast("int")
-        .alias("slice"),
-        F.when(is_gap1,
-               base_slice.cast("bigint") * 3600 + WM_DEDUP_DUP_OFFSET)
-        .otherwise((base_slice.cast("bigint") + 4) * 3600).alias("off"),
-    )
-    rows = first.unionByName(again).withColumn(
-        "ts", F.timestamp_seconds(F.lit(WM_DEDUP_EPOCH) + F.col("off"))
-    ).select("doc_id", "source", "ts", "text", "slice").persist()
-    try:
-        present = {r["slice"] for r in rows.select("slice").distinct().collect()}
-        missing = sorted(set(range(8)) - present)
-        if missing:
-            raise ValueError(
-                f"watermarked-dedup fixture needs all 8 slices populated; "
-                f"{sf_dir} leaves slices {missing} empty — corpus too small "
-                "for the eviction-margin argument (see docstring)"
-            )
-        os.makedirs(d, exist_ok=True)
-        for k in sorted(present):
-            tmp = os.path.join(d, f"_tmp{k}")
-            rows.where(F.col("slice") == k).drop("slice") \
-                .coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            dst = os.path.join(d, f"slice{k}.parquet")
-            os.replace(part, dst)
-            shutil.rmtree(tmp)
-            # mtime = slice order: FileStreamSource replays oldest-first
-            os.utime(dst, (1_000_000_000 + k * 60, 1_000_000_000 + k * 60))
-    finally:
-        rows.unpersist()
-    open(marker, "w").close()
-    return d
+    def build(d: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
+        gated = gopher_rules(docs, "text").where("passes = 1")
+        reps = (
+            gated.withColumn("fp", F.md5(normalized_text("text")))
+            .groupBy("source", "fp")
+            .agg(F.min("doc_id").alias("doc_id"),
+                 F.min_by("text", "doc_id").alias("text"))
+        )
+        base_slice = (F.col("doc_id") % 4).cast("int")
+        is_gap1 = F.expr("(doc_id div 4) % 2 = 0")
+        first = reps.select(
+            "doc_id", "source", "text",
+            base_slice.alias("slice"),
+            (base_slice.cast("bigint") * 3600).alias("off"),
+        )
+        # gap-1 duplicates ARRIVE one slice later but carry an event time
+        # only WM_DEDUP_DUP_OFFSET past the first sighting — inside the
+        # 30-min delay threshold, so the drop is the documented guarantee
+        # (docstring)
+        again = reps.select(
+            "doc_id", "source", "text",
+            (base_slice + F.when(is_gap1, 1).otherwise(4)).cast("int")
+            .alias("slice"),
+            F.when(is_gap1,
+                   base_slice.cast("bigint") * 3600 + WM_DEDUP_DUP_OFFSET)
+            .otherwise((base_slice.cast("bigint") + 4) * 3600).alias("off"),
+        )
+        rows = first.unionByName(again).withColumn(
+            "ts", F.timestamp_seconds(F.lit(WM_DEDUP_EPOCH) + F.col("off"))
+        ).select("doc_id", "source", "ts", "text", "slice").persist()
+        try:
+            present = {r["slice"] for r in rows.select("slice").distinct().collect()}
+            missing = sorted(set(range(8)) - present)
+            if missing:
+                raise ValueError(
+                    f"watermarked-dedup fixture needs all 8 slices populated; "
+                    f"{sf_dir} leaves slices {missing} empty — corpus too small "
+                    "for the eviction-margin argument (see docstring)"
+                )
+            single_file_slices(d, [
+                (f"slice{k}.parquet", rows.where(F.col("slice") == k).drop("slice"))
+                for k in sorted(present)
+            ])
+        finally:
+            rows.unpersist()
+
+    return staged(sf_dir, "wmdedup2", build)
 
 
 def stage_event_slices(
@@ -188,20 +269,18 @@ def stage_event_slices(
     """
     from quatrain_mapreduce_spark.catalog import load_table
 
-    full_tag = f"{tag}{n_files}{'o' if ordered_mtime else ''}{'-'.join(columns or [])}"
-    d = stage_dir(sf_dir, full_tag)
-    marker = os.path.join(d, "_STAGED")
-    if not os.path.exists(marker):
+    def build(d: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         if columns:
             ev = ev.select(*columns)
-        ev.repartitionByRange(n_files, "event_id").write.mode("overwrite").parquet(d)
+        ev.repartitionByRange(n_files, "event_id").write.parquet(d)
         if ordered_mtime:
             base = time.time() - 3600
             for i, f in enumerate(sorted(glob.glob(os.path.join(d, "part-*.parquet")))):
                 os.utime(f, (base + i * 10, base + i * 10))
-        open(marker, "w").close()
-    return d
+
+    full_tag = f"{tag}{n_files}{'o' if ordered_mtime else ''}{'-'.join(columns or [])}"
+    return staged(sf_dir, full_tag, build)
 
 
 def stage_doc_slices(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
@@ -211,13 +290,8 @@ def stage_doc_slices(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
     stream_heavy_hitters; idempotent per (sf_dir, data fingerprint)."""
     from quatrain_mapreduce_spark.catalog import load_table
 
-    d = stage_dir(sf_dir, f"docslices{n_files}")
-    marker = os.path.join(d, "_STAGED")
-    if not os.path.exists(marker):
-        load_table(spark, sf_dir, "documents").repartition(n_files) \
-            .write.mode("overwrite").parquet(d)
-        open(marker, "w").close()
-    return d
+    return staged(sf_dir, f"docslices{n_files}", lambda d: load_table(
+        spark, sf_dir, "documents").repartition(n_files).write.parquet(d))
 
 
 def stage_late_slices(spark: SparkSession, sf_dir: str, recent_hours: int = 6) -> str:
@@ -239,32 +313,18 @@ def stage_late_slices(spark: SparkSession, sf_dir: str, recent_hours: int = 6) -
     rule (slice membership, drop set, final emitted-window set) is a pure
     function of the data, so the whole run is SQL-oracle-checkable.
     """
-    import shutil
+    from quatrain_mapreduce_spark.catalog import load_table
 
-    d = stage_dir(sf_dir, f"lateslices{recent_hours}")
-    marker = os.path.join(d, "_STAGED")
-    if not os.path.exists(marker):
-        from quatrain_mapreduce_spark.catalog import load_table
-
-        os.makedirs(d, exist_ok=True)
+    def build(d: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         even = F.col("event_id") % 2 == 0
         max_even_us = ev.where(even).agg(F.max(F.unix_micros("ts"))).first()[0]
         recent_cut = max_even_us - recent_hours * 3_600_000_000
         ep = F.unix_micros("ts")
-        slices = (
-            ("even", even),
-            ("oddrecent", (~even) & (ep >= F.lit(recent_cut))),
-            ("oddold", (~even) & (ep < F.lit(recent_cut))),
-        )
-        base = time.time() - 3600
-        for i, (name, cond) in enumerate(slices):
-            tmp = os.path.join(d, f"_build_{name}")
-            ev.where(cond).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            dst = os.path.join(d, f"slice-{i:03d}.parquet")
-            shutil.move(part, dst)
-            shutil.rmtree(tmp)
-            os.utime(dst, (base + i * 10, base + i * 10))
-        open(marker, "w").close()
-    return d
+        single_file_slices(d, [
+            ("slice-000.parquet", ev.where(even)),
+            ("slice-001.parquet", ev.where((~even) & (ep >= F.lit(recent_cut)))),
+            ("slice-002.parquet", ev.where((~even) & (ep < F.lit(recent_cut)))),
+        ])
+
+    return staged(sf_dir, f"lateslices{recent_hours}", build)

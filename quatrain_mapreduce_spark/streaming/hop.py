@@ -44,12 +44,14 @@ micro-batch by default (the bounded stand-in for HOP's progress quanta).
 ``_drain`` starts a writer availableNow through ``_start`` as a bounded
 start and waits for it; a checkpoint it creates itself
 (``qms_drain_ckpt_*``) is deleted when the drain returns or fails, while
-output and snapshot directories stay, because they back the returned
-DataFrames. ``fold_versions`` is the one batch-id-versioned
-``foreachBatch`` fold: version ``v{id}`` = ``step(previous version or None,
-batch)``, with the predecessor taken strictly below the batch id in
-numeric order and a missing one failing loudly; the additive count
-monitors and the CDC materialization are its ``step`` functions.
+output and snapshot directories back the returned DataFrames, so they are
+``staging.scratch`` dirs, deleted when the process exits.
+``fold_versions`` is the one batch-id-versioned ``foreachBatch`` fold:
+version ``v{id}`` = ``step(previous version or None, batch)``, with the
+predecessor taken strictly below the batch id in numeric order and a
+missing one failing loudly; the additive count monitors and the CDC
+materialization are its ``step`` functions. The finished fold is a staged
+artifact (``staging.staged``), published only once the drain is done.
 """
 
 from __future__ import annotations
@@ -65,7 +67,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from quatrain_mapreduce_spark.staging import stage_dir
+from quatrain_mapreduce_spark.staging import scratch, staged
 
 
 # serializes _start's swap of the session-wide conf: two overlapping starts
@@ -150,48 +152,36 @@ def _stage_stream_dir(sf_dir: str, table: str = "events") -> str:
     (r9 sf1-survival finding). So a directory source gets each part file
     symlinked individually, which also replays as one micro-batch per part
     under maxFilesPerTrigger=1 — the production landing-directory shape.
-    Idempotent per (sf_dir, table)."""
-    # stage_dir keys on a CONTENT fingerprint of sf_dir, not just the path:
-    # a regenerated source (tools/make_sf1.py overwrite) gets a fresh
-    # staging dir instead of a dir of dangling symlinks from the previous
-    # data generation (the exact invalidation bug staging.py documents).
+    Built once per (sf_dir, table) through ``staging.staged``."""
     src = os.path.join(sf_dir, f"{table}.parquet")
-    # tag bumped with the structure-preserving layout change: an old
-    # flattened staged dir would otherwise get nested links ADDED beside
-    # its flat ones (stage_dir is idempotent per (sf_dir, tag,
-    # fingerprint)) and every file would stream twice
-    d = stage_dir(sf_dir, f"streamsrc2-{table}")
-    os.makedirs(d, exist_ok=True)
-    staged = 0
-    if os.path.isdir(os.path.realpath(src)):
-        # recursive: a partitionBy-written or otherwise nested table keeps
-        # its data files in subdirectories — a top-level-only glob stages
-        # ZERO files and silently reproduces the zero-micro-batch bug this
-        # function exists to fix (ADVICE r9). Links PRESERVE the relative
-        # directory structure: hive-style `day=1/` components carry the
-        # partition column's VALUES, and flattening them into file names
-        # makes the stream fill that column with NULL for every row while
-        # the batch twin reads it correctly (leaf files don't contain
-        # partition columns). Sorted full paths keep FileStreamSource's
-        # oldest-first ordering deterministic either way.
-        for p in sorted(glob.glob(os.path.join(src, "**", "*.parquet"),
-                                  recursive=True)):
-            link = os.path.join(d, os.path.relpath(p, src))
+
+    def build(d: str) -> None:
+        if os.path.isdir(os.path.realpath(src)):
+            # recursive: a partitionBy-written or otherwise nested table
+            # keeps its data files in subdirectories — a top-level-only glob
+            # stages ZERO files and silently reproduces the zero-micro-batch
+            # bug this function exists to fix (ADVICE r9). Links PRESERVE
+            # the relative directory structure: hive-style `day=1/`
+            # components carry the partition column's VALUES, and flattening
+            # them into file names makes the stream fill that column with
+            # NULL for every row while the batch twin reads it correctly
+            # (leaf files don't contain partition columns). Sorted full
+            # paths keep FileStreamSource's oldest-first ordering
+            # deterministic either way.
+            files = sorted(glob.glob(os.path.join(src, "**", "*.parquet"), recursive=True))
+            links = [(p, os.path.join(d, os.path.relpath(p, src))) for p in files]
+        else:
+            links = [(src, os.path.join(d, f"{table}.parquet"))]
+        if not links:
+            raise FileNotFoundError(
+                f"stream staging found no *.parquet data files under {src!r} — "
+                "an empty staged dir would fire zero micro-batches silently"
+            )
+        for target, link in links:
             os.makedirs(os.path.dirname(link), exist_ok=True)
-            if not os.path.lexists(link):  # lexists: never follow a dangling link
-                os.symlink(p, link)
-            staged += 1
-    else:
-        link = os.path.join(d, f"{table}.parquet")
-        if not os.path.lexists(link):
-            os.symlink(src, link)
-        staged = 1
-    if staged == 0:
-        raise FileNotFoundError(
-            f"stream staging found no *.parquet data files under {src!r} — "
-            "an empty staged dir would fire zero micro-batches silently"
-        )
-    return d
+            os.symlink(target, link)
+
+    return staged(sf_dir, f"streamsrc2-{table}", build)
 
 
 def replay(spark: SparkSession, path: str, max_files_per_trigger: int = 1) -> DataFrame:
@@ -283,9 +273,10 @@ def drain_to_parquet(
 
     The query runs through ``_drain`` (state partitions sized to the
     input, one-shot checkpoint deleted); the output dir
-    ``qms_drain_<query_name>_*`` stays.
+    ``qms_drain_<query_name>_*`` is a ``staging.scratch`` dir, deleted when
+    the process exits.
     """
-    out = tempfile.mkdtemp(prefix=f"qms_drain_{query_name}_")
+    out = scratch(f"qms_drain_{query_name}_")
     if output_mode == "append":
         result = out
         writer = stream_df.writeStream.format("parquet").option("path", out)
@@ -398,8 +389,9 @@ class OnlineAggregator:
     ``source_path`` (one for a few MB), capped at the cores, rather than
     the batch default of 32 shuffle partitions; the count is written into
     the checkpoint's offset log. Without a ``work_dir`` the drain's
-    one-shot checkpoint is deleted once the run returns (the snapshots
-    stay); a checkpoint under a caller's ``work_dir`` is kept. ``self.progress``
+    one-shot checkpoint is deleted once the run returns and the snapshots
+    live in a ``staging.scratch`` dir until the process exits; a caller's
+    ``work_dir`` and its checkpoint are kept. ``self.progress``
     then holds one entry per snapshot — batch id, progress fraction, input
     rows, state partitions, state rows and state commit ms — HOP's
     per-snapshot progress report.
@@ -434,7 +426,7 @@ class OnlineAggregator:
         it across batches (per-batch cost O(batch + groups)).
         Returns the final snapshot as a DataFrame (== the exact batch answer
         once progress reaches 1.0)."""
-        work = self.work_dir or tempfile.mkdtemp(prefix="qms_online_inc_")
+        work = self.work_dir or scratch("qms_online_inc_")
         checkpoint = None
         if self.work_dir:
             checkpoint = os.path.join(work, "checkpoint")
@@ -541,9 +533,10 @@ def fold_versions(
     """Fold the staged dir ``src``, replayed one file per micro-batch, into
     batch-id versions under ``stage_dir(sf_dir, work_tag)``: version
     ``v{id}`` = ``step(previous version or None, batch)``. Returns the final
-    version. Built once per (sf_dir, work_tag, data version): a ``_DONE``
-    marker makes later calls read the final version, and a run that died
-    before it is redone from scratch.
+    version. Built once per (sf_dir, work_tag) through ``staging.staged``:
+    the fold runs into a fresh directory that is published only when the
+    drain has finished, so later calls read the final version and a run
+    that died is redone from scratch.
 
     Retry idempotence: a retried batch id must not see its OWN previous
     (possibly partial) version as its predecessor, or the fold applies the
@@ -552,10 +545,7 @@ def fold_versions(
     past batch 0 means the running state was deleted externally; starting
     over from ``None`` would silently lose it, so the batch fails instead.
     """
-    work = stage_dir(sf_dir, work_tag)
-    done = os.path.join(work, "_DONE")
-    if not os.path.exists(done):
-        shutil.rmtree(work, ignore_errors=True)
+    def build(work: str) -> None:
         os.makedirs(work)
 
         def fold(batch: DataFrame, bid: int) -> None:
@@ -572,7 +562,8 @@ def fold_versions(
 
         stream = replay(spark, src)
         _drain(stream.writeStream.foreachBatch(fold), stream)
-        open(done, "w").close()
+
+    work = staged(sf_dir, work_tag, build)
     return spark.read.parquet(os.path.join(work, f"v{_versions(work)[-1]:04d}"))
 
 

@@ -180,3 +180,28 @@ def test_plans_neither_start_queries_nor_choose_checkpoints():
             for n, line in enumerate(fh, 1):
                 hits += [f"{os.path.relpath(path, plans)}:{n}: {b}" for b in banned if b in line]
     assert not hits, "\n".join(hits)
+
+
+def test_staging_decision_lives_in_staging_py():
+    """Whether a staged artifact is complete and still valid is decided in
+    one place, ``staging.staged`` (keyed on data and code, published by
+    rename): no plan module checks for a path or names a completion
+    marker, and no package file outside staging.py writes a marker."""
+    import glob
+    import os
+    import re
+
+    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                       "quatrain_mapreduce_spark")
+    checks = ("os.path.exists", "os.path.isdir", "os.path.lexists", "_STAGED", "_DONE")
+    touch = re.compile(r"""open\(.*["']w["']\)\.close\(\)""")
+    hits = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, pkg)
+        with open(path) as fh:
+            for n, line in enumerate(fh, 1):
+                if rel.startswith("plans" + os.sep):
+                    hits += [f"{rel}:{n}: {c}" for c in checks if c in line]
+                if rel != "staging.py" and touch.search(line):
+                    hits.append(f"{rel}:{n}: marker write")
+    assert not hits, "\n".join(hits)

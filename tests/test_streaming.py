@@ -705,12 +705,13 @@ def test_stream_cms_state_is_bounded_and_matches_batch_cells(spark, sf_dir):
     from quatrain_mapreduce_spark.operators.curation import cms_probes
     from quatrain_mapreduce_spark.registry import all_queries
     from quatrain_mapreduce_spark.staging import stage_dir
+    import glob
     import os
 
     all_queries()["stream_heavy_hitters"].fn(spark, sf_dir).collect()
     # the staged slices exist now; rebuild the batch cells for comparison
     d = stage_dir(sf_dir, "docslices4")
-    assert os.path.exists(os.path.join(d, "_STAGED"))
+    assert len(glob.glob(os.path.join(d, "part-*.parquet"))) == 4
     batch_cells = sorted(map(tuple, (
         load_table(spark, sf_dir, "documents")
         .select(F.explode(
@@ -722,7 +723,6 @@ def test_stream_cms_state_is_bounded_and_matches_batch_cells(spark, sf_dir):
     ).collect()))
     assert len(batch_cells) <= 4096
     # drained snapshot dirs are qms_drain_qms_stream_cms_*; find the newest
-    import glob
     import tempfile
     snaps = sorted(
         glob.glob(os.path.join(tempfile.gettempdir(),
@@ -1395,8 +1395,8 @@ def test_fold_versions_writes_one_exact_version_per_batch(spark, tmp_path):
 def test_fold_versions_fails_loudly_without_a_predecessor(spark, tmp_path, monkeypatch):
     """When the running versions vanish mid-run (here: all deleted right
     before batch 2 looks for its predecessor), the fold raises "no
-    predecessor version" instead of restarting from None, and leaves no
-    _DONE marker behind."""
+    predecessor version" instead of restarting from None, and publishes
+    nothing: no staged fold and no copy left from the failed run."""
     import glob
     import os
     import shutil
@@ -1422,7 +1422,7 @@ def test_fold_versions_fails_loudly_without_a_predecessor(spark, tmp_path, monke
     try:
         with pytest.raises(Exception, match="no predecessor version below batch 2"):
             hop.fold_versions(spark, str(tmp_path), src, "foldgone", _running_totals)
-        assert not os.path.exists(os.path.join(work, "_DONE"))
+        assert glob.glob(work + "*") == []
     finally:
         shutil.rmtree(work, ignore_errors=True)
         shutil.rmtree(src, ignore_errors=True)
