@@ -6,8 +6,9 @@ sort-merge physically:
 
 1. map-side composite merge join over co-partitioned inputs
    (mapred/join/CompositeInputFormat.java:82 — ``inner(a,b)``, ``outer(a,b)``,
-   ``override(a,b)``) — here: n-ary equi-joins; ``override`` = rightmost
-   non-null wins = coalesce over a full-outer join;
+   ``override(a,b)``) — ``inner``/``outer`` are plain ``df.join`` calls;
+   ``override_join`` = rightmost non-null wins = coalesce over a
+   full-outer join;
 2. reduce-side tagged join (contrib/data_join DataJoinReducerBase.java:47 —
    per-source regroup + cross product) — exactly what a shuffled equi-join
    does; ``tagged_join`` keeps the n-ary API;
@@ -26,28 +27,6 @@ from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def composite_inner_join(dfs: list[DataFrame], key: str) -> DataFrame:
-    """n-ary inner equi-join on a shared key column.
-
-    CompositeInputFormat ``inner(a,b,...)`` (Parser.java grammar). The
-    reference requires co-sorted, co-partitioned inputs; Spark needs no such
-    precondition — Catalyst picks SMJ/broadcast, and pre-bucketed tables get
-    the shuffle-free plan automatically.
-    """
-    out = dfs[0]
-    for other in dfs[1:]:
-        out = out.join(other, on=key, how="inner")
-    return out
-
-
-def composite_outer_join(dfs: list[DataFrame], key: str) -> DataFrame:
-    """n-ary full-outer equi-join (CompositeInputFormat ``outer(...)``)."""
-    out = dfs[0]
-    for other in dfs[1:]:
-        out = out.join(other, on=key, how="full")
-    return out
 
 
 def override_join(dfs: list[DataFrame], key: str, value_col: str) -> DataFrame:

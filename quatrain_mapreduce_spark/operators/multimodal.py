@@ -8,7 +8,7 @@ metadata struct; decode / feature-extraction runs as Arrow-batched
 parser can own (PPM P6 and 24-bit BI_RGB BMP, r10 — no media libs needed);
 PIL is tried first when importable (the real-cluster hook for JPEG/PNG/
 WebP). Compressed formats without PIL raise ValueError. The synthetic
-feature/resize/frame helpers keep their deterministic stand-ins for
+feature/frame helpers keep their deterministic stand-ins for
 payloads that aren't images at all (md5-derived bench fixtures)."""
 
 from __future__ import annotations
@@ -444,50 +444,12 @@ def extract_features(media: DataFrame) -> DataFrame:
     return media.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-RESIZED_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("media_type", StringType()),
-    StructField("payload", BinaryType()),
-    StructField("width", LongType()),
-    StructField("height", LongType()),
-])
-
 FRAME_SCHEMA = StructType([
     StructField("doc_id", LongType()),
     StructField("frame_no", LongType()),
     StructField("frame", BinaryType()),
     StructField("n_bytes", LongType()),
 ])
-
-
-def resize_images(media: DataFrame, width: int = 64, height: int = 64) -> DataFrame:
-    """Arrow-batched image resize over binary payloads (1 row -> 1 row).
-
-    The real decoder+resampler hook is ``decode_image`` (stubbed here);
-    the stand-in emits a deterministic width*height-byte payload derived by
-    cycling the source bytes, so batch shape, output schema, and
-    partition-local execution are exercised for real.
-    """
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # self-contained closure: shipped by value, workers never import
-        # this package
-        n_out = width * height
-        def fake_resize(payload: bytes) -> bytes:
-            if not payload:
-                return bytes(n_out)
-            reps = (n_out + len(payload) - 1) // len(payload)
-            return (payload * reps)[:n_out]
-
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "media_type": pdf["media_type"],
-                "payload": [fake_resize(p) for p in pdf["payload"]],
-                "width": width,
-                "height": height,
-            })
-
-    return media.mapInPandas(run, schema=RESIZED_SCHEMA)
 
 
 def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:

@@ -95,14 +95,6 @@ def script_transform(
     return piped.map(lambda l: (l,)).toDF(["line"])
 
 
-def parse_transform_output(df: DataFrame, schema: list[tuple[str, str]], sep: str = "\t") -> DataFrame:
-    """AS (c1 t1, c2 t2, ...) half of TRANSFORM: split + cast each field."""
-    parts = F.split(F.col("line"), sep)
-    return df.select(*[
-        parts.getItem(i).cast(t).alias(n) for i, (n, t) in enumerate(schema)
-    ])
-
-
 def chain(df: DataFrame, *transforms: Callable[[DataFrame], DataFrame]) -> DataFrame:
     """ChainMapper/ChainReducer: [MAP+ / REDUCE MAP*] composition in one job.
 

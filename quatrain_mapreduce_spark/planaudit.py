@@ -95,30 +95,39 @@ def fingerprint_query(df) -> dict[str, int]:
     return fp
 
 
-# scan metadata renders as e.g. "Location: InMemoryFileIndex(1 paths)[file:/..."
-_LOCATION_RX = re.compile(r"Location: \w+(?:\(\d+ paths?\))?\[([^\],]+)")
 # attribute expression ids (`l_orderkey#123L`) differ between two scan
 # instances of the SAME source within one plan — strip them before hashing
-# an unmatched scan node so identical scans merge (same key), distinct
-# sources don't (different column set / paths still differ)
+# a scan node with no file relation so identical scans merge (same key),
+# distinct sources don't (different column set / paths still differ)
 _EXPR_ID_RX = re.compile(r"#\d+")
 
 
+def _root_paths(node) -> str | None:
+    """The root paths of a file scan's relation, comma-joined; None for a
+    scan with no file relation (DataSource V2 ``BatchScan``, JDBC). Read
+    from the plan object, not its rendering: the rendered ``Location:``
+    line is cut at ``spark.sql.maxMetadataStringLength`` (~100 chars), so
+    two long paths sharing a prefix would merge."""
+    if "FileSourceScan" not in node.getClass().getSimpleName():
+        return None
+    roots = node.relation().location().rootPaths()
+    return ",".join(roots.apply(i).toString() for i in range(roots.size()))
+
+
 def _scan_key(node) -> str:
-    """Stable identity for one scan node. Prefer the full Location path;
-    when the Location line is unparseable, fall back to a digest of the
-    node's rendering with expression ids normalized away — so two physical
-    scans of the same unparseable source still MERGE into one key (a
-    duplicate-scan regression there must stay visible to max_live_rescan;
-    ADVICE r10: a monotonic counter made each one a singleton and hid it),
-    while scans of genuinely different sources keep distinct keys."""
-    rendering = node.toString()
-    m = _LOCATION_RX.search(rendering)
-    if m:
-        return m.group(1)
+    """Stable identity for one scan node: the full root paths of a file
+    scan; otherwise a digest of the node's rendering with expression ids
+    normalized away — so two physical scans of the same non-file source
+    still MERGE into one key (a duplicate-scan regression there must stay
+    visible to max_live_rescan; ADVICE r10: a monotonic counter made each
+    one a singleton and hid it), while scans of genuinely different
+    sources keep distinct keys."""
+    roots = _root_paths(node)
+    if roots is not None:
+        return roots
     import hashlib
 
-    normalized = _EXPR_ID_RX.sub("#", rendering)
+    normalized = _EXPR_ID_RX.sub("#", node.toString())
     return "scan~" + hashlib.md5(normalized.encode()).hexdigest()[:12]
 
 
@@ -132,15 +141,15 @@ def live_scan_counts(df) -> dict[str, int]:
     class cost c4_curation_pipeline a measured 5× at sf1 (37 s -> 6.9 s
     once its strip subplan was persisted at the branch point).
 
-    Keys are the FULL matched location path (distinct sources that share a
-    basename — e.g. the same table staged under two directories — must not
-    merge into one inflated count); a scan whose Location line the regex
-    cannot parse is keyed by a digest of its expression-id-normalized
-    rendering (see _scan_key), so identical unparseable scans merge and
-    distinct ones don't. The walk descends into expression SUBQUERIES
-    (``node.subqueries()`` — Scalar/In/DPP subquery plans hang off
-    expressions, not ``children()``), skipping ``ReusedSubquery`` wrappers,
-    so a table re-scanned inside a filter subquery counts toward its live
+    Keys are the FULL root paths of a file scan (distinct sources that
+    share a basename — e.g. the same table staged under two directories —
+    must not merge into one inflated count); a scan with no file relation
+    is keyed by a digest of its expression-id-normalized rendering (see
+    _scan_key), so identical such scans merge and distinct ones don't.
+    The walk descends into expression SUBQUERIES (``node.subqueries()`` —
+    Scalar/In/DPP subquery plans hang off expressions, not
+    ``children()``), skipping ``ReusedSubquery`` wrappers, so a table
+    re-scanned inside a filter subquery counts toward its live
     multiplicity like any other consumer."""
     counts: dict[str, int] = {}
 

@@ -1844,7 +1844,7 @@ def basket_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is to persist `b` at this branch point (one scan + one distinct
     # instead of four and three); locally the unpersisted form is the
     # measured floor, so scale-dependent persists stay out of the bench
-    # channel (OPTIMIZATION_r13.md §8-revisited).
+    # channel (`git show ea1282d:OPTIMIZATION_r13.md`, §8-revisited).
     b = li.select(
         F.col("l_orderkey").alias("ok"),
         (F.col("l_partkey") % 100).cast("bigint").alias("cat"),

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from quatrain_mapreduce_spark.catalog import load_table
 from quatrain_mapreduce_spark.operators.joins import tagged_join
 from quatrain_mapreduce_spark.registry import register
-from quatrain_mapreduce_spark.staging import stage_dir, stage_key, staged
+from quatrain_mapreduce_spark.staging import scratch, stage_dir, stage_key, staged
 from quatrain_mapreduce_spark.sources.readers import (
     filtered_scan, multiple_inputs, read_kv_text, read_sequence_file,
 )
@@ -119,10 +119,9 @@ def tagged_join_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bucketed_table_names(sf_dir: str) -> tuple[str, str]:
-    """Catalog names for the staged bucketed (orders, customer) tables,
-    keyed like every staged dir (``staging.stage_key``: data and engine
-    code), so neither regenerated data nor a code change reuses tables an
-    older build left behind."""
+    """Catalog names for the session's bucketed (orders, customer) tables,
+    keyed like every staged dir (``staging.stage_key``), so a session never
+    reuses tables built from older data."""
     key = stage_key(sf_dir, "bucketed")
     return f"qms_orders_b_{key}", f"qms_customer_b_{key}"
 
@@ -144,16 +143,13 @@ def _bucketed_table_names(sf_dir: str) -> tuple[str, str]:
 def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ot, ct = _bucketed_table_names(sf_dir)
     if not spark.catalog.tableExists(ot) or not spark.catalog.tableExists(ct):
-        import shutil
-        from urllib.parse import urlparse
-
-        warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        for t in (ot, ct):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
-        load_table(spark, sf_dir, "orders").write.format("parquet") \
+        # external tables in scratch dirs: the session catalog forgets them
+        # at exit, and the scratch dirs go with it
+        load_table(spark, sf_dir, "orders").write.format("parquet").mode("overwrite") \
+            .option("path", scratch("qms_bucketed_")) \
             .bucketBy(8, "o_custkey").sortBy("o_custkey").saveAsTable(ot)
-        load_table(spark, sf_dir, "customer").write.format("parquet") \
+        load_table(spark, sf_dir, "customer").write.format("parquet").mode("overwrite") \
+            .option("path", scratch("qms_bucketed_")) \
             .bucketBy(8, "c_custkey").sortBy("c_custkey").saveAsTable(ct)
     orders_b, customer_b = spark.table(ot), spark.table(ct)
     return (

@@ -71,43 +71,6 @@ def multi_sink(df: DataFrame, sinks: list[Callable[[DataFrame], None]]) -> None:
         df.unpersist()
 
 
-def multi_format_sink(
-    df: DataFrame,
-    routes: list[tuple[F.Column | None, str, str, dict | None]],
-) -> None:
-    """Heterogeneous-format demux (MultipleOutputFormat.java:51 —
-    generateFileNameForKeyValue routes one reduce output to a DIFFERENT
-    OutputFormat per key): one shared scan, each route filters its key
-    subset and writes through its own format.
-
-    ``routes``: (predicate | None, format, path, writer options | None).
-    The shared subplan persists once (MEMORY_AND_DISK — a 100 TB scan's
-    working set spills instead of recomputing per route); every route's
-    branch reads the cache, so the source is scanned exactly once.
-    """
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        for pred, fmt, path, opts in routes:
-            d = df.where(pred) if pred is not None else df
-            d.write.mode("overwrite").format(fmt).options(**(opts or {})).save(path)
-    finally:
-        df.unpersist()
-
-
-def load_data(spark, path: str, table: str) -> None:
-    """LOAD DATA INPATH parity (ql/parse/LoadSemanticAnalyzer.java): adopt
-    existing data files into a catalog table.
-
-    The reference moves files into the table directory and updates the
-    metastore; here files are appended through the table's format writer and
-    the catalog entry refreshed — same observable contract (rows become part
-    of the table), transactional rather than a raw rename.
-    """
-    df = spark.read.parquet(path)
-    df.write.mode("append").insertInto(table)
-    spark.catalog.refreshTable(table)
-
-
 def write_jdbc(df: DataFrame, url: str, table: str, mode: str = "append", **options) -> None:
     """Batched INSERT sink (DBOutputFormat)."""
     df.write.mode(mode).format("jdbc").option("url", url).option("dbtable", table) \
@@ -234,14 +197,6 @@ def har_create(spark, src_dir: str, har_dir: str, target_files: int = 1) -> int:
     )
     arch.write.mode("overwrite").parquet(har_dir)
     return spark.read.parquet(har_dir).count()
-
-
-def har_get(spark, har_dir: str, name: str) -> DataFrame:
-    """Point-read one archived file — MapFileOutputFormat.getEntry shape on
-    the archive: an equality filter on the sorted ``name`` column reaches
-    the parquet scan (PushedFilters), so row groups that cannot contain the
-    name are skipped via footer stats."""
-    return spark.read.parquet(har_dir).where(F.col("name") == name)
 
 
 def har_extract(spark, har_dir: str, out_dir: str) -> int:

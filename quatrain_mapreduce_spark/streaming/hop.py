@@ -206,15 +206,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: 
     return normalize_event_ts(stream)
 
 
-def clock_stream(spark: SparkSession, rows_per_second: int = 10) -> DataFrame:
-    """ClockInputFormat / RealTimeRecordReader: infinite (sequence, now) ticks
-    (monitor/ClockInputFormat.java:12) — the built-in rate source."""
-    return (
-        spark.readStream.format("rate").option("rowsPerSecond", rows_per_second).load()
-        .select(F.col("value").alias("sequence"), F.col("timestamp").alias("now"))
-    )
-
-
 def tumbling_window_agg(
     events: DataFrame, ts_col: str, keys: list[str], aggs: list[Column],
     window_duration: str = "5 minutes", watermark: str | None = "10 minutes",
@@ -289,24 +280,6 @@ def drain_to_parquet(
         writer = stream_df.writeStream.foreachBatch(write_snapshot)
     _drain(writer.outputMode(output_mode), stream_df)
     return stream_df.sparkSession.read.schema(stream_df.schema).parquet(result)
-
-
-def monitor_job(spark: SparkSession, rows_per_second: int = 10, window: str = "2 seconds"):
-    """Monitor framework demo (MR/monitor/MonitorClient.java:33,
-    SystemMeasurement + ClockInputFormat): a continuous job over the clock
-    source computing per-window measurement aggregates — returns the
-    (unstarted) windowed DataFrame; callers attach their sink and trigger.
-
-    The reference polls /proc per tick; here the 'measurement' is the tick
-    itself (sequence number), keeping the demo hermetic. Swap the select for
-    a real probe UDF on a live cluster.
-    """
-    ticks = clock_stream(spark, rows_per_second)
-    return ticks.groupBy(F.window("now", window).alias("win")).agg(
-        F.count("*").alias("n_ticks"),
-        F.min("sequence").alias("first_seq"),
-        F.max("sequence").alias("last_seq"),
-    )
 
 
 def sessionize(events: DataFrame, user_col: str, ts_col: str, gap_minutes: int = 30) -> DataFrame:

@@ -135,12 +135,10 @@ def test_live_scan_counts_keys_by_full_path_not_basename(spark, tmp_path):
 
 
 def test_unmatched_location_scans_merge_by_identity(spark, tmp_path, monkeypatch):
-    """When the Location line is unparseable, identical scans must still
+    """When a scan has no file root paths, identical scans must still
     MERGE (a genuine duplicate-scan regression on such a source stays
     visible) while distinct sources keep distinct keys — ADVICE r10: the
     old scan#<n> counter made every unmatched scan a singleton."""
-    import re as _re
-
     import pyspark.sql.functions as F
 
     from quatrain_mapreduce_spark import planaudit
@@ -148,9 +146,8 @@ def test_unmatched_location_scans_merge_by_identity(spark, tmp_path, monkeypatch
     x_dir, y_dir = str(tmp_path / "x.parquet"), str(tmp_path / "y.parquet")
     spark.range(5).write.parquet(x_dir)
     spark.range(5).withColumn("w", F.lit(1)).write.parquet(y_dir)
-    # "a^" can never match (an 'a' followed by start-of-string); the group
-    # keeps the regex shape _scan_key expects
-    monkeypatch.setattr(planaudit, "_LOCATION_RX", _re.compile(r"a^(never)"))
+    # every scan takes the no-file-relation fallback
+    monkeypatch.setattr(planaudit, "_root_paths", lambda node: None)
 
     same_twice = spark.read.parquet(x_dir).unionAll(spark.read.parquet(x_dir))
     counts = planaudit.live_scan_counts(same_twice)

@@ -8,28 +8,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from quatrain_mapreduce_spark.operators.joins import (
-    composite_inner_join, composite_outer_join, override_join, tagged_join,
-)
+from quatrain_mapreduce_spark.operators.joins import override_join, tagged_join
 from quatrain_mapreduce_spark.operators.sort import bucket_sample, cluster_by, secondary_sort_agg
 
 
 def _kv(spark, rows):
     return spark.createDataFrame(rows, "key int, val string")
-
-
-def test_composite_inner_join(spark):
-    a = _kv(spark, [(1, "a1"), (2, "a2")])
-    b = spark.createDataFrame([(1, "b1"), (3, "b3")], "key int, other string")
-    got = composite_inner_join([a, b], "key").collect()
-    assert len(got) == 1 and got[0]["key"] == 1
-
-
-def test_composite_outer_join_null_padding(spark):
-    a = _kv(spark, [(1, "a1")])
-    b = spark.createDataFrame([(2, "b2")], "key int, other string")
-    got = {r["key"]: (r["val"], r["other"]) for r in composite_outer_join([a, b], "key").collect()}
-    assert got == {1: ("a1", None), 2: (None, "b2")}
 
 
 def test_override_join_rightmost_nonnull_wins(spark):

@@ -72,87 +72,41 @@ def test_multi_sink_shared_scan(spark, tmp_path):
     assert spark.read.parquet(p2).count() == 5
 
 
-def test_multi_format_sink_demuxes_one_scan_two_formats(spark, tmp_path):
-    """MultipleOutputFormat heterogeneous demux: one shared scan routed to a
-    parquet sink AND a csv sink by key predicate; the branch plans read the
-    persisted shared subplan (InMemoryTableScan), not the source — one scan."""
-    from quatrain_mapreduce_spark.sources.sinks import multi_format_sink
-
-    src = str(tmp_path / "src")
-    spark.createDataFrame(
-        [(i, "hot" if i % 3 == 0 else "cold") for i in range(90)], "v int, k string"
-    ).write.parquet(src)
-    df = spark.read.parquet(src)
-    pq, csv = str(tmp_path / "route_pq"), str(tmp_path / "route_csv")
-    multi_format_sink(df, [
-        (F.col("k") == "hot", "parquet", pq, None),
-        (F.col("k") == "cold", "csv", csv, {"header": "true"}),
-    ])
-    # each route materialized in its own format with its key subset
-    assert spark.read.parquet(pq).count() == 30
-    back = spark.read.option("header", True).csv(csv)
-    assert back.count() == 60
-    assert set(back.columns) == {"v", "k"}
-    # one-scan property: while the shared frame is persisted, a route branch
-    # compiles to an InMemoryTableScan (cache read), not a second FileScan
-    df.persist()
-    try:
-        df.count()
-        plan = df.where(F.col("k") == "hot")._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryTableScan" in plan
-    finally:
-        df.unpersist()
-
-
-def test_bucketed_join_has_no_exchange(spark):
+def test_bucketed_join_has_no_exchange(spark, sf_dir, monkeypatch):
     """Bucketed tables joined on the bucket key must plan WITHOUT a shuffle
     on either side (MapFileOutputFormat / CLUSTERED BY parity — the whole
-    point of bucketing at 100 TB)."""
-    from quatrain_mapreduce_spark.plans.sources_queries import bucketed_join
-
-    out = bucketed_join(spark, "/root/testdata/sf0.001")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
-    # no Exchange between the scans and the join (bucket-aligned reads)
-    scan_section = plan[plan.index("Join"):]
-    assert "Exchange hashpartitioning" not in scan_section
-
-
-def test_clock_stream_ticks(spark):
-    """ClockInputFormat / RealTimeRecordReader parity: the rate source emits
-    (sequence, now) ticks."""
-    from quatrain_mapreduce_spark.streaming.hop import clock_stream
-
-    ticks = clock_stream(spark, rows_per_second=100)
-    assert ticks.isStreaming and set(ticks.columns) == {"sequence", "now"}
-    q = (ticks.writeStream.format("memory").queryName("qms_test_clock")
-         .outputMode("append").start())
-    import time
-    time.sleep(3)
-    q.stop()
-    n = spark.table("qms_test_clock").count()
-    assert n > 0
-
-
-def test_load_data_adopts_files(spark, tmp_path):
-    """LOAD DATA INPATH parity: external files become part of a catalog
-    table; the table sees the union after adoption."""
-    from quatrain_mapreduce_spark.sources.sinks import load_data
-
-    spark.sql("DROP TABLE IF EXISTS qms_test_load")
-    import shutil
+    point of bucketing at 100 TB). Both tables are external tables under
+    the temp dir; the session's warehouse dir gains nothing."""
+    import tempfile
     from urllib.parse import urlparse
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    shutil.rmtree(f"{wh}/qms_test_load", ignore_errors=True)
 
-    base = spark.createDataFrame([(1, "a")], "k int, v string")
-    base.write.saveAsTable("qms_test_load")
-    extra_path = str(tmp_path / "incoming")
-    spark.createDataFrame([(2, "b"), (3, "c")], "k int, v string").write.parquet(extra_path)
+    from quatrain_mapreduce_spark.plans import sources_queries as sq
 
-    load_data(spark, extra_path, "qms_test_load")
-    got = {r["k"]: r["v"] for r in spark.table("qms_test_load").collect()}
-    assert got == {1: "a", 2: "b", 3: "c"}
+    # table names no earlier query in this session created
+    names = tuple(f"qms_test_{t}_bucketed" for t in ("orders", "customer"))
+    monkeypatch.setattr(sq, "_bucketed_table_names", lambda _sf: names)
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+
+    def listing():
+        return sorted(os.listdir(warehouse)) if os.path.isdir(warehouse) else []
+
+    before = listing()
+    try:
+        out = sq.bucketed_join(spark, sf_dir)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
+        # no Exchange between the scans and the join (bucket-aligned reads)
+        scan_section = plan[plan.index("Join"):]
+        assert "Exchange hashpartitioning" not in scan_section
+        for t in names:
+            loc = (spark.sql(f"DESCRIBE TABLE EXTENDED {t}")
+                   .where("col_name = 'Location'").first()["data_type"])
+            assert urlparse(loc).path.startswith(
+                os.path.join(tempfile.gettempdir(), "qms_bucketed_")), loc
+        assert listing() == before
+    finally:
+        for t in names:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_read_xml_records_multiline_and_attrs(spark, tmp_path):
@@ -287,12 +241,12 @@ def test_distcp_copies_bytes_identically(spark, tmp_path):
 
 def test_har_pack_unpack_and_indexed_point_read(spark, tmp_path):
     """har_create packs N small files into ONE archive file; har_extract
-    reproduces every byte; har_get's equality filter on the sorted name
-    column is pushed to the archive scan (the HAR index analogue)."""
+    reproduces every byte; an equality filter on the archive's sorted name
+    column is pushed to its scan (the HAR index analogue)."""
     import glob as g
     import os
 
-    from quatrain_mapreduce_spark.sources.sinks import har_create, har_extract, har_get
+    from quatrain_mapreduce_spark.sources.sinks import har_create, har_extract
 
     src = str(tmp_path / "src")
     n = load_table(spark, "/root/testdata/sf0.001", "nation")
@@ -306,7 +260,7 @@ def test_har_pack_unpack_and_indexed_point_read(spark, tmp_path):
 
     # point read prunes via a pushed equality filter on name
     name = os.path.basename(files[3])
-    got = har_get(spark, har, name)
+    got = spark.read.parquet(har).where(F.col("name") == name)
     plan = got._jdf.queryExecution().executedPlan().toString()
     from tests.test_plans import pushed_filter_brackets
     assert any(f"EqualTo(name,{name})" in b for b in pushed_filter_brackets(plan)), plan

@@ -34,14 +34,14 @@ def test_stream_batch_parity(spark, sf_dir):
     assert streamed == batch
 
 
-def test_online_aggregator_rerun_not_poisoned_by_checkpoint(spark, sf_dir):
+def test_online_aggregator_rerun_not_poisoned_by_checkpoint(spark, sf_dir, tmp_path_factory):
     """Fresh checkpoint per run: a second run over the same work dir must
     produce snapshots again (a reused checkpoint marks every source file as
     processed and silently produces none)."""
     ev = load_table(spark, sf_dir, "events").limit(100)
-    src = tempfile.mkdtemp(prefix="qms_test_online_src2_")
+    src = str(tmp_path_factory.mktemp("online_src2"))
     ev.repartition(2).write.mode("overwrite").parquet(src)
-    work = tempfile.mkdtemp(prefix="qms_test_online_rerun_work_")
+    work = str(tmp_path_factory.mktemp("online_rerun_work"))
 
     def agg_fn(df):
         return df.agg(F.count("*").alias("n"))
@@ -113,39 +113,13 @@ def test_sessionize_exact_gap_boundary(spark):
     assert a == b == {("u1", 1), ("u2", 2)}
 
 
-def test_monitor_job_windows_ticks(spark):
-    """Monitor framework (ClockInputFormat + MonitorClient parity): the
-    continuous clock job emits windowed tick counts."""
-    from quatrain_mapreduce_spark.streaming.hop import monitor_job
-
-    agg = monitor_job(spark, rows_per_second=50, window="1 second")
-    q = (agg.writeStream.format("memory").queryName("qms_test_monitor")
-         .outputMode("complete").start())
-    import time
-
-    # poll-with-deadline, not a fixed sleep: under host contention (see
-    # PLANS.md round-9 note) stream startup + first trigger can exceed any
-    # fixed small sleep — wait until at least one window lands, bounded
-    rows = []
-    deadline = time.monotonic() + 45
-    while time.monotonic() < deadline:
-        rows = spark.table("qms_test_monitor").collect()
-        if rows:
-            break
-        time.sleep(0.5)
-    q.stop()
-    assert rows, "no monitor windows produced within 45s"
-    assert all(r["last_seq"] >= r["first_seq"] for r in rows)
-
-
-def test_moving_avg_state_carries_across_batches(spark, sf_dir):
+def test_moving_avg_state_carries_across_batches(spark, sf_dir, tmp_path_factory):
     """applyInPandasWithState: the per-key last-k buffer must survive batch
     boundaries. Replay events as 3 ordered slices (one per micro-batch); the
     streamed result must equal the batch window twin row-for-row — any state
     loss at a boundary would reset the average for every key mid-stream."""
     import glob
     import os
-    import tempfile
     import time
 
     from quatrain_mapreduce_spark.streaming.stateful import (
@@ -153,7 +127,7 @@ def test_moving_avg_state_carries_across_batches(spark, sf_dir):
     )
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    src = tempfile.mkdtemp(prefix="qms_test_ma_src_")
+    src = str(tmp_path_factory.mktemp("ma_src"))
     ev.repartitionByRange(3, "event_id").write.mode("overwrite").parquet(src)
     base = time.time() - 3600
     files = sorted(glob.glob(os.path.join(src, "part-*.parquet")))
@@ -185,7 +159,7 @@ def test_moving_avg_state_carries_across_batches(spark, sf_dir):
     assert streamed == batch
 
 
-def test_watermark_finalizes_windows_exactly_once(spark):
+def test_watermark_finalizes_windows_exactly_once(spark, tmp_path_factory):
     """Event-time watermark semantics (the engine's documented SUPERSET —
     the reference has no event time, SURVEY §2.8). The append-mode
     contract: a window is emitted EXACTLY ONCE, after the watermark passes
@@ -196,17 +170,16 @@ def test_watermark_finalizes_windows_exactly_once(spark):
     import glob
     import os
     import shutil
-    import tempfile
     import time
 
     from pyspark.sql import functions as F
 
-    src = tempfile.mkdtemp(prefix="qms_test_wm_src_")
+    src = str(tmp_path_factory.mktemp("wm_src"))
     base = 1_700_000_000  # fixed epoch origin
     now = time.time()
 
     def put(rows, name, mt):
-        d = tempfile.mkdtemp()
+        d = str(tmp_path_factory.mktemp("put"))
         spark.createDataFrame(rows, "event_id long, ep long") \
             .coalesce(1).write.mode("overwrite").parquet(d)
         dst = os.path.join(src, name)
@@ -243,13 +216,13 @@ def test_watermark_finalizes_windows_exactly_once(spark):
     assert all(r["win"]["start"].timestamp() == old_win for r in rows)
 
 
-def test_online_aggregator_incremental_final_is_exact(spark, sf_dir):
+def test_online_aggregator_incremental_final_is_exact(spark, sf_dir, tmp_path_factory):
     """The stateful query (per-batch work O(batch+groups), state store
     carrying the partial aggregate) emits one snapshot per source file with
     non-decreasing progress ending at 1.0, per-key counts that only grow,
     and a final answer equal to the exact batch aggregate."""
     ev = load_table(spark, sf_dir, "events")
-    src = tempfile.mkdtemp(prefix="qms_test_online_inc_src_")
+    src = str(tmp_path_factory.mktemp("online_inc_src"))
     ev.repartitionByRange(4, "event_id").write.mode("overwrite").parquet(src)
 
     def agg_fn(df):
@@ -277,7 +250,7 @@ def test_online_aggregator_incremental_final_is_exact(spark, sf_dir):
         prev = snap
 
 
-def test_checkpoint_restart_is_exactly_once(spark):
+def test_checkpoint_restart_is_exactly_once(spark, tmp_path_factory):
     """HOP's job-recovery analogue, Structured-Streaming-native: a file
     stream drained availableNow with a checkpoint, then RESTARTED from the
     same checkpoint after new files arrive — the resumed query must process
@@ -285,7 +258,7 @@ def test_checkpoint_restart_is_exactly_once(spark):
     must yield every row exactly once across both runs."""
     import os
 
-    work = tempfile.mkdtemp(prefix="qms_test_ckpt_")
+    work = str(tmp_path_factory.mktemp("ckpt"))
     src, out, ckpt = (os.path.join(work, d) for d in ("src", "out", "ckpt"))
     os.makedirs(src)
 
@@ -316,13 +289,13 @@ def test_checkpoint_restart_is_exactly_once(spark):
     assert sum(p["numInputRows"] for p in q2.recentProgress) == 50
 
 
-def test_stream_dedup_drops_duplicate_across_batches(spark):
+def test_stream_dedup_drops_duplicate_across_batches(spark, tmp_path_factory):
     """Streaming dropDuplicates state must span micro-batches: a row
     re-arriving in a LATER file slice (batch) is dropped, not re-emitted."""
     import os
     import time
 
-    src = tempfile.mkdtemp(prefix="qms_test_sdedup_")
+    src = str(tmp_path_factory.mktemp("sdedup"))
     base = time.time() - 600
     spark.createDataFrame([("a", 1), ("b", 2)], "k string, v int") \
         .coalesce(1).write.mode("overwrite").parquet(os.path.join(src, "f1"))
@@ -346,13 +319,13 @@ def test_stream_dedup_drops_duplicate_across_batches(spark):
     assert len(q.recentProgress) >= 2
 
 
-def test_online_aggregator_incremental_survives_progress_retention(spark, sf_dir):
+def test_online_aggregator_incremental_survives_progress_retention(spark, sf_dir, tmp_path_factory):
     """recentProgress retains only numRecentProgressUpdates entries; the
     listener-based bookkeeping must still reach progress 1.0 when the run has
     more micro-batches than the retention window (simulated by shrinking the
     retention to 2 — a 100-batch run is the same failure mode, slower)."""
     ev = load_table(spark, sf_dir, "events").limit(200)
-    src = tempfile.mkdtemp(prefix="qms_test_online_ret_src_")
+    src = str(tmp_path_factory.mktemp("online_ret_src"))
     # 8 files, 1 file per trigger => 8 micro-batches >> retention of 2
     ev.repartition(8).write.mode("overwrite").parquet(src)
 
@@ -514,7 +487,7 @@ def test_online_agg_ci_converges_and_final_is_exact(spark, sf_dir):
             assert abs(ks[k]["est_sum_cents"] - truth[t]) < 2.1 * hw[k - 1]
 
 
-def test_stream_staging_handles_nested_tables_and_fails_loud():
+def test_stream_staging_handles_nested_tables_and_fails_loud(tmp_path_factory):
     """ADVICE r9 + r13 review: a partitionBy-written (nested) table must
     stage its leaf data files PRESERVING the hive-style directory
     components — `day=1/` carries the partition column's VALUE, and
@@ -528,7 +501,7 @@ def test_stream_staging_handles_nested_tables_and_fails_loud():
 
     from quatrain_mapreduce_spark.streaming.hop import _stage_stream_dir
 
-    sf = tempfile.mkdtemp(prefix="qms_test_nest_")
+    sf = str(tmp_path_factory.mktemp("nest"))
     src = os.path.join(sf, "events.parquet")
     for sub in ("day=1", "day=2"):
         os.makedirs(os.path.join(src, sub))
@@ -541,13 +514,13 @@ def test_stream_staging_handles_nested_tables_and_fails_loud():
     )
     assert staged == ["day=1/part-0.parquet", "day=2/part-0.parquet"]
 
-    sf_empty = tempfile.mkdtemp(prefix="qms_test_nestempty_")
+    sf_empty = str(tmp_path_factory.mktemp("nestempty"))
     os.makedirs(os.path.join(sf_empty, "events.parquet"))
     with _pytest.raises(FileNotFoundError):
         _stage_stream_dir(sf_empty, "events")
 
 
-def test_stream_staging_preserves_partition_values(spark):
+def test_stream_staging_preserves_partition_values(spark, tmp_path_factory):
     """End-to-end form of the r13 review finding: stream a hive-partitioned
     table through the staged dir and require the partition column's VALUES
     to match the batch read — the flattened layout streamed them as NULL
@@ -556,7 +529,7 @@ def test_stream_staging_preserves_partition_values(spark):
 
     from quatrain_mapreduce_spark.streaming.hop import _stage_stream_dir
 
-    sf = tempfile.mkdtemp(prefix="qms_test_partvals_")
+    sf = str(tmp_path_factory.mktemp("partvals"))
     tbl = os.path.join(sf, "events.parquet")
     (spark.range(100).selectExpr("id", "cast(id % 3 as int) as day")
      .write.partitionBy("day").parquet(tbl))
@@ -574,7 +547,7 @@ def test_stream_staging_preserves_partition_values(spark):
     assert got == want and all(d is not None for d, _ in got)
 
 
-def test_online_agg_snapshots_converge_monotonically_to_exact(spark, sf_dir):
+def test_online_agg_snapshots_converge_monotonically_to_exact(spark, sf_dir, tmp_path_factory):
     """r9 stretch #8 — the HOP online-aggregation convergence property
     (MR/ReduceTask.java:631-669: full reduce over data-so-far per progress
     quantum): over an 8-slice bounded replay, every snapshot is a PARTIAL
@@ -584,7 +557,7 @@ def test_online_agg_snapshots_converge_monotonically_to_exact(spark, sf_dir):
     first snapshot is a strict partial and the last one is the returned
     final frame (EX/TopK.java:259-262 snapshot semantics)."""
     ev = load_table(spark, sf_dir, "events")
-    src = tempfile.mkdtemp(prefix="qms_test_conv_src_")
+    src = str(tmp_path_factory.mktemp("conv_src"))
     ev.repartitionByRange(8, "event_id").write.mode("overwrite").parquet(src)
 
     def agg_fn(df):
@@ -622,7 +595,7 @@ def test_online_agg_snapshots_converge_monotonically_to_exact(spark, sf_dir):
     assert prev_err == 0  # fraction 1.0 == exact batch answer
 
 
-def test_sigkill_mid_stream_restart_is_exactly_once(spark):
+def test_sigkill_mid_stream_restart_is_exactly_once(spark, tmp_path_factory):
     """The hard half of exactly-once (tools/soak_stream.py --mode
     kill-restart is the 10-minute soak form; this is the fast CI gate): a
     CHILD process streams a 30-file source into a parquet sink one file
@@ -639,7 +612,7 @@ def test_sigkill_mid_stream_restart_is_exactly_once(spark):
     import textwrap
     import time
 
-    work = tempfile.mkdtemp(prefix="qms_test_kill_")
+    work = str(tmp_path_factory.mktemp("kill"))
     src, out, ckpt = (os.path.join(work, d) for d in ("src", "out", "ckpt"))
     spark.range(0, 300).repartitionByRange(30, "id") \
         .write.mode("overwrite").parquet(src)
@@ -734,7 +707,7 @@ def test_stream_cms_state_is_bounded_and_matches_batch_cells(spark, sf_dir):
     assert stream_cells == batch_cells
 
 
-def test_stream_training_pipeline_matches_batch_twin(spark, sf_dir):
+def test_stream_training_pipeline_matches_batch_twin(spark, sf_dir, tmp_path_factory):
     """The composed pipeline (gate -> stateful dedup -> foreachBatch fold)
     must equal its batch twin built from the SAME stage function: identical
     kept (source, fp) set, identical CMS cells, cells bounded at d*w."""
@@ -747,7 +720,7 @@ def test_stream_training_pipeline_matches_batch_twin(spark, sf_dir):
     )
 
     d = stage_doc_slices(spark, sf_dir)
-    out_root = tempfile.mkdtemp(prefix="qms_test_stream_tdp_")
+    out_root = str(tmp_path_factory.mktemp("stream_tdp"))
     run_training_stream(spark, d, out_root)
     kept, cells, commits = read_training_stream_result(spark, out_root)
     assert len(commits) >= 4, "4-slice source must commit >=4 micro-batches"
@@ -768,7 +741,7 @@ def test_stream_training_pipeline_matches_batch_twin(spark, sf_dir):
         assert os.path.isdir(os.path.join(out_root, "cells", f"v{i}"))
 
 
-def test_stream_pipeline_reader_masks_uncommitted_orphans(spark, sf_dir):
+def test_stream_pipeline_reader_masks_uncommitted_orphans(spark, sf_dir, tmp_path_factory):
     """Readers trust the checkpoint commit log, not the directory listing:
     a kept/cells version with no commits/ entry — exactly what a mid-batch
     JVM death leaves behind — must be invisible."""
@@ -780,7 +753,7 @@ def test_stream_pipeline_reader_masks_uncommitted_orphans(spark, sf_dir):
     )
 
     d = stage_doc_slices(spark, sf_dir)
-    out_root = tempfile.mkdtemp(prefix="qms_test_stream_tdp_orphan_")
+    out_root = str(tmp_path_factory.mktemp("stream_tdp_orphan"))
     run_training_stream(spark, d, out_root)
     kept_before, cells_before, commits = read_training_stream_result(spark, out_root)
     n_before = kept_before.count()
@@ -802,7 +775,7 @@ def test_stream_pipeline_reader_masks_uncommitted_orphans(spark, sf_dir):
     assert cells_after.agg(F.sum("c")).collect()[0][0] == cells_sum_before
 
 
-def test_stream_pipeline_reader_survives_commit_log_retention(spark, sf_dir):
+def test_stream_pipeline_reader_survives_commit_log_retention(spark, sf_dir, tmp_path_factory):
     """The checkpoint commits/ dir is a RETAINED WINDOW
     (minBatchesToRetain purges older entries after commit), not a complete
     ledger — the first 10-minute pipeline soak proved a listing-based
@@ -818,7 +791,7 @@ def test_stream_pipeline_reader_survives_commit_log_retention(spark, sf_dir):
     )
 
     d = stage_doc_slices(spark, sf_dir)
-    out_root = tempfile.mkdtemp(prefix="qms_test_stream_tdp_retain_")
+    out_root = str(tmp_path_factory.mktemp("stream_tdp_retain"))
     run_training_stream(spark, d, out_root)
     kept_before, _, commits = read_training_stream_result(spark, out_root)
     n_before = kept_before.count()
@@ -837,7 +810,7 @@ def test_stream_pipeline_reader_survives_commit_log_retention(spark, sf_dir):
     )
 
 
-def test_pipeline_file_scheme_roundtrip(spark, sf_dir):
+def test_pipeline_file_scheme_roundtrip(spark, sf_dir, tmp_path_factory):
     """The exactly-once reader's listings are scheme-dispatched through the
     Hadoop FS API (r12 verdict directive #2 — the last driver-local-
     filesystem dependency removed), so an explicit-scheme out_root must
@@ -854,7 +827,7 @@ def test_pipeline_file_scheme_roundtrip(spark, sf_dir):
     )
 
     d = stage_doc_slices(spark, sf_dir)
-    local_root = tempfile.mkdtemp(prefix="qms_test_stream_tdp_fsuri_")
+    local_root = str(tmp_path_factory.mktemp("stream_tdp_fsuri"))
     out_root = "file://" + local_root
     run_training_stream(spark, d, out_root)
     kept, cells, commits = read_training_stream_result(spark, out_root)
@@ -871,7 +844,7 @@ def test_pipeline_file_scheme_roundtrip(spark, sf_dir):
     assert cells.count() <= 4096
 
 
-def test_stream_pipeline_damage_is_loud_not_silent(spark, sf_dir):
+def test_stream_pipeline_damage_is_loud_not_silent(spark, sf_dir, tmp_path_factory):
     """External damage to committed sink state must FAIL LOUDLY (ADVICE
     r11): a deleted kept/b{i} for a committed id makes the reader raise
     (silently shrinking the corpus is the same corruption class the
@@ -891,7 +864,7 @@ def test_stream_pipeline_damage_is_loud_not_silent(spark, sf_dir):
     # private copy of the staged slices — this test mutates sink state and
     # resumes, and the shared staging dir must stay pristine
     staged = stage_doc_slices(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="qms_test_stream_tdp_damage_")
+    work = str(tmp_path_factory.mktemp("stream_tdp_damage"))
     src = os.path.join(work, "src")
     os.makedirs(src)
     parts = sorted(
@@ -926,7 +899,7 @@ def test_stream_pipeline_damage_is_loud_not_silent(spark, sf_dir):
         run_training_stream(spark, src, out_root)
 
 
-def test_watermarked_dedup_evicts_state_and_keeps_horizon_dedup(spark):
+def test_watermarked_dedup_evicts_state_and_keeps_horizon_dedup(spark, tmp_path_factory):
     """The production unbounded form of the pipeline's dedup stage
     (curate_dedup_stages with ts_col+watermark -> dropDuplicatesWithinWatermark):
     a duplicate arriving INSIDE the watermark horizon is dropped, a
@@ -940,7 +913,7 @@ def test_watermarked_dedup_evicts_state_and_keeps_horizon_dedup(spark):
     from quatrain_mapreduce_spark.streaming.hop import drain_to_parquet
     from quatrain_mapreduce_spark.streaming.pipeline import curate_dedup_stages
 
-    work = tempfile.mkdtemp(prefix="qms_test_wm_dedup_")
+    work = str(tmp_path_factory.mktemp("wm_dedup"))
     src = os.path.join(work, "src")
     os.makedirs(src)
     base = 1_700_000_000  # epoch seconds; batches are 1 hour apart
@@ -1008,7 +981,7 @@ def test_watermarked_dedup_evicts_state_and_keeps_horizon_dedup(spark):
     assert len(kept) == 8 + 12 + 8  # 28 rows total
 
 
-def test_stream_pipeline_funnel_metrics_match_batch_counts(spark, sf_dir):
+def test_stream_pipeline_funnel_metrics_match_batch_counts(spark, sf_dir, tmp_path_factory):
     """The composed pipeline's observe() funnel (the continuous sibling of
     training_pipeline_funnel, and the streaming form of the reference's
     Monitor counters — MR/monitor/MonitorClient.java:33): summed across
@@ -1023,7 +996,7 @@ def test_stream_pipeline_funnel_metrics_match_batch_counts(spark, sf_dir):
     )
 
     d = stage_doc_slices(spark, sf_dir)
-    out_root = tempfile.mkdtemp(prefix="qms_test_stream_tdp_funnel_")
+    out_root = str(tmp_path_factory.mktemp("stream_tdp_funnel"))
     schema = spark.read.parquet(d).schema
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1).parquet(d))
@@ -1092,7 +1065,8 @@ def _logged_partitions(ckpt: str, batch_id: int) -> str:
     return meta["conf"]["spark.sql.shuffle.partitions"]
 
 
-def test_online_aggregator_state_sized_to_input_and_reports_progress(spark, sf_dir):
+def test_online_aggregator_state_sized_to_input_and_reports_progress(spark, sf_dir,
+                                                                   tmp_path_factory):
     """run_incremental starts its stateful query as a bounded start: a
     source far below the 64 MB advisory partition size gets one state
     partition, frozen into the checkpoint, while the session's own value
@@ -1102,9 +1076,9 @@ def test_online_aggregator_state_sized_to_input_and_reports_progress(spark, sf_d
     import os
 
     ev = load_table(spark, sf_dir, "events")
-    src = tempfile.mkdtemp(prefix="qms_test_online_cores_src_")
+    src = str(tmp_path_factory.mktemp("online_cores_src"))
     ev.repartitionByRange(4, "event_id").write.mode("overwrite").parquet(src)
-    work = tempfile.mkdtemp(prefix="qms_test_online_cores_work_")
+    work = str(tmp_path_factory.mktemp("online_cores_work"))
 
     def agg_fn(df):
         return df.groupBy("event_type").agg(F.count("*").alias("cnt"))
@@ -1257,7 +1231,7 @@ def test_results_do_not_depend_on_state_partitions(spark, sf_dir):
     assert one[1]
 
 
-def test_stateful_restart_keeps_logged_partition_count(spark):
+def test_stateful_restart_keeps_logged_partition_count(spark, tmp_path_factory):
     """A checkpoint written under 2 shuffle partitions and restarted through
     _start from a 32-partition session keeps its 2 state partitions (the
     offset log wins over the session), and the resumed aggregate is exact."""
@@ -1265,7 +1239,7 @@ def test_stateful_restart_keeps_logged_partition_count(spark):
 
     from quatrain_mapreduce_spark.streaming.hop import _start
 
-    work = tempfile.mkdtemp(prefix="qms_test_restart_parts_")
+    work = str(tmp_path_factory.mktemp("restart_parts"))
     src, out, ckpt = (os.path.join(work, d) for d in ("src", "out", "ckpt"))
     os.makedirs(src)
 
@@ -1301,7 +1275,7 @@ def test_stateful_restart_keeps_logged_partition_count(spark):
     assert got == {k: 30 for k in range(5)}
 
 
-def test_drain_reclaims_its_checkpoint(spark, sf_dir):
+def test_drain_reclaims_its_checkpoint(spark, sf_dir, tmp_path_factory):
     """Every one-shot drain — both drain_to_parquet modes, run_incremental
     without a work_dir and stream_jdbc_serving — deletes the checkpoint it
     created; the output and snapshot directories behind the returned frames
@@ -1323,7 +1297,7 @@ def test_drain_reclaims_its_checkpoint(spark, sf_dir):
     assert snap.agg(F.sum("cnt")).first()[0] == total
     assert rows.count() == total
 
-    src = tempfile.mkdtemp(prefix="qms_test_reclaim_inc_src_")
+    src = str(tmp_path_factory.mktemp("reclaim_inc_src"))
     load_table(spark, sf_dir, "events").repartition(2).write.mode("overwrite").parquet(src)
     inc = OnlineAggregator(spark, src, spark.read.parquet(src).schema,
                            lambda df: df.agg(F.count("*").alias("n")), total_rows=total)
@@ -1337,15 +1311,14 @@ def test_drain_reclaims_its_checkpoint(spark, sf_dir):
     assert set(glob.glob(ckpts)) == before
 
 
-def _mtime_ordered_slices(spark, n_files: int, rows_per_file: int) -> str:
-    """``n_files`` single-file parquet slices of ``id`` ranges whose mtimes
-    increase with the range, so a one-file-per-trigger replay reads them in
-    id order."""
+def _mtime_ordered_slices(spark, src: str, n_files: int, rows_per_file: int) -> str:
+    """``n_files`` single-file parquet slices of ``id`` ranges in ``src``
+    whose mtimes increase with the range, so a one-file-per-trigger replay
+    reads them in id order."""
     import glob
     import os
     import time
 
-    src = tempfile.mkdtemp(prefix="qms_test_fold_src_")
     spark.range(n_files * rows_per_file).repartitionByRange(n_files, "id") \
         .write.mode("overwrite").parquet(src)
     base = time.time() - 3600
@@ -1374,7 +1347,7 @@ def test_fold_versions_writes_one_exact_version_per_batch(spark, tmp_path):
     from quatrain_mapreduce_spark.staging import stage_dir
     from quatrain_mapreduce_spark.streaming.hop import fold_versions
 
-    src = _mtime_ordered_slices(spark, 5, 10)
+    src = _mtime_ordered_slices(spark, str(tmp_path / "slices"), 5, 10)
     work = stage_dir(str(tmp_path), "foldtest")
     try:
         final = fold_versions(spark, str(tmp_path), src, "foldtest", _running_totals)
@@ -1406,7 +1379,7 @@ def test_fold_versions_fails_loudly_without_a_predecessor(spark, tmp_path, monke
     from quatrain_mapreduce_spark.staging import stage_dir
     from quatrain_mapreduce_spark.streaming import hop
 
-    src = _mtime_ordered_slices(spark, 5, 10)
+    src = _mtime_ordered_slices(spark, str(tmp_path / "slices"), 5, 10)
     work = stage_dir(str(tmp_path), "foldgone")
     lookup = hop._versions
 

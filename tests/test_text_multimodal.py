@@ -133,19 +133,6 @@ def test_decode_image_single_exception_contract_on_malformed_payloads():
             decode_image(payload)
 
 
-def test_resize_images_shapes_and_determinism(spark, sf_dir):
-    from quatrain_mapreduce_spark.operators.multimodal import attach_media, resize_images
-
-    docs = load_table(spark, sf_dir, "documents").limit(20)
-    media = attach_media(docs, "doc_id", "text")
-    out = resize_images(media, width=8, height=4).collect()
-    assert len(out) == 20
-    assert all(len(r["payload"]) == 32 and r["width"] == 8 and r["height"] == 4 for r in out)
-    # deterministic: same input -> same bytes
-    again = {r["doc_id"]: bytes(r["payload"]) for r in resize_images(media, 8, 4).collect()}
-    assert {r["doc_id"]: bytes(r["payload"]) for r in out} == again
-
-
 def test_sample_frames_reassembles_payload(spark, sf_dir):
     """4 frames of a 16-byte payload are contiguous 4-byte slices — their
     concatenation in frame order equals the original payload."""

@@ -1,15 +1,20 @@
-"""Targeted per-query scale probe: warm + N timed reps at one SF dir.
+"""Per-query timer: a cold pass, then N timed reps, of registered queries.
 
-The SCALING.md slope tables are built from runs like this: one process,
-per query one untimed warm pass (staging artifacts, JIT) then N timed
-reps with the cache cleared between reps, reporting min/median — min is
-the least-contended observation (see bench.py's contention contract).
-Prints one JSON line per query plus a trailing summary line, and stamps
-loadavg telemetry so a contaminated probe is self-evident.
+MRBench's measure (N identical runs of one job) over the query registry.
+Per query: one cold pass (builds staged artifacts, warms the JIT), then
+``--reps`` runs, each after ``spark.catalog.clearCache()``. Every pass
+executes the whole plan into the noop sink (``sinks.write_noop``), so no
+driver-side collection is timed. One JSON line per query, then a summary
+line; the exit code is 1 if any query failed.
+
+With no ``--queries`` the whole registry is swept once, except the
+exact-mode walls in ``SKIP_WALLS`` (their scale twins run instead). A
+walled query named in ``--queries`` runs.
 
 Usage:
-  python tools/scale_probe.py --sf-dir /tmp/qms_sf10 \
-      --queries profile_orders,profile_orders_hll --reps 3
+  python tools/scale_probe.py --sf-dir DATA_DIR \\
+      --queries wordcount,dedup_components --reps 2
+  python tools/scale_probe.py --sf-dir /tmp/qms_sf1    # sweep (tools/make_sf1.py)
 """
 
 from __future__ import annotations
@@ -17,149 +22,76 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from quatrain_mapreduce_spark import get_spark  # noqa: E402
+from quatrain_mapreduce_spark.registry import all_queries  # noqa: E402
+from quatrain_mapreduce_spark.sources.sinks import write_noop  # noqa: E402
+
+SKIP_WALLS = {
+    "graph_summary": "exact wedge enumeration, >10 min at sf1 (ground truth; sampled twin runs)",
+    "triangle_count": "exact wedge enumeration, >10 min at sf1 (ground truth; sampled twin runs)",
+    "doc_similarity_pairs": "deliberate quadratic ground truth (LSH path runs)",
+    "user_similarity_knn": "deliberate quadratic ground truth (ANN path runs)",
+}
+
+
+def _timed(spark, q, sf_dir: str) -> float:
+    spark.catalog.clearCache()
+    t0 = time.monotonic()
+    write_noop(q.fn(spark, sf_dir))
+    return round(time.monotonic() - t0, 3)
+
 
 def main() -> int:
-    ap = argparse.ArgumentParser()
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--sf-dir", required=True)
-    ap.add_argument("--queries", required=True,
-                    help="comma-separated registered query names")
-    ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--wait-quiet", type=float, default=0.0,
-                    help="poll up to this many seconds for 1-min loadavg "
-                         "to drop below --quiet-load before EACH query's "
-                         "timed reps (the co-tenant load on this host "
-                         "arrives in waves — bench.py's contention notes); "
-                         "proceeds regardless at the deadline, the stamped "
-                         "loadavg tells the reader which case happened")
-    ap.add_argument("--quiet-load", type=float, default=1.5)
-    ap.add_argument("--ledger", default=None,
-                    help="merge this probe's rows into a SCALING.json "
-                         "ledger (query -> [{sf, min, median, reps, "
-                         "loadavg, waited_quiet_s}]) so slope tables can "
-                         "be diffed mechanically the way "
-                         "PLAN_FINGERPRINTS.json diffs plans; an existing "
-                         "(query, sf_dir) row is replaced only when the "
-                         "new min is LOWER (min-of-observations is the "
-                         "channel's stable signal). NOTE: rows persist "
-                         "across /tmp restagings — after a fixture-scheme "
-                         "change (e.g. make_sf1 customer-name fix) delete "
-                         "the affected query's rows before re-probing")
+    ap.add_argument("--queries", default=None,
+                    help="comma-separated registered query names "
+                         "(default: every query except SKIP_WALLS)")
+    ap.add_argument("--reps", type=int, default=0,
+                    help="timed reps after the cold pass")
     args = ap.parse_args()
 
-    def wait_quiet() -> float:
-        waited = 0.0
-        while waited < args.wait_quiet:
-            try:
-                if os.getloadavg()[0] < args.quiet_load:
-                    break
-            except OSError:
-                break
-            time.sleep(15.0)
-            waited += 15.0
-        return waited
-
-    from quatrain_mapreduce_spark import get_spark
-    from quatrain_mapreduce_spark.registry import all_queries
+    qs = all_queries()
+    if args.queries:
+        names = args.queries.split(",")
+        unknown = [n for n in names if n not in qs]
+        if unknown:
+            raise SystemExit(f"not registered: {unknown}")
+    else:
+        names = [n for n in qs if n not in SKIP_WALLS]
 
     spark = get_spark(app_name="qms-scale-probe")
-    qs = all_queries()
-    names = args.queries.split(",")
-    unknown = [n for n in names if n not in qs]
-    if unknown:
-        raise SystemExit(f"not registered: {unknown}")
-
-    def loadavg():
-        try:
-            return [round(x, 2) for x in os.getloadavg()]
-        except OSError:
-            return None
-
-    results = {}
+    cold: dict[str, float] = {}
+    failed: dict[str, str] = {}
     for name in names:
-        spark.catalog.clearCache()
-        t0 = time.monotonic()
         try:
-            qs[name].fn(spark, args.sf_dir).write.mode("overwrite").format("noop").save()
-        except Exception as exc:
-            print(json.dumps({"query": name, "error": f"{type(exc).__name__}: {exc}"[:400]}),
-                  flush=True)
+            cold_s = _timed(spark, qs[name], args.sf_dir)
+            reps = [_timed(spark, qs[name], args.sf_dir) for _ in range(args.reps)]
+        except Exception as exc:  # noqa: BLE001 — report it and sweep on
+            failed[name] = f"{type(exc).__name__}: {exc}"[:400]
+            print(json.dumps({"query": name, "error": failed[name]}), flush=True)
             continue
-        warm_s = round(time.monotonic() - t0, 3)
-        waited = wait_quiet()  # the warm pass itself inflates 1-min loadavg;
-        # let it (and any co-tenant wave) decay before the timed reps
-        reps = []
-        for _ in range(args.reps):
-            spark.catalog.clearCache()
-            t0 = time.monotonic()
-            qs[name].fn(spark, args.sf_dir).write.mode("overwrite").format("noop").save()
-            reps.append(round(time.monotonic() - t0, 3))
-        results[name] = {"cold": warm_s, "reps": reps, "min": min(reps),
-                         "loadavg": loadavg(), "waited_quiet_s": waited}
-        print(json.dumps({"query": name, **results[name]}), flush=True)
-    print(json.dumps({"sf_dir": args.sf_dir, "reps": args.reps,
-                      "mins": {n: r["min"] for n, r in results.items()},
-                      "loadavg_end": loadavg()}), flush=True)
-    if args.ledger:
-        merge_ledger(args.ledger, args.sf_dir, args.reps, results)
-    return 0
-
-
-def sf_of_dir(sf_dir: str) -> float | None:
-    """Scale factor parsed from the dir name (qms_sf10, testdata/sf0.1)."""
-    import re
-
-    m = re.search(r"sf([0-9]+(?:\.[0-9]+)?)", os.path.basename(
-        os.path.normpath(sf_dir)))
-    return float(m.group(1)) if m else None
-
-
-def merge_ledger(path: str, sf_dir: str, reps: int, results: dict) -> None:
-    """Merge probe rows into the SCALING.json ledger (see --ledger help).
-    Rows are keyed (query, sf_dir); per key the LOWEST min wins — the
-    ledger accumulates each scale's least-contended observation across
-    probe sessions, the same min-of-observations contract as bench.py."""
-    default_note = ("machine-readable slope ledger: per query, the "
-                    "least-contended (lowest-min) probe observation per "
-                    "scale dir; written by tools/scale_probe.py "
-                    "--ledger, schema pinned by tests/test_scaling_"
-                    "ledger.py, cited by SCALING.md")
-    try:
-        with open(path) as fh:
-            doc = json.load(fh)
-    except (OSError, ValueError):
-        doc = {"note": default_note, "rows": {}}
-    # a hand-edited/truncated file can parse as JSON yet lack the shape we
-    # merge into (ADVICE r12: doc["rows"] raised a bare KeyError) — recover
-    # the same way the unreadable path does, loudly, keeping any surviving
-    # note and restoring the canonical one otherwise
-    if not isinstance(doc, dict) or not isinstance(doc.get("rows"), dict):
-        print(f"scale_probe: {path} parsed but has no 'rows' dict; "
-              "starting a fresh ledger", file=sys.stderr)
-        note = doc.get("note") if isinstance(doc, dict) else None
-        doc = {"note": note if isinstance(note, str) and note
-               else default_note,
-               "rows": {}}
-    for name, r in results.items():
-        row = {"sf": sf_of_dir(sf_dir), "sf_dir": sf_dir,
-               "min": r["min"],
-               "median": sorted(r["reps"])[len(r["reps"]) // 2],
-               "reps": reps, "loadavg": r["loadavg"],
-               "waited_quiet_s": r["waited_quiet_s"]}
-        rows = doc["rows"].setdefault(name, [])
-        old = next((x for x in rows if x["sf_dir"] == sf_dir), None)
-        if old is None:
-            rows.append(row)
-        elif row["min"] < old["min"]:
-            rows[rows.index(old)] = row
-        rows.sort(key=lambda x: (x["sf"] is None, x["sf"], x["sf_dir"]))
-    with open(path, "w") as fh:
-        json.dump(doc, fh, indent=1, sort_keys=True)
-        fh.write("\n")
+        cold[name] = cold_s
+        print(json.dumps({
+            "query": name, "cold_s": cold_s, "reps": reps,
+            "min_s": min(reps, default=None),
+            "median_s": round(statistics.median(reps), 3) if reps else None,
+        }), flush=True)
+    print(json.dumps({
+        "sf_dir": args.sf_dir,
+        "n_ran": len(cold),
+        "n_failed": len(failed),
+        "total_cold_s": round(sum(cold.values()), 1),
+        "slowest": dict(sorted(cold.items(), key=lambda kv: -kv[1])[:10]),
+        "failed": failed,
+    }), flush=True)
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":
