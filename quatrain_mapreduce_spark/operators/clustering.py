@@ -17,11 +17,9 @@ Scale shape (the whole point of the pattern at 100 TB):
   scale k ≈ N / target_cluster_size keeps the per-cluster Gram bounded, and
   a degenerate cluster can be capped exactly like the LSH pipelines cap
   ``max_bucket``;
-- the acceptance query runs the exact-fold path (bit-identical to the DuckDB
-  oracle); ``vectorized=True`` is the 100 TB execution path — Arrow-batched
-  matmul assignment + per-cluster Gram verify (measured 20.9 s → 5.8 s on a
-  20k-vector decade rehearsal, SCALING.md) with pytest-asserted result
-  parity against the exact path;
+- per-pair math stays in sequential JVM folds, not a BLAS Gram matrix: a
+  different summation order can flip a pair within an ulp of tau against
+  the DuckDB oracle;
 - the keep/drop rule is deterministic (min-id representative survives), so
   the operator is idempotent and engine-comparable — the registered query is
   FULLY oracle-checked against DuckDB, including kept-set membership.
@@ -37,20 +35,22 @@ across engines for identical expression trees).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from quatrain_mapreduce_spark.operators.similarity import _dot, _norm, cosine
+from quatrain_mapreduce_spark.operators.similarity import _assign, _dot, _norm
 
 
 def assign_to_row_centroids(
     df: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:
-    """Assign every vector to its max-cosine centroid row.
+    """Assign every vector to its max-cosine centroid row (the ANN family's
+    ``similarity._assign``).
 
-    ``centroids`` is (cluster_id, c_vec) — a SMALL frame (k rows), broadcast.
-    The N×k expansion collapses to one row per vector before the shuffle via
-    ``max_by`` (ties broken toward the lowest cluster_id, so assignment is
-    total and deterministic). Returns (id_col, vec, cluster_id).
+    ``centroids`` is (cluster_id, c_vec) — a SMALL lazy frame (k rows), so
+    it is broadcast: the N×k expansion collapses to one row per vector
+    before the shuffle via ``max_by`` (ties broken toward the lowest
+    cluster_id, so assignment is total and deterministic). Returns (id_col,
+    vec, cluster_id).
 
     r13 note (measured, kept): a scan-local literal-centroid argmax fold —
     the §12/§13 shape that paid off for IVF/PQ — was built and quiet-A/B'd
@@ -59,74 +59,10 @@ def assign_to_row_centroids(
     crossJoin at sf0.1 (best fold min 1.25 s vs 0.92 s) because with k=8
     the groupBy collapse is map-side and cheap while the interpreted
     per-element HOF scoring is not. The SortAggregate this plans into is
-    the map-side pre-collapse (cdc_apply class); the 100 TB assignment
-    path is the vectorized twin below, asserted result-identical.
+    the map-side pre-collapse (cdc_apply class).
     """
     c = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("vec"))
-    sim = cosine(F.col("vec"), F.col("c_vec"))
-    return (
-        c.crossJoin(F.broadcast(centroids))
-        .groupBy(id_col)
-        .agg(
-            F.first("vec").alias("vec"),
-            F.max_by(
-                "cluster_id",
-                F.struct(sim.alias("s"), (-F.col("cluster_id")).alias("t")),
-            ).alias("cluster_id"),
-        )
-    )
-
-
-def assign_to_row_centroids_vectorized(
-    df: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
-    """Arrow-vectorized twin of ``assign_to_row_centroids``: one numpy
-    matmul per record batch against the (bounded, index-metadata-sized)
-    centroid matrix instead of N×k interpreted array folds.
-
-    This is the 100 TB assignment path — the exact-fold version exists for
-    engine-comparable oracle checks, but Catalyst evaluates higher-order
-    array lambdas interpreted (PLANS.md round-2 finding 3), which at
-    20k×200 centroids already costs tens of seconds where the matmul takes
-    milliseconds. Same deterministic tie-break (lowest cluster_id wins:
-    np.argmax returns the first maximum and columns are ordered by
-    cluster_id). Tiny argmax flips are possible only when two centroids tie
-    within ~1 ulp of each other — asserted against the exact path in tests.
-    Centroid collection is a bounded k×dim pull, the same contract as
-    ``similarity.ivf_build``'s index metadata.
-    """
-    import numpy as np
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    rows = sorted(centroids.collect(), key=lambda r: r["cluster_id"])
-    cids = np.array([r["cluster_id"] for r in rows], dtype=np.int32)
-    cmat = np.array([r["c_vec"] for r in rows], dtype=np.float64)
-    # same zero-norm guard as the data side: an all-zero centroid would
-    # put NaN into every cosine row and argmax would send ALL vectors to
-    # the degenerate cluster (review finding)
-    cmat_n = cmat / np.maximum(
-        np.linalg.norm(cmat, axis=1, keepdims=True), 1e-300
-    )
-    src = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("vec"))
-
-    out_schema = StructType(
-        [src.schema[id_col], src.schema["vec"], StructField("cluster_id", IntegerType())]
-    )
-
-    def assign_batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            x = np.array(pdf["vec"].tolist(), dtype=np.float64)
-            xn = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-300)
-            best = cids[np.argmax(xn @ cmat_n.T, axis=1)]
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "vec": pdf["vec"], "cluster_id": best}
-            )
-
-    return src.mapInPandas(assign_batches, out_schema)
+    return _assign(c, id_col, "vec", centroids, "cluster_id", "cos")
 
 
 def min_id_centroids(df: DataFrame, id_col: str, vec_col: str, k: int) -> DataFrame:
@@ -153,8 +89,6 @@ def semantic_dedup(
     vec_col: str,
     k: int = 8,
     tau: float = 0.99,
-    centroids: DataFrame | None = None,
-    vectorized: bool = False,
 ) -> DataFrame:
     """SemDeDup: cluster, then drop every vector that has a semantically-near
     (cosine ≥ tau) neighbor with a smaller id in the SAME cluster.
@@ -168,9 +102,7 @@ def semantic_dedup(
     """
     from pyspark.storagelevel import StorageLevel
 
-    cents = centroids if centroids is not None else min_id_centroids(df, id_col, vec_col, k)
-    if vectorized:
-        return _semantic_dedup_vectorized(df, cents, id_col, vec_col, tau)
+    cents = min_id_centroids(df, id_col, vec_col, k)
     # norms precomputed ONCE per row: the pairwise verify below evaluates
     # cos as dot/(nrm_a*nrm_b) — the exact expression shape of the oracle —
     # but without re-aggregating both self-dot-products for every pair
@@ -195,10 +127,9 @@ def semantic_dedup(
         a.join(b, "cluster_id")
         .where(F.col("a_id") < F.col("b_id"))
         .where(
-            # norm clamp mirrors the vectorized twin's 1e-300 guard: a
-            # zero-norm vector must score 0.0 (kept), not DIVIDE_BY_ZERO
-            # under ANSI / NaN >= tau (dropped) without it — the two
-            # paths are asserted result-identical
+            # norm clamp, as in similarity.cosine: a zero-norm vector
+            # must score 0.0 (kept), not DIVIDE_BY_ZERO under ANSI /
+            # NaN >= tau (dropped)
             _dot(F.col("a_vec"), F.col("b_vec"))
             / F.greatest(F.col("a_nrm") * F.col("b_nrm"), F.lit(1e-300))
             >= F.lit(float(tau))
@@ -226,46 +157,3 @@ def semantic_dedup_cluster_stats(dedup: DataFrame, id_col: str) -> DataFrame:
         F.sum(F.col("kept") * F.col(id_col)).alias("kept_id_sum"),
     )
 
-
-def _semantic_dedup_vectorized(
-    df: DataFrame, centroids: DataFrame, id_col: str, vec_col: str, tau: float
-) -> DataFrame:
-    """The 100 TB execution path of ``semantic_dedup``: vectorized
-    assignment (one matmul per Arrow batch) + per-cluster Gram-matrix
-    verify via ``applyInPandas`` grouped on cluster_id — the quadratic term
-    is one BLAS syrk bounded by cluster size instead of |cluster|² Catalyst
-    array folds. Same schema and drop rule as the exact path; agreement on
-    planted data and real fixtures is pytest-asserted (divergence requires
-    two cosines within ~1 ulp of tau or of each other).
-    """
-    import numpy as np
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    assigned = assign_to_row_centroids_vectorized(df, centroids, id_col, vec_col)
-    out_schema = StructType(
-        [
-            assigned.schema[id_col],
-            StructField("cluster_id", IntegerType()),
-            StructField("kept", IntegerType()),
-        ]
-    )
-
-    def verify(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        x = np.array(pdf["vec"].tolist(), dtype=np.float64)
-        xn = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-300)
-        s = xn @ xn.T
-        # kept[i] = no j < i (id order) with cos >= tau
-        tri = np.tril(s, k=-1) >= tau  # [i, j] with j < i
-        kept = (~tri.any(axis=1)).astype(np.int32)
-        return pd.DataFrame(
-            {
-                id_col: pdf[id_col],
-                "cluster_id": pdf["cluster_id"].astype("int32"),
-                "kept": kept,
-            }
-        )
-
-    return assigned.groupBy("cluster_id").applyInPandas(verify, out_schema)

@@ -30,25 +30,23 @@ results are deterministic and engine-comparable.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# Literal-fold size gate (ADVICE r13): the scan-local argmin/argmax folds in
-# ivf_build / pq_train / pq_encode embed every centroid/codeword component
-# as a Catalyst literal — O(n_lists·dim) (IVF) / O(k·dim) (PQ) expression
-# nodes REBUILT PER LLOYD PASS. At production index sizes (n_lists=4096,
-# dim=768, or k=256) that is millions of nodes: plan analysis/serialization
-# dominates runtime or exhausts driver memory. Above this many embedded
-# doubles the operators fall back to the broadcast-join + max_by/min_by
-# shape (the pre-r13 form): its SortAggregate pair is a map-side
-# pre-collapse of the N×C expansion (the documented cdc_apply_orders class)
-# and its plan size is O(1) in the index parameters.
-FOLD_MAX_LITERALS = int(os.environ.get("SPARK_GRAFT_FOLD_MAX_LITERALS", "50000"))
+# Literal-fold size gate (ADVICE r13): the scan-local argmin/argmax fold of
+# ``_assign`` embeds every centroid/codeword component as a Catalyst
+# literal — O(n_lists·dim) (IVF) / O(k·dim) (PQ) expression nodes REBUILT
+# PER LLOYD PASS. At production index sizes (n_lists=4096, dim=768, or
+# k=256) that is millions of nodes: plan analysis/serialization dominates
+# runtime or exhausts driver memory. Above this many embedded doubles the
+# assignment falls back to the broadcast-join + max_by/min_by shape (the
+# pre-r13 form): its SortAggregate pair is a map-side pre-collapse of the
+# N×C expansion (the documented cdc_apply_orders class) and its plan size
+# is O(1) in the index parameters.
+FOLD_MAX_LITERALS = 50000
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -68,8 +66,8 @@ def cosine(a: Column, b: Column) -> Column:
     # otherwise raises DIVIDE_BY_ZERO under Spark 4's default ANSI mode —
     # or, with ANSI off, yields NaN which sorts ABOVE every real score and
     # becomes the rank-1 neighbor of every query. Clamped, a zero vector
-    # scores 0.0 against everything. Same guard as the vectorized paths
-    # (clustering.py) and quantize_embeddings.
+    # scores 0.0 against everything. Same guard as SemDeDup's pairwise
+    # verify (clustering.py) and quantize_embeddings.
     return _dot(a, b) / F.greatest(_norm(a) * _norm(b), F.lit(1e-300))
 
 
@@ -95,6 +93,13 @@ def embedding_dim(parquet_path: str, vec_col: str = "embedding") -> int:
     return len(batch.column(0)[0])
 
 
+def _top(scored: DataFrame, score: str, k: int, tie: str = "neighbor_id") -> DataFrame:
+    """``scored`` plus ``rk``: each q_id's rows ranked by ``score``
+    descending, ties to the lowest ``tie``, kept while rk <= k."""
+    w = Window.partitionBy("q_id").orderBy(F.desc(score), F.asc(tie))
+    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+
+
 def brute_force_topk(
     queries: DataFrame, corpus: DataFrame, id_col: str, vec_col: str, k: int = 10
 ) -> DataFrame:
@@ -110,8 +115,7 @@ def brute_force_topk(
         .where(F.col("neighbor_id") != F.col("q_id"))
         .select("q_id", "neighbor_id", F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cos"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+    return _top(scored, "cos", k)
 
 
 def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -122,31 +126,16 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
 
 def _sign_term(vec_col: str, p: list[float], weight: int) -> str:
     """SQL text for ``weight * (sign(vec · p) >= 0)`` — a constant plane dot
-    product as pure expression text."""
+    product as pure expression text.
+
+    Expression TEXT, not a Column tree: constructing the same tree with
+    F.lit/F.array/python-lambda HOFs costs a py4j round trip per element and
+    per lambda — measured at 4-5 s of pure driver time for 80 planes × 64
+    dims. A single SQL string parses JVM-side in one call (~0.1 s)."""
     arr = "array(" + ",".join(f"{v!r}D" for v in p) + ")"
     dot = (f"aggregate(zip_with(CAST({vec_col} AS ARRAY<DOUBLE>), {arr}, "
            f"(x, y) -> x * y), 0D, (acc, x) -> acc + x)")
     return f"(CASE WHEN {dot} >= 0D THEN {weight} ELSE 0 END)"
-
-
-def lsh_bucket(vec_col: str, planes: list[list[float]]) -> Column:
-    """Pack sign(vec · plane_i) bits into an integer bucket id.
-
-    Built as ONE F.expr string: constructing the same tree with
-    F.lit/F.array/python-lambda HOFs costs a py4j round trip per element and
-    per lambda — measured at 4-5 s of pure driver time for 80 planes × 64
-    dims. A single SQL string parses JVM-side in one call (~0.1 s)."""
-    if len(planes) > 63:
-        raise ValueError(
-            f"lsh_bucket packs one bit per plane into a signed 64-bit "
-            f"bucket id — {len(planes)} planes overflow it; use <= 63 "
-            "(or band the planes across multiple tables)"
-        )
-    terms = [_sign_term(vec_col, p, 1 << i) for i, p in enumerate(planes)]
-    # BIGINT: weights reach 1<<(n-1), and a 32-plane bucket overflows an
-    # INT cast (ANSI abort, or silent wraparound with ANSI off) — the
-    # module header explicitly tells 100 TB users to raise n_planes
-    return F.expr("CAST((" + " + ".join(terms) + ") AS BIGINT)")
 
 
 def sign_bits(vec_col: str, planes: list[list[float]]) -> list[Column]:
@@ -158,15 +147,15 @@ def _all_table_buckets(tables: list[list[list[float]]], dim: int):
     """Vectorized Arrow UDF computing every table's bucket id for one vector
     column: array<bigint> of length n_tables (r13 optimization).
 
-    Bit-for-bit equal to ``lsh_bucket``'s JVM expression, by construction:
-    the per-plane dot is float64 products summed via ``np.cumsum`` along the
-    dim axis — the same sequential left-fold add order as the SQL
-    ``aggregate(zip_with(...), 0D, (acc, x) -> acc + x)`` — and the sign
-    test is ``~(dot < 0)`` because Spark orders NaN above all doubles (so
-    ``NaN >= 0`` is true JVM-side, while numpy's ``>=`` is false). Inputs
-    that the SQL form nulls out (null vector, length mismatch: zip_with
-    pads with null and the fold propagates it, making every CASE arm 0)
-    produce bucket 0 per table here too.
+    Bit-for-bit equal to packing ``sign_bits``' JVM expressions, by
+    construction: the per-plane dot is float64 products summed via
+    ``np.cumsum`` along the dim axis — the same sequential left-fold add
+    order as the SQL ``aggregate(zip_with(...), 0D, (acc, x) -> acc + x)``
+    — and the sign test is ``~(dot < 0)`` because Spark orders NaN above
+    all doubles (so ``NaN >= 0`` is true JVM-side, while numpy's ``>=`` is
+    false). Inputs that the SQL form nulls out (null vector, length
+    mismatch: zip_with pads with null and the fold propagates it, making
+    every CASE arm 0) produce bucket 0 per table here too.
 
     Why not the SQL expression (previous shape): n_tables × n_planes dot
     products against literal plane arrays is a ~100 KB generated expression
@@ -262,8 +251,177 @@ def lsh_topk(
         .groupBy("q_id", "neighbor_id")
         .agg(F.max("cos").alias("cos"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+    return _top(scored, "cos", k)
+
+
+# ---------------------------------------------------------------------------
+# The quantizer kernel. IVF and PQ are the same k-means quantizer (Jégou,
+# Douze, Schmid, TPAMI 2011): IVF applies it to whole vectors, PQ to m
+# subvectors, and SemDeDup's clustering is its assignment step alone. A
+# codebook is driver-side index metadata, ``{(sub_id, code): vector}`` —
+# m·k PQ codewords, or the n_lists IVF centroids in the one subspace 0.
+
+def _l2sq(a: Column, b: Column) -> Column:
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0), lambda acc, x: acc + x,
+    )
+
+
+# metric -> (score, whether the best score is the largest)
+_METRICS = {"cos": (cosine, True), "l2": (_l2sq, False)}
+
+
+def _book_frame(spark, book: dict, code: str, sub: str | None = None) -> DataFrame:
+    """``book`` as a frame, (code, c_vec) led by ``sub`` for a subspace
+    codebook — small enough to broadcast."""
+    names = ([sub] if sub else []) + [code]
+    rows = [((s, c) if sub else (c,)) + (v,) for (s, c), v in sorted(book.items())]
+    return spark.createDataFrame(
+        rows, ", ".join(f"{n} int" for n in names) + ", c_vec array<double>"
+    )
+
+
+def _assign(
+    rows: DataFrame, id_col: str, vec: str, book: dict | DataFrame, code: str,
+    metric: str, sub: str | None = None,
+) -> DataFrame:
+    """``rows`` plus ``code``: the id of each row's nearest ``book`` entry
+    by ``metric`` ("cos": max cosine, "l2": min squared L2), searched in the
+    row's own subspace ``sub`` when given. Ties go to the lowest id, so the
+    assignment is total and deterministic. ``book`` is a driver-side
+    codebook, or a lazy (code, c_vec) frame.
+
+    Two strategies, chosen by how many doubles the codebook would embed:
+
+    - up to FOLD_MAX_LITERALS, a scan-local fold over the codebook embedded
+      as a literal — zero shuffle, zero row expansion. The broadcast shape
+      below plans as a SortAggregate pair over the N×C expansion (N·m×k for
+      PQ; a struct extremum buffer is not hash-aggregatable — r13): two
+      full sorts of C× the corpus per Lloyd pass, which the fold removed
+      for IVF and PQ;
+    - above it, or for a lazy frame (whose rows are not on the driver), a
+      broadcast join + ``max_by``/``min_by(code, struct(score, ±code))``.
+
+    Both use the same score arithmetic and tie-break, so assignments are
+    bit-identical either way (tests/test_similarity.py flips the gate).
+    """
+    score, largest = _METRICS[metric]
+    keys = [id_col] + ([sub] if sub else [])
+    if isinstance(book, DataFrame) or sum(map(len, book.values())) > FOLD_MAX_LITERALS:
+        frame = book if isinstance(book, DataFrame) else _book_frame(
+            rows.sparkSession, book, code, sub)
+        joined = (rows.join(F.broadcast(frame), sub) if sub
+                  else rows.crossJoin(F.broadcast(frame)))
+        pick, tie = (F.max_by, -F.col(code)) if largest else (F.min_by, F.col(code))
+        return joined.groupBy(*keys).agg(
+            *[F.first(c).alias(c) for c in rows.columns if c not in keys],
+            pick(code, F.struct(score(F.col(vec), F.col("c_vec")).alias("s"),
+                                tie.alias("t"))).alias(code),
+        )
+    per_sub = [
+        F.array(*[
+            F.struct(
+                F.lit(c).alias("id"),
+                F.array(*[F.lit(float(x)) for x in book[(s, c)]])
+                 .cast("array<double>").alias("c_vec"),
+            )
+            for c in sorted(c for s2, c in book if s2 == s)
+        ])
+        for s in sorted({s for s, _ in book})
+    ]
+    entries = F.element_at(F.array(*per_sub), F.col(sub) + 1) if sub else per_sub[0]
+    scored = F.transform(
+        entries,
+        lambda e: F.struct(score(F.col(vec), e["c_vec"]).alias("s"), e["id"].alias("id")),
+    )
+    better = (lambda x, a: x > a) if largest else (lambda x, a: x < a)
+    # the null-seed guard makes the first entry the seed, so a row whose
+    # scores are all NaN still resolves to the lowest id, like max_by/min_by
+    best = F.aggregate(
+        scored,
+        F.struct(F.lit(None).cast("double").alias("s"), F.lit(None).cast("int").alias("id")),
+        lambda a, x: F.when(a["id"].isNull() | better(x["s"], a["s"]), x).otherwise(a),
+    )
+    return rows.select(*rows.columns, best["id"].alias(code))
+
+
+def _ordered_mean(vec: Column) -> Column:
+    """Elementwise mean of a group's vectors (an aggregate expression),
+    summed in sorted order. ``F.avg``'s partial sums follow the plan shape
+    and partition count that delivered the rows, so the mean could differ
+    in the last ulp between two plans; a canonical order makes it
+    bit-identical."""
+    vs = F.array_sort(F.collect_list(vec))
+    return F.aggregate(
+        vs,
+        F.transform(vs[0], lambda _: F.lit(0.0)),
+        lambda acc, v: F.zip_with(acc, v, lambda a, b: a + b),
+        lambda acc: F.transform(acc, lambda x: x / F.size(vs)),
+    )
+
+
+def _lloyd(
+    rows: DataFrame, id_col: str, vec: str, book: dict, code: str, metric: str,
+    iters: int, sub: str | None = None,
+) -> dict:
+    """``iters`` Lloyd refinements of ``book`` over ``rows``: assign, then
+    move each entry to the ``_ordered_mean`` of its rows, so the codebook
+    is bit-identical whichever assignment plan or partition count produced
+    it. An entry that drew no rows keeps its previous vector."""
+    for _ in range(iters):
+        means = (
+            _assign(rows, id_col, vec, book, code, metric, sub)
+            .groupBy(*([sub] if sub else []), code)
+            .agg(_ordered_mean(F.col(vec)).alias("m"))
+            .collect()
+        )
+        book = {**book, **{(r[sub] if sub else 0, r[code]): r["m"] for r in means}}
+    return book
+
+
+def _split(df: DataFrame, key: str, vec: str, dim: int, m: int) -> DataFrame:
+    """(key, sub_id, sv): each ``vec`` cut into its ``m`` contiguous
+    subvectors of dim/m doubles — PQ's subspaces."""
+    sub = dim // m
+    assert sub * m == dim, "dim must divide evenly into m subspaces"
+    return df.select(
+        F.col(key),
+        F.explode(
+            F.array(*[
+                F.struct(
+                    F.lit(j).alias("sub_id"),
+                    F.slice(F.col(vec).cast("array<double>"),
+                            j * sub + 1, sub).alias("sv"),
+                )
+                for j in range(m)
+            ])
+        ).alias("s"),
+    ).select(key, "s.sub_id", "s.sv")
+
+
+def _adc_lut(q: DataFrame, codebook: DataFrame, dim: int, m: int) -> DataFrame:
+    """The asymmetric-distance lookup table of queries ``q`` (q_id, q_vec):
+    (q_id, sub_id, code_id, part), part = dot(query subvector, codeword) —
+    Q·m·k rows, broadcast against the corpus codes."""
+    return _split(q, "q_id", "q_vec", dim, m).join(F.broadcast(codebook), "sub_id").select(
+        "q_id", "sub_id", "code_id",
+        _dot(F.col("sv"), F.col("c_vec")).alias("part"),
+    )
+
+
+def _probe(
+    queries: DataFrame, id_col: str, vec_col: str, cent_df: DataFrame, score,
+    nprobe: int,
+) -> DataFrame:
+    """(q_id, q_vec, list_id, qc): each query's ``nprobe`` inverted lists
+    with the highest ``qc = score(q_vec, centroid)``, ties to the lowest
+    list_id."""
+    q = queries.select(F.col(id_col).alias("q_id"),
+                       F.col(vec_col).cast("array<double>").alias("q_vec"))
+    probes = q.crossJoin(F.broadcast(cent_df)).select(
+        "q_id", "q_vec", "list_id", score(F.col("q_vec"), F.col("c_vec")).alias("qc"))
+    return _top(probes, "qc", nprobe, tie="list_id").select("q_id", "q_vec", "list_id", "qc")
 
 
 def ivf_build(
@@ -279,12 +437,9 @@ def ivf_build(
 
     Seeds = the ``n_lists`` corpus vectors with the smallest
     ``xxhash64(seed, id)`` (a deterministic uniform sample — no data order
-    dependence), refined by ``lloyd_iters`` spherical-kmeans iterations:
-    assign every vector to its max-cosine centroid (a scan-local argmax
-    fold over the literal centroid array — zero shuffle, no N×C row
-    expansion), then recompute each list's elementwise mean in a canonical
-    summation order (``_ordered_mean`` — bit-identical across plan shapes
-    and partition counts).
+    dependence), refined by ``lloyd_iters`` spherical-kmeans iterations
+    (``_lloyd``: max-cosine ``_assign``, then each list's ``_ordered_mean``
+    — bit-identical across plan shapes and partition counts).
 
     Returns (centroids, assigned): centroids(list_id, c_vec) — index
     metadata, C×dim doubles, materialized driver-side like any ANN coarse
@@ -297,11 +452,10 @@ def ivf_build(
 
     from quatrain_mapreduce_spark.operators.util import spread
 
-    spark = corpus.sparkSession
-    # spread first: the scan-local assignment fold (below) inherits the
-    # scan's partitioning, and a single-file local scan would serialize
-    # the N×C flops onto one core (no-op at real scale — spread only
-    # repartitions when the scan has fewer partitions than cores)
+    # spread first: the scan-local assignment fold inherits the scan's
+    # partitioning, and a single-file local scan would serialize the N×C
+    # flops onto one core (no-op at real scale — spread only repartitions
+    # when the scan has fewer partitions than cores)
     c = spread(corpus).select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("vec"))
     # the projection feeds seeds + every Lloyd assign/means pass — cache it
     # for the duration of the build (released below; the returned lazy
@@ -312,77 +466,11 @@ def ivf_build(
         c.withColumn("h", F.xxhash64(F.lit(f"ivf:{seed}"), F.col(id_col)))
         .orderBy("h", id_col).limit(n_lists).select("vec").collect()
     )
-    centroids = [r["vec"] for r in seeds]
-
-    def centroid_df(cents: list[list[float]]) -> DataFrame:
-        return spark.createDataFrame(
-            [(i, v) for i, v in enumerate(cents)], "list_id int, c_vec array<double>"
-        )
-
-    def assign(cents: list[list[float]]) -> DataFrame:
-        # Scan-local argmax fold over the (index-metadata-sized) centroid
-        # list embedded as a literal — zero shuffle, zero row expansion.
-        # The former crossJoin + max_by(list_id, struct(sim, -list_id))
-        # planned as a SortAggregate pair over the N×C expansion (a struct
-        # extremum buffer is not hash-aggregatable — r13, same fix as the
-        # SemDeDup assignment): two full sorts of C× the corpus per Lloyd
-        # pass. The fold keeps max_by's exact tie-break (ascending list_id,
-        # replace on strictly-greater cosine => lowest list_id wins ties)
-        # and the same ``cosine`` fold arithmetic, so assignments are
-        # bit-identical. Above FOLD_MAX_LITERALS embedded doubles the
-        # literal plan itself becomes the bottleneck — fall back to the
-        # broadcast-join + max_by shape (same tie-break by construction).
-        if len(cents) * dim > FOLD_MAX_LITERALS:
-            sim = cosine(F.col("vec"), F.col("c_vec"))
-            return (
-                c.crossJoin(F.broadcast(centroid_df(cents)))
-                .groupBy(id_col)
-                .agg(
-                    F.first("vec").alias("vec"),
-                    F.max_by(
-                        "list_id",
-                        F.struct(sim.alias("s"), (-F.col("list_id")).alias("t")),
-                    ).alias("list_id"),
-                )
-                .select(F.col(id_col), "vec", "list_id")
-            )
-        cent_arr = F.array(*[
-            F.struct(
-                F.lit(i).alias("lid"),
-                F.array(*[F.lit(float(x)) for x in v])
-                 .cast("array<double>").alias("c_vec"),
-            )
-            for i, v in enumerate(cents)
-        ])
-        scored = F.transform(
-            cent_arr,
-            lambda ct: F.struct(
-                cosine(F.col("vec"), ct["c_vec"]).alias("s"),
-                ct["lid"].alias("lid"),
-            ),
-        )
-        best = F.aggregate(
-            scored,
-            F.struct(F.lit(float("-inf")).alias("s"),
-                     F.lit(None).cast("int").alias("lid")),
-            lambda a, x: F.when(x["s"] > a["s"], x).otherwise(a),
-        )
-        return c.select(F.col(id_col), "vec", best["lid"].alias("list_id"))
-
-    for _ in range(lloyd_iters):
-        assigned = assign(centroids)
-        means = (
-            assigned.groupBy("list_id")
-            .agg(_ordered_mean(F.col("vec")).alias("m"))
-            .collect()
-        )
-        new_c = list(centroids)  # empty lists keep their previous centroid
-        for r in means:
-            new_c[r["list_id"]] = r["m"]
-        centroids = new_c
-
+    book = {(0, i): r["vec"] for i, r in enumerate(seeds)}
+    book = _lloyd(c, id_col, "vec", book, "list_id", "cos", lloyd_iters)
     c.unpersist()
-    return centroid_df(centroids), assign(centroids)
+    return (_book_frame(corpus.sparkSession, book, "list_id"),
+            _assign(c, id_col, "vec", book, "list_id", "cos"))
 
 
 def ivf_topk(
@@ -434,21 +522,14 @@ def ivf_search(
     cidx = assigned.select(
         F.col(id_col).alias("neighbor_id"), F.col("vec").alias("c_vec"), "list_id"
     )
-    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).cast("array<double>").alias("q_vec"))
-    probes = (
-        q.crossJoin(F.broadcast(cent_df))
-        .select("q_id", "q_vec", "list_id", cosine(F.col("q_vec"), F.col("c_vec")).alias("csim"))
-    )
-    wp = Window.partitionBy("q_id").orderBy(F.desc("csim"), F.asc("list_id"))
-    probes = probes.withColumn("crk", F.row_number().over(wp)).where(F.col("crk") <= nprobe) \
-                   .select("q_id", "q_vec", "list_id")
+    probes = _probe(queries, id_col, vec_col, cent_df, cosine, nprobe) \
+        .select("q_id", "q_vec", "list_id")
     scored = (
         cidx.join(F.broadcast(probes), "list_id")
         .where(F.col("neighbor_id") != F.col("q_id"))
         .select("q_id", "neighbor_id", F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cos"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+    return _top(scored, "cos", k)
 
 
 def embedding_neardup_pairs(
@@ -615,67 +696,6 @@ def activity_profile_knn(events: DataFrame, user_col: str, ts_col: str,
     )
 
 
-def _ordered_mean(vec: Column) -> Column:
-    """Elementwise mean of a group's vectors (an aggregate expression),
-    summed in sorted order. ``F.avg``'s partial sums follow the plan shape
-    and partition count that delivered the rows, so the mean could differ
-    in the last ulp between two plans; a canonical order makes it
-    bit-identical."""
-    vs = F.array_sort(F.collect_list(vec))
-    return F.aggregate(
-        vs,
-        F.transform(vs[0], lambda _: F.lit(0.0)),
-        lambda acc, v: F.zip_with(acc, v, lambda a, b: a + b),
-        lambda acc: F.transform(acc, lambda x: x / F.size(vs)),
-    )
-
-
-def _nearest_code(book: dict[tuple[int, int], list[float]]) -> Column:
-    """Scan-local nearest-codeword id for a (sub_id, sv) row: the literal
-    per-subspace codeword arrays are indexed by ``sub_id`` (``element_at``)
-    and folded for the min-L2 code, ties to the LOWEST code_id — exactly
-    the ordering of ``min_by(code_id, struct(d, code_id))``. The former
-    broadcast-join + min_by(struct) shape planned as a SortAggregate pair
-    over the N·m subvector rows (a struct extremum buffer is not
-    hash-aggregatable — r13, same fix as the IVF/SemDeDup assignments);
-    this fold is zero-shuffle and keeps the identical L2 fold arithmetic.
-    The codebook is bounded index metadata (m·k rows) by construction.
-    """
-    subs_sorted = sorted({s for s, _ in book})
-    books_arr = F.array(*[
-        F.array(*[
-            F.struct(
-                F.lit(cid).alias("cid"),
-                F.array(*[F.lit(float(x)) for x in book[(s, cid)]])
-                 .cast("array<double>").alias("c_vec"),
-            )
-            for cid in sorted(c for s2, c in book if s2 == s)
-        ])
-        for s in subs_sorted
-    ])
-    codes_here = F.element_at(books_arr, F.col("sub_id") + 1)
-
-    def l2(cv: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(F.col("sv"), cv, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-
-    scored = F.transform(
-        codes_here,
-        lambda ct: F.struct(l2(ct["c_vec"]).alias("d"), ct["cid"].alias("cid")),
-    )
-    # the null-acc guard makes the first codeword the seed (so an all-NaN
-    # distance row still resolves to the lowest code_id, like min_by)
-    best = F.aggregate(
-        scored,
-        F.struct(F.lit(float("inf")).alias("d"),
-                 F.lit(None).cast("int").alias("cid")),
-        lambda a, x: F.when(a["cid"].isNull() | (x["d"] < a["d"]), x).otherwise(a),
-    )
-    return best["cid"]
-
-
 def pq_train(
     corpus: DataFrame,
     id_col: str,
@@ -697,36 +717,19 @@ def pq_train(
     PQ shrinks what a scan costs; this module keeps them orthogonal.
 
     Deterministic like ivf_build: per-subspace seeds are the k corpus
-    subvectors with smallest xxhash64(seed, sub, id); Lloyd refinement
-    assigns by min L2 (a scan-local ``_nearest_code`` fold — zero shuffle
-    per iteration) and recomputes means in a canonical summation order
-    (``_ordered_mean``), so the codebook is bit-identical whichever
-    assignment plan or partition count produced it. Codebook is (sub_id,
-    code_id, c_vec) — m*k rows of index metadata, driver-materialized
-    exactly like any ANN header (FAISS).
+    subvectors with smallest xxhash64(seed, sub, id), refined by the same
+    ``_lloyd`` loop under min L2 within each subspace, so the codebook is
+    bit-identical whichever assignment plan or partition count produced
+    it. Codebook is (sub_id, code_id, c_vec) — m*k rows of index metadata,
+    driver-materialized exactly like any ANN header (FAISS).
     """
-    from quatrain_mapreduce_spark.operators.util import spread
-
-    spark = corpus.sparkSession
-    sub = dim // m
-    assert sub * m == dim, "dim must divide evenly into m subspaces"
-    # spread: the scan-local code argmin inherits scan partitioning (see
-    # ivf_build note); no-op at real scale
-    subs = spread(corpus).select(
-        F.col(id_col),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(j).alias("sub_id"),
-                    F.slice(F.col(vec_col).cast("array<double>"),
-                            j * sub + 1, sub).alias("sv"),
-                )
-                for j in range(m)
-            ])
-        ).alias("s"),
-    ).select(id_col, "s.sub_id", "s.sv")
     from pyspark.storagelevel import StorageLevel
 
+    from quatrain_mapreduce_spark.operators.util import spread
+
+    # spread: the scan-local code argmin inherits scan partitioning (see
+    # ivf_build note); no-op at real scale
+    subs = _split(spread(corpus), id_col, vec_col, dim, m)
     subs = subs.persist(StorageLevel.MEMORY_AND_DISK)
 
     w = Window.partitionBy("sub_id").orderBy("h", id_col)
@@ -740,49 +743,9 @@ def pq_train(
         .collect()
     )
     book = {(r["sub_id"], r["code_id"]): r["c_vec"] for r in seeds}
-
-    def book_df():
-        return spark.createDataFrame(
-            [(s, c, v) for (s, c), v in sorted(book.items())],
-            "sub_id int, code_id int, c_vec array<double>",
-        )
-
-    for _ in range(lloyd_iters):
-        # same literal-fold gate as ivf_build.assign: k·dim embedded
-        # doubles per Lloyd pass; above the cap, broadcast-join + min_by
-        # (identical argmin + tie-break, plan size O(1) in k·dim)
-        if k * dim > FOLD_MAX_LITERALS:
-            l2 = F.aggregate(
-                F.zip_with(F.col("sv"), F.col("c_vec"),
-                           lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0), lambda acc, x: acc + x,
-            )
-            assigned = (
-                subs.join(F.broadcast(book_df()), "sub_id")
-                .groupBy(id_col, "sub_id")
-                .agg(
-                    F.first("sv").alias("sv"),
-                    F.min_by(
-                        "code_id",
-                        F.struct(l2.alias("d"), F.col("code_id").alias("t")),
-                    ).alias("code_id"),
-                )
-            )
-        else:
-            assigned = subs.select(
-                F.col(id_col), "sub_id", "sv",
-                _nearest_code(book).alias("code_id"),
-            )
-        means = (
-            assigned.groupBy("sub_id", "code_id")
-            .agg(_ordered_mean(F.col("sv")).alias("mv"))
-            .collect()
-        )
-        for r in means:  # empty codes keep their seed centroid
-            book[(r["sub_id"], r["code_id"])] = r["mv"]
-
+    book = _lloyd(subs, id_col, "sv", book, "code_id", "l2", lloyd_iters, sub="sub_id")
     subs.unpersist()
-    return book_df()
+    return _book_frame(corpus.sparkSession, book, "code_id", sub="sub_id")
 
 
 def pq_encode(
@@ -798,60 +761,21 @@ def pq_encode(
 
     NOTE (ADVICE r13): when ``codebook`` is a DataFrame it is collected
     EAGERLY at call time (one Spark job per call) so the argmin can run as
-    a scan-local fold (``_nearest_code`` — zero shuffle, never more than
-    N·m rows in flight). Callers composing lazy pipelines, or re-invoking
-    per batch, should pass the already-collected dict form
-    ``{(sub_id, code_id): c_vec}`` instead (``pq_train`` holds exactly
-    that) — the dict overload triggers no job. Above FOLD_MAX_LITERALS
-    embedded doubles (k·dim) the fold would itself bloat the plan; the
-    encode then falls back to a broadcast-join + min_by argmin (identical
-    codes and tie-break, O(1) plan size).
+    a scan-local fold (``_assign`` — zero shuffle, never more than N·m rows
+    in flight). Callers composing lazy pipelines, or re-invoking per batch,
+    should pass the already-collected dict form ``{(sub_id, code_id):
+    c_vec}`` instead — the dict overload triggers no job. Above
+    FOLD_MAX_LITERALS embedded doubles (k·dim) ``_assign`` falls back to a
+    broadcast-join + min_by argmin (identical codes and tie-break, O(1) plan
+    size).
     """
     from quatrain_mapreduce_spark.operators.util import spread
 
-    sub = dim // m
-    subs = spread(corpus).select(
-        F.col(id_col),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(j).alias("sub_id"),
-                    F.slice(F.col(vec_col).cast("array<double>"),
-                            j * sub + 1, sub).alias("sv"),
-                )
-                for j in range(m)
-            ])
-        ).alias("s"),
-    ).select(id_col, "s.sub_id", "s.sv")
-    if isinstance(codebook, dict):
-        book = codebook
-    else:
-        book = {(r["sub_id"], r["code_id"]): r["c_vec"] for r in codebook.collect()}
-    n_codes = max((c for _, c in book), default=-1) + 1
-    if n_codes * dim > FOLD_MAX_LITERALS:
-        spark = corpus.sparkSession
-        book_frame = spark.createDataFrame(
-            [(s, cid, v) for (s, cid), v in sorted(book.items())],
-            "sub_id int, code_id int, c_vec array<double>",
-        )
-        l2 = F.aggregate(
-            F.zip_with(F.col("sv"), F.col("c_vec"),
-                       lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-        return (
-            subs.join(F.broadcast(book_frame), "sub_id")
-            .groupBy(id_col, "sub_id")
-            .agg(
-                F.min_by(
-                    "code_id",
-                    F.struct(l2.alias("d"), F.col("code_id").alias("t")),
-                ).alias("code_id")
-            )
-        )
-    return subs.select(
-        F.col(id_col), "sub_id", _nearest_code(book).alias("code_id")
-    )
+    if not isinstance(codebook, dict):
+        codebook = {(r["sub_id"], r["code_id"]): r["c_vec"] for r in codebook.collect()}
+    subs = _split(spread(corpus), id_col, vec_col, dim, m)
+    return _assign(subs, id_col, "sv", codebook, "code_id", "l2", sub="sub_id") \
+        .select(id_col, "sub_id", "code_id")
 
 
 def pq_topk(
@@ -878,26 +802,12 @@ def pq_topk(
     vectors should be pre-normalized when cosine rather than raw dot is
     the target metric.
     """
-    sub = dim // m
     codebook = pq_train(corpus, id_col, vec_col, dim, m=m, k=n_codes,
                         lloyd_iters=lloyd_iters, seed=seed)
     codes = pq_encode(corpus, codebook, id_col, vec_col, dim, m)
-    qsubs = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(j).alias("sub_id"),
-                    F.slice(F.col(vec_col).cast("array<double>"),
-                            j * sub + 1, sub).alias("qv"),
-                )
-                for j in range(m)
-            ])
-        ).alias("s"),
-    ).select("q_id", "s.sub_id", "s.qv")
-    lut = qsubs.join(F.broadcast(codebook), "sub_id").select(
-        "q_id", "sub_id", "code_id",
-        _dot(F.col("qv"), F.col("c_vec")).alias("part"),
+    lut = _adc_lut(
+        queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")),
+        codebook, dim, m,
     )
     scored = (
         codes.withColumnRenamed(id_col, "neighbor_id")
@@ -909,8 +819,7 @@ def pq_topk(
         .where(F.col("n_sub") == m)  # guard: every subspace contributed
         .drop("n_sub")
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("adc_dot"), F.asc("neighbor_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+    return _top(scored, "adc_dot", k)
 
 
 def ivfpq_topk(
@@ -973,56 +882,25 @@ def ivfpq_topk(
     codes.count()
     residuals.unpersist()
 
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).cast("array<double>").alias("q_vec"),
-    )
-    # coarse probe ranking by dot(q, c_list); carries the qc_dot term the
-    # final score needs
-    probes = (
-        q.crossJoin(F.broadcast(cent_df))
-        .select("q_id", "q_vec", "list_id",
-                _dot(F.col("q_vec"), F.col("c_vec")).alias("qc_dot"))
-    )
-    wp = Window.partitionBy("q_id").orderBy(F.desc("qc_dot"), F.asc("list_id"))
-    probes = (
-        probes.withColumn("crk", F.row_number().over(wp))
-        .where(F.col("crk") <= nprobe)
-        .select("q_id", "q_vec", "list_id", "qc_dot")
-    )
-    sub = dim // m
-    qsubs = probes.select("q_id", "q_vec").distinct().select(
-        "q_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(j).alias("sub_id"),
-                    F.slice(F.col("q_vec"), j * sub + 1, sub).alias("qv"),
-                )
-                for j in range(m)
-            ])
-        ).alias("s"),
-    ).select("q_id", "s.sub_id", "s.qv")
-    lut = qsubs.join(F.broadcast(codebook), "sub_id").select(
-        "q_id", "sub_id", "code_id",
-        _dot(F.col("qv"), F.col("c_vec")).alias("part"),
-    )
+    # coarse probe ranking by dot(q, c_list); carries the qc term the final
+    # score needs
+    probes = _probe(queries, id_col, vec_col, cent_df, _dot, nprobe)
+    lut = _adc_lut(probes.select("q_id", "q_vec").distinct(), codebook, dim, m)
     cand = (
         codes.withColumnRenamed(id_col, "neighbor_id")
-        .join(F.broadcast(probes.select("q_id", "list_id", "qc_dot")),
+        .join(F.broadcast(probes.select("q_id", "list_id", "qc")),
               "list_id")
         .where(F.col("neighbor_id") != F.col("q_id"))
         .join(F.broadcast(lut), ["q_id", "sub_id", "code_id"])
         .groupBy("q_id", "neighbor_id")
         .agg(
-            F.round(F.first("qc_dot") + F.sum("part"), 6).alias("adc_dot"),
+            F.round(F.first("qc") + F.sum("part"), 6).alias("adc_dot"),
             F.count("*").alias("n_sub"),
         )
         .where(F.col("n_sub") == m)
         .drop("n_sub")
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("adc_dot"), F.asc("neighbor_id"))
-    return cand.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+    return _top(cand, "adc_dot", k)
 
 
 def pca_fit(df: DataFrame, vec_col: str, k: int) -> dict:
@@ -1091,7 +969,7 @@ def pca_project(
 
     Each projection is ONE SQL expression string (component literals
     inlined, mean-dot precomputed to a scalar) parsed JVM-side in a single
-    call — the lsh_bucket lesson: per-literal F.lit would cost thousands
+    call — the ``_sign_term`` lesson: per-literal F.lit would cost thousands
     of py4j round trips. The projection itself is zip_with/aggregate
     inside codegen; no Python in the scoring path.
     """

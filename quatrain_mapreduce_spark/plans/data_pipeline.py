@@ -571,6 +571,21 @@ def similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("q_id", "neighbor_id", "cos", "rk")
 
 
+def _unit_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, embedding) with every vector L2-normalized to doubles, so a
+    quantizer's dot-product ADC approximates cosine."""
+    nrm = F.sqrt(F.aggregate(
+        F.col("embedding").cast("array<double>"), F.lit(0.0),
+        lambda acc, x: acc + x * x,
+    ))
+    return load_table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        F.transform(
+            F.col("embedding").cast("array<double>"), lambda x: x / nrm
+        ).alias("embedding"),
+    )
+
+
 @register(
     "similarity_pq",
     oracle=None,  # approximate by construction (float codebook is index
@@ -592,18 +607,8 @@ def similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def similarity_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quatrain_mapreduce_spark.operators.similarity import pq_topk
 
-    emb = load_table(spark, sf_dir, "embeddings")
+    unit = _unit_embeddings(spark, sf_dir)
     dim = embedding_dim(f"{sf_dir}/embeddings.parquet")
-    nrm = F.sqrt(F.aggregate(
-        F.col("embedding").cast("array<double>"), F.lit(0.0),
-        lambda acc, x: acc + x * x,
-    ))
-    unit = emb.select(
-        "vec_id",
-        F.transform(
-            F.col("embedding").cast("array<double>"), lambda x: x / nrm
-        ).alias("embedding"),
-    )
     queries = unit.where(F.col("vec_id") < 8)
     out = pq_topk(queries, unit, "vec_id", "embedding", dim,
                   k=10, m=4, n_codes=16, lloyd_iters=1)
@@ -630,18 +635,8 @@ def similarity_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 def similarity_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quatrain_mapreduce_spark.operators.similarity import ivfpq_topk
 
-    emb = load_table(spark, sf_dir, "embeddings")
+    unit = _unit_embeddings(spark, sf_dir)
     dim = embedding_dim(f"{sf_dir}/embeddings.parquet")
-    nrm = F.sqrt(F.aggregate(
-        F.col("embedding").cast("array<double>"), F.lit(0.0),
-        lambda acc, x: acc + x * x,
-    ))
-    unit = emb.select(
-        "vec_id",
-        F.transform(
-            F.col("embedding").cast("array<double>"), lambda x: x / nrm
-        ).alias("embedding"),
-    )
     queries = unit.where(F.col("vec_id") < 8)
     out = ivfpq_topk(queries, unit, "vec_id", "embedding", dim,
                      k=10, n_lists=8, nprobe=3, m=4, n_codes=16,

@@ -11,13 +11,16 @@ the driver's tables.
 
 from __future__ import annotations
 
+import functools
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from quatrain_mapreduce_spark.catalog import load_table, register_views
 from quatrain_mapreduce_spark.registry import register
+from quatrain_mapreduce_spark.staging import scratch
 
 
 @register(
@@ -91,6 +94,23 @@ def sql_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """)
 
 
+@functools.cache
+def _scratch_for(table: str) -> str:
+    return scratch(f"{table}_")
+
+
+def _table_location(table: str) -> str:
+    """An explicit, empty LOCATION for a query-created table: one scratch
+    dir per process, so the table never lands in the cwd's
+    spark-warehouse. Emptied because DROP TABLE leaves an external table's
+    files behind, and a CREATE ... AS SELECT into a non-empty location
+    fails."""
+    d = _scratch_for(table)
+    shutil.rmtree(d, ignore_errors=True)
+    os.makedirs(d)
+    return d
+
+
 @register(
     "sql_ddl_roundtrip",
     oracle="""
@@ -104,16 +124,11 @@ def sql_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sql", "ddl"),
 )
 def sql_ddl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    from urllib.parse import urlparse
-
     register_views(spark, sf_dir, ("nation",))
     spark.sql("DROP TABLE IF EXISTS qms_nation_ddl")
-    # DROP removes the catalog entry but a stale location from a previous
-    # session blocks CREATE (LOCATION_ALREADY_EXISTS) — clear it too
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    shutil.rmtree(os.path.join(warehouse, "qms_nation_ddl"), ignore_errors=True)
-    spark.sql("CREATE TABLE qms_nation_ddl USING parquet AS SELECT * FROM nation")
+    loc = _table_location("qms_nation_ddl")
+    spark.sql(f"CREATE TABLE qms_nation_ddl USING parquet LOCATION '{loc}' "
+              "AS SELECT * FROM nation")
     # exercise the inspection + mutation DDL (results intentionally unused —
     # parity with SHOW TABLES / DESCRIBE / ALTER in DDLTask)
     spark.sql("SHOW TABLES").collect()
@@ -182,18 +197,14 @@ def sql_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sql", "ddl", "partition"),
 )
 def sql_insert_overwrite_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    from urllib.parse import urlparse
-
     register_views(spark, sf_dir, ("orders",))
     t = "qms_orders_iop"
     spark.sql(f"DROP TABLE IF EXISTS {t}")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
     spark.sql(f"""
         CREATE TABLE {t} (
             o_orderkey BIGINT, o_orderpriority STRING, o_totalprice DOUBLE
         ) USING parquet PARTITIONED BY (status STRING)
+        LOCATION '{_table_location(t)}'
     """)
     # seed partition F with WRONG data (one row): the static overwrite below
     # must fully replace it for the oracle to agree

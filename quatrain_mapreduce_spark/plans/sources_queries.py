@@ -173,20 +173,17 @@ def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sources", "jdbc", "example"),
 )
 def dbcount_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quatrain_mapreduce_spark.sources.readers import read_jdbc
+    from quatrain_mapreduce_spark.sources.readers import embedded_derby, read_jdbc
     from quatrain_mapreduce_spark.sources.sinks import write_jdbc
 
-    db = stage_dir(sf_dir, "derby")
-    url = f"jdbc:derby:{db};create=true"
+    url, driver = embedded_derby(spark, stage_dir(sf_dir, "derby"))
     counts = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.col("event_type").alias("url"))
         .agg(F.count("*").alias("pageview"))
     )
-    write_jdbc(counts, url, "pageview_counts", mode="overwrite",
-               driver="org.apache.derby.jdbc.EmbeddedDriver")
-    return read_jdbc(spark, url, "pageview_counts",
-                     driver="org.apache.derby.jdbc.EmbeddedDriver")
+    write_jdbc(counts, url, "pageview_counts", mode="overwrite", driver=driver)
+    return read_jdbc(spark, url, "pageview_counts", driver=driver)
 
 
 @register(

@@ -455,7 +455,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "jdbc", "no-sql-plan"),
 )
 def stream_jdbc_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quatrain_mapreduce_spark.sources.readers import read_jdbc
+    from quatrain_mapreduce_spark.sources.readers import embedded_derby, read_jdbc
     from quatrain_mapreduce_spark.staging import stage_dir
 
     stream = replay(spark, stage_event_slices(spark, sf_dir, 4))
@@ -463,9 +463,7 @@ def stream_jdbc_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("pageview"),
         F.round(F.sum("value"), 2).alias("total_value"),
     )
-    db = stage_dir(sf_dir, "derbystream")
-    url = f"jdbc:derby:{db};create=true"
-    driver = "org.apache.derby.jdbc.EmbeddedDriver"
+    url, driver = embedded_derby(spark, stage_dir(sf_dir, "derbystream"))
 
     def write_snapshot(batch_df: DataFrame, _batch_id: int) -> None:
         (batch_df.write.mode("overwrite").format("jdbc")

@@ -16,6 +16,9 @@ Spark's FileScan; nothing to re-implement.
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -82,6 +85,20 @@ def read_jdbc(spark: SparkSession, url: str, table: str, num_partitions: int = 8
     for k, v in options.items():
         reader = reader.option(k, v)
     return reader.load()
+
+
+def embedded_derby(spark: SparkSession, db_dir: str) -> tuple[str, str]:
+    """(url, driver) for the embedded Derby database at ``db_dir``, created
+    on first connect (Derby ships with Spark). Derby writes its boot log to
+    ``derby.log`` in the JVM's working directory unless the system property
+    ``derby.stream.error.file`` names another file; it is pointed under the
+    temp dir before the first connection, so a run leaves nothing in its
+    cwd."""
+    system = spark._jvm.java.lang.System
+    if system.getProperty("derby.stream.error.file") is None:
+        system.setProperty("derby.stream.error.file",
+                           os.path.join(tempfile.gettempdir(), "qms_derby.log"))
+    return f"jdbc:derby:{db_dir};create=true", "org.apache.derby.jdbc.EmbeddedDriver"
 
 
 def read_xml_records(spark: SparkSession, path: str, row_tag: str) -> DataFrame:

@@ -90,38 +90,3 @@ def test_assignment_broadcasts_centroids(spark, corpus):
     plan = assigned._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
 
-
-def test_vectorized_path_matches_exact(spark, corpus):
-    """The Arrow/BLAS execution path (mapInPandas assignment +
-    per-cluster Gram verify) must reproduce the exact-fold path's
-    (id, cluster, kept) rows on planted data."""
-    exact = {
-        (r["vec_id"], r["cluster_id"], r["kept"])
-        for r in semantic_dedup(corpus, "vec_id", "embedding", k=K, tau=0.95).collect()
-    }
-    fast = {
-        (r["vec_id"], r["cluster_id"], r["kept"])
-        for r in semantic_dedup(
-            corpus, "vec_id", "embedding", k=K, tau=0.95, vectorized=True
-        ).collect()
-    }
-    assert fast == exact
-
-
-def test_vectorized_path_matches_exact_on_fixture_embeddings(spark):
-    """Same agreement on the real embeddings fixture (sf0.001) at the
-    registered query's parameters."""
-    from quatrain_mapreduce_spark.catalog import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    exact = {
-        (r["vec_id"], r["cluster_id"], r["kept"])
-        for r in semantic_dedup(emb, "vec_id", "embedding", k=8, tau=0.4).collect()
-    }
-    fast = {
-        (r["vec_id"], r["cluster_id"], r["kept"])
-        for r in semantic_dedup(
-            emb, "vec_id", "embedding", k=8, tau=0.4, vectorized=True
-        ).collect()
-    }
-    assert fast == exact

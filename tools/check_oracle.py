@@ -13,12 +13,18 @@ oracle emitting bare `sum(x) OVER (...)` hash-mismatches a Spark BIGINT
 (sessionize_events, red in r04+r05) is invisible to a value-only compare;
 the dtype check below fails it locally.
 
+Every PASS/ROWS line carries ``row_hash`` — a stable digest of the Spark
+rows, normalized as for the comparison — so two checkouts (say, a change
+and its parent) can be compared query by query, the rows-only ones
+included: ``diff <(cut -d'[' -f1 a.out) <(cut -d'[' -f1 b.out)``.
+
 Usage: python tools/check_oracle.py [--sf /root/testdata/sf0.01] [--only name[,name]]
 """
 
 from __future__ import annotations
 
 import argparse
+import hashlib
 import math
 import os
 import sys
@@ -53,6 +59,14 @@ def normalize(rows: list[tuple], col_names: list[str]) -> list[tuple]:
             vals.append(v)
         out.append(tuple(vals))
     return sorted(out, key=lambda t: tuple((x is None, str(x)) for x in t))
+
+
+def row_hash(rows: list[tuple], col_names: list[str]) -> str:
+    """A digest of ``rows`` that ignores row and column order: equal for
+    two results that ``normalize`` to the same rows under the same column
+    names."""
+    canon = repr((sorted(col_names), normalize(rows, col_names)))
+    return hashlib.sha1(canon.encode()).hexdigest()[:16]
 
 
 _SPARK_KIND = {
@@ -151,7 +165,8 @@ def main() -> int:
             n_fail += 1
             continue
         if q.oracle is None:
-            print(f"ROWS  {name}: {len(srows)} rows (no oracle) [{time.time()-t0:.1f}s]")
+            print(f"ROWS  {name}: {len(srows)} rows (no oracle) "
+                  f"row_hash={row_hash(srows, scols)} [{time.time()-t0:.1f}s]")
             n_rows_only += 1
             continue
         try:
@@ -183,7 +198,8 @@ def main() -> int:
             print(f"FAIL  {name}: " + "; ".join(problems))
             n_fail += 1
         else:
-            print(f"PASS  {name}: {len(srows)} rows [{time.time()-t0:.1f}s]")
+            print(f"PASS  {name}: {len(srows)} rows row_hash={row_hash(srows, scols)} "
+                  f"[{time.time()-t0:.1f}s]")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
     spark.stop()
