@@ -3,16 +3,26 @@
 The reference has two schema worlds (SURVEY.md §1.3): class-declared K/V jobs
 and metastore-backed Hive tables. Here both collapse into DataFrames with
 StructType schemas; this module is the metastore stand-in — it knows where
-tables live, normalizes physical quirks (nanosecond timestamps), and registers
-temp views so the whole Hive-SQL surface is available via ``spark.sql``.
+tables live, holds each table file's schema (as the Hive metastore holds a
+table's columns, which ``SemanticAnalyzer.getMetaData`` reads instead of
+inferring them), normalizes physical quirks (nanosecond timestamps), and
+registers temp views so the whole Hive-SQL surface is available via
+``spark.sql``.
+
+A table file's schema is inferred once per process and file version: the
+first ``load_table`` runs Spark's parquet inference (a one-task job), later
+ones — in the same session or any later session of the process — hand the
+remembered StructType to the reader. Each call still builds its own relation.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -28,6 +38,37 @@ TABLES: tuple[str, ...] = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# The session confs that change what parquet inference returns for one file.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+# (realpath, inode, size, mtime ns, inference conf values) -> schema
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema inferred once per file
+    version and inference confs. A path that is not a regular file (a
+    directory, a missing path) is inferred on every call, as Spark does."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (os.path.realpath(path), st.st_ino, st.st_size, st.st_mtime_ns,
+           *(spark.conf.get(c) for c in _INFERENCE_CONFS))
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -45,7 +86,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # Harmless on micros data; keeps legacy nanos generations readable
         # on ANY session, including externally-built harness sessions.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_event_ts(df)
     return df

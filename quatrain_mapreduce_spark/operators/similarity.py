@@ -209,7 +209,12 @@ def lsh_topk(
     the query in ANY table. ``multiprobe`` additionally probes every
     hamming-1 bucket per table. Cost: corpus stored L times (explode), joins
     stay bucket-partitioned; recall rises as 1-(1-p^b)^L.
+
+    Bucket ids pack the sign bits into a bigint, so ``n_planes`` is at most
+    63: a 64th weight would overflow int64.
     """
+    if n_planes > 63:
+        raise ValueError(f"lsh_topk: n_planes={n_planes} > 63 does not fit a bigint bucket id")
     tables = [hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)]
     buckets = _all_table_buckets(tables, dim)
     c = corpus.select(

@@ -43,12 +43,15 @@ def lint_session():
     plain (mirrors the driver harness), NOT get_spark()."""
     from pyspark.sql import SparkSession
 
+    from quatrain_mapreduce_spark.staging import warehouse
+
     return (
         SparkSession.builder.master("local[8]")
         .appName("qms-tests")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.warehouse.dir", warehouse())
         .getOrCreate()
     )
 

@@ -13,6 +13,8 @@ on once, in one place:
 - ``nanosAsLong`` because the events table carries TIMESTAMP(NANOS) parquet,
   which Spark's vectorized reader refuses by default; the catalog layer
   converts the raw nanos to a proper TimestampType column.
+- In local mode, a per-process scratch warehouse dir (``staging.warehouse``),
+  so the default database's directory and managed tables stay out of the cwd.
 """
 
 from __future__ import annotations
@@ -20,6 +22,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from quatrain_mapreduce_spark import staging
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
@@ -50,7 +54,7 @@ def get_spark(
         # not set.
         builder = builder.config(
             "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
-        )
+        ).config("spark.sql.warehouse.dir", staging.warehouse())
     builder = (
         builder
         # --- optimizer / runtime ---

@@ -19,7 +19,8 @@ two builders race, the first rename wins and the loser's copy is deleted.
 Per-call outputs that a returned DataFrame reads lazily (stream drains,
 snapshots) are not reusable and cannot be deleted when the call returns;
 ``scratch`` makes them under the temp dir and deletes them when the process
-exits.
+exits; ``warehouse`` is the one such dir each process's sessions use as
+their warehouse.
 """
 
 from __future__ import annotations
@@ -121,6 +122,14 @@ def scratch(prefix: str) -> str:
     d = tempfile.mkdtemp(prefix=prefix)
     _SCRATCH.append(d)
     return d
+
+
+@functools.cache
+def warehouse() -> str:
+    """This process's ``spark.sql.warehouse.dir``: a scratch dir, so the
+    default database's directory and any managed table stay out of the
+    cwd."""
+    return scratch("qms_warehouse_")
 
 
 def single_file_slices(d: str, slices: list[tuple[str, DataFrame]]) -> None:

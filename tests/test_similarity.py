@@ -73,6 +73,12 @@ def test_lsh_recall_vs_brute_force(spark, clustered):
     assert recall >= 0.9, f"LSH recall {recall:.3f} < 0.9"
 
 
+def test_lsh_rejects_more_planes_than_a_bigint_holds(clustered):
+    # 1 << 63 wraps in int64, so a 64th plane would silently hash as fewer
+    with pytest.raises(ValueError, match="n_planes=64"):
+        lsh_topk(clustered, clustered, "vec_id", "embedding", dim=DIM, n_planes=64)
+
+
 def test_embedding_neardup_finds_planted_pairs(spark):
     """Planted near-identical vectors (tiny perturbation) must pair; an
     unrelated vector must not."""

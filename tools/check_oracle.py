@@ -38,6 +38,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from quatrain_mapreduce_spark import get_spark  # noqa: E402
 from quatrain_mapreduce_spark.catalog import TABLES  # noqa: E402
 from quatrain_mapreduce_spark.registry import all_queries  # noqa: E402
+from quatrain_mapreduce_spark.staging import warehouse  # noqa: E402
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -143,6 +144,7 @@ def main() -> int:
             .config("spark.sql.shuffle.partitions", "8")
             .config("spark.sql.session.timeZone", args.tz)
             .config("spark.ui.enabled", "false")
+            .config("spark.sql.warehouse.dir", warehouse())
             .getOrCreate()
         )
     else:
