@@ -76,16 +76,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     ``events.ts`` is parquet TIMESTAMP with isAdjustedToUTC=false, which
     Spark 4 reads as TIMESTAMP_NTZ (older data generations used
-    TIMESTAMP(NANOS), read as raw bigint under ``nanosAsLong``). Normalize
-    every variant to TimestampType (LTZ) carrying the naive value as a UTC
-    instant — the same convention DuckDB's ``epoch_us(ts)`` applies — so
-    ``unix_micros``/window/event-time ops work identically in any session
-    regardless of its time zone.
+    TIMESTAMP(NANOS), read as raw bigint on a session that sets
+    ``nanosAsLong``, as ``get_spark`` does; the caller's session conf is
+    left as it is). Normalize every variant to TimestampType (LTZ) carrying
+    the naive value as a UTC instant — the same convention DuckDB's
+    ``epoch_us(ts)`` applies — so ``unix_micros``/window/event-time ops work
+    identically in any session regardless of its time zone.
     """
-    if name == "events":
-        # Harmless on micros data; keeps legacy nanos generations readable
-        # on ANY session, including externally-built harness sessions.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_event_ts(df)

@@ -12,14 +12,29 @@ extensions, each designed for the 100 TB path:
                    bucket self-join → exact-jaccard verify. The standard
                    near-dup pipeline (Broder '97): candidate generation is
                    linear in corpus size; only colliding pairs are verified.
+                   ``minhash_lsh_candidates`` stops before the verify;
+                   ``incremental_lsh_candidates`` probes a persisted index
+                   with an increment's band rows; ``verify_pairs`` is the
+                   exact verify over any candidate set.
 - simhash_pairs:   64-bit simhash signatures (Charikar '02) via a vectorized
                    Pandas UDF, banded on 16-bit chunks, hamming-verified with
                    JVM-side bit_count(xor).
+- jaccard_prefix_pairs: exact set-similarity self-join by prefix filtering
+                   (PPJoin) — no approximation, candidates from rare shingles.
+- substring_window_report / dup_span_extract: cross-document duplicated
+                   spans from rolling w-token window fingerprints (Lee et al.
+                   ACL'22).
 
-Skew/scale guards: LSH buckets larger than ``max_bucket`` are dropped from
-candidate generation (a degenerate bucket means the band is non-discriminative
-for those docs; they are still covered by the other bands), keeping the
-self-join near-linear under skew.
+The near-duplicate pair finders (the shingle/LSH/SimHash family here and
+``similarity.embedding_neardup_pairs``) are compositions of one kernel: a
+document's shingle set is ``shingle_hashes`` (xxhash64 longs; the MinHash
+base hash is that long masked to 31 bits), ``_shingle_sets`` builds the
+(id, sh) frame, bucket rows are (id, band, key, *payload), ``_capped`` drops
+every (band, key) bucket holding more than ``max_bucket`` rows (a degenerate
+bucket means the band is non-discriminative for those docs; they are still
+covered by the other bands — the skew guard that keeps the self-join near-
+linear), ``_bucket_pairs`` self-joins within buckets, and ``_sides`` joins a
+per-id payload onto both ends of each candidate pair for the verify.
 """
 
 from __future__ import annotations
@@ -78,6 +93,70 @@ def word_shingles(text_col: str, n: int) -> F.Column:
     return F.array_distinct(F.when(F.size(toks) >= n, grams).otherwise(F.array().cast("array<string>")))
 
 
+def shingle_hashes(text_col: str, n: int) -> F.Column:
+    """The word n-gram shingle set as xxhash64 longs — the family's one
+    shingle representation.
+
+    Jaccard only needs set identity, and array_intersect on 8-byte longs is
+    ~2.4x faster than on shingle strings (measured on the verify step,
+    3.0 s -> 1.25 s at sf0.1) while also shrinking persisted frames. A
+    64-bit collision inside one candidate pair's union (probability ~pairs
+    * |union|^2 / 2^64, ~1e-15 here) is the only way this can differ from
+    string-set Jaccard — and the DuckDB oracle computes the string form, so
+    it would be caught, not masked.
+    """
+    return F.transform(word_shingles(text_col, n), lambda g: F.xxhash64(g))
+
+
+def _shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int, *cols) -> DataFrame:
+    """(id, sh, *cols) for every document with at least ``n`` tokens.
+
+    Filters on the CHEAP equivalent predicate (token count >= n) instead of
+    size(sh) > 0: Catalyst pushes filters through Repartition, and a pushed
+    filter over the full shingle expression would evaluate it on the
+    pre-spread (often single) input partition; the shingle projection stays
+    above the spread.
+    """
+    return (
+        spread(df)
+        .where(F.size(tokenize(text_col)) >= n)
+        .select(F.col(id_col), shingle_hashes(text_col, n).alias("sh"), *cols)
+    )
+
+
+def _capped(rows: DataFrame, max_bucket: int) -> DataFrame:
+    """``rows`` minus every (band, key) bucket of more than ``max_bucket``
+    rows — the skew guard of every banded pair finder."""
+    n = F.count("*").over(Window.partitionBy("band", "key"))
+    return rows.withColumn("_bucket_n", n).where(F.col("_bucket_n") <= max_bucket).drop("_bucket_n")
+
+
+def _bucket_pairs(rows: DataFrame, id_col: str) -> DataFrame:
+    """Self-join of (id, band, key, *payload) bucket rows within each
+    (band, key), a.id < b.id: (a_id, b_id, a_<c>, b_<c> per payload column
+    c). A pair sharing several buckets comes out once per shared bucket —
+    the caller deduplicates."""
+    payload = [c for c in rows.columns if c not in (id_col, "band", "key")]
+    a, b = rows.alias("a"), rows.alias("b")
+    return (
+        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.key") == F.col("b.key"))
+               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+        .select(F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id"),
+                *[F.col(f"{s}.{c}").alias(f"{s}_{c}") for c in payload for s in "ab"])
+    )
+
+
+def _sides(cand: DataFrame, frame: DataFrame, id_col: str) -> DataFrame:
+    """``cand`` (a_id, b_id, ...) with the per-id ``frame`` joined onto both
+    ends: every other column c of ``frame`` comes out as a_<c> and b_<c>."""
+
+    def side(s: str) -> DataFrame:
+        return frame.withColumnsRenamed({c: f"{s}_id" if c == id_col else f"{s}_{c}"
+                                         for c in frame.columns})
+
+    return cand.join(side("a"), "a_id").join(side("b"), "b_id")
+
+
 def _jaccard(a: F.Column, b: F.Column) -> F.Column:
     """Exact Jaccard over two distinct-element arrays: |∩| / (|A|+|B|-|∩|)."""
     inter = F.size(F.array_intersect(a, b))
@@ -91,7 +170,6 @@ def ngram_jaccard_pairs(
     block_col: str,
     n: int = 2,
     threshold: float = 0.8,
-    length_band: bool = True,
 ) -> DataFrame:
     """Blocked pairwise n-gram Jaccard near-dup pairs.
 
@@ -111,62 +189,32 @@ def ngram_jaccard_pairs(
     (touches candidates only) — the composition ``dedup_components_lsh``
     demonstrates, which stays flat across a 10× data step while this
     blocked form grows ~14×.
-
-    ``length_band=False`` degrades to plain block_col blocking (the verify
-    stage inside LSH buckets, where the bucket already bounds block size).
     """
-    # filter on the CHEAP equivalent predicate (token count >= n) instead of
-    # size(sh) > 0: Catalyst pushes filters through Repartition, and a pushed
-    # filter over the full shingle expression would evaluate it on the
-    # pre-spread (often single) input partition.
-    #
-    # The shingle SET is carried as xxhash64 longs, not strings: Jaccard
-    # only needs set identity, and array_intersect on 8-byte longs is
-    # ~2.4x faster than on shingle strings (measured on the verify step,
-    # 3.0 s -> 1.25 s at sf0.1) while also shrinking the persisted frame.
-    # A 64-bit collision inside one candidate pair's union (probability
-    # ~pairs * |union|^2 / 2^64, ~1e-15 here) is the only way this can
-    # differ from string-set Jaccard — and the DuckDB oracle computes the
-    # string form, so it would be caught, not masked.
-    sh = (
-        spread(df)
-        .where(F.size(tokenize(text_col)) >= n)
-        .select(
-            F.col(id_col),
-            F.col(block_col).alias("block"),
-            F.transform(word_shingles(text_col, n), lambda g: F.xxhash64(g)).alias("sh"),
-        )
-    )
     # both self-join sides consume the shingle frame — persist the expensive
     # narrow stage once instead of shingling the corpus twice (measured at
     # sf0.1: 5.1 s -> 2.6 s; same trade as minhash_lsh_pairs' cache).
     # MEMORY_AND_DISK so a 100 TB shingle set spills instead of recomputing.
-    from pyspark.storagelevel import StorageLevel
-
-    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-    if length_band:
-        if threshold >= 1.0:
-            # log(1/t) is 0 at t=1 and the band expression divides by it
-            # (review finding). J = 1 forces EQUAL set sizes, so the exact
-            # size is itself the complete band — probe only the own band.
-            sh = sh.withColumn("band", F.size("sh").cast("long"))
-            a = sh.withColumn("probe", F.col("band")).alias("a")
-        else:
-            band = F.floor(F.log(F.size("sh").cast("double")) / F.lit(math.log(1.0 / threshold)))
-            sh = sh.withColumn("band", band)
-            # probe side A into its own and both adjacent bands; at most one
-            # probe equals B's band, so each (a,b) pair appears exactly once
-            # — no distinct
-            a = sh.withColumn("probe", F.explode(F.array(F.col("band") - 1, F.col("band"), F.col("band") + 1))).alias("a")
-        b = sh.alias("b")
-        cond = (
-            (F.col("a.block") == F.col("b.block"))
-            & (F.col("a.probe") == F.col("b.band"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        )
+    sh = _shingle_sets(df, id_col, text_col, n, F.col(block_col).alias("block")) \
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    if threshold >= 1.0:
+        # log(1/t) is 0 at t=1 and the band expression divides by it
+        # (review finding). J = 1 forces EQUAL set sizes, so the exact
+        # size is itself the complete band — probe only the own band.
+        sh = sh.withColumn("band", F.size("sh").cast("long"))
+        a = sh.withColumn("probe", F.col("band")).alias("a")
     else:
-        a, b = sh.alias("a"), sh.alias("b")
-        cond = (F.col("a.block") == F.col("b.block")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        band = F.floor(F.log(F.size("sh").cast("double")) / F.lit(math.log(1.0 / threshold)))
+        sh = sh.withColumn("band", band)
+        # probe side A into its own and both adjacent bands; at most one
+        # probe equals B's band, so each (a,b) pair appears exactly once
+        # — no distinct
+        a = sh.withColumn("probe", F.explode(F.array(F.col("band") - 1, F.col("band"), F.col("band") + 1))).alias("a")
+    b = sh.alias("b")
+    cond = (
+        (F.col("a.block") == F.col("b.block"))
+        & (F.col("a.probe") == F.col("b.band"))
+        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    )
     return (
         a.join(b, cond)
         .select(
@@ -178,16 +226,6 @@ def ngram_jaccard_pairs(
         )
         .where(F.col("jac") >= threshold)
     )
-
-
-def base_hashes(shingles: F.Column) -> F.Column:
-    """xxhash64 per shingle, masked to 31 bits (the minhash base hash).
-
-    Materialize this ONCE (withColumn) before building signatures: Spark
-    higher-order functions run interpreted per element, so inlining the hash
-    transform into every permutation would recompute it num_perm times.
-    """
-    return F.transform(shingles, lambda s: F.xxhash64(s).bitwiseAND(F.lit(MERSENNE_31)))
 
 
 def _perm_params(num_perm: int, seed: int) -> list[tuple[int, int]]:
@@ -214,18 +252,20 @@ def lsh_band_rows(
     id_col: str,
     num_perm: int = 32,
     bands: int = 8,
-    max_bucket: int | None = 1000,
+    max_bucket: int = 1000,
 ) -> DataFrame:
-    """(id, band, bhash) LSH bucket rows from a (id, sh) shingle frame —
-    the INDEX side of banded MinHash. Shared by the one-shot pair finder
-    and the incremental probe path (where this frame is persisted as the
-    corpus index). ``max_bucket`` drops degenerate buckets (skew guard);
-    pass None to keep all buckets (e.g. when capping is applied later over
-    a combined index+increment view)."""
+    """Capped (id, band, key) LSH bucket rows from an (id, sh) hashed-
+    shingle frame (``_shingle_sets``) — the INDEX side of banded MinHash.
+    Shared by the one-shot pair finder and the incremental probe path
+    (where this frame is persisted as the corpus index)."""
     rows_per_band = num_perm // bands
-    signed = docs_sh.withColumn("bh", base_hashes(F.col("sh"))).withColumn(
-        "sig", signature_from_hashes(F.col("bh"), num_perm)
-    )
+    # the base hash is the shingle's xxhash64 masked to 31 bits, built ONCE
+    # (withColumn) before the signature: Spark higher-order functions run
+    # interpreted per element, so inlining it into every permutation would
+    # recompute it num_perm times
+    signed = docs_sh.withColumn(
+        "bh", F.transform("sh", lambda h: h.bitwiseAND(F.lit(MERSENNE_31)))
+    ).withColumn("sig", signature_from_hashes(F.col("bh"), num_perm))
     band_rows = signed.select(
         F.col(id_col),
         F.explode(
@@ -235,18 +275,13 @@ def lsh_band_rows(
                     F.xxhash64(F.concat_ws(",", *[
                         F.element_at("sig", b * rows_per_band + r + 1).cast("string")
                         for r in range(rows_per_band)
-                    ])).alias("bhash"),
+                    ])).alias("key"),
                 )
                 for b in range(bands)
             ])
         ).alias("bk"),
-    ).select(id_col, "bk.band", "bk.bhash")
-    if max_bucket is not None:
-        w = Window.partitionBy("band", "bhash")
-        band_rows = band_rows.withColumn("bucket_n", F.count("*").over(w)).where(
-            F.col("bucket_n") <= max_bucket
-        ).drop("bucket_n")
-    return band_rows
+    ).select(id_col, "bk.band", "bk.key")
+    return _capped(band_rows, max_bucket)
 
 
 def minhash_lsh_candidates(
@@ -281,19 +316,8 @@ def minhash_lsh_candidates(
     at sf0.1) — the same materialization-barrier trade r13 measured when
     it rejected the band-rows persist inside minhash_lsh_pairs.
     """
-    docs = (
-        spread(df)
-        .where(F.size(tokenize(text_col)) >= shingle_n)
-        .select(F.col(id_col), word_shingles(text_col, shingle_n).alias("sh"))
-    )
-    band_rows = lsh_band_rows(docs, id_col, num_perm, bands, max_bucket)
-    a, b = band_rows.alias("a"), band_rows.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bhash") == F.col("b.bhash"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id"))
-        .distinct()
-    )
+    docs = _shingle_sets(df, id_col, text_col, shingle_n)
+    return _bucket_pairs(lsh_band_rows(docs, id_col, num_perm, bands, max_bucket), id_col).distinct()
 
 
 def minhash_lsh_pairs(
@@ -313,38 +337,21 @@ def minhash_lsh_pairs(
     verify exact Jaccard on shingle sets ≥ threshold. Candidate generation is
     one explode + one shuffle; verification touches only colliding pairs.
     """
-    # cheap pushdown-safe filter; the expensive shingle projection stays
-    # above the spread repartition (see ngram_jaccard_pairs note)
-    docs = (
-        spread(df)
-        .where(F.size(tokenize(text_col)) >= shingle_n)
-        .select(F.col(id_col), word_shingles(text_col, shingle_n).alias("sh"))
-    )
     # shingling is the expensive narrow stage and is consumed three times
     # (signature branch + both verify-join sides): cache it. MEMORY_AND_DISK
     # so a 100 TB corpus's shingle sets spill instead of recomputing.
-    from pyspark.storagelevel import StorageLevel
-
-    docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
-    band_rows = lsh_band_rows(docs, id_col, num_perm, bands, max_bucket)
-    a, b = band_rows.alias("a"), band_rows.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bhash") == F.col("b.bhash"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id"))
-        .distinct()
-    )
-    sets = docs.select(F.col(id_col), F.col("sh"))
+    docs = _shingle_sets(df, id_col, text_col, shingle_n).persist(StorageLevel.MEMORY_AND_DISK)
+    cand = _bucket_pairs(lsh_band_rows(docs, id_col, num_perm, bands, max_bucket), id_col).distinct()
+    jac = _jaccard(F.col("a_sh"), F.col("b_sh"))
     return (
-        cand.join(sets.withColumnsRenamed({id_col: "a_id", "sh": "a_sh"}), "a_id")
-        .join(sets.withColumnsRenamed({id_col: "b_id", "sh": "b_sh"}), "b_id")
+        _sides(cand, docs, id_col)
         # filter on the RAW division, round only the reported column:
         # rounding first admitted pairs up to 5e-7 below the threshold,
         # disagreeing with ngram_jaccard_pairs / verify_pairs at the
         # boundary (those compare unrounded — dedup.py 'no rounding
         # needed' note)
-        .where(_jaccard(F.col("a_sh"), F.col("b_sh")) >= threshold)
-        .select("a_id", "b_id", F.round(_jaccard(F.col("a_sh"), F.col("b_sh")), 6).alias("jac"))
+        .where(jac >= threshold)
+        .select("a_id", "b_id", F.round(jac, 6).alias("jac"))
     )
 
 
@@ -358,14 +365,13 @@ def incremental_lsh_candidates(
     The property that makes continuous corpus dedup affordable: per-
     increment work scales with |increment| + matched bucket rows, never
     with |corpus| — the index is built once and only READ here (at scale,
-    store it bucketed by (band, bhash) so probes co-locate without a
+    store it bucketed by (band, key) so probes co-locate without a
     shuffle of the index side). Pair orientation (a_id < b_id) matches the
     one-shot finder.
     """
-    a = arriving_bands.alias("a")
-    e = existing_bands.alias("e")
+    a, e = arriving_bands.alias("a"), existing_bands.alias("e")
     cross = (
-        a.join(e, (F.col("a.band") == F.col("e.band")) & (F.col("a.bhash") == F.col("e.bhash"))
+        a.join(e, (F.col("a.band") == F.col("e.band")) & (F.col("a.key") == F.col("e.key"))
                # a re-ingested doc exists on BOTH sides of the index probe;
                # without this guard it pairs with itself, verifies at
                # J=1.0 and enters the pair graph as a self-edge (review
@@ -376,13 +382,7 @@ def incremental_lsh_candidates(
             F.greatest(F.col(f"a.{id_col}"), F.col(f"e.{id_col}")).alias("b_id"),
         )
     )
-    b = arriving_bands.alias("b")
-    within = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bhash") == F.col("b.bhash"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id"))
-    )
-    return cross.unionByName(within).distinct()
+    return cross.unionByName(_bucket_pairs(arriving_bands, id_col)).distinct()
 
 
 def verify_pairs(
@@ -398,34 +398,21 @@ def verify_pairs(
 
     The scale path around ``ngram_jaccard_pairs``'s blocked all-pairs join:
     candidate generation (LSH) is linear in corpus size, and verification
-    here touches only the candidate pairs — never a block². Shingle sets
-    are carried as xxhash64 longs (same trade as ngram_jaccard_pairs).
-    ``cand`` must have (a_id, b_id) columns.
+    here touches only the candidate pairs — never a block². ``cand`` must
+    have (a_id, b_id) columns.
 
     ``block_col``: when the pair definition is blocked (ngram_jaccard_pairs
     only ever pairs same-block docs, e.g. same lang), enforce block equality
     here too — LSH candidates ignore blocks, so without this the verified
     set is a strict SUPERSET whenever near-dups cross block boundaries.
     """
-    from pyspark.storagelevel import StorageLevel
-
-    cols = [F.col(id_col), F.transform(word_shingles(text_col, n), lambda g: F.xxhash64(g)).alias("sh")]
-    if block_col:
-        cols.append(F.col(block_col).alias("blk"))
+    blk = [F.col(block_col).alias("blk")] if block_col else []
     # persist: the shingle frame feeds BOTH join sides below, and without
     # it the corpus is tokenized/shingled/hashed twice per action — the
     # same ~2x the sibling operators measured when they added this
     # (ngram_jaccard_pairs / minhash_lsh_pairs MEMORY_AND_DISK notes)
-    sets = (spread(df).where(F.size(tokenize(text_col)) >= n).select(*cols)
-            .persist(StorageLevel.MEMORY_AND_DISK))
-    a_renames = {id_col: "a_id", "sh": "a_sh"}
-    b_renames = {id_col: "b_id", "sh": "b_sh"}
-    if block_col:
-        a_renames["blk"], b_renames["blk"] = "a_blk", "b_blk"
-    out = (
-        cand.join(sets.withColumnsRenamed(a_renames), "a_id")
-        .join(sets.withColumnsRenamed(b_renames), "b_id")
-    )
+    sets = _shingle_sets(df, id_col, text_col, n, *blk).persist(StorageLevel.MEMORY_AND_DISK)
+    out = _sides(cand, sets, id_col)
     if block_col:
         out = out.where(F.col("a_blk") == F.col("b_blk"))
     return (
@@ -522,21 +509,15 @@ def simhash_pairs(
         F.col(id_col), F.col("simhash"),
         F.explode(F.array(*[
             F.struct(
-                F.lit(c).alias("chunk"),
-                F.shiftrightunsigned(F.col("simhash"), c * 16).bitwiseAND(F.lit(0xFFFF)).alias("ckey"),
+                F.lit(c).alias("band"),
+                F.shiftrightunsigned(F.col("simhash"), c * 16).bitwiseAND(F.lit(0xFFFF)).alias("key"),
             ) for c in range(4)
         ])).alias("ck"),
-    ).select(id_col, "simhash", "ck.chunk", "ck.ckey")
-    w = Window.partitionBy("chunk", "ckey")
-    chunks = chunks.withColumn("n", F.count("*").over(w)).where(F.col("n") <= max_bucket).drop("n")
-    a, b = chunks.alias("a"), chunks.alias("b")
+    ).select(id_col, "simhash", "ck.band", "ck.key")
     return (
-        a.join(b, (F.col("a.chunk") == F.col("b.chunk")) & (F.col("a.ckey") == F.col("b.ckey"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(
-            F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
-        )
+        _bucket_pairs(_capped(chunks, max_bucket), id_col)
+        .select("a_id", "b_id",
+                F.bit_count(F.col("a_simhash").bitwiseXOR(F.col("b_simhash"))).alias("hamming"))
         .distinct()
         .where(F.col("hamming") <= max_hamming)
     )
@@ -572,13 +553,9 @@ def jaccard_prefix_pairs(
     xxhash64 longs (the ngram_jaccard convention — integer joins beat
     string joins ~2.4x).
     """
-    from pyspark.sql import Window
-
     sh = docs.select(
         F.col(id_col).alias("id"),
-        F.explode(
-            F.transform(word_shingles(text_col, n), lambda g: F.xxhash64(g))
-        ).alias("tok"),
+        F.explode(shingle_hashes(text_col, n)).alias("tok"),
     ).distinct().persist()
 
     sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))

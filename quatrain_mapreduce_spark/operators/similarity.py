@@ -16,8 +16,9 @@ Engine extension (no reference analogue). Two tiers:
 
 - embedding_neardup_pairs: banded sign-signature blocking (pigeonhole: two
   vectors whose sign patterns differ in < n_bands positions share at least
-  one identical band), cosine-verified, with a ``max_bucket`` skew cap like
-  the minhash/simhash pipelines.
+  one identical band), cosine-verified. Its bucket cap, bucket self-join and
+  two-sided vector join are the near-dup kernel of ``dedup.py`` (``_capped``,
+  ``_bucket_pairs``, ``_sides``), shared with the MinHash/SimHash pipelines.
 
 Vector dimensionality is an explicit parameter everywhere (it is pipeline
 configuration, like the embedding model itself); ``embedding_dim`` reads it
@@ -35,6 +36,8 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from quatrain_mapreduce_spark.operators.dedup import _bucket_pairs, _capped, _sides
 
 # Literal-fold size gate (ADVICE r13): the scan-local argmin/argmax fold of
 # ``_assign`` embeds every centroid/codeword component as a Catalyst
@@ -564,7 +567,7 @@ def embedding_neardup_pairs(
     bands = [
         F.struct(
             F.lit(b).alias("band"),
-            sum(bits[b * per_band + i] * (1 << i) for i in range(per_band)).alias("bkey"),
+            sum(bits[b * per_band + i] * (1 << i) for i in range(per_band)).alias("key"),
         )
         for b in range(n_bands)
     ]
@@ -573,21 +576,12 @@ def embedding_neardup_pairs(
     # table; vectors rejoin by id only for the candidate-bounded cosine
     # verify (the same shape as minhash_lsh_pairs' band rows)
     v = df.select(F.col(id_col), F.explode(F.array(*bands)).alias("bd")) \
-          .select(id_col, "bd.band", "bd.bkey")
-    w = Window.partitionBy("band", "bkey")
-    v = v.withColumn("n", F.count("*").over(w)).where(F.col("n") <= max_bucket).drop("n")
-    a, b = v.alias("a"), v.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bkey") == F.col("b.bkey"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id"))
-        .distinct()
-    )
+          .select(id_col, "bd.band", "bd.key")
+    cand = _bucket_pairs(_capped(v, max_bucket), id_col).distinct()
     vecs = df.select(F.col(id_col), F.col(vec_col).alias("vec"))
     sim = cosine(F.col("a_vec"), F.col("b_vec"))
     return (
-        cand.join(vecs.withColumnsRenamed({id_col: "a_id", "vec": "a_vec"}), "a_id")
-        .join(vecs.withColumnsRenamed({id_col: "b_id", "vec": "b_vec"}), "b_id")
+        _sides(cand, vecs, id_col)
         # threshold on the RAW cosine, round only the reported column —
         # rounding first admitted pairs up to 5e-7 below the threshold
         # and diverged from the oracle's raw-valued WHERE

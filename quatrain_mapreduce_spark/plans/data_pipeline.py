@@ -45,10 +45,10 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_dedup(load_table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
-@register(
-    "dedup_ngram_jaccard",
-    oracle="""
-        WITH t AS (
+# The word-bigram Jaccard ground truth every near-dup oracle below is built
+# on: each same-lang pair in adjacent log-length bands (the blocking of
+# ngram_jaccard_pairs, complete for J >= 0.8) with its exact Jaccard.
+_SCORED_CTES = """t AS (
             SELECT doc_id, lang, list_filter(string_split(text, ' '), x -> x <> '') AS toks
             FROM documents
         ), sh AS (
@@ -62,16 +62,24 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         ), banded AS (
             SELECT doc_id, lang, sh, floor(ln(len(sh)) / ln(1.25)) AS band
             FROM sh WHERE len(sh) > 0
-        ), pairs AS (
+        ), scored AS (
             SELECT a.doc_id AS a_id, b.doc_id AS b_id,
                    len(list_intersect(a.sh, b.sh))
                      / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS jac
             FROM banded a JOIN banded b
               ON a.lang = b.lang AND b.band BETWEEN a.band - 1 AND a.band + 1
              AND a.doc_id < b.doc_id
-        )
-        SELECT a_id, b_id, jac FROM pairs WHERE jac >= 0.8
-    """,
+        )"""
+
+_GROUND_TRUTH = f"""
+        WITH {_SCORED_CTES}
+        SELECT a_id, b_id, jac FROM scored WHERE jac >= 0.8
+    """
+
+
+@register(
+    "dedup_ngram_jaccard",
+    oracle=_GROUND_TRUTH,
     doc="Blocked pairwise word-bigram Jaccard near-dup pairs. Block = "
         "(lang, log-length band ± 1): complete for J>=0.8 by the size-ratio "
         "bound, and every block is near-equal-length docs, so sum(block²) "
@@ -81,7 +89,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(
         load_table(spark, sf_dir, "documents"), "doc_id", "text",
-        block_col="lang", n=2, threshold=0.8, length_band=True,
+        block_col="lang", n=2, threshold=0.8,
     )
 
 
@@ -113,31 +121,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_lsh_recall",
-    oracle="""
-        WITH t AS (
-            SELECT doc_id, lang, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-            FROM documents
-        ), sh AS (
-            SELECT doc_id, lang,
-                   list_distinct(
-                       CASE WHEN len(toks) >= 2
-                            THEN list_transform(generate_series(1, len(toks) - 1),
-                                                i -> toks[i] || ' ' || toks[i + 1])
-                            ELSE [] END) AS sh
-            FROM t
-        ), banded AS (
-            SELECT doc_id, lang, sh, floor(ln(len(sh)) / ln(1.25)) AS band
-            FROM sh WHERE len(sh) > 0
-        ), pairs AS (
-            SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                   len(list_intersect(a.sh, b.sh))
-                     / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS jac
-            FROM banded a JOIN banded b
-              ON a.lang = b.lang AND b.band BETWEEN a.band - 1 AND a.band + 1
-             AND a.doc_id < b.doc_id
-        )
-        SELECT a_id, b_id, jac FROM pairs WHERE jac >= 0.8
-    """,
+    oracle=_GROUND_TRUTH,
     doc="Driver-visible LSH recall gate: exact word-bigram Jaccard>=0.8 "
         "ground-truth pairs SEMI-JOINED with the MinHash-LSH candidate "
         "pair set. The oracle is the plain ground truth (DuckDB-"
@@ -151,9 +135,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    gt = ngram_jaccard_pairs(
-        docs, "doc_id", "text", block_col="lang", n=2, threshold=0.8, length_band=True
-    )
+    gt = ngram_jaccard_pairs(docs, "doc_id", "text", block_col="lang", n=2, threshold=0.8)
     cand = minhash_lsh_candidates(
         docs, "doc_id", "text", shingle_n=3, num_perm=32, bands=8
     )
@@ -163,28 +145,9 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Shared by dedup_components (exact blocked all-pairs edge gen) and
 # dedup_components_lsh (LSH candidates + exact verify): both must produce
 # the SAME components, so they are held to the same recursive-CTE oracle.
-_COMPONENTS_CTES = """
-        WITH RECURSIVE t AS (
-            SELECT doc_id, lang, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-            FROM documents
-        ), sh AS (
-            SELECT doc_id, lang,
-                   list_distinct(
-                       CASE WHEN len(toks) >= 2
-                            THEN list_transform(generate_series(1, len(toks) - 1),
-                                                i -> toks[i] || ' ' || toks[i + 1])
-                            ELSE [] END) AS sh
-            FROM t
-        ), banded AS (
-            SELECT doc_id, lang, sh, floor(ln(len(sh)) / ln(1.25)) AS band
-            FROM sh WHERE len(sh) > 0
-        ), pairs AS (
-            SELECT a.doc_id AS a_id, b.doc_id AS b_id
-            FROM banded a JOIN banded b
-              ON a.lang = b.lang AND b.band BETWEEN a.band - 1 AND a.band + 1
-             AND a.doc_id < b.doc_id
-            WHERE len(list_intersect(a.sh, b.sh))
-                    / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.8
+_COMPONENTS_CTES = f"""
+        WITH RECURSIVE {_SCORED_CTES}, pairs AS (
+            SELECT a_id, b_id FROM scored WHERE jac >= 0.8
         ), edges AS (
             SELECT a_id AS u, b_id AS v FROM pairs
             UNION
@@ -218,7 +181,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = ngram_jaccard_pairs(
         load_table(spark, sf_dir, "documents"), "doc_id", "text",
-        block_col="lang", n=2, threshold=0.8, length_band=True,
+        block_col="lang", n=2, threshold=0.8,
     )
     comp = connected_components(pairs, src="a_id", dst="b_id")
     return comp.select(F.col("node").alias("doc_id"), F.col("root").alias("root_id"))
@@ -317,30 +280,9 @@ def _root_h16() -> str:
 
 @register(
     "dedup_incremental_lsh",
-    oracle="""
-        WITH t AS (
-            SELECT doc_id, lang, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-            FROM documents
-        ), sh AS (
-            SELECT doc_id, lang,
-                   list_distinct(
-                       CASE WHEN len(toks) >= 2
-                            THEN list_transform(generate_series(1, len(toks) - 1),
-                                                i -> toks[i] || ' ' || toks[i + 1])
-                            ELSE [] END) AS sh
-            FROM t
-        ), banded AS (
-            SELECT doc_id, lang, sh, floor(ln(len(sh)) / ln(1.25)) AS band
-            FROM sh WHERE len(sh) > 0
-        ), pairs AS (
-            SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                   len(list_intersect(a.sh, b.sh))
-                     / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS jac
-            FROM banded a JOIN banded b
-              ON a.lang = b.lang AND b.band BETWEEN a.band - 1 AND a.band + 1
-             AND a.doc_id < b.doc_id
-        )
-        SELECT a_id, b_id, jac FROM pairs
+    oracle=f"""
+        WITH {_SCORED_CTES}
+        SELECT a_id, b_id, jac FROM scored
         WHERE jac >= 0.8 AND (a_id % 5 = 0 OR b_id % 5 = 0)
     """,
     doc="Incremental near-dup dedup against a PERSISTED LSH index — the "
@@ -359,8 +301,7 @@ def _root_h16() -> str:
 )
 def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quatrain_mapreduce_spark.operators.dedup import (
-        incremental_lsh_candidates, lsh_band_rows, spread, tokenize,
-        verify_pairs, word_shingles,
+        _shingle_sets, incremental_lsh_candidates, lsh_band_rows, verify_pairs,
     )
     from quatrain_mapreduce_spark.staging import staged
 
@@ -368,15 +309,11 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     arriving_pred = F.col("doc_id") % 5 == 0
 
     def band_rows_of(subset: DataFrame) -> DataFrame:
-        sh = (
-            spread(subset)
-            .where(F.size(tokenize("text")) >= 3)
-            .select(F.col("doc_id"), word_shingles("text", 3).alias("sh"))
-        )
+        sh = _shingle_sets(subset, "doc_id", "text", 3)
         return lsh_band_rows(sh, "doc_id", num_perm=32, bands=8, max_bucket=1000)
 
     # the index is built ONCE for the standing corpus and only read by
-    # every later increment (at 100 TB: bucketed by (band, bhash))
+    # every later increment (at 100 TB: bucketed by (band, key))
     existing_bands = spark.read.parquet(staged(sf_dir, "lshindex", lambda d: band_rows_of(
         docs.where(~arriving_pred)).write.parquet(d)))
     arriving_bands = band_rows_of(docs.where(arriving_pred))
@@ -386,37 +323,8 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "leakage_safe_split",
-    oracle="""
-        WITH RECURSIVE t AS (
-            SELECT doc_id, lang, list_filter(string_split(text, ' '), x -> x <> '') AS toks
-            FROM documents
-        ), sh AS (
-            SELECT doc_id, lang,
-                   list_distinct(
-                       CASE WHEN len(toks) >= 2
-                            THEN list_transform(generate_series(1, len(toks) - 1),
-                                                i -> toks[i] || ' ' || toks[i + 1])
-                            ELSE [] END) AS sh
-            FROM t
-        ), banded AS (
-            SELECT doc_id, lang, sh, floor(ln(len(sh)) / ln(1.25)) AS band
-            FROM sh WHERE len(sh) > 0
-        ), pairs AS (
-            SELECT a.doc_id AS a_id, b.doc_id AS b_id
-            FROM banded a JOIN banded b
-              ON a.lang = b.lang AND b.band BETWEEN a.band - 1 AND a.band + 1
-             AND a.doc_id < b.doc_id
-            WHERE len(list_intersect(a.sh, b.sh))
-                    / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.8
-        ), edges AS (
-            SELECT a_id AS u, b_id AS v FROM pairs
-            UNION
-            SELECT b_id, a_id FROM pairs
-        ), reach(node, r) AS (
-            SELECT u, u FROM edges
-            UNION
-            SELECT e.u, reach.r FROM edges e JOIN reach ON reach.node = e.v
-        ), roots AS (
+    oracle=_COMPONENTS_CTES + """
+        , roots AS (
             SELECT node AS doc_id, min(r) AS root_id FROM reach GROUP BY node
         ), labeled AS (
             SELECT d.doc_id,

@@ -10,9 +10,10 @@ on once, in one place:
 - Arrow for any Python-side exchange (Pandas UDFs / mapInPandas).
 - UTC session timezone so timestamp arithmetic is deterministic across the
   engine, the DuckDB oracle, and any cluster locale.
-- ``nanosAsLong`` because the events table carries TIMESTAMP(NANOS) parquet,
-  which Spark's vectorized reader refuses by default; the catalog layer
-  converts the raw nanos to a proper TimestampType column.
+- ``nanosAsLong``, kept for legacy event files stored as TIMESTAMP(NANOS)
+  parquet, which Spark's vectorized reader refuses by default (today's
+  ``events.parquet`` is TIMESTAMP(MICROS) and reads as TIMESTAMP_NTZ without
+  it); the catalog layer converts either form to a TimestampType column.
 - In local mode, a per-process scratch warehouse dir (``staging.warehouse``),
   so the default database's directory and managed tables stay out of the cwd.
 """
@@ -67,7 +68,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # --- determinism ---
         .config("spark.sql.session.timeZone", "UTC")
-        # events.parquet stores TIMESTAMP(NANOS); read raw, convert in catalog
+        # legacy TIMESTAMP(NANOS) event files: read raw, convert in catalog
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # --- io ---
         .config("spark.sql.parquet.compression.codec", "zstd")

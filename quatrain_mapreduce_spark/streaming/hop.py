@@ -200,8 +200,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: 
     unbounded source; swap for kafka/rate in production)."""
     from quatrain_mapreduce_spark.catalog import normalize_event_ts
 
-    # runtime-set so the nanos read works on externally-built sessions too
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     stream = replay(spark, _stage_stream_dir(sf_dir, "events"), max_files_per_trigger)
     return normalize_event_ts(stream)
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 import textwrap
@@ -119,3 +120,22 @@ def test_missing_path_and_directories_are_not_memoized(spark, tmp_path):
     spark.range(3).write.parquet(str(tmp_path / "dir.parquet"))
     assert catalog.load_table(spark, str(tmp_path), "dir").count() == 3
     assert len(catalog._SCHEMAS) == n
+
+
+def test_loading_leaves_the_session_conf_alone(spark, sf_dir, tmp_path):
+    """``load_tables`` reads every table under the session's own
+    ``nanosAsLong`` and never sets it: two passes over fresh copies of the
+    tables (so their memo keys are new) infer each table exactly once."""
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(conf)
+    for name in catalog.TABLES:
+        shutil.copyfile(f"{sf_dir}/{name}.parquet", tmp_path / f"{name}.parquet")
+    n = len(catalog._SCHEMAS)
+    try:
+        spark.conf.set(conf, "false")
+        for _ in range(2):
+            catalog.load_tables(spark, str(tmp_path))
+        assert spark.conf.get(conf) == "false"
+    finally:
+        spark.conf.set(conf, before)
+    assert len(catalog._SCHEMAS) - n == len(catalog.TABLES) == 10

@@ -251,14 +251,60 @@ def test_incremental_lsh_reingested_doc_no_self_pair(spark):
     pair with itself (the cross probe lacked an id guard — review
     finding)."""
     from quatrain_mapreduce_spark.operators.dedup import (
-        incremental_lsh_candidates, lsh_band_rows, word_shingles,
+        _shingle_sets, incremental_lsh_candidates, lsh_band_rows,
     )
 
     docs = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog")],
         "doc_id long, text string",
     )
-    sh = docs.select("doc_id", word_shingles("text", 3).alias("sh"))
+    sh = _shingle_sets(docs, "doc_id", "text", 3)
     bands = lsh_band_rows(sh, "doc_id", num_perm=32, bands=8, max_bucket=100)
     cand = incremental_lsh_candidates(bands, bands, "doc_id").collect()
     assert cand == []
+
+
+def test_bucket_kernel_caps_and_pairs(spark):
+    """``_capped`` keeps a bucket of exactly ``max_bucket`` rows and drops
+    one of ``max_bucket + 1``; ``_bucket_pairs`` pairs rows sharing both
+    band and key, a.id < b.id, carrying each payload column as a_/b_; a
+    pair sharing three buckets comes out once after the caller's
+    distinct."""
+    from quatrain_mapreduce_spark.operators.dedup import _bucket_pairs, _capped
+
+    rows = spark.createDataFrame(
+        [(1, 0, 7, "p"), (2, 0, 7, "q"),  # 1 and 2 share three buckets
+         (1, 1, 7, "p"), (2, 1, 7, "q"),
+         (2, 2, 5, "q"), (1, 2, 5, "p"),
+         (3, 3, 9, "r"), (4, 3, 9, "s"), (5, 3, 9, "t"),  # 3 rows: kept
+         (6, 4, 9, "u"), (7, 4, 9, "v"), (8, 4, 9, "w"), (9, 4, 9, "x"),  # 4: dropped
+         (10, 5, 9, "y")],  # key 9 in its own band: pairs with nobody
+        "id long, band int, key long, c string",
+    )
+    pairs = _bucket_pairs(_capped(rows, 3), "id")
+    assert pairs.columns == ["a_id", "b_id", "a_c", "b_c"]
+    assert sorted(tuple(r) for r in pairs.distinct().collect()) == [
+        (1, 2, "p", "q"), (3, 4, "r", "s"), (3, 5, "r", "t"), (4, 5, "s", "t"),
+    ]
+    assert pairs.where("a_id = 1 AND b_id = 2").count() == 3
+    assert pairs.where("a_id >= b_id").count() == 0
+
+
+def test_minhash_base_hash_is_the_masked_shingle_hash(neardup_docs):
+    """MinHash's base hash, taken from the hashed shingle set, is the 31-bit
+    mask of the string shingle's xxhash64 bit for bit — so signatures, band
+    keys and candidates are those of hashing each string shingle."""
+    from quatrain_mapreduce_spark.operators.dedup import (
+        MERSENNE_31, shingle_hashes, signature_from_hashes,
+    )
+
+    def mask(h):
+        return h.bitwiseAND(F.lit(MERSENNE_31))
+
+    def sigs(base):
+        return {r["doc_id"]: r["sig"] for r in
+                neardup_docs.select("doc_id", signature_from_hashes(base).alias("sig")).collect()}
+
+    got = sigs(F.transform(shingle_hashes("text", 3), mask))
+    want = sigs(F.transform(word_shingles("text", 3), lambda s: mask(F.xxhash64(s))))
+    assert len(got) == 13 and got == want

@@ -202,3 +202,20 @@ def test_staging_decision_lives_in_staging_py():
                 if rel != "staging.py" and touch.search(line):
                     hits.append(f"{rel}:{n}: marker write")
     assert not hits, "\n".join(hits)
+
+
+def test_bucket_cap_lives_in_one_place():
+    """The near-dup family drops oversized (band, key) buckets through one
+    kernel, ``dedup._capped``: its comparison is the package's only
+    ``<= max_bucket``."""
+    import glob
+    import os
+
+    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                       "quatrain_mapreduce_spark")
+    hits = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        with open(path) as fh:
+            hits += [f"{os.path.relpath(path, pkg)}:{n}" for n, line in enumerate(fh, 1)
+                     if "<= max_bucket" in line]
+    assert len(hits) == 1 and hits[0].startswith(os.path.join("operators", "dedup.py") + ":"), hits
