@@ -94,6 +94,19 @@ def cms_probes(
     ])
 
 
+def cms_cells_of(toks: DataFrame) -> DataFrame:
+    """Count-min cell table ``(i, b, c)`` of a ``tok`` column frame: every
+    token's portable ``cms_probes`` counted per (row, bucket). The one cell
+    builder of heavy_hitters_cms, stream_heavy_hitters and the streaming
+    training pipeline's monitor; cell tables of corpus shards merge by
+    addition."""
+    return (
+        toks.select(F.explode(cms_probes("tok")).alias("rb"))
+        .groupBy(F.col("rb.i").alias("i"), F.col("rb.b").alias("b"))
+        .agg(F.count("*").cast("bigint").alias("c"))
+    )
+
+
 def stratified_sample(
     df: DataFrame, id_col: str, stratum_col: str, quotas: dict[str, int],
     default_quota: int = 1000,

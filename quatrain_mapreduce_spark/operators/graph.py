@@ -137,6 +137,14 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
     )
 
 
+def _symmetric(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The persisted undirected edge list ``(a, b)``: each edge in both
+    directions, once. The caller unpersists it."""
+    return edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionAll(
+        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
+    ).distinct().persist()
+
+
 def bfs_distances(
     edges: DataFrame,
     source_expr,
@@ -160,9 +168,7 @@ def bfs_distances(
     # without the persist each hop's plan re-derives it from the caller's
     # edge construction (for the co-purchase graph, a full self-join) —
     # 3x the work and a plan tree that grows per hop.
-    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionAll(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    ).distinct().persist()
+    sym = _symmetric(edges, src, dst)
 
     source = source_expr.toDF("vertex").select(
         "vertex", F.lit(0).alias("dist")
@@ -222,9 +228,7 @@ def k_core_vertices(
     violate the contract the callers and the pure-Python parity test
     assume).
     """
-    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionAll(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    ).distinct().persist()
+    sym = _symmetric(edges, src, dst)
 
     live = sym
     converged = False
@@ -277,9 +281,7 @@ def lpa_communities(
     argmax agg. State is ONE label per vertex, persisted and swapped each
     round; no driver-side graph.
     """
-    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionAll(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    ).distinct().persist()
+    sym = _symmetric(edges, src, dst)
 
     labels = sym.select(F.col("a").alias("vertex")).distinct() \
                 .withColumn("label", F.col("vertex")).persist()
@@ -332,9 +334,7 @@ def pagerank_fixed_point(
     reuses the same shuffle layout. No dangling-mass term is needed: the
     symmetrized graph has no zero-out-degree vertices by construction.
     """
-    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionAll(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    ).distinct().persist()
+    sym = _symmetric(edges, src, dst)
 
     deg = sym.groupBy("a").agg(F.count("*").alias("d")).persist()
     teleport = scale * (damp_den - damp_num) // damp_den

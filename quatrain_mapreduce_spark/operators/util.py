@@ -34,3 +34,12 @@ def sql_hour_of_day_us(a: str) -> str:
     bins elsewhere in the repo rely on exactly that agreement and need
     no correction)."""
     return f"(pmod({a}, 86400000000) div 3600000000)"
+
+
+def hadoop_fs(spark, path: str):
+    """(FileSystem, Path) for ``path``, scheme-dispatched by Hadoop on the
+    session's hadoopConfiguration — the resolution Spark's own file sinks
+    and checkpoint managers use, so a listing or size read here sees what
+    the writers wrote on any filesystem (local, ``file://``, HDFS, S3A)."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath

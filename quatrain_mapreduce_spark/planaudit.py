@@ -36,11 +36,13 @@ PLAN_BUILD_SKIP = frozenset({
 
 
 def lint_session():
-    """The vanilla session plans are linted and fingerprinted on — ONE
-    builder shared by tests/conftest.py and tools/plan_fingerprints.py,
-    because a config divergence (e.g. broadcast threshold) silently changes
-    join strategies and produces false fingerprint drift. Deliberately
-    plain (mirrors the driver harness), NOT get_spark()."""
+    """The one plain session builder: the session plans are linted and
+    fingerprinted on (tests/conftest.py, tools/plan_fingerprints.py), the
+    oracle gate's ``--vanilla`` session (tools/check_oracle.py, which then
+    sets its ``--tz``) and the streaming soak's (tools/soak_stream.py). One
+    builder, because a config divergence (e.g. broadcast threshold)
+    silently changes join strategies and produces false fingerprint drift.
+    Deliberately plain (mirrors the driver harness), NOT get_spark()."""
     from pyspark.sql import SparkSession
 
     from quatrain_mapreduce_spark.staging import warehouse

@@ -3088,19 +3088,14 @@ CMS_ORACLE = f"""
     tags=("analytics", "sketch", "approx", "llm-pipeline"),
 )
 def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quatrain_mapreduce_spark.operators.curation import cms_probes
+    from quatrain_mapreduce_spark.operators.curation import cms_cells_of
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         F.explode(F.expr("filter(split(lower(text), ' '), x -> x <> '')"))
         .alias("tok")
     )
-    cells = (
-        toks.select(F.explode(cms_probes("tok")).alias("rb"))
-        .groupBy(F.col("rb.i").alias("i"), F.col("rb.b").alias("b"))
-        .agg(F.count("*").cast("bigint").alias("c"))
-    )
-    return cms_serve_top20(toks, cells)
+    return cms_serve_top20(toks, cms_cells_of(toks))
 
 
 def cms_serve_top20(

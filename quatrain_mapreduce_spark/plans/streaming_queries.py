@@ -22,8 +22,8 @@ from quatrain_mapreduce_spark.staging import (
     scratch, single_file_slices, stage_doc_slices, stage_event_slices, staged,
 )
 from quatrain_mapreduce_spark.streaming.hop import (
-    OnlineAggregator, _drain, accumulate_counts_stream, drain_to_parquet,
-    fold_versions, read_events_stream, replay, sessionize, tumbling_window_agg,
+    OnlineAggregator, _drain, add_counts, drain_to_parquet, fold_versions,
+    read_events_stream, replay, sessionize, tumbling_window_agg,
 )
 from quatrain_mapreduce_spark.streaming.stateful import (
     moving_avg_batch, moving_avg_stream,
@@ -738,9 +738,9 @@ def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quatrain_mapreduce_spark.plans.data_pipeline import (
         drift_report_from_counts, token_slice_counts,
     )
-    counts = accumulate_counts_stream(
+    counts = fold_versions(
         spark, sf_dir, stage_doc_slices(spark, sf_dir), "driftcounts",
-        token_slice_counts, key_cols=("token",), sum_cols=("cnt_a", "cnt_b"),
+        add_counts(token_slice_counts, ("token",), ("cnt_a", "cnt_b")),
     )
     return drift_report_from_counts(counts)
 
@@ -775,9 +775,9 @@ def stream_auc_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         auc_from_counts, auc_value_counts,
     )
     # additive counts: the sums do not depend on how the events are sliced
-    counts = accumulate_counts_stream(
+    counts = fold_versions(
         spark, sf_dir, stage_event_slices(spark, sf_dir, 4), "auccounts",
-        auc_value_counts, key_cols=("cents",), sum_cols=("p_here", "n_here"),
+        add_counts(auc_value_counts, ("cents",), ("p_here", "n_here")),
     )
     return auc_from_counts(counts)
 
@@ -917,18 +917,12 @@ from quatrain_mapreduce_spark.plans.analytics_queries import (  # noqa: E402
     tags=("streaming", "sketch", "approx", "llm-pipeline"),
 )
 def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quatrain_mapreduce_spark.operators.curation import cms_probes
+    from quatrain_mapreduce_spark.operators.curation import cms_cells_of
 
     tok_expr = F.explode(
         F.expr("filter(split(lower(text), ' '), x -> x <> '')")
     ).alias("tok")
-    cells_stream = (
-        replay(spark, stage_doc_slices(spark, sf_dir))
-        .select(tok_expr)
-        .select(F.explode(cms_probes("tok")).alias("rb"))
-        .groupBy(F.col("rb.i").alias("i"), F.col("rb.b").alias("b"))
-        .agg(F.count("*").cast("bigint").alias("c"))
-    )
+    cells_stream = cms_cells_of(replay(spark, stage_doc_slices(spark, sf_dir)).select(tok_expr))
     cells = drain_to_parquet(cells_stream, "qms_stream_cms", output_mode="complete")
     toks = load_table(spark, sf_dir, "documents").select(tok_expr)
     return cms_serve_top20(toks, cells)

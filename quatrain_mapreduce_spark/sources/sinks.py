@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from quatrain_mapreduce_spark.operators.util import hadoop_fs
+
 
 def write_kv_text(df: DataFrame, key: str, value: str, path: str, sep: str = "\t") -> None:
     """K\\tV text sink (TextOutputFormat)."""
@@ -80,9 +82,7 @@ def write_jdbc(df: DataFrame, url: str, table: str, mode: str = "append", **opti
 def dir_bytes(spark, path: str) -> int:
     """Total data bytes under ``path`` via the Hadoop FileSystem API — works
     on any supported filesystem (local, HDFS, S3A), unlike an os.walk."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, p = hadoop_fs(spark, path)
     return fs.getContentSummary(p).getLength()
 
 

@@ -265,7 +265,6 @@ def stage_event_slices(
     n_files: int,
     columns: list[str] | None = None,
     ordered_mtime: bool = False,
-    tag: str = "eventslices",
 ) -> str:
     """Stage the events table as ``n_files`` event_id-range parquet slices.
 
@@ -288,19 +287,19 @@ def stage_event_slices(
             for i, f in enumerate(sorted(glob.glob(os.path.join(d, "part-*.parquet")))):
                 os.utime(f, (base + i * 10, base + i * 10))
 
-    full_tag = f"{tag}{n_files}{'o' if ordered_mtime else ''}{'-'.join(columns or [])}"
-    return staged(sf_dir, full_tag, build)
+    tag = f"eventslices{n_files}{'o' if ordered_mtime else ''}{'-'.join(columns or [])}"
+    return staged(sf_dir, tag, build)
 
 
-def stage_doc_slices(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
-    """Stage the documents table as ``n_files`` parquet slices for file
-    streams (one micro-batch per slice via maxFilesPerTrigger=1). The
-    single copy of the pattern shared by stream_dedup / stream_curation /
+def stage_doc_slices(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the documents table as 4 parquet slices for file streams (one
+    micro-batch per slice via maxFilesPerTrigger=1). The single copy of the
+    pattern shared by stream_dedup / stream_curation /
     stream_heavy_hitters; idempotent per (sf_dir, data fingerprint)."""
     from quatrain_mapreduce_spark.catalog import load_table
 
-    return staged(sf_dir, f"docslices{n_files}", lambda d: load_table(
-        spark, sf_dir, "documents").repartition(n_files).write.parquet(d))
+    return staged(sf_dir, "docslices4", lambda d: load_table(
+        spark, sf_dir, "documents").repartition(4).write.parquet(d))
 
 
 def stage_late_slices(spark: SparkSession, sf_dir: str, recent_hours: int = 6) -> str:

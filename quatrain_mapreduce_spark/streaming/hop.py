@@ -46,12 +46,24 @@ start and waits for it; a checkpoint it creates itself
 (``qms_drain_ckpt_*``) is deleted when the drain returns or fails, while
 output and snapshot directories back the returned DataFrames, so they are
 ``staging.scratch`` dirs, deleted when the process exits.
-``fold_versions`` is the one batch-id-versioned ``foreachBatch`` fold:
-version ``v{id}`` = ``step(previous version or None, batch)``, with the
-predecessor taken strictly below the batch id in numeric order and a
-missing one failing loudly; the additive count monitors and the CDC
-materialization are its ``step`` functions. The finished fold is a staged
-artifact (``staging.staged``), published only once the drain is done.
+
+HOP's reducer-held state has one stand-in here: ``versioned_fold(work,
+step)`` is the one batch-id-versioned ``foreachBatch`` fold. Version
+``work/v{id}`` = ``step(work/v{id-1}, batch)``, and batch 0 folds onto
+None. Past batch 0 the predecessor must be exactly ``v{id-1}``: every
+batch writes its version before it can commit, so a missing one means
+the running state was deleted, and the batch fails naming the path and
+the batch id instead of folding onto an older version and dropping a
+batch. A retried batch reads ``v{id-1}``, never its own partial
+``v{id}``, so it stays idempotent. The existence check and listings go
+through the Hadoop FileSystem API (``operators.util.hadoop_fs``), so
+``work`` may be a bare path or any Hadoop scheme (``file://``,
+``hdfs://``, ``s3a://``). ``add_counts`` is the one additive ``step``
+(per-key counts merged by addition). ``fold_versions`` folds a staged
+replay into a staged artifact (``staging.staged``), published only once
+the drain is done; the count monitors and the CDC materialization call
+it, and the composed training pipeline (``streaming/pipeline.py``) calls
+the kernel directly for its CMS monitor.
 """
 
 from __future__ import annotations
@@ -67,6 +79,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from quatrain_mapreduce_spark.operators.util import hadoop_fs
 from quatrain_mapreduce_spark.staging import scratch, staged
 
 
@@ -98,8 +111,7 @@ def _input_bytes(df: DataFrame) -> int | None:
             path = source.options().get("path")
             if not file_format.isAssignableFrom(source.providingClass()) or path.isEmpty():
                 return None
-            jpath = spark._jvm.org.apache.hadoop.fs.Path(path.get())
-            fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+            fs, jpath = hadoop_fs(spark, path.get())
             matches = fs.globStatus(jpath)
             if matches is None:
                 return None
@@ -488,10 +500,61 @@ class OnlineAggregator:
         return self.spark.read.parquet(self.snapshots[-1][1])
 
 
-def _versions(work: str) -> list[int]:
-    """Batch ids of the ``v{id}`` dirs under ``work``, in numeric order:
-    lexical order puts 'v10000' before 'v9999' once ids outgrow the pad."""
-    return sorted(int(os.path.basename(v)[1:]) for v in glob.glob(os.path.join(work, "v*")))
+def _fs_is_dir(spark: SparkSession, path: str) -> bool:
+    fs, jpath = hadoop_fs(spark, path)
+    return bool(fs.exists(jpath) and fs.getFileStatus(jpath).isDirectory())
+
+
+def _fs_child_ids(spark: SparkSession, path: str, prefix: str = "") -> set[int]:
+    """Batch ids of the ``{prefix}{id}`` entries of a directory, read with
+    one Hadoop listing; empty if the directory does not exist."""
+    if not _fs_is_dir(spark, path):
+        return set()
+    fs, jpath = hadoop_fs(spark, path)
+    names = (st.getPath().getName() for st in fs.listStatus(jpath))
+    n = len(prefix)
+    return {int(x[n:]) for x in names if x.startswith(prefix) and x[n:].isdigit()}
+
+
+def versioned_fold(
+    work: str, step: Callable[[DataFrame | None, DataFrame], DataFrame]
+) -> Callable[[DataFrame, int], None]:
+    """The ``foreachBatch`` body of the one batch-id-versioned fold (module
+    docstring): write ``work/v{id}`` = ``step(work/v{id-1}, batch)``, with
+    None before batch 0, and fail loudly when the predecessor is gone."""
+
+    def fold(batch: DataFrame, bid: int) -> None:
+        spark = batch.sparkSession
+        prev = None
+        if bid > 0:
+            path = os.path.join(work, f"v{bid - 1}")
+            if not _fs_is_dir(spark, path):
+                raise RuntimeError(
+                    f"predecessor version {path} is missing for batch {bid}: "
+                    "the folded state was deleted externally"
+                )
+            prev = spark.read.parquet(path)
+        step(prev, batch).write.mode("overwrite").parquet(os.path.join(work, f"v{bid}"))
+
+    return fold
+
+
+def add_counts(
+    count_fn: Callable[[DataFrame], DataFrame], key_cols: tuple, sum_cols: tuple
+) -> Callable[[DataFrame | None, DataFrame], DataFrame]:
+    """The additive fold step: merge ``count_fn(batch)`` into the running
+    counts by addition (key_cols + sum_cols, sums as bigint). Valid
+    exactly when the state is additively mergeable (per-key counts, CMS
+    cells), so the result does not depend on how the input is sliced."""
+
+    def add(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
+        counts = count_fn(batch)
+        if prev is not None:
+            counts = prev.unionByName(counts)
+        return counts.groupBy(*key_cols).agg(
+            *[F.sum(c).cast("bigint").alias(c) for c in sum_cols])
+
+    return add
 
 
 def fold_versions(
@@ -501,68 +564,16 @@ def fold_versions(
     work_tag: str,
     step: Callable[[DataFrame | None, DataFrame], DataFrame],
 ) -> DataFrame:
-    """Fold the staged dir ``src``, replayed one file per micro-batch, into
-    batch-id versions under ``stage_dir(sf_dir, work_tag)``: version
-    ``v{id}`` = ``step(previous version or None, batch)``. Returns the final
-    version. Built once per (sf_dir, work_tag) through ``staging.staged``:
-    the fold runs into a fresh directory that is published only when the
-    drain has finished, so later calls read the final version and a run
-    that died is redone from scratch.
+    """Fold the staged dir ``src``, replayed one file per micro-batch,
+    through ``versioned_fold`` into ``stage_dir(sf_dir, work_tag)`` and
+    return the highest version. Built once per (sf_dir, work_tag) through
+    ``staging.staged``: the fold runs into a fresh directory that is
+    published only when the drain has finished, so later calls read the
+    final version and a run that died is redone from scratch."""
 
-    Retry idempotence: a retried batch id must not see its OWN previous
-    (possibly partial) version as its predecessor, or the fold applies the
-    batch twice — so the predecessor is the latest version STRICTLY BELOW
-    the batch id. Every batch writes a version, so a missing predecessor
-    past batch 0 means the running state was deleted externally; starting
-    over from ``None`` would silently lose it, so the batch fails instead.
-    """
     def build(work: str) -> None:
-        os.makedirs(work)
-
-        def fold(batch: DataFrame, bid: int) -> None:
-            below = [v for v in _versions(work) if v < bid]
-            if not below and bid > 0:
-                raise RuntimeError(
-                    f"no predecessor version below batch {bid} under "
-                    f"{work} — the folded state was deleted externally"
-                )
-            prev = (batch.sparkSession.read.parquet(os.path.join(work, f"v{below[-1]:04d}"))
-                    if below else None)
-            step(prev, batch).write.mode("overwrite").parquet(
-                os.path.join(work, f"v{bid:04d}"))
-
         stream = replay(spark, src)
-        _drain(stream.writeStream.foreachBatch(fold), stream)
+        _drain(stream.writeStream.foreachBatch(versioned_fold(work, step)), stream)
 
     work = staged(sf_dir, work_tag, build)
-    return spark.read.parquet(os.path.join(work, f"v{_versions(work)[-1]:04d}"))
-
-
-def accumulate_counts_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    src: str,
-    work_tag: str,
-    count_fn: Callable[[DataFrame], DataFrame],
-    key_cols: tuple,
-    sum_cols: tuple,
-) -> DataFrame:
-    """Streaming count accumulator — the scaffold behind
-    stream_drift_monitor and stream_auc_monitor: ``fold_versions`` over the
-    staged dir ``src`` whose step merges each batch's ``count_fn(batch)``
-    into the running counts by ADDITION — valid exactly when the state is
-    additively mergeable (per-key counts), so the result does not depend
-    on how ``src`` is sliced. Returns the final accumulated counts
-    (key_cols + sum_cols, sums as bigint)."""
-
-    def add(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
-        counts = count_fn(batch)
-        if prev is None:
-            return counts
-        return (prev.unionByName(counts).groupBy(*key_cols)
-                .agg(*[F.sum(c).alias(c) for c in sum_cols]))
-
-    return fold_versions(spark, sf_dir, src, work_tag, add).select(
-        *key_cols,
-        *[F.col(c).cast("bigint").alias(c) for c in sum_cols],
-    )
+    return spark.read.parquet(os.path.join(work, f"v{max(_fs_child_ids(spark, work, 'v'))}"))

@@ -21,7 +21,11 @@ Exactly-once without a native sink commit log: foreachBatch output is made
 idempotent by keying every write on the micro-batch id — ``kept/b{id}`` is
 overwritten on replay with identical content (deterministic input replay +
 state restored from the checkpoint version of id-1), and ``cells/v{id}`` is
-a pure function of ``cells/v{id-1}`` + the replayed batch. Readers then
+a pure function of ``cells/v{id-1}`` + the replayed batch: the monitor is
+``hop.versioned_fold`` with the additive step ``hop.add_counts`` over
+``curation.cms_cells_of``, so a missing ``cells/v{id-1}`` fails the batch
+loudly (naming the path and the batch id) instead of restarting the
+cumulative monitor from one batch's cells. Readers then
 honor the checkpoint ``commits/`` log the way Spark's file-sink readers
 honor ``_spark_metadata``: only batch versions the checkpoint committed are
 visible, so part-written orphans from a mid-batch crash are masked
@@ -35,15 +39,16 @@ bounded at d*w (<=4096) cells NO MATTER the corpus size, so the monitor
 never becomes a vocabulary-sized aggregation (pinned by
 tests/test_streaming.py).
 
-Filesystem portability: committed_batch_ids, the fold's predecessor
-check, and read_training_stream_result resolve the checkpoint and sink
-roots through the JVM Hadoop FileSystem API (``Path.getFileSystem`` on the
-session's hadoopConfiguration), so ``out_root`` may live on any supported
+Filesystem portability: committed_batch_ids, the fold kernel's
+predecessor check, and read_training_stream_result resolve the checkpoint
+and sink roots through the JVM Hadoop FileSystem API
+(``operators.util.hadoop_fs``, the session's hadoopConfiguration), so
+``out_root`` may live on any supported
 scheme — bare local paths, ``file://``, ``hdfs://``, ``s3a://`` — exactly
 like the reference's own DFS-native sink commit protocol
 (QL/exec/FileSinkOperator.java:39 tmp-write + move on HDFS paths). The
 streaming plan, state store, and parquet writes were already
-scheme-agnostic; the reader-side listings now are too (pinned by
+scheme-agnostic; the listings and existence checks are too (pinned by
 test_pipeline_file_scheme_roundtrip).
 """
 
@@ -54,28 +59,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from quatrain_mapreduce_spark.streaming.hop import _start, replay
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for ``path``, scheme-dispatched by Hadoop — the
-    same resolution Spark's own file sink / checkpoint managers use, so the
-    reader's view of "committed" matches the writer's on any filesystem."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
-def _fs_is_dir(spark: SparkSession, path: str) -> bool:
-    fs, jpath = _hadoop_fs(spark, path)
-    return bool(fs.exists(jpath) and fs.getFileStatus(jpath).isDirectory())
-
-
-def _fs_child_names(spark: SparkSession, path: str) -> list[str]:
-    """Child entry names of a directory, [] if it doesn't exist."""
-    fs, jpath = _hadoop_fs(spark, path)
-    if not (fs.exists(jpath) and fs.getFileStatus(jpath).isDirectory()):
-        return []
-    return [st.getPath().getName() for st in fs.listStatus(jpath)]
+from quatrain_mapreduce_spark.operators.curation import cms_cells_of
+from quatrain_mapreduce_spark.streaming.hop import (
+    _fs_child_ids, _start, add_counts, replay, versioned_fold,
+)
 
 CMS_CELL_SCHEMA = "i string, b int, c bigint"
 KEPT_SCHEMA = "doc_id bigint, source string, norm string, fp string"
@@ -83,7 +70,7 @@ KEPT_SCHEMA = "doc_id bigint, source string, norm string, fp string"
 _NORM_TOKS = "filter(split(norm, ' '), x -> x <> '')"
 
 
-def committed_batch_ids(ckpt: str, spark: SparkSession | None = None) -> set[int]:
+def committed_batch_ids(ckpt: str, spark: SparkSession) -> set[int]:
     """Batch ids a reader may trust, reconstructed from the checkpoint's
     commit log. The foreachBatch analogue of the file sink's
     _spark_metadata authority — with one trap the first 10-minute soak
@@ -99,18 +86,7 @@ def committed_batch_ids(ckpt: str, spark: SparkSession | None = None) -> set[int
 
     Listing goes through the Hadoop FS API (module docstring, "Filesystem
     portability"), so ``ckpt`` may be a local path or any Hadoop scheme."""
-    if spark is None:
-        spark = SparkSession.getActiveSession()
-        if spark is None:
-            raise RuntimeError(
-                "committed_batch_ids needs a SparkSession (none active) — "
-                "the commit-log listing is scheme-dispatched via Hadoop FS"
-            )
-    retained = {
-        int(f)
-        for f in _fs_child_names(spark, os.path.join(ckpt, "commits"))
-        if f.isdigit()
-    }
+    retained = _fs_child_ids(spark, os.path.join(ckpt, "commits"))
     if not retained:
         return set()
     return set(range(max(retained) + 1))
@@ -165,18 +141,6 @@ def curate_dedup_stages(
     return keyed.dropDuplicates(["source", "fp"])
 
 
-def cms_cells_of(toks: DataFrame) -> DataFrame:
-    """CMS cell table of a token frame — the same deterministic arithmetic
-    as heavy_hitters_cms (operators/curation.cms_probes)."""
-    from quatrain_mapreduce_spark.operators.curation import cms_probes
-
-    return (
-        toks.select(F.explode(cms_probes("tok")).alias("rb"))
-        .groupBy(F.col("rb.i").alias("i"), F.col("rb.b").alias("b"))
-        .agg(F.count("*").cast("bigint").alias("c"))
-    )
-
-
 def norm_tokens(kept: DataFrame) -> DataFrame:
     """Tokens of the NORMALIZED kept text — normalization makes the token
     multiset a pure function of fp, so it is independent of which duplicate
@@ -184,79 +148,42 @@ def norm_tokens(kept: DataFrame) -> DataFrame:
     return kept.select(F.explode(F.expr(_NORM_TOKS)).alias("tok"))
 
 
-def run_training_stream(
-    spark: SparkSession,
-    src_dir: str,
-    out_root: str,
-    max_files_per_trigger: int = 1,
-) -> None:
+def run_training_stream(spark: SparkSession, src_dir: str, out_root: str) -> None:
     """Drain the composed pipeline availableNow over a document parquet
     dir. Resumable: out_root holds the checkpoint, so calling again after a
     crash resumes the same lineage (the soak harness relies on this)."""
-    stream = replay(spark, src_dir, max_files_per_trigger)
-    q = start_training_stream(curate_dedup_stages(stream), out_root,
-                              available_now=True)
-    q.awaitTermination()
+    start_training_stream(curate_dedup_stages(replay(spark, src_dir)), out_root).awaitTermination()
 
 
 def start_training_stream(deduped: DataFrame, out_root: str,
-                          available_now: bool = True,
                           processing_time: str | None = None):
     """Attach the foreachBatch fold to an already-staged deduped stream and
-    start it. Split from run_training_stream so the soak can feed a rate
-    source with a processingTime trigger through the identical fold.
-    An availableNow start sizes its dedup state to the input
-    (``hop._start``); a processingTime start keeps the core cap."""
+    start it: availableNow by default, with its dedup state sized to the
+    input (``hop._start``); a ``processing_time`` trigger (the soak's rate
+    source) keeps the core cap. The fold writes ``kept/b{id}``, then folds
+    the batch's CMS cells into ``cells/v{id}`` through
+    ``hop.versioned_fold``; ``cms_cells_of`` is looked up when the step
+    runs, so a caller can wrap ``pipeline.cms_cells_of``."""
     kept_root = os.path.join(out_root, "kept")
-    cells_root = os.path.join(out_root, "cells")
-    ckpt = os.path.join(out_root, "ckpt")
+    cells = versioned_fold(os.path.join(out_root, "cells"), add_counts(
+        lambda kept: cms_cells_of(norm_tokens(kept)), ("i", "b"), ("c",)))
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
         batch_df = batch_df.persist()
         try:
-            batch_df.write.mode("overwrite").parquet(
-                os.path.join(kept_root, f"b{batch_id}")
-            )
-            delta = cms_cells_of(norm_tokens(batch_df))
-            prev_path = os.path.join(cells_root, f"v{batch_id - 1}")
-            if batch_id > 0:
-                # Every committed predecessor wrote its cells version, and
-                # Spark only starts batch n after n-1 commits, so a missing
-                # predecessor ALWAYS means external damage (someone deleted
-                # sink state). Restarting the cumulative CMS from this
-                # batch's delta would be silent monitor corruption — the
-                # same class the commits/-retention fix addressed — so fail
-                # the batch loudly instead.
-                if not _fs_is_dir(sess, prev_path):
-                    raise RuntimeError(
-                        f"CMS fold: predecessor cells version {prev_path} "
-                        f"is missing for batch {batch_id}; the cumulative "
-                        "monitor cannot be continued (external deletion of "
-                        "sink state?)"
-                    )
-                prev = sess.read.schema(CMS_CELL_SCHEMA).parquet(prev_path)
-                delta = prev.unionByName(delta)
-            merged = delta.groupBy("i", "b").agg(
-                F.sum("c").cast("bigint").alias("c")
-            )
-            merged.write.mode("overwrite").parquet(
-                os.path.join(cells_root, f"v{batch_id}")
-            )
+            batch_df.write.mode("overwrite").parquet(os.path.join(kept_root, f"b{batch_id}"))
+            cells(batch_df, batch_id)
         finally:
             batch_df.unpersist()
 
     writer = (
         deduped.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", os.path.join(out_root, "ckpt"))
         .outputMode("append")
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return _start(writer, deduped.sparkSession,
-                  bounded=deduped if available_now else None)
+    if processing_time is None:
+        return _start(writer.trigger(availableNow=True), deduped.sparkSession, bounded=deduped)
+    return _start(writer.trigger(processingTime=processing_time), deduped.sparkSession)
 
 
 def read_training_stream_result(
@@ -278,11 +205,7 @@ def read_training_stream_result(
     # listing of kept/ answers all ids at once — a per-id exists() probe
     # is O(4n) Py4J round-trips after a multi-hour run's thousands of
     # committed batches.
-    present = {
-        int(n[1:]) for n in _fs_child_names(
-            spark, os.path.join(out_root, "kept"))
-        if n.startswith("b") and n[1:].isdigit()
-    }
+    present = _fs_child_ids(spark, os.path.join(out_root, "kept"), "b")
     missing = [i for i in sorted(commits) if i not in present]
     if missing:
         raise ValueError(

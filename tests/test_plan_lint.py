@@ -219,3 +219,22 @@ def test_bucket_cap_lives_in_one_place():
             hits += [f"{os.path.relpath(path, pkg)}:{n}" for n, line in enumerate(fh, 1)
                      if "<= max_bucket" in line]
     assert len(hits) == 1 and hits[0].startswith(os.path.join("operators", "dedup.py") + ":"), hits
+
+
+def test_hadoop_fs_resolution_lives_in_one_place():
+    """Every Hadoop FileSystem the package touches (the fold kernel's
+    predecessor check, the pipeline's commit-log and ``kept/`` listings,
+    ``hop._input_bytes``, ``sinks.dir_bytes``) is resolved by one helper,
+    ``operators.util.hadoop_fs``: its call is the package's only
+    ``getFileSystem(``."""
+    import glob
+    import os
+
+    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                       "quatrain_mapreduce_spark")
+    hits = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        with open(path) as fh:
+            hits += [f"{os.path.relpath(path, pkg)}:{n}" for n, line in enumerate(fh, 1)
+                     if "getFileSystem(" in line]
+    assert len(hits) == 1 and hits[0].startswith(os.path.join("operators", "util.py") + ":"), hits

@@ -852,6 +852,7 @@ def test_stream_pipeline_damage_is_loud_not_silent(spark, sf_dir, tmp_path_facto
     makes the RESUMED fold raise instead of silently restarting the
     cumulative CMS monitor from one batch's delta."""
     import os
+    import re
     import shutil
 
     import pytest
@@ -893,9 +894,11 @@ def test_stream_pipeline_damage_is_loud_not_silent(spark, sf_dir, tmp_path_facto
     # leg 2: delete the latest cells version, then resume with a new slice
     # — the next batch's fold needs cells/v{max} as its predecessor and
     # must surface the damage as a query failure, not a reset monitor
-    shutil.rmtree(os.path.join(out_root, "cells", f"v{max(commits)}"))
+    lost = os.path.join(out_root, "cells", f"v{max(commits)}")
+    shutil.rmtree(lost)
     shutil.copy(os.path.join(staged, parts[-1]), os.path.join(src, parts[-1]))
-    with pytest.raises(Exception, match="predecessor cells version"):
+    with pytest.raises(Exception, match=f"predecessor version {re.escape(lost)} "
+                                        f"is missing for batch {max(commits) + 1}"):
         run_training_stream(spark, src, out_root)
 
 
@@ -1353,7 +1356,7 @@ def test_fold_versions_writes_one_exact_version_per_batch(spark, tmp_path):
         final = fold_versions(spark, str(tmp_path), src, "foldtest", _running_totals)
         assert tuple(final.first()) == (50, sum(range(50)), 49)
         names = sorted(os.path.basename(v) for v in glob.glob(os.path.join(work, "v*")))
-        assert names == [f"v{i:04d}" for i in range(5)]
+        assert names == [f"v{i}" for i in range(5)]
         for i, name in enumerate(names):  # version i holds slices 0..i
             row = spark.read.parquet(os.path.join(work, name)).first()
             assert (row["n"], row["hi"]) == (10 * (i + 1), 10 * (i + 1) - 1)
@@ -1367,9 +1370,10 @@ def test_fold_versions_writes_one_exact_version_per_batch(spark, tmp_path):
 
 def test_fold_versions_fails_loudly_without_a_predecessor(spark, tmp_path, monkeypatch):
     """When the running versions vanish mid-run (here: all deleted right
-    before batch 2 looks for its predecessor), the fold raises "no
-    predecessor version" instead of restarting from None, and publishes
-    nothing: no staged fold and no copy left from the failed run."""
+    before batch 2 checks for its predecessor), the fold raises "predecessor
+    version ... is missing for batch 2" instead of restarting from None,
+    and publishes nothing: no staged fold and no copy left from the failed
+    run."""
     import glob
     import os
     import shutil
@@ -1381,20 +1385,53 @@ def test_fold_versions_fails_loudly_without_a_predecessor(spark, tmp_path, monke
 
     src = _mtime_ordered_slices(spark, str(tmp_path / "slices"), 5, 10)
     work = stage_dir(str(tmp_path), "foldgone")
-    lookup = hop._versions
+    is_dir = hop._fs_is_dir
 
-    def delete_before_batch_2(path):
-        found = lookup(path)
-        if found == [0, 1]:
-            for v in glob.glob(os.path.join(path, "v*")):
+    def delete_before_batch_2(session, path):
+        if path.startswith(work) and os.path.basename(path) == "v1":
+            for v in glob.glob(os.path.join(os.path.dirname(path), "v*")):
                 shutil.rmtree(v)
-            found = lookup(path)
-        return found
+        return is_dir(session, path)
 
-    monkeypatch.setattr(hop, "_versions", delete_before_batch_2)
+    monkeypatch.setattr(hop, "_fs_is_dir", delete_before_batch_2)
     try:
-        with pytest.raises(Exception, match="no predecessor version below batch 2"):
+        with pytest.raises(Exception, match=r"predecessor version \S+/v1 is missing for batch 2"):
             hop.fold_versions(spark, str(tmp_path), src, "foldgone", _running_totals)
+        assert glob.glob(work + "*") == []
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(src, ignore_errors=True)
+
+
+def test_fold_versions_never_skips_a_lost_predecessor(spark, tmp_path, monkeypatch):
+    """Only the immediate predecessor is a valid base: when ``v1`` vanishes
+    right after batch 1 writes it while ``v0`` survives, batch 2 must fail
+    naming ``v1`` and batch 2, not fold onto ``v0`` and silently drop batch
+    1's rows, and the failed fold publishes nothing."""
+    import glob
+    import os
+    import re
+    import shutil
+
+    import pytest
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from quatrain_mapreduce_spark.staging import stage_dir
+    from quatrain_mapreduce_spark.streaming import hop
+
+    src = _mtime_ordered_slices(spark, str(tmp_path / "slices"), 5, 10)
+    work = stage_dir(str(tmp_path), "foldlost")
+    write = DataFrameWriter.parquet
+
+    def write_then_lose_v1(self, path, *args, **kwargs):
+        write(self, path, *args, **kwargs)
+        if path.startswith(work) and re.fullmatch(r"v0*1", os.path.basename(path)):
+            shutil.rmtree(path)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_then_lose_v1)
+    try:
+        with pytest.raises(Exception, match=r"predecessor version \S+/v1 is missing for batch 2"):
+            hop.fold_versions(spark, str(tmp_path), src, "foldlost", _running_totals)
         assert glob.glob(work + "*") == []
     finally:
         shutil.rmtree(work, ignore_errors=True)

@@ -38,7 +38,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from quatrain_mapreduce_spark import get_spark  # noqa: E402
 from quatrain_mapreduce_spark.catalog import TABLES  # noqa: E402
 from quatrain_mapreduce_spark.registry import all_queries  # noqa: E402
-from quatrain_mapreduce_spark.staging import warehouse  # noqa: E402
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -136,17 +135,10 @@ def main() -> int:
     args = ap.parse_args()
 
     if args.vanilla:
-        from pyspark.sql import SparkSession
+        from quatrain_mapreduce_spark.planaudit import lint_session
 
-        spark = (
-            SparkSession.builder.master("local[8]")
-            .appName("qms-oracle-vanilla")
-            .config("spark.sql.shuffle.partitions", "8")
-            .config("spark.sql.session.timeZone", args.tz)
-            .config("spark.ui.enabled", "false")
-            .config("spark.sql.warehouse.dir", warehouse())
-            .getOrCreate()
-        )
+        spark = lint_session()
+        spark.conf.set("spark.sql.session.timeZone", args.tz)
     else:
         spark = get_spark(master="local[8]", shuffle_partitions=8)
     con = duck_connection(args.sf)

@@ -89,18 +89,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _session(app: str):
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master("local[8]")
-        .appName(app)
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+from quatrain_mapreduce_spark.planaudit import lint_session  # noqa: E402
 
 
 def _deterministic_source(spark, rate: int, keys: int):
@@ -156,7 +145,7 @@ def _run_child(args) -> int:
     gracefully when --stop-file appears or --run-seconds elapse."""
     from quatrain_mapreduce_spark.streaming.hop import _start
 
-    spark = _session("qms-soak-child")
+    spark = lint_session()
     spark.sparkContext.setLogLevel("ERROR")
     sessions = _sessionize(
         _deterministic_source(spark, args.rate, args.keys),
@@ -235,7 +224,9 @@ def _drive_phases(child_base: list[str], total: float, stop_file: str) -> None:
     kill-restart and pipeline soaks: phase 1 ends in a SIGKILL of the
     child's whole process group (driver AND JVM die mid-commit), phases 2
     and 3 restart from the same checkpoint and end by graceful stop-file
-    (--run-seconds is padded +120s so it never fires first)."""
+    (--run-seconds is padded +120s so it never fires first). Children get
+    the workdir as TMPDIR, so the scratch dirs a SIGKILLed child cannot
+    delete at exit stay inside the reported workdir."""
     phases = [  # (label, run_seconds, how it ends)
         ("pre-kill", total * 0.4, "SIGKILL"),
         ("post-kill", total * 0.3, "graceful stop-file"),
@@ -249,6 +240,7 @@ def _drive_phases(child_base: list[str], total: float, stop_file: str) -> None:
             child_base + ["--run-seconds", str(int(run_s) + 120),
                           "--phase", label],
             start_new_session=True,  # own process group: SIGKILL takes the JVM too
+            env=dict(os.environ, TMPDIR=os.path.dirname(stop_file)),
         )
         t0 = time.monotonic()
         if i == 0:
@@ -281,7 +273,7 @@ def _drive_phases(child_base: list[str], total: float, stop_file: str) -> None:
 def _assert_exactly_once(args, sink: str, ckpt: str, log: str) -> int:
     from pyspark.sql import functions as F
 
-    spark = _session("qms-soak-verify")
+    spark = lint_session()
     spark.sparkContext.setLogLevel("ERROR")
 
     n_committed = _committed_value_count(ckpt, args.rate)
@@ -377,7 +369,7 @@ def _flat(args) -> int:
 
     from quatrain_mapreduce_spark.streaming.hop import _start
 
-    spark = _session("qms-soak")
+    spark = lint_session()
     spark.sparkContext.setLogLevel("ERROR")
 
     # The key universe ROTATES: each 30 s window activates a different block
@@ -534,15 +526,14 @@ def _run_pipeline_child(args) -> int:
 
         pipeline.cms_cells_of = paused_cells_of
 
-    spark = _session("qms-soak-pipe-child")
+    spark = lint_session()
     spark.sparkContext.setLogLevel("ERROR")
     src = (
         spark.readStream.format("rate")
         .option("rowsPerSecond", args.rate).load()
     )
     deduped = curate_dedup_stages(_derive_docs(src, args.keys), "text")
-    q = start_training_stream(deduped, args.out_root, available_now=False,
-                              processing_time="5 seconds")
+    q = start_training_stream(deduped, args.out_root, processing_time="5 seconds")
     deadline = time.monotonic() + args.run_seconds
     seen: set[int] = set()
     with open(args.log, "a") as log:
@@ -598,7 +589,7 @@ def _assert_pipeline_exactly_once(args, out_root: str, log: str) -> int:
         read_training_stream_result,
     )
 
-    spark = _session("qms-soak-pipe-verify")
+    spark = lint_session()
     spark.sparkContext.setLogLevel("ERROR")
     ckpt = os.path.join(out_root, "ckpt")
     n_committed = _committed_value_count(ckpt, args.rate)
@@ -688,11 +679,11 @@ def _pipeline_midfold_kill(args) -> int:
     ]
     total = args.minutes * 60
     hunt_s = total * 0.5
-    env = dict(os.environ, QMS_FOLD_PAUSE_S="3.0")
+    env = dict(os.environ, TMPDIR=work)  # as in _drive_phases
     proc = subprocess.Popen(
         child_base + ["--run-seconds", str(int(hunt_s) + 120),
                       "--phase", "pre-midfold-kill"],
-        start_new_session=True, env=env,
+        start_new_session=True, env=dict(env, QMS_FOLD_PAUSE_S="3.0"),
     )
     landed = None
     t0 = time.monotonic()
@@ -755,7 +746,7 @@ def _pipeline_midfold_kill(args) -> int:
     proc = subprocess.Popen(
         child_base + ["--run-seconds", str(int(rest) + 120),
                       "--phase", "post-midfold"],
-        start_new_session=True,
+        start_new_session=True, env=env,
     )
     time.sleep(rest)
     open(stop_file, "w").close()
@@ -792,7 +783,7 @@ def _pipeline_flat(args) -> int:
     from quatrain_mapreduce_spark.streaming.hop import _start
     from quatrain_mapreduce_spark.streaming.pipeline import curate_dedup_stages
 
-    spark = _session("qms-soak-pipe-flat")
+    spark = lint_session()
     spark.sparkContext.setLogLevel("ERROR")
     keys, rate = args.keys, args.rate
     src = (
