@@ -409,6 +409,32 @@ def gopher_rules(df: DataFrame, text_col: str) -> DataFrame:
     return out.withColumn("passes", passes.cast("int"))
 
 
+def gopher_metrics_sql(toks: str) -> str:
+    """DuckDB select-list twin of ``gopher_rules``' four per-document
+    metrics over a token-list column ``toks``: ``n_tokens``,
+    ``mean_tok_len``, ``symbol_frac`` and ``stop_hits``. Written apart
+    from the Spark expressions so every oracle composed from it stays an
+    independent check of the operator; ``GOPHER_PASS_SQL`` is its pass
+    predicate."""
+    return f"""CAST(len({toks}) AS BIGINT) AS n_tokens,
+               CASE WHEN len({toks}) > 0
+                    THEN round(list_sum(list_transform({toks}, s -> CAST(length(s) AS BIGINT)))
+                               / CAST(len({toks}) AS DOUBLE), 4)
+                    ELSE 0.0 END AS mean_tok_len,
+               CASE WHEN len({toks}) > 0
+                    THEN round(len(list_filter({toks}, s -> NOT regexp_matches(s, '[a-zA-Z0-9]')))
+                               / CAST(len({toks}) AS DOUBLE), 4)
+                    ELSE 0.0 END AS symbol_frac,
+               CAST(len(list_intersect(list_distinct({toks}),
+                                       ['the', 'a', 'of', 'and', 'to'])) AS BIGINT) AS stop_hits"""
+
+
+GOPHER_PASS_SQL = """n_tokens BETWEEN 5 AND 100000
+          AND mean_tok_len BETWEEN 2 AND 12
+          AND symbol_frac < 0.1
+          AND stop_hits >= 2"""
+
+
 def _token_spans(text_col: str, k: int) -> F.Column:
     """Consecutive ``k``-token spans of a space-split text column — the ONE
     home for the span-building arithmetic dedup_spans and strip_boilerplate

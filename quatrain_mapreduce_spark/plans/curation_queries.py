@@ -15,8 +15,9 @@ from pyspark.sql import functions as F
 
 from quatrain_mapreduce_spark.catalog import load_table
 from quatrain_mapreduce_spark.operators.curation import (
-    EMAIL_RE, PHONE_RE, cap_per_domain, decontaminate, h16, portable_h16_sql,
-    repetition_stats, scrub_pii, stratified_sample, train_val_split,
+    EMAIL_RE, GOPHER_PASS_SQL, PHONE_RE, cap_per_domain, decontaminate,
+    gopher_metrics_sql, h16, portable_h16_sql, repetition_stats, scrub_pii,
+    stratified_sample, train_val_split,
 )
 from quatrain_mapreduce_spark.operators.text import STOPWORDS
 from quatrain_mapreduce_spark.registry import register
@@ -536,31 +537,17 @@ def corpus_shuffle_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "gopher_rules",
-    oracle="""
+    oracle=f"""
         WITH t AS (
             SELECT doc_id,
                    list_filter(string_split(text, ' '), x -> x <> '') AS toks
             FROM documents
         ), m AS (
-            SELECT doc_id,
-                   CAST(len(toks) AS BIGINT) AS n_tokens,
-                   CASE WHEN len(toks) > 0
-                        THEN round(list_sum(list_transform(toks, s -> CAST(length(s) AS BIGINT)))
-                                   / CAST(len(toks) AS DOUBLE), 4)
-                        ELSE 0.0 END AS mean_tok_len,
-                   CASE WHEN len(toks) > 0
-                        THEN round(len(list_filter(toks, s -> NOT regexp_matches(s, '[a-zA-Z0-9]')))
-                                   / CAST(len(toks) AS DOUBLE), 4)
-                        ELSE 0.0 END AS symbol_frac,
-                   CAST(len(list_intersect(list_distinct(toks),
-                                           ['the', 'a', 'of', 'and', 'to'])) AS BIGINT) AS stop_hits
+            SELECT doc_id, {gopher_metrics_sql('toks')}
             FROM t
         )
         SELECT doc_id, n_tokens, mean_tok_len, symbol_frac, stop_hits,
-               CAST(n_tokens BETWEEN 5 AND 100000
-                    AND mean_tok_len BETWEEN 2 AND 12
-                    AND symbol_frac < 0.1
-                    AND stop_hits >= 2 AS INT) AS passes
+               CAST({GOPHER_PASS_SQL} AS INT) AS passes
         FROM m
     """,
     doc="Gopher-style quality gate (Rae et al. '21 A1.1): token-count "
@@ -870,27 +857,13 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "curation_reject_reasons",
-    oracle="""
+    oracle=f"""
         WITH t AS (
             SELECT doc_id,
                    list_filter(string_split(text, ' '), x -> x <> '') AS toks
             FROM documents
         ), m AS (
-            SELECT doc_id,
-                   CAST(len(toks) AS BIGINT) AS n_tokens,
-                   CASE WHEN len(toks) > 0
-                        THEN round(list_sum(list_transform(toks,
-                                       s -> CAST(length(s) AS BIGINT)))
-                                   / CAST(len(toks) AS DOUBLE), 4)
-                        ELSE 0.0 END AS mean_tok_len,
-                   CASE WHEN len(toks) > 0
-                        THEN round(len(list_filter(toks,
-                                       s -> NOT regexp_matches(s, '[a-zA-Z0-9]')))
-                                   / CAST(len(toks) AS DOUBLE), 4)
-                        ELSE 0.0 END AS symbol_frac,
-                   CAST(len(list_intersect(list_distinct(toks),
-                            ['the', 'a', 'of', 'and', 'to'])) AS BIGINT)
-                     AS stop_hits
+            SELECT doc_id, {gopher_metrics_sql('toks')}
             FROM t
         ), flags AS (
             SELECT doc_id,
@@ -1521,19 +1494,11 @@ _TDP_CTES = f"""base AS (
             FROM evt
         ), gate AS (
             SELECT doc_id, source, text FROM (
-                SELECT doc_id, source, text,
-                       list_filter(string_split(text, ' '), x -> x <> '') AS toks
-                FROM base WHERE h % 10 <> 0)
-            WHERE len(toks) BETWEEN 5 AND 100000
-              AND (CASE WHEN len(toks) > 0
-                   THEN round(list_sum(list_transform(toks, s -> CAST(length(s) AS BIGINT)))
-                              / CAST(len(toks) AS DOUBLE), 4) ELSE 0.0 END)
-                  BETWEEN 2 AND 12
-              AND (CASE WHEN len(toks) > 0
-                   THEN round(len(list_filter(toks, s -> NOT regexp_matches(s, '[a-zA-Z0-9]')))
-                              / CAST(len(toks) AS DOUBLE), 4) ELSE 0.0 END) < 0.1
-              AND len(list_intersect(list_distinct(toks),
-                                     ['the', 'a', 'of', 'and', 'to'])) >= 2
+                SELECT doc_id, source, text, {gopher_metrics_sql('toks')} FROM (
+                    SELECT doc_id, source, text,
+                           list_filter(string_split(text, ' '), x -> x <> '') AS toks
+                    FROM base WHERE h % 10 <> 0))
+            WHERE {GOPHER_PASS_SQL}
         ), exact AS (
             SELECT doc_id, source, text FROM (
                 SELECT *, min(doc_id) OVER (PARTITION BY text) AS mn FROM gate)

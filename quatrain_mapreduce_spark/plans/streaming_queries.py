@@ -15,7 +15,8 @@ from pyspark.sql import functions as F
 
 from quatrain_mapreduce_spark.catalog import load_table
 from quatrain_mapreduce_spark.operators.curation import (
-    EMAIL_RE as _EMAIL_RE, PHONE_RE as _PHONE_RE,
+    EMAIL_RE as _EMAIL_RE, GOPHER_PASS_SQL, PHONE_RE as _PHONE_RE,
+    gopher_metrics_sql,
 )
 from quatrain_mapreduce_spark.registry import register
 from quatrain_mapreduce_spark.staging import (
@@ -490,18 +491,7 @@ def stream_jdbc_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
                    list_filter(string_split(text2, ' '), x -> x <> '') AS toks
             FROM inj
         ), m AS (
-            SELECT doc_id, source, text2,
-                   CAST(len(toks) AS BIGINT) AS n_tokens,
-                   CASE WHEN len(toks) > 0
-                        THEN round(list_sum(list_transform(toks, s -> CAST(length(s) AS BIGINT)))
-                                   / CAST(len(toks) AS DOUBLE), 4)
-                        ELSE 0.0 END AS mean_tok_len,
-                   CASE WHEN len(toks) > 0
-                        THEN round(len(list_filter(toks, s -> NOT regexp_matches(s, '[a-zA-Z0-9]')))
-                                   / CAST(len(toks) AS DOUBLE), 4)
-                        ELSE 0.0 END AS symbol_frac,
-                   CAST(len(list_intersect(list_distinct(toks),
-                                           ['the', 'a', 'of', 'and', 'to'])) AS BIGINT) AS stop_hits
+            SELECT doc_id, source, text2, {gopher}
             FROM t
         )
         SELECT doc_id, source,
@@ -510,11 +500,9 @@ def stream_jdbc_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
                md5(regexp_replace(regexp_replace(text2, '{email}', '<EMAIL>', 'g'),
                                   '{phone}', '<PHONE>', 'g')) AS fp
         FROM m
-        WHERE n_tokens BETWEEN 5 AND 100000
-          AND mean_tok_len BETWEEN 2 AND 12
-          AND symbol_frac < 0.1
-          AND stop_hits >= 2
-    """.format(email=_EMAIL_RE, phone=_PHONE_RE),
+        WHERE {gopher_pass}
+    """.format(email=_EMAIL_RE, phone=_PHONE_RE,
+               gopher=gopher_metrics_sql("toks"), gopher_pass=GOPHER_PASS_SQL),
     doc="Streaming ingestion-time curation: documents replayed as a 4-file "
         "stream; each micro-batch runs the STATELESS curation chain — "
         "synthetic-PII injection, Gopher quality gate, PII scrub — and "
@@ -935,25 +923,11 @@ _STREAM_TDP_ORACLE = """
                    lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS norm
             FROM documents
         ), m AS (
-            SELECT source, norm,
-                   CAST(len(toks) AS BIGINT) AS n_tokens,
-                   CASE WHEN len(toks) > 0
-                        THEN round(list_sum(list_transform(toks, s -> CAST(length(s) AS BIGINT)))
-                                   / CAST(len(toks) AS DOUBLE), 4)
-                        ELSE 0.0 END AS mean_tok_len,
-                   CASE WHEN len(toks) > 0
-                        THEN round(len(list_filter(toks, s -> NOT regexp_matches(s, '[a-zA-Z0-9]')))
-                                   / CAST(len(toks) AS DOUBLE), 4)
-                        ELSE 0.0 END AS symbol_frac,
-                   CAST(len(list_intersect(list_distinct(toks),
-                                           ['the', 'a', 'of', 'and', 'to'])) AS BIGINT) AS stop_hits
+            SELECT source, norm, {gopher}
             FROM t
         ), kept AS (
             SELECT DISTINCT source, norm FROM m
-            WHERE n_tokens BETWEEN 5 AND 100000
-              AND mean_tok_len BETWEEN 2 AND 12
-              AND symbol_frac < 0.1
-              AND stop_hits >= 2
+            WHERE {gopher_pass}
         ), ktoks AS (
             SELECT unnest(list_filter(string_split(norm, ' '), x -> x <> '')) AS tok
             FROM kept
@@ -985,6 +959,7 @@ def _stream_tdp_oracle() -> str:
     from quatrain_mapreduce_spark.operators.curation import portable_h16_sql
 
     return _STREAM_TDP_ORACLE.format(
+        gopher=gopher_metrics_sql("toks"), gopher_pass=GOPHER_PASS_SQL,
         h16_tok=portable_h16_sql("concat(tok,'|',i)"),
         h16_top=portable_h16_sql("concat(tp.tok,'|',i)"),
     )
@@ -1025,31 +1000,17 @@ def stream_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cms_serve_top20(norm_tokens(kept), cells)
 
 
-_WM_DEDUP_ORACLE = """
+_WM_DEDUP_ORACLE = f"""
     WITH t AS (
         SELECT doc_id, source, text,
                list_filter(string_split(text, ' '), x -> x <> '') AS toks
         FROM documents
     ), m AS (
-        SELECT doc_id, source, text,
-               CAST(len(toks) AS BIGINT) AS n_tokens,
-               CASE WHEN len(toks) > 0
-                    THEN round(list_sum(list_transform(toks, s -> CAST(length(s) AS BIGINT)))
-                               / CAST(len(toks) AS DOUBLE), 4)
-                    ELSE 0.0 END AS mean_tok_len,
-               CASE WHEN len(toks) > 0
-                    THEN round(len(list_filter(toks, s -> NOT regexp_matches(s, '[a-zA-Z0-9]')))
-                               / CAST(len(toks) AS DOUBLE), 4)
-                    ELSE 0.0 END AS symbol_frac,
-               CAST(len(list_intersect(list_distinct(toks),
-                                       ['the', 'a', 'of', 'and', 'to'])) AS BIGINT) AS stop_hits
+        SELECT doc_id, source, text, {gopher_metrics_sql('toks')}
         FROM t
     ), gated AS (
         SELECT doc_id, source, text FROM m
-        WHERE n_tokens BETWEEN 5 AND 100000
-          AND mean_tok_len BETWEEN 2 AND 12
-          AND symbol_frac < 0.1
-          AND stop_hits >= 2
+        WHERE {GOPHER_PASS_SQL}
     ), keyed AS (
         SELECT doc_id, source,
                md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fp

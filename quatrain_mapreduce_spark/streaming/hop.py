@@ -387,7 +387,6 @@ class OnlineAggregator:
         schema,
         agg_fn: Callable[[DataFrame], DataFrame],
         total_rows: int,
-        max_files_per_trigger: int = 1,
         work_dir: str | None = None,
     ):
         self.spark = spark
@@ -395,7 +394,6 @@ class OnlineAggregator:
         self.schema = schema
         self.agg_fn = agg_fn
         self.total_rows = total_rows
-        self.max_files_per_trigger = max_files_per_trigger
         self.work_dir = work_dir
         self.snapshots: list[tuple[float, str]] = []
         self.progress: list[dict] = []
@@ -404,7 +402,7 @@ class OnlineAggregator:
         """Read back a written snapshot (default: the latest)."""
         return self.spark.read.parquet(self.snapshots[i][1])
 
-    def run_incremental(self, on_snapshot: Callable[[float, DataFrame], None] | None = None) -> DataFrame:
+    def run_incremental(self) -> DataFrame:
         """Run the aggregate as one stateful query: the state store carries
         it across batches (per-batch cost O(batch + groups)).
         Returns the final snapshot as a DataFrame (== the exact batch answer
@@ -417,11 +415,11 @@ class OnlineAggregator:
 
         stream = (
             self.spark.readStream.schema(self.schema)
-            .option("maxFilesPerTrigger", self.max_files_per_trigger)
+            .option("maxFilesPerTrigger", 1)
             .parquet(self.source_path)
         )
         agg = self.agg_fn(stream)
-        total, spark = self.total_rows, self.spark
+        total = self.total_rows
         raw: list[tuple[int, str]] = []  # (batch_id, snapshot path)
 
         def per_batch(result_df: DataFrame, batch_id: int) -> None:
@@ -492,9 +490,6 @@ class OnlineAggregator:
                 "state_rows": sum(s.numRowsTotal for s in state),
                 "state_commit_ms": sum(s.commitTimeMs for s in state),
             })
-        if on_snapshot is not None:
-            for progress, path in self.snapshots:
-                on_snapshot(progress, spark.read.parquet(path))
         if not self.snapshots:
             return None
         return self.spark.read.parquet(self.snapshots[-1][1])

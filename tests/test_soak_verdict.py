@@ -1,6 +1,7 @@
-"""Unit pins for the pipeline-flat soak's BOUNDED/GROWING criterion
-(tools/soak_stream.pipeline_flat_verdict) — the pure function both the
-live run and `--mode reverdict` apply.
+"""Unit pins for the soak verdicts: the pipeline-flat soak's BOUNDED/
+GROWING criterion (tools/soak_stream.pipeline_flat_verdict) — the pure
+function both the live run and `--mode reverdict` apply — and the
+sessions flat soak's FLAT/GROWING/TOO_SHORT criterion (flat_verdict).
 
 Why this exists: three consecutive rounds of long soaks found calibration
 bugs in the VERDICT machinery rather than the engine (r11 sawtooth-vs-
@@ -17,7 +18,7 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "tools"))
 
-from soak_stream import pipeline_flat_verdict  # noqa: E402
+from soak_stream import flat_verdict, pipeline_flat_verdict  # noqa: E402
 
 KEYS, RATE, W, TOL = 10_000, 500, 30, 1.5
 # horizon = 3*(30+W) = 180 s; rows must sit past it to count
@@ -134,3 +135,62 @@ def test_reverdict_cli_matches_function(tmp_path):
     assert doc["verdict"] == "BOUNDED"
     assert doc["post_warmup_batches"] == 40
     assert doc["max_input_rows_post"] == 3_000
+
+
+# flat_verdict: gap 10 + watermark 30 -> horizon 120 s
+GAP, FW = 10, 30
+
+
+def _flat_row(i, state, removed=100):
+    return {"batch": i, "state_rows": state, "rows_removed": removed,
+            "wall_s": 130.0 + 5.0 * i}
+
+
+def _flat(rows):
+    return flat_verdict(rows, gap_seconds=GAP, watermark_seconds=FW,
+                        tolerance=TOL)
+
+
+def test_flat_plateau_is_flat():
+    doc = _flat([_flat_row(i, 8_000 + (i % 3) * 500) for i in range(20)])
+    assert doc["verdict"] == "FLAT"
+    assert doc["median_state_rows"] == 8_500
+    assert doc["worst_late_state_rows"] == 9_000
+    assert doc["watermark_evicts"]
+
+
+def test_flat_staircase_is_growing():
+    """State climbing one block per rotation: the late half outgrows
+    tolerance x the post-warmup median."""
+    doc = _flat([_flat_row(i, 2_000 * (i + 1)) for i in range(20)])
+    assert doc["verdict"] == "GROWING"
+    assert doc["late_over_median"] > TOL
+
+
+def test_flat_without_evictions_is_growing():
+    doc = _flat([_flat_row(i, 8_000, removed=0) for i in range(20)])
+    assert doc["verdict"] == "GROWING"
+    assert not doc["watermark_evicts"]
+
+
+def test_flat_too_few_post_warmup_rows_is_too_short():
+    warm = [dict(_flat_row(i, 8_000), wall_s=5.0 * (i + 1)) for i in range(24)]
+    doc = _flat(warm + [_flat_row(i, 8_000) for i in range(24, 29)])
+    assert doc == {"verdict": "TOO_SHORT", "batches": 29}
+
+
+def test_flat_soak_deletes_its_workdir(tmp_path):
+    """A run ending without a correctness fault (here TOO_SHORT: 12 s is
+    far inside the warmup horizon) removes its qms_soak_* workdir, the
+    child's checkpoint, sink and scratch dirs included."""
+    tmp = tmp_path / "t"
+    tmp.mkdir()
+    out = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "soak_stream.py"),
+         "--mode", "flat", "--minutes", "0.2"],
+        capture_output=True, text=True, timeout=300,
+        env=dict(os.environ, TMPDIR=str(tmp)),
+    )
+    assert out.returncode == 1, out.stderr[-2000:]
+    assert json.loads(out.stdout.strip().splitlines()[-1])["verdict"] == "TOO_SHORT"
+    assert not [n for n in os.listdir(tmp) if n.startswith("qms_soak_")]
