@@ -10,29 +10,22 @@ group-by-key — SemanticAnalyzer.java:747); this is an engine extension.
 Algorithm: alternating large-star / small-star contraction (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", 2014) — O(log²) rounds
 regardless of graph diameter, every round two shuffles (a groupBy-min and a
-join), no driver-side graph state. Each round ends in an eager
-``localCheckpoint`` to truncate lineage — an iterative self-join otherwise
-compounds the plan exponentially and re-executes prior rounds on every
-action. On a cluster, swap localCheckpoint for a reliable checkpoint dir;
-the call site is the single place that changes.
-
-Convergence is detected by an edge-set fingerprint (count + sum of
-xxhash64(u,v)) — O(edges) with no driver-side collection, robust enough for
-a fixed-point check (a collision would need two consecutive edge sets with
-equal count AND colliding hash sums). The fingerprint rides the checkpoint
-job itself via ``observe()`` (r13 optimization): each round is ONE action —
-the eager localCheckpoint materializes the round's edges and the
-observation aggregates count/hash-sum on the rows as they stream through,
-replacing the previous per-round second job (a separate collect re-reading
-the checkpointed partitions; measured ~1 s across the ~4 rounds of the
-bench's near-dup graphs, and one fewer scheduler round-trip per iteration
-at any scale).
+join), no driver-side graph state. The rounds run through the graph tier's
+superstep kernel (operators/graph.py ``_supersteps``) in fixpoint mode: each
+round is one eager checkpoint job that cuts the lineage (an iterative
+self-join otherwise compounds the plan exponentially and re-executes prior
+rounds on every action) and fingerprints the edge set on the way through
+(count + sum of xxhash64(u, v)); the contraction stops when two
+consecutive edge sets fingerprint equal, and RAISES if the round cap comes
+first — a capped contraction is a wrong labeling, not a partial one.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from quatrain_mapreduce_spark.operators.graph import _supersteps
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -63,24 +56,12 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return nbrs.union(selfs).where(F.col("u") != F.col("v")).distinct()
 
 
-def _fingerprint_obs(edges: DataFrame, name: str) -> tuple[DataFrame, Observation]:
-    """Attach the edge-set fingerprint (count + xxhash64 sum) as an
-    ``observe`` node so it is computed BY the next action over ``edges``
-    (the round's eager checkpoint) instead of a second job. The sum rides
-    in decimal(38,0): a raw int64 sum of xxhash64 overflows under ANSI
-    mode after a handful of edges; decimal holds ~10^19 edges' worth."""
-    obs = Observation(name)
-    h = F.xxhash64("u", "v").cast("decimal(38,0)")
-    return edges.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum(h), F.lit(0).cast("decimal(38,0)")).alias("h"),
-    ), obs
+def _star_round(edges: DataFrame, _: int) -> DataFrame:
+    """One contraction round: large-star, then small-star."""
+    return _small_star(_large_star(edges))
 
 
-def connected_components(
-    edges: DataFrame, src: str = "u", dst: str = "v", max_iter: int = 25
-) -> DataFrame:
+def connected_components(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
     """Component labels for an undirected edge list.
 
     Returns (node, root) for every node appearing in ``edges``, where root is
@@ -90,8 +71,8 @@ def connected_components(
     nodes appearing only in self-loop edges (review finding). The input
     need not be deduplicated or symmetric.
 
-    ``max_iter`` is a safety bound only — star contraction converges in
-    O(log² n) alternations (near-dup graphs: almost always ≤ 4).
+    The 25-round cap is a safety bound only — star contraction converges
+    in O(log² n) alternations (near-dup graphs: almost always ≤ 4).
     """
     from pyspark.sql.types import NumericType
 
@@ -111,27 +92,9 @@ def connected_components(
     loop_only = (
         raw.where(F.col("u") == F.col("v")).select("u").distinct()
     )
-    e = (
-        raw.where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    e = _supersteps(
+        raw.where(F.col("u") != F.col("v")).distinct(), _star_round, 25, fixpoint=True
     )
-    prev: tuple[int, int] | None = None
-    for i in range(max_iter):
-        # ONE action per round: the eager checkpoint materializes the
-        # round's edges, and the observe node fingerprints the rows as they
-        # stream through it. (A LAZY checkpoint folding everything into one
-        # later action re-plans the round inside the agg job — measured
-        # slower in r12; a separate fingerprint collect after the eager
-        # checkpoint was the r12 shape — one extra job per round, measured
-        # ~1 s slower across the bench graphs in r13.)
-        nxt, obs = _fingerprint_obs(_small_star(_large_star(e)), f"cc_round_{i}")
-        e = nxt.localCheckpoint(eager=True)
-        m = obs.get  # already populated by the checkpoint's own job
-        cur = (int(m["n"]), int(m["h"]))
-        if cur == prev:  # fixed point of the (large∘small)-star round
-            break
-        prev = cur
     # converged: e is a star set oriented (node > root); roots label themselves
     roots = e.select(F.col("v").alias("u"), F.col("v")).distinct()
     labeled = e.union(roots)

@@ -18,11 +18,22 @@ Scale design (the part that matters at 100 TB):
   neighbors => 5*10^11 wedges) cannot happen.
 - The closing check is one more hash join of wedges against oriented edges.
   Total: 3 shuffles, all equi-key, no driver state, no iteration.
+
+The iterative operators — BFS, k-core, LPA and PageRank here, connected
+components in operators/components.py — share one superstep kernel,
+``_supersteps`` (Pregel supersteps as dataflow rounds with lineage cut by
+checkpointing, as in GraphX): each round is one eager ``localCheckpoint``
+job carrying an ``observe``d fingerprint, the superseded round's
+checkpoint is released, and a fixpoint loop that hits its round cap
+raises. On a cluster, swap localCheckpoint for a reliable checkpoint dir:
+the kernel is the one call site for all five operators.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -33,8 +44,8 @@ def co_purchase_edges(events: DataFrame) -> DataFrame:
     triangles, BFS, k-core, LPA, PageRank, summary) — seven queries
     previously inlined this construction verbatim, and a drift in the
     item-key formula at one site would silently give that query a
-    different graph (review finding). Every oracle still re-derives the
-    edges independently in SQL.
+    different graph (review finding). Every oracle re-derives the edges
+    independently in SQL, from ``CO_PURCHASE_EDGES_SQL``.
 
     Integer `div`, not `/` + cast — double division of an ~1e15 epoch
     loses ulps exactly at day boundaries. Returns (src, dst), src < dst,
@@ -61,6 +72,21 @@ def co_purchase_edges(events: DataFrame) -> DataFrame:
         .select(F.col("x.u").alias("src"), F.col("y.u").alias("dst"))
         .distinct()
     )
+
+
+# DuckDB twin of ``co_purchase_edges`` for the graph oracles: the CTE pair
+# ``b`` (user, item) and ``e`` (a, b) with a < b, composed as
+# ``WITH {CO_PURCHASE_EDGES_SQL}, ...``. Written apart from the Spark
+# expressions so every oracle built on it stays an independent check.
+CO_PURCHASE_EDGES_SQL = """b AS (
+            SELECT DISTINCT user_id AS u,
+                   CAST(json_extract_string(props, '$.k') AS INT) * 100
+                     + CAST(epoch_us(ts) // 86400000000 AS INT) % 30 AS item
+            FROM events WHERE event_type = 'purchase'
+        ), e AS (
+            SELECT DISTINCT x.u AS a, y.u AS b
+            FROM b x JOIN b y ON x.item = y.item AND x.u < y.u
+        )"""
 
 
 def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -137,74 +163,99 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
     )
 
 
-def _symmetric(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    """The persisted undirected edge list ``(a, b)``: each edge in both
-    directions, once. The caller unpersists it."""
-    return edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionAll(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    ).distinct().persist()
+def _symmetric(edges: DataFrame) -> DataFrame:
+    """The undirected edge list ``(a, b)`` of a ``(src, dst)`` frame: each
+    edge in both directions, once."""
+    return edges.select(F.col("src").alias("a"), F.col("dst").alias("b")).unionAll(
+        edges.select(F.col("dst").alias("a"), F.col("src").alias("b"))
+    ).distinct()
 
 
-def bfs_distances(
-    edges: DataFrame,
-    source_expr,
-    max_hops: int = 3,
-    src: str = "src",
-    dst: str = "dst",
+def _supersteps(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    rounds: int,
+    fixpoint: bool = False,
 ) -> DataFrame:
+    """The graph tier's one round loop: ``state``, then ``step(state, i)``
+    for ``i`` in ``range(rounds)``, each materialized by ONE eager
+    ``localCheckpoint`` job that also computes the state's ``observe``d
+    fingerprint (row count + decimal(38,0) sum of xxhash64 over all
+    columns; a raw int64 sum overflows under ANSI after a few rows). Once a
+    successor is materialized, the superseded checkpoint's RDD is
+    unpersisted, so only the returned state stays persisted and no round's
+    plan is more than one step deep.
+
+    ``fixpoint=True`` stops at the first round whose fingerprint equals its
+    predecessor's (a false stop needs equal counts AND colliding hash sums)
+    and raises if ``rounds`` pass without one: a capped contraction or peel
+    is a wrong answer, not a partial one. A step keeps its columns in one
+    order — the fingerprint hashes them positionally.
+    """
+
+    def materialize(df: DataFrame) -> tuple[DataFrame, tuple]:
+        obs = Observation()
+        h = F.xxhash64(*df.columns).cast("decimal(38,0)")
+        out = df.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.sum(h), F.lit(0).cast("decimal(38,0)")).alias("h"),
+        ).localCheckpoint(eager=True)
+        m = obs.get  # populated by the checkpoint's own job
+        return out, (m["n"], m["h"])
+
+    def release(df: DataFrame) -> None:
+        df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+    state, fp = materialize(state)
+    for i in range(rounds):
+        try:
+            nxt, nfp = materialize(step(state, i))
+        finally:
+            release(state)
+        state = nxt
+        if fixpoint and nfp == fp:
+            return state
+        fp = nfp
+    if fixpoint:
+        release(state)
+        raise RuntimeError(f"no fixpoint within rounds={rounds}")
+    return state
+
+
+def bfs_distances(edges: DataFrame, source_expr, max_hops: int = 3) -> DataFrame:
     """Bounded-hop BFS: (vertex, dist) for every vertex within ``max_hops``
     of the source. ``source_expr`` is a 1-row 1-column DataFrame holding the
     source vertex (data-derived sources stay inside the plan — no collect).
 
-    Frontier-style iteration, unrolled ``max_hops`` times (fixed depth =
-    deterministic plan; convergence-driven iteration with checkpointing is
-    operators/components.py's job): each hop joins the CURRENT FRONTIER
-    ONLY (never the full visited set) against the symmetrized edge list,
-    anti-joins out already-visited vertices, and persists the small
-    frontier/visited frames — per-hop cost is O(frontier-adjacent edges),
-    the textbook BFS work bound.
+    One superstep per hop over the state ``visited(vertex, dist)``: the
+    frontier is ``dist == i``, joined (never the full visited set) against
+    the symmetrized edge list, with already-visited vertices anti-joined
+    out — per-hop cost is O(frontier-adjacent edges), the textbook BFS
+    work bound.
     """
-    # Persist the symmetrized edge list: every hop joins against it, and
-    # without the persist each hop's plan re-derives it from the caller's
-    # edge construction (for the co-purchase graph, a full self-join) —
-    # 3x the work and a plan tree that grows per hop.
-    sym = _symmetric(edges, src, dst)
+    # every hop joins the symmetrized edges: persisted, they derive once
+    # from the caller's edge construction (a self-join for co-purchase)
+    sym = _symmetric(edges).persist()
 
-    source = source_expr.toDF("vertex").select(
-        "vertex", F.lit(0).alias("dist")
-    )
-    visited = source.persist()
-    interim = [visited]
-    frontier = visited
-    for hop in range(1, max_hops + 1):
-        nxt = (
+    def hop(visited: DataFrame, i: int) -> DataFrame:
+        frontier = visited.where(F.col("dist") == i)
+        reached = (
             frontier.join(sym, frontier.vertex == sym.a)
             .select(F.col("b").alias("vertex"))
             .distinct()
             .join(visited, "vertex", "left_anti")
-            .select("vertex", F.lit(hop).alias("dist"))
         )
-        visited = visited.unionAll(nxt).persist()
-        interim.append(visited)
-        frontier = nxt
-    # materialize the final distance table once, then release the edge
-    # cache and every per-hop frame — the lpa/pagerank release discipline
-    # (leaving one persisted frame per hop per call leaked cache into
-    # long-lived sessions; the suite-level clearCache was the bandaid)
-    visited.count()
-    for f in interim[:-1]:
-        f.unpersist()
-    sym.unpersist()
-    return visited
+        return visited.unionAll(reached.select("vertex", F.lit(i + 1).alias("dist")))
+
+    try:
+        source = source_expr.toDF("vertex").select("vertex", F.lit(0).alias("dist"))
+        return _supersteps(source, hop, max_hops)
+    finally:
+        sym.unpersist()
 
 
-def k_core_vertices(
-    edges: DataFrame,
-    k: int,
-    max_iter: int = 100,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def k_core_vertices(edges: DataFrame, k: int) -> DataFrame:
     """k-core decomposition membership: the maximal subgraph in which every
     vertex has degree >= k, found by iterative peeling (Matula & Beck 1983;
     the Batagelj-Zaversnik sequential algorithm's distributed fixpoint
@@ -215,56 +266,30 @@ def k_core_vertices(
     (reachability), triangles (local clustering) — k-core is the global
     density primitive behind community seeding and spam-farm detection.
 
-    Scale design: each peel round is one map-combinable degree count over
-    the LIVE edge set plus two broadcast-able anti-joins removing the
-    sub-k vertices' edges; work per round is proportional to the remaining
-    edges. The loop exits on the first round that removes nothing (the
-    fixpoint check is a 1-row count, the components-convergence
-    convention, not per-row driver state); real graphs peel in a handful
-    of rounds, but chain-shaped shells peel only their endpoints per
-    round, so convergence is NOT guaranteed inside ``max_iter`` — if the
-    cap is hit mid-peel the function RAISES rather than silently
-    returning a non-core (a membership set with sub-k vertices would
-    violate the contract the callers and the pure-Python parity test
-    assume).
+    Scale design: the superstep state is the LIVE edge set; each peel round
+    is one map-combinable degree count plus two anti-joins removing the
+    sub-k vertices' edges, so work per round is proportional to the
+    remaining edges. The round that removes nothing is the fixpoint.
+    Chain-shaped shells peel only their endpoints per round, so past 100
+    rounds the kernel RAISES rather than return a membership set with
+    sub-k vertices.
     """
-    sym = _symmetric(edges, src, dst)
 
-    live = sym
-    converged = False
-    for _ in range(max_iter):
-        deg = live.groupBy("a").agg(F.count("*").alias("deg"))
-        bad = deg.where(F.col("deg") < k).select("a").persist()
-        if bad.limit(1).count() == 0:
-            bad.unpersist()
-            converged = True
-            break
-        nxt = (
+    def peel(live: DataFrame, _: int) -> DataFrame:
+        bad = live.groupBy("a").agg(F.count("*").alias("deg")) \
+                  .where(F.col("deg") < k).select("a")
+        return (
             live.join(bad, "a", "left_anti")
             .join(bad.withColumnRenamed("a", "b"), "b", "left_anti")
-            .persist()
+            .select("a", "b")
         )
-        nxt.count()  # materialize before dropping the parent cache
-        live.unpersist()
-        bad.unpersist()
-        live = nxt
-    if not converged:
-        raise RuntimeError(
-            f"k_core_vertices: peeling did not reach the fixpoint within "
-            f"max_iter={max_iter} rounds — the live set still contains "
-            f"sub-{k} vertices; raise max_iter (chain-shaped shells peel "
-            f"O(n) rounds)"
-        )
+
+    live = _supersteps(_symmetric(edges), peel, 100, fixpoint=True)
     return live.groupBy("a").agg(F.count("*").cast("bigint").alias("core_degree")) \
                .select(F.col("a").alias("vertex"), "core_degree")
 
 
-def lpa_communities(
-    edges: DataFrame,
-    rounds: int = 5,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def lpa_communities(edges: DataFrame, rounds: int = 5) -> DataFrame:
     """Label-propagation community detection (Raghavan et al. 2007), made
     DETERMINISTIC: synchronous rounds (every vertex updates from the same
     previous labeling — classic LPA's asynchronous sweep is order-
@@ -275,90 +300,76 @@ def lpa_communities(
     the components operator remains the exact-connectivity tier, this is
     the density-community tier.
 
-    Scale shape per round: one join of the edge list against the
-    vertex-label table (both keyed by vertex — co-partitioned after the
-    first round), one map-combinable (vertex, label) count, one max_by
-    argmax agg. State is ONE label per vertex, persisted and swapped each
-    round; no driver-side graph.
+    Scale shape per superstep: one join of the edge list against the
+    vertex-label table (both keyed by vertex), one map-combinable
+    (vertex, label) count, one max_by argmax agg. State is ONE label per
+    vertex; no driver-side graph.
     """
-    sym = _symmetric(edges, src, dst)
+    sym = _symmetric(edges).persist()
 
-    labels = sym.select(F.col("a").alias("vertex")).distinct() \
-                .withColumn("label", F.col("vertex")).persist()
-    for _ in range(rounds):
-        nbr = sym.join(labels, sym["b"] == labels["vertex"]) \
-                 .select("a", "label")
+    def propagate(labels: DataFrame, _: int) -> DataFrame:
+        nbr = sym.join(labels, sym["b"] == labels["vertex"]).select("a", "label")
         counts = nbr.groupBy("a", "label").agg(F.count("*").alias("c"))
-        nxt = counts.groupBy("a").agg(
+        return counts.groupBy("a").agg(
             F.expr("max_by(label, struct(c, -label))").alias("label")
-        ).select(F.col("a").alias("vertex"), "label").persist()
-        nxt.count()
-        labels.unpersist()
-        labels = nxt
-    # final labels are persisted+materialized; the edge cache has no
-    # further consumer — release it instead of leaking it into the session
-    sym.unpersist()
+        ).select(F.col("a").alias("vertex"), "label")
+
+    try:
+        labels = sym.select(F.col("a").alias("vertex")).distinct() \
+                    .withColumn("label", F.col("vertex"))
+        labels = _supersteps(labels, propagate, rounds)
+    finally:
+        sym.unpersist()
     return labels.select("vertex", F.col("label").alias("community"))
 
 
-def pagerank_fixed_point(
-    edges: DataFrame,
-    iters: int = 5,
-    scale: int = 10**9,
-    damp_num: int = 17,
-    damp_den: int = 20,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def pagerank_fixed_point(edges: DataFrame, iters: int = 5, scale: int = 10**9) -> DataFrame:
     """PageRank (Brin & Page 1998) over the symmetrized graph, computed in
     EXACT FIXED-POINT INTEGER arithmetic: ranks are BIGINTs scaled by
-    ``scale``, the damping factor rides as the integer fraction
-    ``damp_num/damp_den`` (default 17/20 = 0.85), and each neighbor
-    contribution is ``(rank * damp_num) div (damp_den * degree)`` — integer
-    division, identical in every engine. Classic float PageRank is
-    partition-order ulp-nondeterministic (the sum over in-neighbors
-    reassociates); the fixed-point form makes 5 iterations of an iterative
-    centrality hash-checkable against an independent SQL unrolling — the
-    trend_slope lesson applied to iterative graph state.
+    ``scale``, the damping factor rides as the integer fraction 17/20
+    (= 0.85), and each neighbor contribution is
+    ``(rank * 17) div (20 * degree)`` — integer division, identical in
+    every engine. Classic float PageRank is partition-order
+    ulp-nondeterministic (the sum over in-neighbors reassociates); the
+    fixed-point form makes 5 iterations of an iterative centrality
+    hash-checkable against an independent SQL unrolling — the trend_slope
+    lesson applied to iterative graph state.
 
     Returns (vertex, rank_fp) with rank_fp in units of 1/scale. Mass
     sum(rank_fp) is bounded by n_vertices * scale, so pick ``scale`` such
-    that n * scale * damp_num fits int64 (1e9 is safe to ~5e8 vertices; a
+    that n * scale * 17 fits int64 (1e9 is safe to ~5e8 vertices; a
     100 TB web graph drops to 1e6 and keeps 6 exact decimal digits).
 
-    Scale design: degree is computed ONCE; each iteration is one hash join
+    Scale design: degree is computed ONCE; each superstep is one hash join
     of the rank table against the edge list on the source vertex plus one
-    map-combinable sum keyed by destination — the Pregel superstep shape.
-    Rank state is one BIGINT per vertex, persisted and swapped per round;
-    edges stay cached with one fixed partitioning so every iteration
-    reuses the same shuffle layout. No dangling-mass term is needed: the
-    symmetrized graph has no zero-out-degree vertices by construction.
+    map-combinable sum keyed by destination. Rank state is one BIGINT per
+    vertex; edges and degrees stay cached across supersteps. No
+    dangling-mass term is needed: the symmetrized graph has no
+    zero-out-degree vertices by construction.
     """
-    sym = _symmetric(edges, src, dst)
-
+    sym = _symmetric(edges).persist()
     deg = sym.groupBy("a").agg(F.count("*").alias("d")).persist()
-    teleport = scale * (damp_den - damp_num) // damp_den
-    ranks = deg.select(F.col("a").alias("v"), F.lit(scale).cast("bigint").alias("r"))
-    for _ in range(iters):
+    teleport = scale * (20 - 17) // 20
+
+    def iterate(ranks: DataFrame, _: int) -> DataFrame:
         share = (
             ranks.alias("rk")
             .join(deg.alias("dg"), F.col("rk.v") == F.col("dg.a"))
             .select(
                 F.col("rk.v").alias("sv"),
-                F.expr(f"(rk.r * {damp_num}) div ({damp_den} * dg.d)").alias("c"),
+                F.expr("(rk.r * 17) div (20 * dg.d)").alias("c"),
             )
         )
-        nxt = (
+        return (
             share.join(sym.alias("ed"), F.col("sv") == F.col("ed.a"))
             .groupBy(F.col("ed.b").alias("v"))
             .agg((F.lit(teleport) + F.sum("c")).cast("bigint").alias("r"))
-            .persist()
         )
-        nxt.count()
-        ranks.unpersist()
-        ranks = nxt
-    # final ranks are persisted+materialized; edge/degree caches have no
-    # further consumer — release them instead of leaking into the session
-    sym.unpersist()
-    deg.unpersist()
+
+    try:
+        ranks = deg.select(F.col("a").alias("v"), F.lit(scale).cast("bigint").alias("r"))
+        ranks = _supersteps(ranks, iterate, iters)
+    finally:
+        sym.unpersist()
+        deg.unpersist()
     return ranks.select(F.col("v").alias("vertex"), F.col("r").alias("rank_fp"))

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from quatrain_mapreduce_spark.catalog import load_table
-from quatrain_mapreduce_spark.operators.graph import co_purchase_edges
+from quatrain_mapreduce_spark.operators.graph import CO_PURCHASE_EDGES_SQL, co_purchase_edges
 from quatrain_mapreduce_spark.operators.util import sql_hour_of_day_us
 from quatrain_mapreduce_spark.registry import register
 
@@ -491,16 +491,8 @@ def heavy_hitters_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "triangle_count",
-    oracle="""
-        WITH b AS (
-            SELECT DISTINCT user_id AS u,
-                   CAST(json_extract_string(props, '$.k') AS INT) * 100
-                     + CAST(epoch_us(ts) // 86400000000 AS INT) % 30 AS item
-            FROM events WHERE event_type = 'purchase'
-        ), e AS (
-            SELECT DISTINCT x.u AS a, y.u AS b
-            FROM b x JOIN b y ON x.item = y.item AND x.u < y.u
-        ), tri AS (
+    oracle=f"""
+        WITH {CO_PURCHASE_EDGES_SQL}, tri AS (
             SELECT e1.a AS v1, e1.b AS v2, e2.b AS v3
             FROM e e1 JOIN e e2 ON e1.b = e2.a
                       JOIN e e3 ON e1.a = e3.a AND e2.b = e3.b
@@ -956,16 +948,8 @@ def chi_square_type_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_bfs_reach",
-    oracle="""
-        WITH RECURSIVE b AS (
-            SELECT DISTINCT user_id AS u,
-                   CAST(json_extract_string(props, '$.k') AS INT) * 100
-                     + CAST(epoch_us(ts) // 86400000000 AS INT) % 30 AS item
-            FROM events WHERE event_type = 'purchase'
-        ), e AS (
-            SELECT DISTINCT x.u AS a, y.u AS b
-            FROM b x JOIN b y ON x.item = y.item AND x.u < y.u
-        ), s AS (
+    oracle=f"""
+        WITH RECURSIVE {CO_PURCHASE_EDGES_SQL}, s AS (
             SELECT min(a) AS sv FROM e
         ), walk AS (
             SELECT sv AS v, 0 AS d FROM s
@@ -983,8 +967,8 @@ def chi_square_type_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
         "hops with their shortest-path distance. Frontier iteration "
         "unrolled 3x — each hop joins the CURRENT FRONTIER only against "
         "the edge list and anti-joins the visited set, so per-hop cost is "
-        "frontier-adjacent edges (the BFS work bound), with "
-        "frontier/visited persisted between hops; the data-derived source "
+        "frontier-adjacent edges (the BFS work bound), one checkpointed "
+        "superstep per hop; the data-derived source "
         "vertex stays inside the plan (no collect). The oracle is "
         "DuckDB's recursive CTE, the same independent formulation the "
         "dedup_components family is held to. Completes the graph tier: "
@@ -1134,23 +1118,12 @@ def _edge_h16_sql() -> str:
     return portable_h16_sql("(a * 1000000 + b)")
 
 
-from quatrain_mapreduce_spark.operators.curation import portable_h16_sql as _p16
-
-
 @register(
     "triangle_count_sampled",
     oracle=f"""
-        WITH bi AS (
-            SELECT DISTINCT user_id AS u,
-                   CAST(json_extract_string(props, '$.k') AS INT) * 100
-                     + CAST(epoch_us(ts) // 86400000000 AS INT) % 30 AS item
-            FROM events WHERE event_type = 'purchase'
-        ), e AS (
-            SELECT DISTINCT x.u AS a, y.u AS b
-            FROM bi x JOIN bi y ON x.item = y.item AND x.u < y.u
-        ), s AS (
+        WITH {CO_PURCHASE_EDGES_SQL}, s AS (
             SELECT a, b FROM e
-            WHERE {_p16("(a * 1000000 + b)")} % 4 = 0
+            WHERE {_edge_h16_sql()} % 4 = 0
         ), tri AS (
             SELECT count(*) AS t
             FROM s e1 JOIN s e2 ON e1.b = e2.a
@@ -2043,8 +2016,8 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "clustering), k-core (global density). Each round: one map-"
         "combinable degree count + two anti-joins dropping sub-k "
         "vertices' edges; per-round work shrinks with the live edge set, "
-        "early-exit on the first no-removal round (1-row count, the "
-        "components convergence convention). Output is (vertex, "
+        "and the first no-removal round is the fixpoint (one checkpoint "
+        "job per round, its fingerprint the test). Output is (vertex, "
         "core_degree) with degree measured INSIDE the core.",
     tags=("graph", "analytics"),
 )
@@ -2493,31 +2466,49 @@ def trend_break_slopes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "graph_summary",
-    oracle="""
-        WITH b AS (
-            SELECT DISTINCT user_id AS u,
-                   CAST(json_extract_string(props, '$.k') AS INT) * 100
-                     + CAST(epoch_us(ts) // 86400000000 AS INT) % 30 AS item
-            FROM events WHERE event_type = 'purchase'
-        ), e AS (
-            SELECT DISTINCT x.u AS a, y.u AS b
-            FROM b x JOIN b y ON x.item = y.item AND x.u < y.u
-        ), deg AS (
+# The exact statistics graph_summary and graph_summary_sampled share: the
+# oracles' degree CTE and four select-list columns over CO_PURCHASE_EDGES_SQL's
+# ``e``, and ``_degree_stats``, the Spark side, written apart from them.
+_DEGREE_SQL = """deg AS (
             SELECT v, CAST(count(*) AS BIGINT) AS d FROM (
                 SELECT a AS v FROM e UNION ALL SELECT b FROM e
             ) GROUP BY v
-        ), tri AS (
+        )"""
+_DEGREE_STATS_SQL = """CAST((SELECT count(*) FROM deg) AS BIGINT) AS n_vertices,
+               CAST((SELECT count(*) FROM e) AS BIGINT) AS n_edges,
+               CAST((SELECT max(d) FROM deg) AS BIGINT) AS max_degree,
+               CAST((SELECT sum(d * (d - 1) / 2) FROM deg) AS BIGINT)
+                 AS n_wedges"""
+
+
+def _degree_stats(edges: DataFrame) -> DataFrame:
+    """One row over a ``(src, dst)`` edge list: ``n_vertices``,
+    ``max_degree``, ``n_wedges`` (sum of C(degree, 2)) and ``n_edges`` —
+    each one map-combinable aggregate."""
+    deg = (
+        edges.select(F.col("src").alias("v"))
+        .unionAll(edges.select(F.col("dst").alias("v")))
+        .groupBy("v").agg(F.count("*").cast("bigint").alias("d"))
+    )
+    degstats = deg.agg(
+        F.count("*").cast("bigint").alias("n_vertices"),
+        F.max("d").cast("bigint").alias("max_degree"),
+        F.sum(F.col("d") * (F.col("d") - 1) / 2).cast("bigint")
+         .alias("n_wedges"),
+    )
+    ecount = edges.agg(F.count("*").cast("bigint").alias("n_edges"))
+    return degstats.crossJoin(F.broadcast(ecount))
+
+
+@register(
+    "graph_summary",
+    oracle=f"""
+        WITH {CO_PURCHASE_EDGES_SQL}, {_DEGREE_SQL}, tri AS (
             SELECT count(*) AS n_tri
             FROM e e1 JOIN e e2 ON e1.b = e2.a
                       JOIN e e3 ON e1.a = e3.a AND e2.b = e3.b
         )
-        SELECT CAST((SELECT count(*) FROM deg) AS BIGINT) AS n_vertices,
-               CAST((SELECT count(*) FROM e) AS BIGINT) AS n_edges,
-               CAST((SELECT max(d) FROM deg) AS BIGINT) AS max_degree,
-               CAST((SELECT sum(d * (d - 1) / 2) FROM deg) AS BIGINT)
-                 AS n_wedges,
+        SELECT {_DEGREE_STATS_SQL},
                CAST((SELECT n_tri FROM tri) AS BIGINT) AS n_triangles,
                floor((SELECT 3.0 * n_tri FROM tri)
                      / (SELECT CAST(sum(d * (d - 1) / 2) AS DOUBLE)
@@ -2550,25 +2541,13 @@ def graph_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it derives once instead of per consumer (28 event scans in the r13
     # plan census before this)
     edges = co_purchase_edges(ev).persist(StorageLevel.MEMORY_AND_DISK)
-    deg = (
-        edges.select(F.col("src").alias("v"))
-        .unionAll(edges.select(F.col("dst").alias("v")))
-        .groupBy("v").agg(F.count("*").cast("bigint").alias("d"))
-    )
-    degstats = deg.agg(
-        F.count("*").cast("bigint").alias("n_vertices"),
-        F.max("d").cast("bigint").alias("max_degree"),
-        F.sum(F.col("d") * (F.col("d") - 1) / 2).cast("bigint")
-         .alias("n_wedges"),
-    )
-    ecount = edges.agg(F.count("*").cast("bigint").alias("n_edges"))
     # a triangle-free graph yields an EMPTY per-vertex frame: sum() over it
     # is NULL, the oracle's count(*) is 0 — coalesce so the zero-triangle
     # case (real at small scale) reports 0 and a 0.0 coefficient, not NULL
     tri = triangle_counts(edges, "src", "dst").agg(
         (F.coalesce(F.sum("n_triangles"), F.lit(0)) / 3)
         .cast("bigint").alias("n_triangles"))
-    j = degstats.crossJoin(F.broadcast(ecount)).crossJoin(F.broadcast(tri))
+    j = _degree_stats(edges).crossJoin(F.broadcast(tri))
     return j.select(
         "n_vertices", "n_edges", "max_degree", "n_wedges", "n_triangles",
         (F.floor(
@@ -2581,31 +2560,15 @@ def graph_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "graph_summary_sampled",
     oracle=f"""
-        WITH bi AS (
-            SELECT DISTINCT user_id AS u,
-                   CAST(json_extract_string(props, '$.k') AS INT) * 100
-                     + CAST(epoch_us(ts) // 86400000000 AS INT) % 30 AS item
-            FROM events WHERE event_type = 'purchase'
-        ), e AS (
-            SELECT DISTINCT x.u AS a, y.u AS b
-            FROM bi x JOIN bi y ON x.item = y.item AND x.u < y.u
-        ), deg AS (
-            SELECT v, CAST(count(*) AS BIGINT) AS d FROM (
-                SELECT a AS v FROM e UNION ALL SELECT b FROM e
-            ) GROUP BY v
-        ), s AS (
+        WITH {CO_PURCHASE_EDGES_SQL}, {_DEGREE_SQL}, s AS (
             SELECT a, b FROM e
-            WHERE {_p16("(a * 1000000 + b)")} % 4 = 0
+            WHERE {_edge_h16_sql()} % 4 = 0
         ), tri AS (
             SELECT count(*) AS t
             FROM s e1 JOIN s e2 ON e1.b = e2.a
                       JOIN s e3 ON e1.a = e3.a AND e2.b = e3.b
         )
-        SELECT CAST((SELECT count(*) FROM deg) AS BIGINT) AS n_vertices,
-               CAST((SELECT count(*) FROM e) AS BIGINT) AS n_edges,
-               CAST((SELECT max(d) FROM deg) AS BIGINT) AS max_degree,
-               CAST((SELECT sum(d * (d - 1) / 2) FROM deg) AS BIGINT)
-                 AS n_wedges,
+        SELECT {_DEGREE_STATS_SQL},
                CAST((SELECT t FROM tri) AS BIGINT) AS tri_sampled,
                CAST((SELECT t * 64 FROM tri) AS BIGINT) AS n_triangles_est,
                floor((SELECT 3.0 * t * 64 FROM tri)
@@ -2637,18 +2600,6 @@ def graph_summary_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same branch-point persist as graph_summary: degree x2, edge count
     # and the sampled triangle tier all read the one derived edge list
     edges = co_purchase_edges(ev).persist(StorageLevel.MEMORY_AND_DISK)
-    deg = (
-        edges.select(F.col("src").alias("v"))
-        .unionAll(edges.select(F.col("dst").alias("v")))
-        .groupBy("v").agg(F.count("*").cast("bigint").alias("d"))
-    )
-    degstats = deg.agg(
-        F.count("*").cast("bigint").alias("n_vertices"),
-        F.max("d").cast("bigint").alias("max_degree"),
-        F.sum(F.col("d") * (F.col("d") - 1) / 2).cast("bigint")
-         .alias("n_wedges"),
-    )
-    ecount = edges.agg(F.count("*").cast("bigint").alias("n_edges"))
     sampled = (
         edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .where(F.expr(_edge_h16_sql() + " % 4 = 0"))
@@ -2659,7 +2610,7 @@ def graph_summary_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.coalesce(F.sum("n_triangles"), F.lit(0)) / 3)
         .cast("bigint").alias("tri_sampled")
     )
-    j = degstats.crossJoin(F.broadcast(ecount)).crossJoin(F.broadcast(tri))
+    j = _degree_stats(edges).crossJoin(F.broadcast(tri))
     return j.select(
         "n_vertices", "n_edges", "max_degree", "n_wedges", "tri_sampled",
         (F.col("tri_sampled") * 64).cast("bigint").alias("n_triangles_est"),
@@ -2697,16 +2648,8 @@ def lpa_communities_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pagerank_scores",
-    oracle="""
-        WITH b AS (
-            SELECT DISTINCT user_id AS u,
-                   CAST(json_extract_string(props, '$.k') AS INT) * 100
-                     + CAST(epoch_us(ts) // 86400000000 AS INT) % 30 AS item
-            FROM events WHERE event_type = 'purchase'
-        ), e AS (
-            SELECT DISTINCT x.u AS a, y.u AS b
-            FROM b x JOIN b y ON x.item = y.item AND x.u < y.u
-        ), e0 AS (
+    oracle=f"""
+        WITH {CO_PURCHASE_EDGES_SQL}, e0 AS (
             SELECT a, b FROM e UNION ALL SELECT b AS a, a AS b FROM e
         ), deg AS (
             SELECT a AS v, CAST(count(*) AS BIGINT) AS d FROM e0 GROUP BY a

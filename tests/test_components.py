@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from quatrain_mapreduce_spark.operators.components import connected_components
@@ -151,3 +152,19 @@ def test_string_node_ids_supported(spark):
     got = {r["node"]: r["root"] for r in connected_components(df).collect()}
     assert got == {"doc-a": "doc-a", "doc-b": "doc-a", "doc-c": "doc-a",
                    "doc-x": "doc-x", "doc-y": "doc-x"}
+
+
+def test_capped_contraction_raises_naming_the_cap(spark):
+    """A fixpoint loop that hits its round cap raises instead of returning
+    the half-contracted edge set (which labeled the 64-node path with 62
+    roots at a cap of 1), and leaves no checkpoint persisted behind."""
+    from quatrain_mapreduce_spark.operators.components import _star_round
+    from quatrain_mapreduce_spark.operators.graph import _supersteps
+
+    path = spark.createDataFrame([(i, i + 1) for i in range(63)], "u long, v long")
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    before = rdds.size()
+    for cap in (1, 2):
+        with pytest.raises(RuntimeError, match=f"rounds={cap}"):
+            _supersteps(path, _star_round, cap, fixpoint=True)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before

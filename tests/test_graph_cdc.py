@@ -257,3 +257,33 @@ def test_pagerank_star_center_dominates(spark):
     assert out[0] == max(out.values())
     # leaves are symmetric: identical ranks
     assert len({out[i] for i in range(1, 9)}) == 1
+
+
+def test_graph_operators_leave_the_cache_clean(spark):
+    """Each iterative graph operator releases what it persisted (its edge
+    and degree caches, every superseded round) before it returns: the
+    session's cache manager stays empty, and the only new persistent RDD
+    is the checkpoint of the returned state."""
+    from quatrain_mapreduce_spark.operators.components import connected_components
+    from quatrain_mapreduce_spark.operators.graph import (
+        bfs_distances, k_core_vertices, lpa_communities, pagerank_fixed_point,
+    )
+
+    e = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)] + [(4, 5), (5, 6)]
+    edges = spark.createDataFrame(e, "src long, dst long")
+    calls = {
+        "bfs_distances": lambda: bfs_distances(edges, edges.agg(F.min("src"))),
+        "k_core_vertices": lambda: k_core_vertices(edges, k=3),
+        "lpa_communities": lambda: lpa_communities(edges),
+        "pagerank_fixed_point": lambda: pagerank_fixed_point(edges),
+        "connected_components": lambda: connected_components(edges, "src", "dst"),
+    }
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for name, call in calls.items():
+        before = spark.sparkContext._jsc.getPersistentRDDs().size()
+        out = call()
+        after = spark.sparkContext._jsc.getPersistentRDDs().size()
+        assert cache.isEmpty(), name
+        assert after - before <= 1, (name, before, after)
+        assert out.count() > 0, name

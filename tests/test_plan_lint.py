@@ -238,3 +238,22 @@ def test_hadoop_fs_resolution_lives_in_one_place():
             hits += [f"{os.path.relpath(path, pkg)}:{n}" for n, line in enumerate(fh, 1)
                      if "getFileSystem(" in line]
     assert len(hits) == 1 and hits[0].startswith(os.path.join("operators", "util.py") + ":"), hits
+
+
+def test_only_the_superstep_kernel_checkpoints():
+    """Every iterative round loop runs through ``operators.graph._supersteps``
+    (one eager checkpoint per round, the superseded one released): no other
+    package file calls ``localCheckpoint(``."""
+    import glob
+    import os
+
+    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                       "quatrain_mapreduce_spark")
+    hits = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, pkg)
+        if rel == os.path.join("operators", "graph.py"):
+            continue
+        with open(path) as fh:
+            hits += [f"{rel}:{n}" for n, line in enumerate(fh, 1) if "localCheckpoint(" in line]
+    assert not hits, hits
