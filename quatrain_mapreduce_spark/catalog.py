@@ -89,24 +89,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def normalize_event_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Normalize any physical representation of an event-time column to
-    TimestampType (LTZ) carrying the stored naive value as a UTC instant.
+def normalize_event_ts(df: DataFrame) -> DataFrame:
+    """Normalize any physical representation of the event-time column ``ts``
+    to TimestampType (LTZ) carrying the stored naive value as a UTC instant.
     Works on batch and streaming frames (deterministic expressions only).
     """
-    ts_type = dict(df.dtypes).get(ts_col)
+    ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":  # legacy TIMESTAMP(NANOS) generation
-        df = df.withColumn(ts_col, F.timestamp_micros(F.expr(f"{ts_col} div 1000")))
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif ts_type == "timestamp_ntz":
         # naive → UTC instant, independent of spark.sql.session.timeZone
         # (a bare cast — or to_utc_timestamp — would re-interpret the
         # naive value in session-local time first)
         df = df.withColumn(
-            ts_col,
+            "ts",
             F.timestamp_micros(
-                F.expr(
-                    f"timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', {ts_col})"
-                )
+                F.expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)")
             ),
         )
     return df

@@ -5,7 +5,7 @@ JOutputBuffer.java:1168) is automatic in Spark: every groupBy().agg() plans
 partial + final HashAggregate with Tungsten spilling, so these operators are
 plain declarative aggregations.
 
-- LongSumReducer (lib/LongSumReducer.java:32)            -> sum_per_key
+- LongSumReducer (lib/LongSumReducer.java:32)            -> groupBy().agg(sum) (salted_sum)
 - UniqValueCount (lib/aggregate/UniqValueCount.java)     -> uniq_value_count
 - ValueHistogram (lib/aggregate/ValueHistogram.java)     -> value_histogram
 - ValueAggregatorJob (lib/aggregate/ValueAggregatorJob.java) -> value_aggregator
@@ -16,11 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def sum_per_key(df: DataFrame, key: str, value: str) -> DataFrame:
-    """LongSumReducer: per-key sum with map-side combine (automatic)."""
-    return df.groupBy(key).agg(F.sum(value).alias("sum_value"))
 
 
 def uniq_value_count(df: DataFrame, key: str, value: str, approx: bool = False) -> DataFrame:
@@ -57,15 +52,13 @@ def value_histogram(df: DataFrame, key: str, value: str) -> DataFrame:
     )
 
 
-def value_aggregator(df: DataFrame, aggs: list[Column], group_by: list[str] | None = None) -> DataFrame:
-    """ValueAggregatorJob: many aggregates over one pass of the data.
+def value_aggregator(df: DataFrame, aggs: list[Column]) -> DataFrame:
+    """ValueAggregatorJob: many global aggregates over one pass of the data.
 
     The reference multiplexes "type:id"-tagged records through one
     combiner/reducer pair; in Spark a single agg() with N aggregate columns
     is one scan + one (partial-combined) shuffle.
     """
-    if group_by:
-        return df.groupBy(*group_by).agg(*aggs)
     return df.agg(*aggs)
 
 

@@ -62,14 +62,12 @@ def h16(id_col: str) -> F.Column:
     return F.expr(portable_h16_sql(id_col))
 
 
-def cms_probes(
-    tok_expr: str, d: int = 4, w: int = 1024, hash: str = "portable"
-) -> F.Column:
+def cms_probes(tok_expr: str, hash: str = "portable") -> F.Column:
     """Count-min probe array for a token expression: one (row-id, bucket)
-    struct per hash row, the '|i' salt making the d rows independent draws
-    of the hash. Shared by the batch (heavy_hitters_cms) and streaming
-    (stream_heavy_hitters) sketches so their cell tables are the identical
-    deterministic arithmetic.
+    struct per hash row, d = 4 rows of w = 1024 buckets, the '|i' salt
+    making the rows independent draws of the hash. Shared by the batch
+    (heavy_hitters_cms) and streaming (stream_heavy_hitters) sketches so
+    their cell tables are the identical deterministic arithmetic.
 
     ``hash='portable'`` (the oracled queries) uses the md5-nibble h16 that
     DuckDB replays verbatim; ``hash='xxhash64'`` is the production tier —
@@ -85,12 +83,12 @@ def cms_probes(
 
     def bucket(i: int) -> F.Column:
         if hash == "xxhash64":
-            return F.pmod(F.xxhash64(F.expr(tok_expr), F.lit(i)), F.lit(w))
-        return F.expr(portable_h16_sql(f"concat({tok_expr},'|{i}')")) % w
+            return F.pmod(F.xxhash64(F.expr(tok_expr), F.lit(i)), F.lit(1024))
+        return F.expr(portable_h16_sql(f"concat({tok_expr},'|{i}')")) % 1024
 
     return F.array(*[
         F.struct(F.lit(str(i)).alias("i"), bucket(i).cast("int").alias("b"))
-        for i in range(1, d + 1)
+        for i in range(1, 5)
     ])
 
 
@@ -180,7 +178,6 @@ def temperature_sample(
 
 def mix_sources(
     df: DataFrame, id_col: str, source_col: str, epochs: dict[str, float],
-    default_epochs: float = 1.0, rep_col: str = "__rep",
 ) -> DataFrame:
     """Deterministic source-weighted mixture with FRACTIONAL epochs — the
     materialization step that turns a curated corpus plus a weight table
@@ -192,8 +189,9 @@ def mix_sources(
     [h16(id·'_mix') % 1000 < permille(frac(w))]. w = 0 drops the source,
     w = 0.3 downsamples, w = 2.4 repeats twice and upsamples a further 40 %
     — one rule covers the whole weight axis. Repetition is realized as
-    ``explode(sequence(0, copies-1))`` carrying a rep index, so downstream
-    shuffling/packing can tell copies apart.
+    ``explode(sequence(0, copies-1))`` carrying a rep index ``__rep``, so
+    downstream shuffling/packing can tell copies apart. A source missing
+    from ``epochs`` keeps weight 1.
 
     Determinism/portability: floor/frac are split in PYTHON (integer
     literals reach the plan — no engine float arithmetic can diverge), and
@@ -206,8 +204,7 @@ def mix_sources(
         whole = int(v)
         return whole, int(round((v - whole) * 1000))
 
-    d_whole, d_perm = _split(default_epochs)
-    whole, perm = F.lit(d_whole), F.lit(d_perm)
+    whole, perm = F.lit(1), F.lit(0)
     for k, v in epochs.items():
         w_k, p_k = _split(v)
         whole = F.when(F.col(source_col) == k, w_k).otherwise(whole)
@@ -220,7 +217,7 @@ def mix_sources(
     )
     return (
         df.withColumn("__copies", copies)
-        .withColumn(rep_col, F.explode(F.expr(reps)))
+        .withColumn("__rep", F.explode(F.expr(reps)))
     )
 
 

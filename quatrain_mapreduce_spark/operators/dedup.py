@@ -228,12 +228,12 @@ def ngram_jaccard_pairs(
     )
 
 
-def _perm_params(num_perm: int, seed: int) -> list[tuple[int, int]]:
-    rng = random.Random(seed)
+def _perm_params(num_perm: int) -> list[tuple[int, int]]:
+    rng = random.Random(42)
     return [(rng.randrange(1, MERSENNE_31), rng.randrange(0, MERSENNE_31)) for _ in range(num_perm)]
 
 
-def signature_from_hashes(bh: F.Column, num_perm: int = 32, seed: int = 42) -> F.Column:
+def signature_from_hashes(bh: F.Column, num_perm: int = 32) -> F.Column:
     """MinHash signature from a precomputed base-hash array.
 
     Permutation family: h_j(x) = (a_j * x + b_j) mod (2^31 - 1) with
@@ -242,7 +242,7 @@ def signature_from_hashes(bh: F.Column, num_perm: int = 32, seed: int = 42) -> F
     """
     sig = [
         F.array_min(F.transform(bh, lambda h: F.pmod(F.lit(a) * h + F.lit(b), F.lit(MERSENNE_31))))
-        for a, b in _perm_params(num_perm, seed)
+        for a, b in _perm_params(num_perm)
     ]
     return F.array(*sig)
 
@@ -291,7 +291,6 @@ def minhash_lsh_candidates(
     shingle_n: int = 3,
     num_perm: int = 32,
     bands: int = 8,
-    max_bucket: int = 1000,
 ) -> DataFrame:
     """Distinct LSH candidate pairs (a_id, b_id), WITHOUT the exact-Jaccard
     verify — for pipelines that run their OWN downstream verification
@@ -317,7 +316,7 @@ def minhash_lsh_candidates(
     it rejected the band-rows persist inside minhash_lsh_pairs.
     """
     docs = _shingle_sets(df, id_col, text_col, shingle_n)
-    return _bucket_pairs(lsh_band_rows(docs, id_col, num_perm, bands, max_bucket), id_col).distinct()
+    return _bucket_pairs(lsh_band_rows(docs, id_col, num_perm, bands), id_col).distinct()
 
 
 def minhash_lsh_pairs(
@@ -328,7 +327,6 @@ def minhash_lsh_pairs(
     num_perm: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    max_bucket: int = 1000,
 ) -> DataFrame:
     """MinHash + banded LSH near-duplicate pairs, exact-Jaccard verified.
 
@@ -341,7 +339,7 @@ def minhash_lsh_pairs(
     # (signature branch + both verify-join sides): cache it. MEMORY_AND_DISK
     # so a 100 TB corpus's shingle sets spill instead of recomputing.
     docs = _shingle_sets(df, id_col, text_col, shingle_n).persist(StorageLevel.MEMORY_AND_DISK)
-    cand = _bucket_pairs(lsh_band_rows(docs, id_col, num_perm, bands, max_bucket), id_col).distinct()
+    cand = _bucket_pairs(lsh_band_rows(docs, id_col, num_perm, bands), id_col).distinct()
     jac = _jaccard(F.col("a_sh"), F.col("b_sh"))
     return (
         _sides(cand, docs, id_col)
@@ -489,7 +487,7 @@ def simhash_signature(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def simhash_pairs(
-    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3, max_bucket: int = 1000
+    df: DataFrame, id_col: str, text_col: str, max_hamming: int = 3
 ) -> DataFrame:
     """SimHash near-dup pairs: band the 64-bit signature into 4×16-bit chunks
     (pigeonhole: hamming ≤ 3 ⇒ at least one chunk identical), self-join per
@@ -515,7 +513,7 @@ def simhash_pairs(
         ])).alias("ck"),
     ).select(id_col, "simhash", "ck.band", "ck.key")
     return (
-        _bucket_pairs(_capped(chunks, max_bucket), id_col)
+        _bucket_pairs(_capped(chunks, 1000), id_col)
         .select("a_id", "b_id",
                 F.bit_count(F.col("a_simhash").bitwiseXOR(F.col("b_simhash"))).alias("hamming"))
         .distinct()

@@ -25,8 +25,10 @@ components in operators/components.py — share one superstep kernel,
 checkpointing, as in GraphX): each round is one eager ``localCheckpoint``
 job carrying an ``observe``d fingerprint, the superseded round's
 checkpoint is released, and a fixpoint loop that hits its round cap
-raises. On a cluster, swap localCheckpoint for a reliable checkpoint dir:
-the kernel is the one call site for all five operators.
+raises. The triangle tier derives its shared edge sets once through
+``derive_once`` under the same release rule. On a cluster, swap
+localCheckpoint for a reliable checkpoint dir: ``_checkpoint`` is the one
+call site for the whole tier.
 """
 
 from __future__ import annotations
@@ -89,32 +91,71 @@ CO_PURCHASE_EDGES_SQL = """b AS (
         )"""
 
 
+def _checkpoint(df: DataFrame) -> DataFrame:
+    """``df`` materialized by ONE eager ``localCheckpoint`` job; the returned
+    frame reads the checkpointed blocks, its lineage cut."""
+    return df.localCheckpoint(eager=True)
+
+
+def _rdd(checkpointed: DataFrame):
+    """The RDD a ``_checkpoint`` frame reads."""
+    return checkpointed._jdf.queryExecution().logical().rdd()
+
+
+def _release(checkpointed: DataFrame) -> None:
+    _rdd(checkpointed).unpersist(False)
+
+
+def derive_once(build: Callable[[DataFrame], DataFrame], shared: DataFrame) -> DataFrame:
+    """``build(shared)`` materialized by one checkpoint, ``shared``
+    checkpointed first, so that its consumers in ``build`` read it once
+    instead of re-deriving it (for the co-purchase graph, an events
+    self-join: a triangle count scanned events 22x, a graph summary 28x,
+    before their edge sets were derived once).
+
+    The superstep kernel's release rule: once the result is materialized,
+    the checkpoints it was built from that this call made — ``shared``'s
+    and those returned by graph operators ``build`` called — are released,
+    so only the returned checkpoint stays persisted, and nothing enters the
+    session's cache manager."""
+    before = set(shared.sparkSession.sparkContext._jsc.getPersistentRDDs().keys())
+    source, built = _checkpoint(shared), None
+    try:
+        built = build(source)
+        return _checkpoint(built)
+    finally:
+        read = [_rdd(source)]
+        if built is not None:
+            leaves = built._jdf.queryExecution().logical().collectLeaves()
+            for leaf in (leaves.apply(i) for i in range(leaves.size())):
+                if leaf.getClass().getSimpleName() == "LogicalRDD":
+                    read.append(leaf.rdd())
+        for rdd in read:
+            if rdd.id() not in before:
+                rdd.unpersist(False)
+
+
 def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """Per-vertex triangle participation counts.
+    """Per-vertex triangle participation counts, materialized.
 
     ``edges`` is an undirected edge list (self-loops and duplicate /
     reversed pairs tolerated — canonicalized here). Returns
     ``(vertex, n_triangles)`` for every vertex in at least one triangle;
-    the global triangle count is ``sum(n_triangles) / 3``.
+    the global triangle count is ``sum(n_triangles) / 3``. The canonical
+    edge set has FOUR consumers (degree union x2, orientation, closing-edge
+    probe), so it is derived once (``derive_once``).
     """
-    from pyspark.storagelevel import StorageLevel
-
     lo, hi = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
-    # persist the canonicalized edge set: it has FOUR live consumers below
-    # (degree union x2, orientation, closing-edge probe) and without the
-    # persist each consumer re-derives it from the caller's edge
-    # construction — for the co-purchase graph a full events self-join,
-    # so one triangle count scanned events 22x (r13 plan census).
-    # MEMORY_AND_DISK: edge lists at 100 TB spill, not recompute. Same
-    # lazy-query persist precedent as basket_affinity / the sampled
-    # triangle tier.
-    undirected = (
+    canonical = (
         edges.where(F.col(src) != F.col(dst))
         .select(lo.alias("a"), hi.alias("b"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    return derive_once(_triangles, canonical)
 
+
+def _triangles(undirected: DataFrame) -> DataFrame:
+    """``triangle_counts`` over a canonical ``(a, b)``, a < b, edge set."""
     deg = (
         undirected.select(F.col("a").alias("v"))
         .unionAll(undirected.select(F.col("b").alias("v")))
@@ -196,29 +237,26 @@ def _supersteps(
     def materialize(df: DataFrame) -> tuple[DataFrame, tuple]:
         obs = Observation()
         h = F.xxhash64(*df.columns).cast("decimal(38,0)")
-        out = df.observe(
+        out = _checkpoint(df.observe(
             obs,
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.sum(h), F.lit(0).cast("decimal(38,0)")).alias("h"),
-        ).localCheckpoint(eager=True)
+        ))
         m = obs.get  # populated by the checkpoint's own job
         return out, (m["n"], m["h"])
-
-    def release(df: DataFrame) -> None:
-        df._jdf.queryExecution().logical().rdd().unpersist(False)
 
     state, fp = materialize(state)
     for i in range(rounds):
         try:
             nxt, nfp = materialize(step(state, i))
         finally:
-            release(state)
+            _release(state)
         state = nxt
         if fixpoint and nfp == fp:
             return state
         fp = nfp
     if fixpoint:
-        release(state)
+        _release(state)
         raise RuntimeError(f"no fixpoint within rounds={rounds}")
     return state
 

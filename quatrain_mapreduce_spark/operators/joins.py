@@ -42,8 +42,9 @@ def override_join(dfs: list[DataFrame], key: str, value_col: str) -> DataFrame:
     return joined.select(F.col(key), F.coalesce(*prefer_rightmost).alias(value_col))
 
 
-def tagged_join(tagged: dict[str, DataFrame], key: str, how: str = "inner") -> DataFrame:
-    """contrib/data_join tagged n-way join: tag each source, equi-join on key.
+def tagged_join(tagged: dict[str, DataFrame], key: str) -> DataFrame:
+    """contrib/data_join tagged n-way join: tag each source, inner equi-join
+    on key.
 
     Columns (except the key) are prefixed with their source tag, mirroring
     TaggedMapOutput.java:35's provenance tracking.
@@ -52,7 +53,7 @@ def tagged_join(tagged: dict[str, DataFrame], key: str, how: str = "inner") -> D
     for tag, df in tagged.items():
         cols = [F.col(key)] + [F.col(c).alias(f"{tag}_{c}") for c in df.columns if c != key]
         prefixed.append(df.select(*cols))
-    return reduce(lambda a, b: a.join(b, on=key, how=how), prefixed)
+    return reduce(lambda a, b: a.join(b, on=key), prefixed)
 
 
 def salted_join(

@@ -6,8 +6,8 @@ Engine extension: the reference's write path is insert-only
 formats build it on exactly this plan: full-outer join target↔source on the
 merge key, source wins where matched, both sides pass through otherwise.
 
-One shuffle on the key (or zero if both sides are bucketed on it —
-sinks.write_bucketed_sorted); the output overwrites the target atomically
+One shuffle on the key (or zero if both sides are ``bucketBy`` tables on
+it); the output overwrites the target atomically
 via the staged-directory pattern the sinks module uses.
 """
 
@@ -23,11 +23,10 @@ def cdc_apply(
     seq_col: str,
     op_col: str,
     payload_cols: list[str],
-    delete_op: str = "D",
 ) -> DataFrame:
     """Compact a CDC change log (Debezium-style I/U/D row images) into the
     current snapshot: per key, the highest-``seq_col`` row wins; keys whose
-    final operation is ``delete_op`` vanish.
+    final operation is ``'D'`` vanish.
 
     ``seq_col`` must be unique per key (CDC logs guarantee this — LSN /
     binlog position); ties would make the winner nondeterministic.
@@ -46,7 +45,7 @@ def cdc_apply(
         F.max(F.col(seq_col)).alias(seq_col),
         F.max_by(F.struct(op_col, *payload_cols), F.col(seq_col)).alias("_w"),
     )
-    return winner.where(F.col(f"_w.{op_col}") != delete_op).select(
+    return winner.where(F.col(f"_w.{op_col}") != "D").select(
         key,
         *[F.col(f"_w.{c}").alias(c) for c in payload_cols],
         F.col(seq_col).alias("last_seq"),

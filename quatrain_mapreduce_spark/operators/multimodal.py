@@ -302,11 +302,6 @@ def encode_bmp24(img) -> bytes:
     return file_hdr + info_hdr + body
 
 
-def _fake_feature(payload: bytes) -> float:
-    """Deterministic stand-in for decode→feature-extract: mean byte value."""
-    return float(sum(payload)) / len(payload) if payload else 0.0
-
-
 def _ship_module_by_value() -> None:
     """Closures below call module-level decoders (ONE copy of the parsing
     logic, shared with the pytest fixtures). cloudpickle serializes
@@ -421,9 +416,9 @@ def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
     mapInPandas: each batch arrives as a pandas DataFrame; per-item decode
-    happens partition-local with no shuffle. Swap ``_fake_feature`` for a
-    real decode (resize / frame-sample / mel-spectrogram) on a cluster with
-    media libs installed.
+    happens partition-local with no shuffle. ``fake_feature`` (mean byte
+    value) is a deterministic stand-in: swap it for a real decode (resize /
+    frame-sample / mel-spectrogram) on a cluster with media libs installed.
     """
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # self-contained: no references to module-level names, so cloudpickle

@@ -41,8 +41,8 @@ _NUMERIC = (
 )
 
 
-def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Profile ``cols`` (default: all) in one scan.
+def profile_table(df: DataFrame) -> DataFrame:
+    """Profile every column in one scan.
 
     Returns one row per column: (column_name, n_nulls, n_distinct,
     min_num, max_num, min_str, max_str). Numeric columns fill
@@ -52,7 +52,7 @@ def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     columns fill min_str/max_str; the other pair is NULL.
     """
     fields = {f.name: f.dataType for f in df.schema.fields}
-    names = cols if cols is not None else [f.name for f in df.schema.fields]
+    names = df.columns
 
     # exact distinct per column: keys-only hash aggregate (map-side partial
     # dedup) + global count, one pruned scan per column. isNotNull mirrors
@@ -118,10 +118,9 @@ def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     )
 
 
-def profile_table_approx(df: DataFrame, cols: list[str] | None = None,
-                         rsd: float = 0.02) -> DataFrame:
+def profile_table_approx(df: DataFrame) -> DataFrame:
     """The 100 TB profile: null count + HLL distinct (approx_count_distinct,
-    relative sd ``rsd``) per column — ONE aggregate over ONE scan with NO
+    relative sd 0.02) per column — ONE aggregate over ONE scan with NO
     Expand. Exact multi-COUNT(DISTINCT) replicates every row k times before
     the shuffle (Catalyst's Expand); HLL keeps one 2^p-register sketch per
     (column) as fully map-combinable partial state, so the shuffle carries
@@ -129,11 +128,11 @@ def profile_table_approx(df: DataFrame, cols: list[str] | None = None,
 
     Returns (column_name, n_nulls, n_distinct_approx).
     """
-    names = cols if cols is not None else [f.name for f in df.schema.fields]
+    names = df.columns
     aggs = []
     for c in names:
         aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls"))
-        aggs.append(F.approx_count_distinct(c, rsd=rsd).alias(f"{c}__adist"))
+        aggs.append(F.approx_count_distinct(c, rsd=0.02).alias(f"{c}__adist"))
     wide = df.agg(*aggs)
     structs = [
         F.struct(
@@ -146,21 +145,20 @@ def profile_table_approx(df: DataFrame, cols: list[str] | None = None,
     return wide.select(F.explode(F.array(*structs)).alias("p")).select("p.*")
 
 
-def profile_distinct_gated(df: DataFrame, cols: list[str] | None = None,
-                           rsd: float = 0.02, tol: float = 0.05) -> DataFrame:
+def profile_distinct_gated(df: DataFrame) -> DataFrame:
     """Acceptance harness for ``profile_table_approx``: exact COUNT(DISTINCT)
     and the HLL estimate side by side in ONE aggregate, unpivoted to
     (column_name, n_nulls, n_distinct, dist_ok) where dist_ok asserts the
-    estimate is within ``tol`` of exact. Exists to GATE the approx swap at
+    estimate is within 5 % of exact. Exists to GATE the approx swap at
     test scale (the oracle pins dist_ok to 1); production at 100 TB runs
     ``profile_table_approx`` alone, which has no Expand.
     """
-    names = cols if cols is not None else [f.name for f in df.schema.fields]
+    names = df.columns
     aggs = []
     for c in names:
         aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls"))
         aggs.append(F.count_distinct(F.col(c)).alias(f"{c}__dist"))
-        aggs.append(F.approx_count_distinct(c, rsd=rsd).alias(f"{c}__adist"))
+        aggs.append(F.approx_count_distinct(c, rsd=0.02).alias(f"{c}__adist"))
     wide = df.agg(*aggs)
     structs = [
         F.struct(
@@ -170,7 +168,7 @@ def profile_distinct_gated(df: DataFrame, cols: list[str] | None = None,
             (
                 F.abs(F.col(f"{c}__adist") - F.col(f"{c}__dist"))
                 / F.greatest(F.col(f"{c}__dist"), F.lit(1))
-                <= tol
+                <= 0.05
             ).cast("int").alias("dist_ok"),
         )
         for c in names

@@ -25,20 +25,21 @@ def inverse_map(df: DataFrame, key: str, value: str) -> DataFrame:
     return df.select(F.col(value).alias("key"), F.col(key).alias("value"))
 
 
-def tokenize(col: Column | str, sep: str = " ") -> Column:
-    """Split into non-empty tokens (array column)."""
+def tokenize(col: Column | str) -> Column:
+    """Split on spaces into non-empty tokens (array column)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.filter(F.split(c, sep), lambda x: x != F.lit(""))
+    return F.filter(F.split(c, " "), lambda x: x != F.lit(""))
 
 
-def token_count(df: DataFrame, text_col: str, sep: str = " ") -> DataFrame:
-    """line -> (token, 1) -> per-token counts. TokenCountMapper.java:34.
+def token_count(df: DataFrame, text_col: str) -> DataFrame:
+    """line -> (token, 1) -> per-token counts over space-separated tokens.
+    TokenCountMapper.java:34.
 
     explode(split) + groupBy(count): map-side partial aggregation (Catalyst
     partial/final HashAggregate) replaces the reference's combiner protocol.
     """
     return (
-        spread(df).select(F.explode(tokenize(text_col, sep)).alias("word"))
+        spread(df).select(F.explode(tokenize(text_col)).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
     )

@@ -27,7 +27,6 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from quatrain_mapreduce_spark.staging import staged
 
@@ -79,17 +78,16 @@ def stage_native_binary(name: str, c_source: str) -> str:
     return os.path.join(staged(None, _content_tag(name, c_source), build), name)
 
 
-def script_transform(
-    df: DataFrame, cmd: str, input_cols: list[str], sep: str = "\t"
-) -> DataFrame:
-    """TRANSFORM (cols) USING 'cmd': rows → text lines → cmd stdin; cmd
-    stdout lines become the output rows (one string column ``line``).
+def script_transform(df: DataFrame, cmd: str, input_cols: list[str]) -> DataFrame:
+    """TRANSFORM (cols) USING 'cmd': rows → tab-joined text lines → cmd
+    stdin; cmd stdout lines become the output rows (one string column
+    ``line``).
 
     Mirrors PipeMapper.java:44-75 (line-oriented, per-partition process).
     Downstream parsing (AS (col1, col2, ...)) is a select over split().
     """
     lines = df.select(
-        F.concat_ws(sep, *[F.col(c).cast("string") for c in input_cols]).alias("line")
+        F.concat_ws("\t", *[F.col(c).cast("string") for c in input_cols]).alias("line")
     )
     piped = lines.rdd.map(lambda r: r[0]).pipe(cmd)
     return piped.map(lambda l: (l,)).toDF(["line"])
@@ -106,15 +104,14 @@ def chain(df: DataFrame, *transforms: Callable[[DataFrame], DataFrame]) -> DataF
     return df
 
 
-def register_udf(spark, name: str, fn, return_type=None):
+def register_udf(spark, name: str, fn):
     """CREATE TEMPORARY FUNCTION parity: session-scoped UDF registration.
 
     ``fn`` may be a plain Python callable (row-at-a-time — discouraged on
     hot paths), a pandas_udf (vectorized, preferred), or a Column-builder
     lambda pre-wrapped by the caller. Returns the registered function.
     """
-    return spark.udf.register(name, fn, return_type) if return_type is not None \
-        else spark.udf.register(name, fn)
+    return spark.udf.register(name, fn)
 
 
 def observed(df: DataFrame, name: str, *metrics: Column):

@@ -74,9 +74,9 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / F.greatest(_norm(a) * _norm(b), F.lit(1e-300))
 
 
-def embedding_dim(parquet_path: str, vec_col: str = "embedding") -> int:
-    """Vector dimensionality from one locally-read value (pyarrow, no Spark
-    job). In production the dim is pipeline config; this helper exists so
+def embedding_dim(parquet_path: str) -> int:
+    """``embedding`` vector dimensionality from one locally-read value
+    (pyarrow, no Spark job). In production the dim is pipeline config; this helper exists so
     test harnesses don't hardcode it. Accepts a single parquet file OR a
     table directory (real lakehouse tables are multi-file directories —
     peek the first part file)."""
@@ -92,7 +92,7 @@ def embedding_dim(parquet_path: str, vec_col: str = "embedding") -> int:
             raise FileNotFoundError(f"no parquet part files in {path}")
         path = parts[0]
     pf = pq.ParquetFile(path)
-    batch = next(pf.iter_batches(batch_size=1, columns=[vec_col]))
+    batch = next(pf.iter_batches(batch_size=1, columns=["embedding"]))
     return len(batch.column(0)[0])
 
 
@@ -203,7 +203,6 @@ def lsh_topk(
     n_planes: int = 10,
     n_tables: int = 4,
     multiprobe: bool = True,
-    seed: int = 42,
 ) -> DataFrame:
     """Approximate cosine top-k via multi-table random-hyperplane LSH.
 
@@ -218,7 +217,7 @@ def lsh_topk(
     """
     if n_planes > 63:
         raise ValueError(f"lsh_topk: n_planes={n_planes} > 63 does not fit a bigint bucket id")
-    tables = [hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)]
+    tables = [hyperplanes(dim, n_planes, 42 + 1000 * t) for t in range(n_tables)]
     buckets = _all_table_buckets(tables, dim)
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"),
@@ -439,12 +438,11 @@ def ivf_build(
     dim: int,
     n_lists: int = 16,
     lloyd_iters: int = 1,
-    seed: int = 42,
 ) -> tuple[DataFrame, DataFrame]:
     """Build a deterministic IVF (inverted-file) coarse quantizer.
 
     Seeds = the ``n_lists`` corpus vectors with the smallest
-    ``xxhash64(seed, id)`` (a deterministic uniform sample — no data order
+    ``xxhash64('ivf:42', id)`` (a deterministic uniform sample — no data order
     dependence), refined by ``lloyd_iters`` spherical-kmeans iterations
     (``_lloyd``: max-cosine ``_assign``, then each list's ``_ordered_mean``
     — bit-identical across plan shapes and partition counts).
@@ -471,7 +469,7 @@ def ivf_build(
     c = c.persist(StorageLevel.MEMORY_AND_DISK)
 
     seeds = (
-        c.withColumn("h", F.xxhash64(F.lit(f"ivf:{seed}"), F.col(id_col)))
+        c.withColumn("h", F.xxhash64(F.lit("ivf:42"), F.col(id_col)))
         .orderBy("h", id_col).limit(n_lists).select("vec").collect()
     )
     book = {(0, i): r["vec"] for i, r in enumerate(seeds)}
@@ -491,7 +489,6 @@ def ivf_topk(
     n_lists: int = 16,
     nprobe: int = 4,
     lloyd_iters: int = 1,
-    seed: int = 42,
 ) -> DataFrame:
     """Approximate cosine top-k via IVF: rank the C centroids per query,
     search only the ``nprobe`` nearest inverted lists.
@@ -503,7 +500,7 @@ def ivf_topk(
     ``nprobe == n_lists`` degrades to exact brute force (asserted in tests).
     """
     cent_df, assigned = ivf_build(
-        corpus, id_col, vec_col, dim, n_lists=n_lists, lloyd_iters=lloyd_iters, seed=seed
+        corpus, id_col, vec_col, dim, n_lists=n_lists, lloyd_iters=lloyd_iters
     )
     return ivf_search(cent_df, assigned, queries, id_col, vec_col, k=k, nprobe=nprobe)
 
@@ -549,7 +546,6 @@ def embedding_neardup_pairs(
     n_planes: int = 16,
     n_bands: int = 4,
     max_bucket: int = 1000,
-    seed: int = 42,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via banded sign-signature blocking.
 
@@ -561,7 +557,7 @@ def embedding_neardup_pairs(
     capping the self-join under skew exactly like the minhash/simhash
     pipelines.
     """
-    planes = hyperplanes(dim, n_planes, seed)
+    planes = hyperplanes(dim, n_planes)
     bits = sign_bits(vec_col, planes)
     per_band = n_planes // n_bands
     bands = [
@@ -787,7 +783,6 @@ def pq_topk(
     m: int = 4,
     n_codes: int = 16,
     lloyd_iters: int = 1,
-    seed: int = 42,
 ) -> DataFrame:
     """Approximate dot-product top-k via PQ asymmetric distance computation
     (ADC): dot(q, x) ~= sum_j dot(q_j, centroid[j, code_j(x)]).
@@ -802,7 +797,7 @@ def pq_topk(
     the target metric.
     """
     codebook = pq_train(corpus, id_col, vec_col, dim, m=m, k=n_codes,
-                        lloyd_iters=lloyd_iters, seed=seed)
+                        lloyd_iters=lloyd_iters)
     codes = pq_encode(corpus, codebook, id_col, vec_col, dim, m)
     lut = _adc_lut(
         queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")),
@@ -833,7 +828,6 @@ def ivfpq_topk(
     m: int = 4,
     n_codes: int = 16,
     lloyd_iters: int = 1,
-    seed: int = 42,
 ) -> DataFrame:
     """IVFADC (Jégou et al. TPAMI 2011 §IV): the composition of the two
     prunings — IVF decides WHICH vectors are scanned (nprobe/n_lists of
@@ -854,8 +848,7 @@ def ivfpq_topk(
     partial aggregation on (q_id, neighbor).
     """
     cent_df, assigned = ivf_build(
-        corpus, id_col, vec_col, dim, n_lists=n_lists,
-        lloyd_iters=lloyd_iters, seed=seed,
+        corpus, id_col, vec_col, dim, n_lists=n_lists, lloyd_iters=lloyd_iters,
     )
     from pyspark.storagelevel import StorageLevel
 
@@ -869,7 +862,7 @@ def ivfpq_topk(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     codebook = pq_train(residuals, id_col, "rvec", dim, m=m, k=n_codes,
-                        lloyd_iters=lloyd_iters, seed=seed + 1)
+                        lloyd_iters=lloyd_iters, seed=43)
     # persist + materialize the compact m-int codes BEFORE releasing the
     # fat residual cache: the returned search plan consumes codes lazily,
     # and unpersisting residuals at construction time made the first

@@ -22,15 +22,16 @@ def cluster_by(df: DataFrame, cols: list[str], sort_cols: list[Column] | None = 
     return df.repartition(*[F.col(c) for c in cols]).sortWithinPartitions(*(sort_cols or [F.col(c) for c in cols]))
 
 
-def secondary_sort_agg(df: DataFrame, key: str, value: Column, cast_to_str: bool = True) -> DataFrame:
+def secondary_sort_agg(df: DataFrame, key: str, value: Column) -> DataFrame:
     """Secondary sort (setOutputValueGroupingComparator parity): per key, the
-    group's values in sorted order, materialized as a canonical joined string.
+    group's values, cast to string, in sorted order, materialized as a
+    canonical joined string.
 
     Declarative form: sort_array(collect_list) — fully map-side combinable,
     no per-group Python. For very large groups prefer
     df.repartition(key).sortWithinPartitions(key, value) + mapInPandas.
     """
-    v = value.cast("string") if cast_to_str else value
+    v = value.cast("string")
     return df.groupBy(key).agg(F.concat_ws(",", F.sort_array(F.collect_list(v))).alias("sorted_values"))
 
 

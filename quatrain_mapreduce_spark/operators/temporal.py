@@ -77,16 +77,14 @@ def range_join_binned(
     start_col: str,
     end_col: str,
     bin_width: int,
-    extra_key: str | None = None,
-    how: str = "inner",
 ) -> DataFrame:
-    """Point-in-interval join (half-open ``start <= p < end``) via
+    """Point-in-interval inner join (half-open ``start <= p < end``) via
     fixed-width binning. ``point_col``/``start_col``/``end_col`` must be
     integral (epoch micros for time — exact, no float rounding).
 
     Without an equi-key Spark plans ``p BETWEEN s AND e`` as a
     broadcast-nested-loop (O(points x intervals)); with bins it is a hash
-    join on ``__bin`` (+ ``extra_key``). Pick ``bin_width`` near the typical
+    join on ``__bin``. Pick ``bin_width`` near the typical
     interval length: each interval then lands in 1-2 bins and each point in
     exactly one.
     """
@@ -115,9 +113,7 @@ def range_join_binned(
         & (F.col(f"pt.{point_col}") >= F.col(f"iv.{start_col}"))
         & (F.col(f"pt.{point_col}") < F.col(f"iv.{end_col}"))
     )
-    if extra_key:
-        cond = cond & (F.col(f"pt.{extra_key}") == F.col(f"iv.{extra_key}"))
-    return pt.join(iv, cond, how).drop("__bin")
+    return pt.join(iv, cond).drop("__bin")
 
 
 def scd2_from_events(
@@ -126,11 +122,11 @@ def scd2_from_events(
     ts_col: str,
     attr_col: str,
     tie_col: str,
-    out_attr: str = "state",
     keep_tie: bool = False,
 ) -> DataFrame:
     """Collapse an event stream into SCD-2 validity intervals: one row per
-    (key, run of equal ``attr_col``), with ``valid_from``/``valid_to`` event
+    (key, run of equal ``attr_col``, reported as ``state``), with
+    ``valid_from``/``valid_to`` event
     times (``valid_to`` NULL on the current interval).
 
     lag → change-filter → lead, all over the SAME (key, ts, tie) window
@@ -157,7 +153,7 @@ def scd2_from_events(
     w2 = Window.partitionBy(key).orderBy(ts_col, tie_col)
     return changed.select(
         F.col(key),
-        F.col(attr_col).alias(out_attr),
+        F.col(attr_col).alias("state"),
         F.col(ts_col).alias("valid_from"),
         F.lead(ts_col).over(w2).alias("valid_to"),
         *([F.col(tie_col).alias("change_tie")] if keep_tie else []),

@@ -89,7 +89,7 @@ def fingerprint(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return df.select(F.col(id_col), F.md5(normalized_text(text_col)).alias("fp"))
 
 
-def bpe_pair_counts(df: DataFrame, text_col: str, min_len: int = 2) -> DataFrame:
+def bpe_pair_counts(df: DataFrame, text_col: str) -> DataFrame:
     """Adjacent-symbol pair frequencies over the corpus vocabulary — the
     inner statistic of one BPE merge round (Sennrich et al. 2016 §3.2: the
     most frequent pair becomes the next merge rule).
@@ -100,8 +100,8 @@ def bpe_pair_counts(df: DataFrame, text_col: str, min_len: int = 2) -> DataFrame
     (the corpus is scanned once); the char-pair explosion then touches only
     |vocab| rows — at 100 TB the vocabulary is millions of rows where the
     corpus is trillions, so the quadratic-ish per-word work rides on the
-    small table. Words are ASCII-letter runs lowercased after extraction
-    (locale-independent, engine-portable).
+    small table. Words are ASCII-letter runs of two or more letters,
+    lowercased after extraction (locale-independent, engine-portable).
 
     Returns (pair, n) — every adjacent character pair with its
     frequency-weighted corpus count.
@@ -110,7 +110,7 @@ def bpe_pair_counts(df: DataFrame, text_col: str, min_len: int = 2) -> DataFrame
         F.explode(
             F.expr(f"transform(regexp_extract_all({text_col}, '[A-Za-z]+', 0), x -> lower(x))")
         ).alias("w")
-    ).where(F.length("w") >= min_len)
+    ).where(F.length("w") >= 2)
     vocab = words.groupBy("w").agg(F.count("*").alias("cnt"))
     pairs = vocab.select(
         F.explode(
@@ -391,8 +391,7 @@ def doc_cosine_pairs(df: DataFrame, id_col: str, text_col: str,
     )
 
 
-def bpe_train(df: DataFrame, text_col: str, n_merges: int = 5,
-              min_len: int = 2) -> DataFrame:
+def bpe_train(df: DataFrame, text_col: str, n_merges: int = 5) -> DataFrame:
     """Iterative BPE merge-rule training (Sennrich et al. 2016 §3.2 — the
     full algorithm, not just one round's statistic): ``n_merges`` rounds of
     (count adjacent symbol pairs over the frequency-weighted vocabulary ->
@@ -418,7 +417,7 @@ def bpe_train(df: DataFrame, text_col: str, n_merges: int = 5,
         F.explode(
             F.expr(f"transform(regexp_extract_all({text_col}, '[A-Za-z]+', 0), x -> lower(x))")
         ).alias("w")
-    ).where(F.length("w") >= min_len)
+    ).where(F.length("w") >= 2)
     vocab = (
         words.groupBy("w").agg(F.count("*").alias("cnt"))
         .select(F.expr("split(w, '')").alias("syms"), "cnt")
@@ -471,7 +470,7 @@ def bpe_train(df: DataFrame, text_col: str, n_merges: int = 5,
 
 
 def bpe_apply(df: DataFrame, id_col: str, text_col: str,
-              merges: list[tuple[str, str]], min_len: int = 2) -> DataFrame:
+              merges: list[tuple[str, str]]) -> DataFrame:
     """Apply a learned BPE merge table to the corpus — the SERVE half of
     bpe_train (train once on yesterday's corpus, encode today's at scale):
     each document's words are split to characters and the merge rules are
@@ -493,7 +492,7 @@ def bpe_apply(df: DataFrame, id_col: str, text_col: str,
         F.posexplode(
             F.expr(f"transform(regexp_extract_all({text_col}, '[A-Za-z]+', 0), x -> lower(x))")
         ).alias("word_pos", "w"),
-    ).where(F.length("w") >= min_len)
+    ).where(F.length("w") >= 2)
     out = words.select(id_col, "word_pos", F.expr("split(w, '')").alias("syms"))
     for left, right in merges:
         out = out.select(

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def spread(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Ensure a CPU-heavy narrow stage runs with cluster-wide parallelism.
 
     Small inputs (one parquet file < maxPartitionBytes) plan as ONE input
@@ -15,7 +15,7 @@ def spread(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
     has thousands of partitions and this is a no-op (no gratuitous shuffle
     of 100 TB of raw text).
     """
-    target = min_parallelism or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -12,7 +12,7 @@ The reference's closest notion is the total-order partitioner feeding sorted
 MapFiles (MR/lib/TotalOrderPartitioner.java, IO/MapFile.java) — one-key
 clustering; z-order is the multi-key generalization a 100 TB lakehouse
 actually runs. Everything here is pure column expressions: rank-normalize
-each key to ``bits``-bit integers (min/max from one tiny agg — driver
+each key to ``_BITS``-bit integers (min/max from one tiny agg — driver
 scalars, same class as IVF's centroid pull), interleave bits JVM-side, then
 ``repartitionByRange`` + ``sortWithinPartitions`` on the z-value so writers
 emit contiguous z-runs.
@@ -23,11 +23,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+_BITS = 12  # bits per key: a 4096 x 4096 z-grid
 
-def _scale_expr(col: str, lo: int, hi: int, bits: int) -> F.Column:
-    """Map an integral column into [0, 2^bits) by affine range scaling."""
+
+def _scale_expr(col: str, lo: int, hi: int) -> F.Column:
+    """Map an integral column into [0, 2^_BITS) by affine range scaling."""
     span = max(hi - lo, 1)
-    top = (1 << bits) - 1
+    top = (1 << _BITS) - 1
     return F.least(
         F.lit(top),
         ((F.col(col) - F.lit(lo)).cast("double") * F.lit(top) / F.lit(span)).cast("long"),
@@ -47,9 +49,7 @@ def z_value(a: F.Column, b: F.Column, bits: int) -> F.Column:
     return z
 
 
-def zorder_by(
-    df: DataFrame, col_a: str, col_b: str, bits: int = 12, n_files: int = 16
-) -> DataFrame:
+def zorder_by(df: DataFrame, col_a: str, col_b: str, n_files: int = 16) -> DataFrame:
     """Return ``df`` clustered by the z-value of (col_a, col_b) — range
     partitioned into ``n_files`` explicit splits then sorted within
     partitions, ready for a parquet write whose per-file min/max stats are
@@ -66,7 +66,7 @@ def zorder_by(
     while zcol in df.columns:
         zcol += "_"
     z = z_value(
-        _scale_expr(col_a, lo_a, hi_a, bits), _scale_expr(col_b, lo_b, hi_b, bits), bits
+        _scale_expr(col_a, lo_a, hi_a), _scale_expr(col_b, lo_b, hi_b), _BITS
     )
     return (
         df.withColumn(zcol, z)

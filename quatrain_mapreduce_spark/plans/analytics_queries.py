@@ -1149,25 +1149,28 @@ def _edge_h16_sql() -> str:
     tags=("graph", "analytics", "approx"),
 )
 def triangle_count_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quatrain_mapreduce_spark.operators.graph import triangle_counts
+    from quatrain_mapreduce_spark.operators.graph import derive_once, triangle_counts
+
+    def estimate(sampled: DataFrame) -> DataFrame:
+        per_vertex = triangle_counts(
+            sampled.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+        )
+        tri = per_vertex.agg(
+            F.coalesce(F.floor(F.sum("n_triangles") / 3), F.lit(0))
+            .cast("bigint").alias("t")
+        )
+        n_edges = sampled.agg(F.count("*").alias("n"))
+        return n_edges.crossJoin(tri).select(
+            F.col("n").cast("bigint").alias("n_sampled_edges"),
+            F.col("t").alias("tri_sampled"),
+            (F.col("t") * 64).cast("bigint").alias("tri_estimate"),
+        )
 
     ev = load_table(spark, sf_dir, "events")
     edges = co_purchase_edges(ev).select(
         F.col("src").alias("a"), F.col("dst").alias("b"))
-    sampled = edges.where(F.expr(_edge_h16_sql() + " % 4 = 0")).persist()
-    per_vertex = triangle_counts(
-        sampled.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    )
-    tri = per_vertex.agg(
-        F.coalesce(F.floor(F.sum("n_triangles") / 3), F.lit(0))
-        .cast("bigint").alias("t")
-    )
-    n_edges = sampled.agg(F.count("*").alias("n"))
-    return n_edges.crossJoin(tri).select(
-        F.col("n").cast("bigint").alias("n_sampled_edges"),
-        F.col("t").alias("tri_sampled"),
-        (F.col("t") * 64).cast("bigint").alias("tri_estimate"),
-    )
+    # the sample feeds the triangle tier and the edge count: derived once
+    return derive_once(estimate, edges.where(F.expr(_edge_h16_sql() + " % 4 = 0")))
 
 
 @register(
@@ -2531,30 +2534,28 @@ def _degree_stats(edges: DataFrame) -> DataFrame:
     tags=("graph", "analytics", "profiling"),
 )
 def graph_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quatrain_mapreduce_spark.operators.graph import triangle_counts
+    from quatrain_mapreduce_spark.operators.graph import derive_once, triangle_counts
 
-    from pyspark.storagelevel import StorageLevel
+    def summary(edges: DataFrame) -> DataFrame:
+        # a triangle-free graph yields an EMPTY per-vertex frame: sum() over
+        # it is NULL, the oracle's count(*) is 0 — coalesce so the
+        # zero-triangle case (real at small scale) reports 0 and a 0.0
+        # coefficient, not NULL
+        tri = triangle_counts(edges, "src", "dst").agg(
+            (F.coalesce(F.sum("n_triangles"), F.lit(0)) / 3)
+            .cast("bigint").alias("n_triangles"))
+        j = _degree_stats(edges).crossJoin(F.broadcast(tri))
+        return j.select(
+            "n_vertices", "n_edges", "max_degree", "n_wedges", "n_triangles",
+            (F.floor(
+                3.0 * F.col("n_triangles")
+                / F.col("n_wedges").cast("double") * 1000000 + F.lit(0.5)
+            ) / 1000000).alias("clustering_coeff"),
+        )
 
-    ev = load_table(spark, sf_dir, "events")
-    # the edge list (an events self-join + distinct) feeds FOUR live
-    # consumers (degree union x2, edge count, triangle tier) — persisted,
-    # it derives once instead of per consumer (28 event scans in the r13
-    # plan census before this)
-    edges = co_purchase_edges(ev).persist(StorageLevel.MEMORY_AND_DISK)
-    # a triangle-free graph yields an EMPTY per-vertex frame: sum() over it
-    # is NULL, the oracle's count(*) is 0 — coalesce so the zero-triangle
-    # case (real at small scale) reports 0 and a 0.0 coefficient, not NULL
-    tri = triangle_counts(edges, "src", "dst").agg(
-        (F.coalesce(F.sum("n_triangles"), F.lit(0)) / 3)
-        .cast("bigint").alias("n_triangles"))
-    j = _degree_stats(edges).crossJoin(F.broadcast(tri))
-    return j.select(
-        "n_vertices", "n_edges", "max_degree", "n_wedges", "n_triangles",
-        (F.floor(
-            3.0 * F.col("n_triangles")
-            / F.col("n_wedges").cast("double") * 1000000 + F.lit(0.5)
-        ) / 1000000).alias("clustering_coeff"),
-    )
+    # the edge list (an events self-join + distinct) feeds FOUR consumers
+    # (degree union x2, edge count, triangle tier): derived once
+    return derive_once(summary, co_purchase_edges(load_table(spark, sf_dir, "events")))
 
 
 @register(
@@ -2592,33 +2593,32 @@ def graph_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("graph", "analytics", "profiling", "approx"),
 )
 def graph_summary_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from quatrain_mapreduce_spark.operators.graph import triangle_counts
+    from quatrain_mapreduce_spark.operators.graph import derive_once, triangle_counts
 
-    from pyspark.storagelevel import StorageLevel
+    def summary(edges: DataFrame) -> DataFrame:
+        sampled = (
+            edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+            .where(F.expr(_edge_h16_sql() + " % 4 = 0"))
+        )
+        tri = triangle_counts(
+            sampled.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+        ).agg(
+            (F.coalesce(F.sum("n_triangles"), F.lit(0)) / 3)
+            .cast("bigint").alias("tri_sampled")
+        )
+        j = _degree_stats(edges).crossJoin(F.broadcast(tri))
+        return j.select(
+            "n_vertices", "n_edges", "max_degree", "n_wedges", "tri_sampled",
+            (F.col("tri_sampled") * 64).cast("bigint").alias("n_triangles_est"),
+            (F.floor(
+                3.0 * F.col("tri_sampled") * 64
+                / F.col("n_wedges").cast("double") * 1000000 + F.lit(0.5)
+            ) / 1000000).alias("clustering_coeff_est"),
+        )
 
-    ev = load_table(spark, sf_dir, "events")
-    # same branch-point persist as graph_summary: degree x2, edge count
-    # and the sampled triangle tier all read the one derived edge list
-    edges = co_purchase_edges(ev).persist(StorageLevel.MEMORY_AND_DISK)
-    sampled = (
-        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .where(F.expr(_edge_h16_sql() + " % 4 = 0"))
-    )
-    tri = triangle_counts(
-        sampled.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    ).agg(
-        (F.coalesce(F.sum("n_triangles"), F.lit(0)) / 3)
-        .cast("bigint").alias("tri_sampled")
-    )
-    j = _degree_stats(edges).crossJoin(F.broadcast(tri))
-    return j.select(
-        "n_vertices", "n_edges", "max_degree", "n_wedges", "tri_sampled",
-        (F.col("tri_sampled") * 64).cast("bigint").alias("n_triangles_est"),
-        (F.floor(
-            3.0 * F.col("tri_sampled") * 64
-            / F.col("n_wedges").cast("double") * 1000000 + F.lit(0.5)
-        ) / 1000000).alias("clustering_coeff_est"),
-    )
+    # same as graph_summary: degree x2, edge count and the sampled triangle
+    # tier all read the one derived edge list
+    return derive_once(summary, co_purchase_edges(load_table(spark, sf_dir, "events")))
 
 
 @register(

@@ -429,8 +429,7 @@ def topk_per_group_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Multi-insert single scan (FROM src INSERT OVERWRITE t1 ... INSERT "
         "OVERWRITE t2 — SemanticAnalyzer.java:1991): one shared subplan, N "
-        "destination branches. Here both branches return in one DataFrame; "
-        "the write path lives in sources.sinks.multi_sink.",
+        "destination branches. Here both branches return in one DataFrame.",
     tags=("hive", "multi-insert"),
 )
 def multi_insert_shared_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -701,9 +700,30 @@ def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "cdc_apply_orders",
-    oracle="""
+def orders_change_log(orders: DataFrame) -> tuple[DataFrame, ...]:
+    """A Debezium-style I/U/D change log over orders, as its four seq
+    slices: the full snapshot at seq 0, price updates at seq 1 (keys %10),
+    deletes at seq 2 (keys %7), re-inserts at seq 3 (keys %35). Columns
+    (o_orderkey, seq, op, o_custkey, price, status)."""
+    def image(seq: int, op: str, price: F.Column, status: F.Column) -> list:
+        return ["o_orderkey", F.lit(seq).alias("seq"), F.lit(op).alias("op"), "o_custkey",
+                price.alias("price"), status.alias("status")]
+
+    return (
+        orders.select(*image(0, "I", F.round("o_totalprice", 2), F.col("o_orderstatus"))),
+        orders.where(F.col("o_orderkey") % 10 == 0).select(*image(
+            1, "U", F.floor(F.round("o_totalprice", 2) * 1.1 * 100 + 0.5) / 100, F.lit("U"))),
+        orders.where(F.col("o_orderkey") % 7 == 0).select(*image(
+            2, "D", F.lit(None).cast("double"), F.lit(None).cast("string"))),
+        orders.where(F.col("o_orderkey") % 35 == 0).select(*image(
+            3, "I", F.lit(2.0), F.lit("R"))),
+    )
+
+
+# DuckDB oracle of ``orders_change_log`` compacted to the current snapshot,
+# by the independent row_number-window formulation; shared by the batch
+# (cdc_apply_orders) and streaming (stream_cdc_apply) compactions.
+ORDERS_CDC_SQL = """
         WITH log AS (
             SELECT o_orderkey, 0 AS seq, 'I' AS op, o_custkey,
                    round(o_totalprice, 2) AS price,
@@ -729,7 +749,12 @@ def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT o_orderkey, o_custkey, price, status,
                CAST(seq AS INT) AS last_seq
         FROM ranked WHERE rn = 1 AND op <> 'D'
-    """,
+    """
+
+
+@register(
+    "cdc_apply_orders",
+    oracle=ORDERS_CDC_SQL,
     doc="CDC log compaction (operators/merge.cdc_apply): a Debezium-style "
         "I/U/D change log — full snapshot at seq 0, price updates at seq 1 "
         "(10% of keys), deletes at seq 2 (keys %7), re-inserts at seq 3 "
@@ -745,39 +770,7 @@ def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cdc_apply_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quatrain_mapreduce_spark.operators.merge import cdc_apply
 
-    orders = load_table(spark, sf_dir, "orders")
-    base = orders.select(
-        "o_orderkey",
-        F.lit(0).alias("seq"),
-        F.lit("I").alias("op"),
-        "o_custkey",
-        F.round("o_totalprice", 2).alias("price"),
-        F.col("o_orderstatus").alias("status"),
-    )
-    updates = orders.where(F.col("o_orderkey") % 10 == 0).select(
-        "o_orderkey",
-        F.lit(1).alias("seq"),
-        F.lit("U").alias("op"),
-        "o_custkey",
-        (F.floor(F.round("o_totalprice", 2) * 1.1 * 100 + 0.5) / 100).alias("price"),
-        F.lit("U").alias("status"),
-    )
-    deletes = orders.where(F.col("o_orderkey") % 7 == 0).select(
-        "o_orderkey",
-        F.lit(2).alias("seq"),
-        F.lit("D").alias("op"),
-        "o_custkey",
-        F.lit(None).cast("double").alias("price"),
-        F.lit(None).cast("string").alias("status"),
-    )
-    reinserts = orders.where(F.col("o_orderkey") % 35 == 0).select(
-        "o_orderkey",
-        F.lit(3).alias("seq"),
-        F.lit("I").alias("op"),
-        "o_custkey",
-        F.lit(2.0).alias("price"),
-        F.lit("R").alias("status"),
-    )
+    base, updates, deletes, reinserts = orders_change_log(load_table(spark, sf_dir, "orders"))
     log = base.unionByName(updates).unionByName(deletes).unionByName(reinserts)
     return cdc_apply(
         log, key="o_orderkey", seq_col="seq", op_col="op",

@@ -18,6 +18,7 @@ from quatrain_mapreduce_spark.operators.curation import (
     EMAIL_RE as _EMAIL_RE, GOPHER_PASS_SQL, PHONE_RE as _PHONE_RE,
     gopher_metrics_sql,
 )
+from quatrain_mapreduce_spark.plans.relational import ORDERS_CDC_SQL, orders_change_log
 from quatrain_mapreduce_spark.registry import register
 from quatrain_mapreduce_spark.staging import (
     scratch, single_file_slices, stage_doc_slices, stage_event_slices, staged,
@@ -296,10 +297,10 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "sessionize_events",
-    oracle="""
-        WITH o AS (
+# DuckDB gap sessionization of events (30-min gap) for the session
+# oracles: the CTEs ``o`` (per event, a new-session flag) and ``s``
+# (user_id, ep, session_id), composed as ``WITH {SESSIONS_SQL} ...``.
+SESSIONS_SQL = """o AS (
             SELECT user_id, ts, epoch_us(ts) AS ep,
                    -- STRICT > gap: session_window merges an exact-gap event
                    -- (test_sessionize_exact_gap_boundary)
@@ -312,7 +313,13 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT user_id, ep,
                    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts) AS session_id
             FROM o
-        )
+        )"""
+
+
+@register(
+    "sessionize_events",
+    oracle=f"""
+        WITH {SESSIONS_SQL}
         -- CAST: DuckDB windowed sum() yields HUGEINT -> pandas float64;
         -- Spark emits BIGINT. Without the cast the driver's value-hash sees
         -- 3.0 vs 3 and flags a mismatch on identical answers.
@@ -389,21 +396,8 @@ def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_sessionize",
-    oracle="""
-        WITH o AS (
-            SELECT user_id, ts, epoch_us(ts) AS ep,
-                   -- STRICT > gap: session_window merges an exact-gap event
-                   -- (test_sessionize_exact_gap_boundary)
-                   CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                             OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-                        THEN 1 ELSE 0 END AS new_s
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-        ), s AS (
-            SELECT user_id, ep,
-                   sum(new_s) OVER (PARTITION BY user_id ORDER BY ts) AS session_id
-            FROM o
-        )
+    oracle=f"""
+        WITH {SESSIONS_SQL}
         SELECT user_id, min(ep) AS session_start_us,
                CAST(count(*) AS BIGINT) AS n_events
         FROM s GROUP BY user_id, session_id
@@ -537,33 +531,7 @@ def stream_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_cdc_apply",
-    oracle="""
-        WITH log AS (
-            SELECT o_orderkey, 0 AS seq, 'I' AS op, o_custkey,
-                   round(o_totalprice, 2) AS price,
-                   o_orderstatus AS status
-            FROM orders
-            UNION ALL
-            SELECT o_orderkey, 1, 'U', o_custkey,
-                   floor(round(o_totalprice, 2) * 1.1 * 100 + 0.5) / 100,
-                   'U'
-            FROM orders WHERE o_orderkey % 10 = 0
-            UNION ALL
-            SELECT o_orderkey, 2, 'D', o_custkey,
-                   CAST(NULL AS DOUBLE), CAST(NULL AS VARCHAR)
-            FROM orders WHERE o_orderkey % 7 = 0
-            UNION ALL
-            SELECT o_orderkey, 3, 'I', o_custkey, 2.0, 'R'
-            FROM orders WHERE o_orderkey % 35 = 0
-        ), ranked AS (
-            SELECT *, row_number() OVER (PARTITION BY o_orderkey
-                                         ORDER BY seq DESC) AS rn
-            FROM log
-        )
-        SELECT o_orderkey, o_custkey, price, status,
-               CAST(seq AS INT) AS last_seq
-        FROM ranked WHERE rn = 1 AND op <> 'D'
-    """,
+    oracle=ORDERS_CDC_SQL,
     doc="Streaming CDC materialization — the continuous form of "
         "cdc_apply_orders: the same I/U/D change log replayed as a "
         "4-file stream in sequence order (mtime-ordered, "
@@ -580,31 +548,8 @@ def stream_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     def stage_log(d: str) -> None:
-        orders = load_table(spark, sf_dir, "orders")
-        base = orders.select(
-            "o_orderkey", F.lit(0).alias("seq"), F.lit("I").alias("op"),
-            "o_custkey", F.round("o_totalprice", 2).alias("price"),
-            F.col("o_orderstatus").alias("status"),
-        )
-        updates = orders.where(F.col("o_orderkey") % 10 == 0).select(
-            "o_orderkey", F.lit(1).alias("seq"), F.lit("U").alias("op"),
-            "o_custkey",
-            (F.floor(F.round("o_totalprice", 2) * 1.1 * 100 + 0.5) / 100)
-              .alias("price"),
-            F.lit("U").alias("status"),
-        )
-        deletes = orders.where(F.col("o_orderkey") % 7 == 0).select(
-            "o_orderkey", F.lit(2).alias("seq"), F.lit("D").alias("op"),
-            "o_custkey", F.lit(None).cast("double").alias("price"),
-            F.lit(None).cast("string").alias("status"),
-        )
-        reinserts = orders.where(F.col("o_orderkey") % 35 == 0).select(
-            "o_orderkey", F.lit(3).alias("seq"), F.lit("I").alias("op"),
-            "o_custkey", F.lit(2.0).alias("price"),
-            F.lit("R").alias("status"),
-        )
-        single_file_slices(d, [(f"seq{i}.parquet", sl) for i, sl in
-                               enumerate((base, updates, deletes, reinserts))])
+        slices = orders_change_log(load_table(spark, sf_dir, "orders"))
+        single_file_slices(d, [(f"seq{i}.parquet", sl) for i, sl in enumerate(slices)])
 
     def compact(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
         log = batch if prev is None else prev.unionByName(batch)
@@ -636,19 +581,8 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sessionize_incremental",
-    oracle="""
-        WITH o AS (
-            SELECT user_id, ts, epoch_us(ts) AS ep,
-                   CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-                             OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-                        THEN 1 ELSE 0 END AS new_s
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-        ), s AS (
-            SELECT user_id, ep,
-                   sum(new_s) OVER (PARTITION BY user_id ORDER BY ts) AS session_id
-            FROM o
-        )
+    oracle=f"""
+        WITH {SESSIONS_SQL}
         SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
                CAST(count(*) AS BIGINT) AS n_events,
                min(ep) AS session_start_us,

@@ -121,10 +121,10 @@ def range_join_incidents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "scd2_user_state",
-    oracle="""
-        WITH o AS (
+# DuckDB SCD-2 build over events for the SCD-2 oracles: the CTEs ``o``
+# (lag of the state), ``c`` (change rows) and ``dim`` (user_id, state,
+# valid_from_us, valid_to_us), composed as ``WITH {SCD2_DIM_SQL}, ...``.
+SCD2_DIM_SQL = """o AS (
             SELECT user_id, event_type, epoch_us(ts) AS ts_us, event_id,
                    lag(event_type) OVER (PARTITION BY user_id
                                          ORDER BY ts, event_id) AS prev
@@ -132,12 +132,20 @@ def range_join_incidents(spark: SparkSession, sf_dir: str) -> DataFrame:
         ), c AS (
             SELECT user_id, event_type AS state, ts_us, event_id
             FROM o WHERE prev IS NULL OR prev <> event_type
-        )
-        SELECT user_id, state,
-               ts_us AS valid_from_us,
-               lead(ts_us) OVER (PARTITION BY user_id
-                                 ORDER BY ts_us, event_id) AS valid_to_us
-        FROM c
+        ), dim AS (
+            SELECT user_id, state,
+                   ts_us AS valid_from_us,
+                   lead(ts_us) OVER (PARTITION BY user_id
+                                     ORDER BY ts_us, event_id) AS valid_to_us
+            FROM c
+        )"""
+
+
+@register(
+    "scd2_user_state",
+    oracle=f"""
+        WITH {SCD2_DIM_SQL}
+        SELECT user_id, state, valid_from_us, valid_to_us FROM dim
     """,
     doc="SCD-2 dimension build from an event stream: collapse per-user "
         "event_type runs into validity intervals (valid_to NULL = current). "
@@ -372,22 +380,8 @@ def resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "scd2_pit_join",
-    oracle="""
-        WITH o AS (
-            SELECT user_id, event_type, epoch_us(ts) AS ts_us, event_id,
-                   lag(event_type) OVER (PARTITION BY user_id
-                                         ORDER BY ts, event_id) AS prev
-            FROM events
-        ), c AS (
-            SELECT user_id, event_type AS state, ts_us, event_id
-            FROM o WHERE prev IS NULL OR prev <> event_type
-        ), dim AS (
-            SELECT user_id, state,
-                   ts_us AS valid_from_us,
-                   lead(ts_us) OVER (PARTITION BY user_id
-                                     ORDER BY ts_us, event_id) AS valid_to_us
-            FROM c
-        ), facts AS (
+    oracle=f"""
+        WITH {SCD2_DIM_SQL}, facts AS (
             SELECT event_id, user_id, epoch_us(ts) AS ts_us
             FROM events WHERE event_type = 'purchase'
         )

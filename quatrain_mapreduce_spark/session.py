@@ -33,12 +33,12 @@ def get_spark(
     app_name: str = "quatrain-mapreduce-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
 
     On a real cluster ``master``/executor sizing come from spark-submit; every
-    config set here is also safe cluster-side.
+    config set here is also safe cluster-side. Any other setting is a
+    spark-submit ``--conf``, which reaches this builder.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -75,6 +75,4 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
     )
-    for key, value in (extra_conf or {}).items():
-        builder = builder.config(key, value)
     return builder.getOrCreate()

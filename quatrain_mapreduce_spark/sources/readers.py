@@ -1,7 +1,7 @@
 """Readers: the reference's InputFormat surface as spark.read calls.
 
 SURVEY.md §2.1 mapping:
-- TextInputFormat (mapred/TextInputFormat.java:31)        -> read_text
+- TextInputFormat (mapred/TextInputFormat.java:31)        -> spark.read.text
 - KeyValueTextInputFormat (mapred/KeyValueTextInputFormat.java) -> read_kv_text
 - SequenceFileInputFormat (mapred/SequenceFileInputFormat.java) -> read_sequence_file
 - SequenceFileInputFilter regex/percent/md5 (mapred/SequenceFileInputFilter.java:41)
@@ -23,19 +23,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def read_text(spark: SparkSession, path: str) -> DataFrame:
-    """Line records (TextInputFormat). One `value` column per line."""
-    return spark.read.text(path)
-
-
-def read_kv_text(spark: SparkSession, path: str, sep: str = "\t") -> DataFrame:
-    """Lines split into (key, value) on the first separator
-    (KeyValueTextInputFormat semantics: everything after the first sep is value)."""
+def read_kv_text(spark: SparkSession, path: str) -> DataFrame:
+    """Lines split into (key, value) on the first tab
+    (KeyValueTextInputFormat semantics: everything after the first tab is value)."""
     lines = spark.read.text(path)
-    idx = F.instr(F.col("value"), sep)
+    idx = F.instr(F.col("value"), "\t")
     return lines.select(
-        F.when(idx > 0, F.substring_index("value", sep, 1)).otherwise(F.col("value")).alias("key"),
-        F.when(idx > 0, F.expr(f"substring(value, instr(value, '{sep}') + 1)")).otherwise(F.lit("")).alias("value"),
+        F.when(idx > 0, F.substring_index("value", "\t", 1)).otherwise(F.col("value")).alias("key"),
+        F.when(idx > 0, F.expr("substring(value, instr(value, '\t') + 1)")).otherwise(F.lit("")).alias("value"),
     )
 
 
@@ -71,20 +66,12 @@ def multiple_inputs(dfs: list[DataFrame]) -> DataFrame:
     return out
 
 
-def read_jdbc(spark: SparkSession, url: str, table: str, num_partitions: int = 8,
-              partition_column: str | None = None, lower: int | None = None,
-              upper: int | None = None, **options) -> DataFrame:
-    """JDBC SELECT source (DBInputFormat). The reference splits via
-    LIMIT/OFFSET; Spark's partitionColumn bounds are strictly better
-    (predicate-ranged parallel reads)."""
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    if partition_column is not None:
-        reader = (reader.option("partitionColumn", partition_column)
-                  .option("lowerBound", lower).option("upperBound", upper)
-                  .option("numPartitions", num_partitions))
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load()
+def read_jdbc(spark: SparkSession, url: str, table: str, **options) -> DataFrame:
+    """JDBC SELECT source (DBInputFormat): ``table`` read through the
+    driver named in ``options``. The reference splits via LIMIT/OFFSET;
+    a ranged parallel read is Spark's ``partitionColumn`` option."""
+    return (spark.read.format("jdbc").option("url", url).option("dbtable", table)
+            .options(**options).load())
 
 
 def embedded_derby(spark: SparkSession, db_dir: str) -> tuple[str, str]:

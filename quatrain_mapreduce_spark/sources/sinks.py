@@ -2,75 +2,34 @@
 
 SURVEY.md §2.1 mapping:
 - TextOutputFormat (K\\tV)                      -> write_kv_text
-- SequenceFileOutputFormat                      -> write_parquet (canonical)
-- MapFileOutputFormat (sorted+indexed)          -> write_bucketed_sorted
-- MultipleOutputFormat / MultipleOutputs        -> write_partitioned / multi_sink
+- SequenceFileOutputFormat                      -> df.write.parquet (canonical)
+- MapFileOutputFormat (sorted+indexed)          -> bucketBy + sortBy (bucketed_join)
+- MultipleOutputFormat / MultipleOutputs        -> partitionBy (sql_insert_overwrite_partition)
 - NullOutputFormat                              -> write_noop
-- Hive FileSink + partitioned INSERT            -> write_partitioned
+- Hive FileSink + partitioned INSERT            -> sql_insert_overwrite_partition
 - DBOutputFormat                                -> write_jdbc
 
 Multi-insert single-scan (FROM src INSERT ... INSERT ... —
-SemanticAnalyzer.java:1991) is ``multi_sink``: persist the shared scan once,
-fan out N filtered writes.
+SemanticAnalyzer.java:1991) is the registered ``multi_insert_shared_scan``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from quatrain_mapreduce_spark.operators.util import hadoop_fs
 
 
-def write_kv_text(df: DataFrame, key: str, value: str, path: str, sep: str = "\t") -> None:
+def write_kv_text(df: DataFrame, key: str, value: str, path: str) -> None:
     """K\\tV text sink (TextOutputFormat)."""
-    df.select(F.concat_ws(sep, F.col(key).cast("string"), F.col(value).cast("string")).alias("value")) \
+    df.select(F.concat_ws("\t", F.col(key).cast("string"), F.col(value).cast("string")).alias("value")) \
       .write.mode("overwrite").text(path)
-
-
-def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    """Columnar sink — the SequenceFile successor."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
-    """MultipleOutputFormat demux-by-key / Hive dynamic partitions:
-    one directory per partition value."""
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-
-
-def write_bucketed_sorted(df: DataFrame, table: str, bucket_cols: list[str],
-                          sort_cols: list[str], num_buckets: int = 8) -> None:
-    """MapFileOutputFormat / Hive CLUSTERED BY ... SORTED BY ... INTO N BUCKETS:
-    bucketed+sorted table enabling shuffle-free joins and indexed point reads."""
-    (df.write.mode("overwrite").format("parquet")
-       .bucketBy(num_buckets, *bucket_cols).sortBy(*sort_cols).saveAsTable(table))
 
 
 def write_noop(df: DataFrame) -> None:
     """NullOutputFormat: execute the plan, discard output (benchmarking)."""
     df.write.mode("overwrite").format("noop").save()
-
-
-def multi_sink(df: DataFrame, sinks: list[Callable[[DataFrame], None]]) -> None:
-    """Multi-insert single scan: persist the shared subplan, run each sink.
-
-    The reference reads the source once and branches the operator tree; here
-    the persisted DataFrame is the branch point. MEMORY_AND_DISK so a 100 TB
-    scan's working set can spill instead of recomputing per sink.
-    """
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        for sink in sinks:
-            sink(df)
-    finally:
-        df.unpersist()
 
 
 def write_jdbc(df: DataFrame, url: str, table: str, mode: str = "append", **options) -> None:
@@ -91,11 +50,10 @@ def compact_files(
     src_path: str,
     dst_path: str,
     target_bytes: int = 128 << 20,
-    fmt: str = "parquet",
 ) -> int:
-    """Small-file compaction: rewrite a directory of many small files into
-    ceil(total_bytes / target_bytes) right-sized files. Returns the output
-    file count.
+    """Small-file compaction: rewrite a directory of many small parquet files
+    into ceil(total_bytes / target_bytes) right-sized files. Returns the
+    output file count.
 
     The operational complement of MultipleOutputs-style demux sinks: a
     100 TB ingest that lands millions of sub-HDFS-block files makes every
@@ -110,20 +68,21 @@ def compact_files(
 
     total = dir_bytes(spark, src_path)
     n_out = max(1, math.ceil(total / target_bytes))
-    df = spark.read.format(fmt).load(src_path)
-    df.repartition(n_out).write.mode("overwrite").format(fmt).save(dst_path)
+    df = spark.read.parquet(src_path)
+    df.repartition(n_out).write.mode("overwrite").parquet(dst_path)
     return n_out
 
 
-def distcp(spark, src_files: list[str], dst_dir: str, chunk_bytes: int = 8 << 20) -> int:
+def distcp(spark, src_files: list[str], dst_dir: str) -> int:
     """Distributed byte-level file copy — DistCp parity
     (src/tools/org/apache/hadoop/tools/DistCp.java:74: "a tool for copying
     large amounts of data in parallel", one map task per file chunk).
 
     The file LIST is parallelized across executors; each task streams one
     file's bytes through pyarrow.fs (scheme-dispatched: local, hdfs://,
-    s3://), preserving file names. No driver-side data movement — the
-    driver only handles the path list, exactly like DistCp's setup job.
+    s3://) in 8 MB chunks, preserving file names. No driver-side data
+    movement — the driver only handles the path list, exactly like DistCp's
+    setup job.
     Returns the number of files copied; per-file byte counts are summed
     executor-side and validated against the source.
 
@@ -151,7 +110,7 @@ def distcp(spark, src_files: list[str], dst_dir: str, chunk_bytes: int = 8 << 20
         n = 0
         with sfs.open_input_stream(sp) as r, dfs.open_output_stream(dp) as w:
             while True:
-                buf = r.read(chunk_bytes)
+                buf = r.read(8 << 20)
                 if not buf:
                     break
                 w.write(buf)

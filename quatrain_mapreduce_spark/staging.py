@@ -302,13 +302,13 @@ def stage_doc_slices(spark: SparkSession, sf_dir: str) -> str:
         spark, sf_dir, "documents").repartition(4).write.parquet(d))
 
 
-def stage_late_slices(spark: SparkSession, sf_dir: str, recent_hours: int = 6) -> str:
+def stage_late_slices(spark: SparkSession, sf_dir: str) -> str:
     """Stage events as THREE mtime-ordered slices engineering real late-data
-    drops under an append-mode watermark (delay D, D << recent_hours):
+    drops under an append-mode watermark (delay D, D << 6 hours):
 
     - slice 0: even event_ids (spans the whole range — processing it
       advances the watermark to maxE - D, maxE = max even event time);
-    - slice 1: odd ids within ``recent_hours`` of maxE (its batch END is
+    - slice 1: odd ids within 6 hours of maxE (its batch END is
       where windows <= maxE - D get evicted+emitted; these rows merge into
       still-open windows first);
     - slice 2: the remaining old odd ids — they arrive AFTER their windows
@@ -327,7 +327,7 @@ def stage_late_slices(spark: SparkSession, sf_dir: str, recent_hours: int = 6) -
         ev = load_table(spark, sf_dir, "events")
         even = F.col("event_id") % 2 == 0
         max_even_us = ev.where(even).agg(F.max(F.unix_micros("ts"))).first()[0]
-        recent_cut = max_even_us - recent_hours * 3_600_000_000
+        recent_cut = max_even_us - 6 * 3_600_000_000
         ep = F.unix_micros("ts")
         single_file_slices(d, [
             ("slice-000.parquet", ev.where(even)),
@@ -335,4 +335,4 @@ def stage_late_slices(spark: SparkSession, sf_dir: str, recent_hours: int = 6) -
             ("slice-002.parquet", ev.where((~even) & (ep < F.lit(recent_cut)))),
         ])
 
-    return staged(sf_dir, f"lateslices{recent_hours}", build)
+    return staged(sf_dir, "lateslices6", build)

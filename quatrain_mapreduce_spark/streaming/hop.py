@@ -397,10 +397,12 @@ class OnlineAggregator:
         self.work_dir = work_dir
         self.snapshots: list[tuple[float, str]] = []
         self.progress: list[dict] = []
+        self.result_schema = None  # the aggregate's schema, set by a run
 
     def snapshot_df(self, i: int = -1) -> DataFrame:
-        """Read back a written snapshot (default: the latest)."""
-        return self.spark.read.parquet(self.snapshots[i][1])
+        """Read back a written snapshot (default: the latest) with the
+        aggregate's schema, so the read runs no schema-inference job."""
+        return self.spark.read.schema(self.result_schema).parquet(self.snapshots[i][1])
 
     def run_incremental(self) -> DataFrame:
         """Run the aggregate as one stateful query: the state store carries
@@ -419,6 +421,7 @@ class OnlineAggregator:
             .parquet(self.source_path)
         )
         agg = self.agg_fn(stream)
+        self.result_schema = agg.schema
         total = self.total_rows
         raw: list[tuple[int, str]] = []  # (batch_id, snapshot path)
 
@@ -492,7 +495,7 @@ class OnlineAggregator:
             })
         if not self.snapshots:
             return None
-        return self.spark.read.parquet(self.snapshots[-1][1])
+        return self.snapshot_df()
 
 
 def _fs_is_dir(spark: SparkSession, path: str) -> bool:

@@ -30,10 +30,10 @@ from pyspark.sql.types import (
 )
 
 
-def _out_schema(df: DataFrame, key_col: str, order_col: str, out_col: str) -> StructType:
+def _out_schema(df: DataFrame, key_col: str, order_col: str) -> StructType:
     dtypes = dict(df.dtypes)
     return StructType.fromDDL(
-        f"{key_col} {dtypes[key_col]}, {order_col} {dtypes[order_col]}, {out_col} double"
+        f"{key_col} {dtypes[key_col]}, {order_col} {dtypes[order_col]}, avg_last_k double"
     )
 
 
@@ -46,14 +46,13 @@ def moving_avg_stream(
     order_col: str,
     val_col: str,
     k: int = 5,
-    out_col: str = "avg_last_k",
-    round_to: int = 4,
 ) -> DataFrame:
-    """Per-key moving average over the last ``k`` readings (count-based CQ
-    state) on a *streaming* DataFrame. Rows within a micro-batch are ordered
-    by ``order_col``; state carries the tail buffer across batches.
+    """Per-key moving average ``avg_last_k`` over the last ``k`` readings,
+    rounded to 4 places (count-based CQ state), on a *streaming* DataFrame.
+    Rows within a micro-batch are ordered by ``order_col``; state carries
+    the tail buffer across batches.
     """
-    out_schema = _out_schema(events, key_col, order_col, out_col)
+    out_schema = _out_schema(events, key_col, order_col)
 
     def fn(key, pdf_iter, state: GroupState):
         from decimal import ROUND_HALF_UP, Decimal
@@ -64,7 +63,7 @@ def moving_avg_stream(
         # HALF_UP) — Python's round() is half-even on the binary value and
         # diverges on values like 1.00105, which would break the documented
         # bit-identical parity with the batch twin / SQL oracle
-        quantum = Decimal(1).scaleb(-round_to)
+        quantum = Decimal(1).scaleb(-4)
 
         def spark_round(x: float) -> float:
             return float(Decimal(repr(x)).quantize(quantum, rounding=ROUND_HALF_UP))
@@ -84,7 +83,7 @@ def moving_avg_stream(
         yield pd.DataFrame({
             key_col: pdf[key_col],
             order_col: pdf[order_col],
-            out_col: out,
+            "avg_last_k": out,
         })
 
     return events.groupBy(key_col).applyInPandasWithState(
@@ -98,8 +97,6 @@ def moving_avg_batch(
     order_col: str,
     val_col: str,
     k: int = 5,
-    out_col: str = "avg_last_k",
-    round_to: int = 4,
 ) -> DataFrame:
     """Batch twin: window ROWS BETWEEN k-1 PRECEDING AND CURRENT ROW —
     bit-identical results to ``moving_avg_stream`` over the same order.
@@ -115,5 +112,5 @@ def moving_avg_batch(
         Window.partitionBy(key_col).orderBy(order_col).rowsBetween(-(k - 1), 0)
     )
     return events.select(
-        key_col, order_col, F.round(F.avg(val_col).over(w), round_to).alias(out_col)
+        key_col, order_col, F.round(F.avg(val_col).over(w), 4).alias("avg_last_k")
     )

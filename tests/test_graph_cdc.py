@@ -259,15 +259,17 @@ def test_pagerank_star_center_dominates(spark):
     assert len({out[i] for i in range(1, 9)}) == 1
 
 
-def test_graph_operators_leave_the_cache_clean(spark):
-    """Each iterative graph operator releases what it persisted (its edge
-    and degree caches, every superseded round) before it returns: the
-    session's cache manager stays empty, and the only new persistent RDD
-    is the checkpoint of the returned state."""
+def test_graph_operators_leave_the_cache_clean(spark, sf_dir):
+    """Each iterative graph operator, and each triangle-tier query, releases
+    what it persisted (its edge and degree caches, every superseded round,
+    the derived-once edge sets) before it returns: the session's cache
+    manager stays empty, also after the result is collected, and the only
+    new persistent RDD is the checkpoint of the returned state."""
     from quatrain_mapreduce_spark.operators.components import connected_components
     from quatrain_mapreduce_spark.operators.graph import (
         bfs_distances, k_core_vertices, lpa_communities, pagerank_fixed_point,
     )
+    from quatrain_mapreduce_spark.registry import all_queries
 
     e = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)] + [(4, 5), (5, 6)]
     edges = spark.createDataFrame(e, "src long, dst long")
@@ -278,6 +280,10 @@ def test_graph_operators_leave_the_cache_clean(spark):
         "pagerank_fixed_point": lambda: pagerank_fixed_point(edges),
         "connected_components": lambda: connected_components(edges, "src", "dst"),
     }
+    qs = all_queries()
+    for q in ("triangle_count", "triangle_count_sampled", "graph_summary",
+              "graph_summary_sampled"):
+        calls[q] = lambda q=q: qs[q].fn(spark, sf_dir)
     spark.catalog.clearCache()
     cache = spark._jsparkSession.sharedState().cacheManager()
     for name, call in calls.items():
@@ -286,4 +292,8 @@ def test_graph_operators_leave_the_cache_clean(spark):
         after = spark.sparkContext._jsc.getPersistentRDDs().size()
         assert cache.isEmpty(), name
         assert after - before <= 1, (name, before, after)
-        assert out.count() > 0, name
+        n = out.count()  # reads the returned checkpoint
+        assert cache.isEmpty(), name
+        # sf0.001's co-purchase graph has no triangle: triangle_count's
+        # per-vertex frame is empty there (as its oracle's is)
+        assert n > 0 or name == "triangle_count", name

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from quatrain_mapreduce_spark.operators.aggregates import (
-    sum_per_key, top_k, top_k_per_group, uniq_value_count, value_histogram,
+    top_k, top_k_per_group, uniq_value_count, value_histogram,
 )
 from quatrain_mapreduce_spark.operators.projection import (
     field_selection, inverse_map, regex_extract_count, token_count,
@@ -35,12 +35,6 @@ def test_field_selection_reorder(spark):
     cols = field_selection(df, "line", ":", [2, 0], ["third", "first"])
     row = df.select(*cols).collect()[0]
     assert (row["third"], row["first"]) == ("z", "x")
-
-
-def test_sum_per_key(spark):
-    df = spark.createDataFrame([("a", 1), ("a", 2), ("b", 5)], "k string, v int")
-    got = {r["k"]: r["sum_value"] for r in sum_per_key(df, "k", "v").collect()}
-    assert got == {"a": 3, "b": 5}
 
 
 def test_uniq_value_count_exact_and_approx(spark):

@@ -257,3 +257,88 @@ def test_only_the_superstep_kernel_checkpoints():
         with open(path) as fh:
             hits += [f"{rel}:{n}" for n, line in enumerate(fh, 1) if "localCheckpoint(" in line]
     assert not hits, hits
+
+
+def test_no_parameter_nothing_sets_and_no_function_nothing_reaches():
+    """No knob that nothing sets, no function that nothing reaches. An AST
+    scan of the package fails on either of:
+
+    1. a defaulted parameter of a package function that no call in the
+       package, ``tools/``, ``tests/``, ``perfbench/`` or
+       ``__spark_entry__.py`` passes, by keyword or by position;
+    2. an undecorated top-level package function or class whose name no
+       package, ``tools/`` or ``perfbench/`` code references.
+
+    The scan is a heuristic. A call ``f(...)`` or ``x.f(...)`` is matched to
+    the def by the name ``f`` alone; a class's ``__init__`` goes by the
+    class name; method positions count after ``self``/``cls``. A name
+    defined more than once in the package (nested defs included) is skipped.
+    A call with ``*args`` or ``**kwargs`` counts as setting every parameter.
+    Any ``Name`` or attribute of that name counts as a reference. Decorated
+    functions (registered queries) are reached through their decorator."""
+    import ast
+    import collections
+    import glob
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+    def trees(*places):
+        for place in places:
+            p = os.path.join(root, place)
+            paths = [p] if p.endswith(".py") else sorted(
+                glob.glob(os.path.join(p, "**", "*.py"), recursive=True))
+            for path in paths:
+                with open(path) as fh:
+                    yield os.path.relpath(path, root), ast.parse(fh.read(), path)
+
+    pkg = dict(trees("quatrain_mapreduce_spark"))
+    defs = collections.defaultdict(list)
+    for rel, tree in pkg.items():
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs[node.name].append((rel, node))
+            elif isinstance(node, ast.ClassDef):
+                defs[node.name] += [(rel, b) for b in node.body
+                                    if isinstance(b, ast.FunctionDef) and b.name == "__init__"]
+    calls = collections.defaultdict(list)
+    for _, tree in trees("quatrain_mapreduce_spark", "tools", "tests", "perfbench",
+                         "__spark_entry__.py"):
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                calls[name].append(node)
+
+    def sets(call, arg, pos):
+        return (any(isinstance(a, ast.Starred) for a in call.args)
+                or any(k.arg in (None, arg) for k in call.keywords)
+                or (pos is not None and len(call.args) > pos))
+
+    n_params, unset = 0, []
+    for name, ds in defs.items():
+        if len(ds) != 1:
+            continue
+        rel, fn = ds[0]
+        a = fn.args
+        pos = a.posonlyargs + a.args
+        skip = 1 if pos and pos[0].arg in ("self", "cls") else 0
+        params = [(p.arg, i - skip) for i, p in enumerate(pos)][len(pos) - len(a.defaults):]
+        params += [(k.arg, None) for k, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+        n_params += len(params)
+        unset += [f"{rel}:{fn.lineno} {name}({arg}=)" for arg, i in params
+                  if not any(sets(c, arg, i) for c in calls[name])]
+
+    refs = collections.Counter()
+    for _, tree in trees("quatrain_mapreduce_spark", "tools", "perfbench", "__spark_entry__.py"):
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                refs[node.id] += 1
+            elif isinstance(node, ast.Attribute):
+                refs[node.attr] += 1
+    unreached = [f"{rel}:{n.lineno} {n.name}" for rel, tree in pkg.items() for n in tree.body
+                 if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                 and not n.decorator_list and not refs[n.name]]
+    print(f"{n_params} defaulted parameters, every one set by some call")
+    assert not unset, "defaulted parameters no call sets (make them constants):\n" + "\n".join(unset)
+    assert not unreached, "package functions/classes nothing references:\n" + "\n".join(unreached)

@@ -107,6 +107,16 @@ def test_insert_overwrite_partition_read_is_pruned(spark, sf_dir):
     assert "status" in pf[1][:200]
 
 
+def test_partitioned_orders_read_is_pruned(spark, sf_dir):
+    """sql_partition_pruning reads orders written ``partitionBy(o_orderstatus)``:
+    its status predicate must reach the scan as PartitionFilters (one
+    directory listed), not a post-scan filter (PartitionPruner.java:238)."""
+    p = plan_of(spark, sf_dir, "sql_partition_pruning")
+    pf = p.split("PartitionFilters:", 1)
+    assert len(pf) == 2, p
+    assert "o_orderstatus" in pf[1][:200]
+
+
 def test_window_funcs_single_exchange(spark, sf_dir):
     """All five window functions (two frames, same partition key) must share
     ONE hash exchange — a second Exchange means the unordered partition-count

@@ -99,6 +99,37 @@ def test_embedding_neardup_finds_planted_pairs(spark):
     assert not any(99 in p for p in got)
 
 
+def test_embedding_neardup_pairs_are_true_cosine_pairs(spark):
+    """On the sf0.01 embeddings at a threshold that yields pairs, every pair
+    embedding_neardup_pairs returns (banding, bucket cap and cosine verify
+    included) is a true pair of an exact brute-force cosine over the same
+    file, and its reported cosine is that cosine rounded to 6 places (Spark's
+    HALF_UP on the shortest decimal form)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import pyarrow.parquet as pq
+
+    from tests.conftest import SF_DIR_MID
+
+    path = f"{SF_DIR_MID}/embeddings.parquet"
+    t = pq.read_table(path, columns=["vec_id", "embedding"])
+    ids = t.column("vec_id").to_numpy()
+    vecs = np.array(t.column("embedding").to_pylist(), dtype=np.float64)
+    unit = vecs / np.maximum(np.linalg.norm(vecs, axis=1, keepdims=True), 1e-300)
+    exact = unit @ unit.T
+    row = {int(v): i for i, v in enumerate(ids)}
+
+    got = embedding_neardup_pairs(spark.read.parquet(path), "vec_id", "embedding",
+                                  dim=embedding_dim(path), threshold=0.2).collect()
+    assert got
+    for r in got:
+        cos = float(exact[row[r["a_id"]], row[r["b_id"]]])
+        assert r["a_id"] != r["b_id"] and cos >= 0.2 - 1e-12, (r, cos)
+        rounded = float(Decimal(repr(cos)).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP))
+        assert abs(r["cos"] - rounded) <= 1e-9, (r, cos)
+    assert len({(r["a_id"], r["b_id"]) for r in got}) == len(got)
+
+
 def test_embedding_dim_reads_footer(sf_dir):
     assert embedding_dim(f"{sf_dir}/embeddings.parquet") == 64
 

@@ -1,5 +1,5 @@
 """Sources/sinks — SURVEY §2.1: text K/V round trip, scan filters,
-partitioned writes with pruning, multi-sink shared scan."""
+bucketed joins."""
 
 from __future__ import annotations
 
@@ -9,10 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from quatrain_mapreduce_spark.catalog import load_table
-from quatrain_mapreduce_spark.sources.readers import (
-    filtered_scan, multiple_inputs, read_kv_text, read_text,
-)
-from quatrain_mapreduce_spark.sources.sinks import multi_sink, write_kv_text, write_parquet
+from quatrain_mapreduce_spark.sources.readers import filtered_scan, multiple_inputs, read_kv_text
+from quatrain_mapreduce_spark.sources.sinks import write_kv_text
 
 
 def test_kv_text_round_trip(spark, tmp_path):
@@ -24,12 +22,6 @@ def test_kv_text_round_trip(spark, tmp_path):
     got = {r["key"]: r["value"] for r in back.collect()}
     # KeyValueTextInputFormat: split on FIRST separator — embedded tabs stay in value
     assert got == {"1": "alpha", "2": "beta\twith tab"}
-
-
-def test_read_text_line_records(spark, tmp_path):
-    p = tmp_path / "t.txt"
-    p.write_text("line one\nline two\n")
-    assert read_text(spark, str(p)).count() == 2
 
 
 def test_filtered_scan_variants(spark):
@@ -45,31 +37,6 @@ def test_multiple_inputs_union(spark):
     b = spark.createDataFrame([(2,)], "k int")
     got = multiple_inputs([a, b]).collect()
     assert {(r["k"], r["v"]) for r in got} == {(1, "a"), (2, None)}
-
-
-def test_partitioned_write_prunes_scan(spark, tmp_path):
-    """partitionBy write + partition-column predicate → pruned file listing
-    (PartitionPruner.java:238 parity)."""
-    df = spark.createDataFrame([(i, "even" if i % 2 == 0 else "odd") for i in range(100)],
-                               "v int, part string")
-    path = str(tmp_path / "part")
-    write_parquet(df, path, partition_by=["part"])
-    assert {"part=even", "part=odd"} <= set(os.listdir(path))
-    back = spark.read.parquet(path).where(F.col("part") == "even")
-    assert back.count() == 50
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(part" in plan
-
-
-def test_multi_sink_shared_scan(spark, tmp_path):
-    df = spark.createDataFrame([(i,) for i in range(10)], "v int")
-    p1, p2 = str(tmp_path / "s1"), str(tmp_path / "s2")
-    multi_sink(df, [
-        lambda d: d.where(F.col("v") < 5).write.mode("overwrite").parquet(p1),
-        lambda d: d.where(F.col("v") >= 5).write.mode("overwrite").parquet(p2),
-    ])
-    assert spark.read.parquet(p1).count() == 5
-    assert spark.read.parquet(p2).count() == 5
 
 
 def test_bucketed_join_has_no_exchange(spark, sf_dir, monkeypatch):
